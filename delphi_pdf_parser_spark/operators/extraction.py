@@ -5,13 +5,17 @@ Spark-side design per SURVEY.md §2.B / §4:
 - cheap JVM-side pre-filter (``%PDF-`` magic) BEFORE any Python: Catalyst
   evaluates it in whole-stage codegen, so non-PDF rows never cross the
   Arrow boundary
-- column pruning: only (url, html) enter the UDF
-- size-bucket salting: UDF cost scales with document size, which AQE
+- column pruning: only (url, html[, password]) are read for the UDF;
+  its page-range columns are added after the salt exchange
+- url-hash salting: UDF cost scales with document size, which AQE
   cannot see (it balances bytes, not Python-seconds). ``repartition`` on
-  a composite (size-bucket, random-salt) key spreads giant PDFs across
-  executors BEFORE the extraction stage
+  ``xxhash64(url)`` spreads giant PDFs across executors BEFORE the
+  extraction stage; ``extract_documents_balanced`` further splits whales
+  into page-range chunks
 - one vectorized ``mapInPandas`` UDF does the whole §2.A pipeline per
-  Arrow batch; zero per-row Python at the Spark level
+  Arrow batch; zero per-row Python at the Spark level. Every row it sees
+  is a (url, html, password, page_lo, page_hi) page range: the plain,
+  whale-chunk, stat and streaming paths differ only in the range columns
 - per-partition lineage: each output row carries partition_id +
   input-split tag; the metrics table enables checkpoint-resume via
   left-anti join on url
@@ -35,6 +39,19 @@ from pyspark.sql.types import (
     StructType,
 )
 
+# the 8 /Info fields openfile1 surfaces (src/digPdfViewer.pas:236-312),
+# as (column, /Info key)
+INFO_FIELDS = (
+    ("title", "Title"),
+    ("author", "Author"),
+    ("producer", "Producer"),
+    ("subject", "Subject"),
+    ("creator", "Creator"),
+    ("keywords", "Keywords"),
+    ("creation_date", "CreationDate"),
+    ("mod_date", "ModDate"),
+)
+
 EXTRACTED_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -47,49 +64,56 @@ EXTRACTED_SCHEMA = StructType(
         StructField("decode_failures", MapType(StringType(), LongType())),
         StructField("wall_ms", LongType()),
         StructField("partition_id", IntegerType()),
-        # the 8 /Info fields openfile1 surfaces (src/digPdfViewer.pas:236-312)
-        StructField("title", StringType()),
-        StructField("author", StringType()),
-        StructField("producer", StringType()),
-        StructField("subject", StringType()),
-        StructField("creator", StringType()),
-        StructField("keywords", StringType()),
-        StructField("creation_date", StringType()),
-        StructField("mod_date", StringType()),
     ]
+    + [StructField(col, StringType()) for col, _ in INFO_FIELDS]
+)
+EXTRACTED_COLUMNS = EXTRACTED_SCHEMA.fieldNames()
+
+# the UDF's rows: an extracted row plus the start of its page range, which
+# orders a whale's ranges in _merge_chunks
+RANGE_SCHEMA = StructType(
+    EXTRACTED_SCHEMA.fields + [StructField("page_lo", IntegerType())]
 )
 
-# number of size buckets for the salting stage; buckets are exponential in
-# document size so the 2,000-page whales land alone
-SIZE_BUCKET_BOUNDARIES = [0, 16_384, 65_536, 262_144, 1_048_576, 8_388_608]
+STAT_COLUMNS = ["url", "npages", "n_objects", "status", "err"] + [
+    col for col, _ in INFO_FIELDS
+] + ["wall_ms"]
+
+_ALL_PAGES = 2**31 - 1  # open page_hi: pdfcore clamps it to npages
 
 
-def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """The mapInPandas body. Imports stay inside so the function pickles
-    cheaply to executors; pdfcore loads once per worker."""
+def _extract_ranges(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """The mapInPandas body. Each row is one (url, html, password,
+    page_lo, page_hi) page range, extracted by one pdfcore call; the
+    /Info fields are read only for ranges that start at page 0. Imports
+    stay inside so the function pickles cheaply to executors; pdfcore
+    loads once per worker."""
     from pyspark import TaskContext
 
-    from delphi_pdf_parser_spark.pdfcore import extract_text
+    from delphi_pdf_parser_spark.pdfcore.extract import extract_text_pages
 
     tc = TaskContext.get()
     pid = tc.partitionId() if tc is not None else -1
-
-    for pdf_batch in batches:
+    for b in batches:
         rows = []
-        pws = (
-            pdf_batch["password"]
-            if "password" in pdf_batch.columns
-            else [None] * len(pdf_batch)
-        )
-        for url, html, pw in zip(pdf_batch["url"], pdf_batch["html"], pws):
-            data = bytes(html) if html is not None else b""
-            res = extract_text(data, password=pw or b"")
+        for url, html, pw, lo, hi in zip(
+            b["url"], b["html"], b["password"], b["page_lo"], b["page_hi"]
+        ):
+            lo = int(lo)
+            res = extract_text_pages(
+                bytes(html) if html is not None else b"",
+                lo,
+                int(hi),
+                want_metadata=lo == 0,
+                password=pw or b"",
+            )
+            ok = res.status != "failed"
             meta = res.metadata or {}
             rows.append(
                 (
                     url,
-                    res.text if res.status != "failed" else None,
-                    res.pages if res.status != "failed" else None,
+                    res.text if ok else None,
+                    res.pages if ok else None,
                     res.npages,
                     res.n_objects,
                     res.status,
@@ -97,82 +121,42 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     {k: int(v) for k, v in res.failures.items()},
                     res.wall_ms,
                     pid,
-                    meta.get("Title"),
-                    meta.get("Author"),
-                    meta.get("Producer"),
-                    meta.get("Subject"),
-                    meta.get("Creator"),
-                    meta.get("Keywords"),
-                    meta.get("CreationDate"),
-                    meta.get("ModDate"),
+                    *(meta.get(key) for _, key in INFO_FIELDS),
+                    lo,
                 )
             )
-        yield pd.DataFrame(
-            rows,
-            columns=[f.name for f in EXTRACTED_SCHEMA.fields],
-        )
+        yield pd.DataFrame(rows, columns=RANGE_SCHEMA.fieldNames())
 
 
-STAT_SCHEMA = StructType(
-    [
-        StructField("url", StringType()),
-        StructField("npages", IntegerType()),
-        StructField("n_objects", LongType()),
-        StructField("status", StringType()),
-        StructField("err", StringType()),
-        StructField("title", StringType()),
-        StructField("author", StringType()),
-        StructField("producer", StringType()),
-        StructField("subject", StringType()),
-        StructField("creator", StringType()),
-        StructField("keywords", StringType()),
-        StructField("creation_date", StringType()),
-        StructField("mod_date", StringType()),
-        StructField("wall_ms", LongType()),
-    ]
-)
+def _password(df: DataFrame):
+    """The ``password`` column, or a null one for password-less input."""
+    if "password" in df.columns:
+        return F.col("password")
+    return F.lit(None).cast("string")
 
 
-def _stat_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from delphi_pdf_parser_spark.pdfcore import stat_document
-
-    for pdf_batch in batches:
-        rows = []
-        for url, html in zip(pdf_batch["url"], pdf_batch["html"]):
-            res = stat_document(bytes(html) if html is not None else b"")
-            meta = res.metadata or {}
-            rows.append(
-                (
-                    url, res.npages, res.n_objects, res.status, res.error,
-                    meta.get("Title"), meta.get("Author"),
-                    meta.get("Producer"), meta.get("Subject"),
-                    meta.get("Creator"), meta.get("Keywords"),
-                    meta.get("CreationDate"), meta.get("ModDate"),
-                    res.wall_ms,
-                )
-            )
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in STAT_SCHEMA.fields]
-        )
+def _extract_pages(df: DataFrame, page_lo, page_hi) -> DataFrame:
+    """The one extraction stage over (url, html[, password]) rows, for the
+    page range [page_lo, page_hi) given as ints or columns. The range and
+    the null password of password-less input are added here, after any
+    exchange, so shuffles carry only the document columns."""
+    return df.select(
+        "url",
+        "html",
+        _password(df).alias("password"),
+        F.lit(page_lo).cast("int").alias("page_lo"),
+        F.lit(page_hi).cast("int").alias("page_hi"),
+    ).mapInPandas(_extract_ranges, RANGE_SCHEMA)
 
 
 def stat_documents(documents: DataFrame, prefilter: bool = True) -> DataFrame:
     """The cheap stat-pass job (openfile1, SURVEY §3.2): metadata + page
-    count per url with NO content-stream decode — an order of magnitude
-    cheaper than extraction, so no salting stage (its cost is xref-bound,
-    roughly uniform in document size)."""
-    df = prefilter_pdfs(documents) if prefilter else documents.select("url", "html")
-    return df.mapInPandas(_stat_batches, STAT_SCHEMA)
-
-
-def size_bucket(col):
-    """Exponential size bucket of the raw bytes column (JVM-side)."""
-    expr = F.lit(len(SIZE_BUCKET_BOUNDARIES))
-    for i, bound in enumerate(reversed(SIZE_BUCKET_BOUNDARIES)):
-        expr = F.when(
-            F.length(col) <= F.lit(bound), F.lit(len(SIZE_BUCKET_BOUNDARIES) - i)
-        ).otherwise(expr)
-    return expr.cast("int")
+    count per url with NO content-stream decode (the empty page range
+    [0, 0)) — an order of magnitude cheaper than extraction, so no
+    salting stage (its cost is xref-bound, roughly uniform in document
+    size)."""
+    df = _pdf_rows(documents, None, prefilter)
+    return _extract_pages(df, 0, 0).select(*STAT_COLUMNS)
 
 
 def prefilter_pdfs(
@@ -208,8 +192,9 @@ def salt_by_size(df: DataFrame, partitions: int | None = None) -> DataFrame:
 
     The salt is a deterministic hash of the url (not rand()) so re-runs
     place rows identically — required for checkpoint-resume semantics.
-    The salt modulus is 8x the partition count so hash collisions cannot
-    leave partitions empty (64 distinct keys into 128 partitions would).
+    ``partitions`` defaults to ``_auto_partitions`` of the plan's size
+    estimate: one task per ~256 MB of input, floored at the default
+    parallelism.
     """
     if not partitions:
         base = df.sparkSession.sparkContext.defaultParallelism
@@ -225,10 +210,25 @@ def salt_by_size(df: DataFrame, partitions: int | None = None) -> DataFrame:
     # per-url hash: effectively-unique keys give multinomial balance
     # (coarse bucket+salt%k keys collide and leave partitions uneven);
     # giant documents land randomly, which with tasks ~= cores bounds the
-    # whale-per-task count — the bucket column itself feeds the metrics
-    # table so skew remains observable
-    out = df.repartition(partitions, F.xxhash64("url"))
-    return out
+    # whale-per-task count — per-row partition_id + wall_ms in the
+    # metrics table keep the skew observable
+    return df.repartition(partitions, F.xxhash64("url"))
+
+
+def _pdf_rows(
+    documents: DataFrame, password_col: str | None, prefilter: bool = True
+) -> DataFrame:
+    """(url, html[, password]) rows; a named password column is cast to
+    string and renamed ``password``."""
+    extra = []
+    if password_col is not None:
+        documents = documents.withColumn(
+            "password", F.col(password_col).cast("string")
+        )
+        extra = ["password"]
+    if prefilter:
+        return prefilter_pdfs(documents, extra_cols=extra)
+    return documents.select("url", "html", *extra)
 
 
 def extract_documents(
@@ -238,13 +238,13 @@ def extract_documents(
     salt: bool = True,
     password_col: str | None = None,
 ) -> DataFrame:
-    """documents(url, html, ...) -> extracted table (EXTRACTED_SCHEMA).
+    """documents(url, html, ...) -> extracted table (EXTRACTED_SCHEMA):
+    every document is the one page range [0, all pages).
 
-    salt_partitions defaults to the cluster's default parallelism: the
-    Arrow/python-worker round trip has a per-task cost, so tasks ~= cores
-    is the sweet spot for uniform corpora; the size-bucketed salt key
-    keeps the giant-PDF tail spread across those tasks (and the task-size
-    histogram lands in the metrics table to verify it).
+    salt_partitions defaults to ``_auto_partitions`` (see
+    ``salt_by_size``): the Arrow/python-worker round trip has a per-task
+    cost, so tasks ~= cores is the sweet spot for uniform corpora, and
+    the url-hash salt spreads the giant-PDF tail across those tasks.
 
     ``password_col`` names an optional per-document password column
     (string; null/empty = unencrypted or empty-user-password docs) —
@@ -254,29 +254,10 @@ def extract_documents(
     passwords degrade to status='failed', error='needs_password' rows
     in the metrics table, never a job failure.
     """
-    cols = ["url", "html"]
-    if password_col is not None:
-        documents = documents.withColumn(
-            "password", F.col(password_col).cast("string")
-        )
-        cols.append("password")
-    df = (
-        prefilter_pdfs(documents, extra_cols=cols[2:])
-        if prefilter
-        else documents.select(*cols)
-    )
+    df = _pdf_rows(documents, password_col, prefilter)
     if salt:
         df = salt_by_size(df, salt_partitions)
-    return df.mapInPandas(_extract_batches, EXTRACTED_SCHEMA)
-
-
-CHUNK_SCHEMA = StructType(
-    EXTRACTED_SCHEMA.fields
-    + [
-        StructField("chunk_idx", IntegerType()),
-        StructField("n_chunks", IntegerType()),
-    ]
-)
+    return _extract_pages(df, 0, _ALL_PAGES).select(*EXTRACTED_COLUMNS)
 
 
 def _count_pages_udf():
@@ -297,121 +278,36 @@ def _count_pages_udf():
     return page_count
 
 
-def _chunk_extract_batches(pages_per_chunk: int):
-    """One input row = one (url, html, chunk_idx) unit of work."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        from delphi_pdf_parser_spark.pdfcore.extract import (
-            extract_text,
-            extract_text_pages,
-        )
-
-        tc = TaskContext.get()
-        pid = tc.partitionId() if tc is not None else -1
-        cols = [f.name for f in CHUNK_SCHEMA.fields]
-        for b in batches:
-            rows = []
-            pws = (
-                b["password"]
-                if "password" in b.columns
-                else [None] * len(b)
-            )
-            for url, html, c, n_chunks, pw in zip(
-                b["url"], b["html"], b["chunk_idx"], b["n_chunks"], pws
-            ):
-                data = bytes(html)
-                c = int(c)
-                lo = c * pages_per_chunk
-                hi = lo + pages_per_chunk
-                res = (
-                    extract_text_pages(
-                        data,
-                        lo,
-                        hi,
-                        want_metadata=(c == 0),
-                        password=pw or b"",
-                    )
-                    if n_chunks > 1 or c > 0
-                    else extract_text(data, password=pw or b"")
-                )
-                meta = res.metadata or {}
-                rows.append(
-                    (
-                        url,
-                        res.text if res.status != "failed" else None,
-                        res.pages if res.status != "failed" else None,
-                        res.npages,
-                        res.n_objects,
-                        res.status,
-                        res.error,
-                        {k: int(v) for k, v in res.failures.items()},
-                        res.wall_ms,
-                        pid,
-                        meta.get("Title"),
-                        meta.get("Author"),
-                        meta.get("Producer"),
-                        meta.get("Subject"),
-                        meta.get("Creator"),
-                        meta.get("Keywords"),
-                        meta.get("CreationDate"),
-                        meta.get("ModDate"),
-                        c,
-                        int(n_chunks),
-                    )
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return fn
-
-
 def _merge_chunks(key, g):  # (no type hints: pyspark infers the
     # grouped-map eval type from arity; partial hints only trigger a warning)
-    """applyInPandas merge of per-chunk rows back into one document row
-    (chunks concatenate in index order; metrics sum/merge). Arity-2
+    """applyInPandas merge of one whale's page-range rows back into one
+    document row: ranges concatenate in page order, failure counts sum
+    (document-level codes come only from the page-0 range), and url,
+    partition_id and the /Info columns are the page-0 range's. Arity-2
     grouped map: receives ONE group DataFrame per url and must RETURN a
     DataFrame (not yield)."""
     import pandas as pd  # noqa: F811 - executor-side import
 
-    g = g.sort_values("chunk_idx")
+    g = g.sort_values("page_lo")
+    ok = (g["status"] != "failed").all()
     failures: dict = {}
     for m in g["decode_failures"]:
-        if m:
-            for k, v in m.items():
-                failures[k] = failures.get(k, 0) + int(v)
-    ok = all(s != "failed" for s in g["status"])
-    pages: list = []
-    for p in g["pages"]:
-        if p is not None:
-            pages.extend(p)
-    return pd.DataFrame(
-        [
-            (
-                g["url"].iloc[0],
-                "".join(t for t in g["text"] if t is not None) if ok else None,
-                pages if ok else None,
-                int(g["npages"].max()),
-                int(g["n_objects"].max()),
-                ("repaired" if (g["status"] == "repaired").any() else "ok")
-                if ok
-                else "failed",
-                next((e for e in g["err"] if e), ""),
-                failures,
-                int(g["wall_ms"].sum()),
-                int(g["partition_id"].iloc[0]),
-                g["title"].iloc[0],
-                g["author"].iloc[0],
-                g["producer"].iloc[0],
-                g["subject"].iloc[0],
-                g["creator"].iloc[0],
-                g["keywords"].iloc[0],
-                g["creation_date"].iloc[0],
-                g["mod_date"].iloc[0],
-            )
-        ],
-        columns=[f.name for f in EXTRACTED_SCHEMA.fields],
+        for k, v in (m or {}).items():
+            failures[k] = failures.get(k, 0) + int(v)
+    row = g.iloc[0].to_dict()
+    row.update(
+        text="".join(g["text"]) if ok else None,
+        pages=[p for ps in g["pages"] for p in ps] if ok else None,
+        npages=int(g["npages"].max()),
+        n_objects=int(g["n_objects"].max()),
+        status=("repaired" if (g["status"] == "repaired").any() else "ok")
+        if ok
+        else "failed",
+        err=next((e for e in g["err"] if e), ""),
+        decode_failures=failures,
+        wall_ms=int(g["wall_ms"].sum()),
     )
+    return pd.DataFrame([row], columns=EXTRACTED_COLUMNS)
 
 
 def extract_documents_balanced(
@@ -433,34 +329,26 @@ def extract_documents_balanced(
     one 5-second straggler — this is what bounds max-task/median-task at
     the 100 TB scale where the corpus has heavy page-count tails.
     """
-    if password_col is not None:
-        documents = documents.withColumn(
-            "password", F.col(password_col).cast("string")
-        )
-    base = prefilter_pdfs(
-        documents,
-        extra_cols=("password",) if password_col is not None else (),
-    )
-    small = base.filter(F.length("html") < whale_bytes)
-    big = base.filter(F.length("html") >= whale_bytes)
-
+    base = _pdf_rows(documents, password_col)
     # salt=False is the bucketed-at-ingest production shape: the scan is
     # already balanced by url-hash, so the salting exchange is pure cost
     # (whale chunks below still repartition — they must, to spread one
     # document's chunks across tasks)
     small_out = extract_documents(
-        small,
+        base.filter(F.length("html") < whale_bytes),
         salt_partitions=salt_partitions,
         prefilter=False,
         salt=salt,
         password_col="password" if password_col is not None else None,
     )
-
-    chunks = extract_whale_chunks(
-        big, pages_per_chunk=pages_per_chunk, partitions=salt_partitions
-    )
-    big_out = chunks.groupBy("url").applyInPandas(
-        _merge_chunks, EXTRACTED_SCHEMA
+    big_out = (
+        extract_whale_chunks(
+            base.filter(F.length("html") >= whale_bytes),
+            pages_per_chunk=pages_per_chunk,
+            partitions=salt_partitions,
+        )
+        .groupBy("url")
+        .applyInPandas(_merge_chunks, EXTRACTED_SCHEMA)
     )
     return small_out.unionByName(big_out)
 
@@ -470,44 +358,40 @@ def extract_whale_chunks(
     pages_per_chunk: int = 100,
     partitions: int | None = None,
 ) -> DataFrame:
-    """The chunk stage of balanced extraction, exposed separately so the
-    CHUNK-LEVEL lineage (per-chunk partition_id + wall_ms) can feed the
-    metrics table / skew evidence — after _merge_chunks a whale's summed
-    wall_ms is attributed to one partition_id, which would misread as
-    skew that the chunk spreading actually eliminated."""
+    """The chunk stage of balanced extraction: one RANGE_SCHEMA row per
+    ``pages_per_chunk`` page range of each (url, html[, password]) row.
+    Exposed separately so the CHUNK-LEVEL lineage (per-chunk
+    partition_id + wall_ms) can feed the metrics table / skew evidence —
+    after _merge_chunks a whale's summed wall_ms is attributed to one
+    partition_id, which would misread as skew that the chunk spreading
+    actually eliminated."""
     parts = (
         partitions or big.sparkSession.sparkContext.defaultParallelism
     )
-    has_pw = "password" in big.columns
-    pw_col = (
-        F.col("password") if has_pw else F.lit(None).cast("string")
-    )
-    keep = ["url", "html", "chunk_idx", "n_chunks"] + (
-        ["password"] if has_pw else []
-    )
-    planned = (
-        big.withColumn(
-            "_npages", _count_pages_udf()(F.col("html"), pw_col)
+    npages = _count_pages_udf()(F.col("html"), _password(big))
+    chunks = (
+        big.select(
+            "url",
+            "html",
+            _password(big).alias("password"),
+            # one range start per chunk; a page-less (failed) document
+            # still gets the one range [0, pages_per_chunk)
+            F.explode(
+                F.sequence(
+                    F.lit(0),
+                    F.greatest(npages - 1, F.lit(0)),
+                    F.lit(pages_per_chunk),
+                )
+            ).alias("page_lo"),
         )
-        .withColumn(
-            "n_chunks",
-            F.greatest(
-                F.lit(1), F.ceil(F.col("_npages") / F.lit(pages_per_chunk))
-            ).cast("int"),
-        )
-        .withColumn(
-            "chunk_idx",
-            F.explode(F.sequence(F.lit(0), F.col("n_chunks") - 1)),
-        )
-        .select(*keep)
         # chunk-level repartition: a 2,000-page whale becomes 20 units of
         # work spread across the cluster (the whale bytes are duplicated
         # per chunk through this one exchange — whales are the tail, so
         # the duplication is small relative to the corpus)
-        .repartition(parts, F.xxhash64("url", "chunk_idx"))
+        .repartition(parts, F.xxhash64("url", "page_lo"))
     )
-    return planned.mapInPandas(
-        _chunk_extract_batches(pages_per_chunk), CHUNK_SCHEMA
+    return _extract_pages(
+        chunks, F.col("page_lo"), F.col("page_lo") + pages_per_chunk
     )
 
 

@@ -141,7 +141,9 @@ def extract_text_pages(
     Page extractions are independent by construction: each page gets a
     fresh text device (pen starts at -1,-1) and the per-document text is
     the concatenation of per-page serializations (showtext loop,
-    src/digPdfViewer.pas:632-666) — so ranges reassemble exactly.
+    src/digPdfViewer.pas:632-666) — so ranges reassemble exactly. A range
+    with page_lo > 0 leaves the document-level failure codes to the
+    range at page 0, so summing the ranges' ``failures`` counts them once.
     """
     return _extract(data, want_metadata, page_lo, page_hi, password)
 
@@ -196,6 +198,8 @@ def _extract(
         res.wall_ms = int((time.perf_counter() - t0) * 1000)
         return res
 
+    # document-level codes (xref repair, page tree) stay with the range at page 0
+    before = dict(doc.failures) if page_lo > 0 else {}
     res.npages = count_pages(doc)
     lo = max(0, page_lo)
     hi = res.npages if page_hi is None else min(page_hi, res.npages)
@@ -215,7 +219,11 @@ def _extract(
             res.metadata = extract_info(doc)
         except Exception:
             doc.note_failure("metadata_error")
-    res.failures = dict(doc.failures)
+    res.failures = {
+        k: n - before.get(k, 0)
+        for k, n in doc.failures.items()
+        if n > before.get(k, 0)
+    }
     res.status = "repaired" if doc.repaired else "ok"
     res.wall_ms = int((time.perf_counter() - t0) * 1000)
     return res

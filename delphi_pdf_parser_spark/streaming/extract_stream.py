@@ -1,7 +1,7 @@
 """Structured Streaming extraction.
 
 The batch extraction UDF is pure and side-effect-free, so the streaming
-path is the same ``mapInPandas`` over ``readStream``. The reference has
+path is ``extract_documents`` itself over ``readStream``. The reference has
 no streaming analogue (SURVEY §2.B); this module exists so a Common-Crawl
 ingest that lands parquet files continuously can run the identical
 pipeline with exactly-once sinks via checkpointing.
@@ -15,10 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from delphi_pdf_parser_spark.operators.extraction import (
-    EXTRACTED_SCHEMA,
-    _extract_batches,
-)
+from delphi_pdf_parser_spark.operators.extraction import extract_documents
 from delphi_pdf_parser_spark.sources.documents import DOCUMENTS_SCHEMA
 
 
@@ -33,17 +30,10 @@ def read_documents_stream(
 
 
 def extract_stream(documents: DataFrame) -> DataFrame:
-    """Streaming extraction: same prefilter + UDF as the batch path.
-    (No repartition salting here — streaming micro-batches are already
-    bounded by maxFilesPerTrigger.)"""
-    df = documents.select("url", "html", "warc_ts").filter(
-        F.col("html").isNotNull()
-        & (F.substring(F.col("html"), 1, 5) == F.lit(b"%PDF-"))
-    )
-    extracted = df.select("url", "html").mapInPandas(
-        _extract_batches, EXTRACTED_SCHEMA
-    )
-    return extracted
+    """Streaming extraction: the batch ``extract_documents`` without the
+    salting exchange — streaming micro-batches are already bounded by
+    maxFilesPerTrigger."""
+    return extract_documents(documents, salt=False)
 
 
 def metrics_windowed_rollup(

@@ -133,3 +133,36 @@ def test_extract_documents_password_column(spark):
         docs.select("url", "html"), salt=False
     ).collect()
     assert all(r.err == "needs_password" for r in got2)
+
+
+def test_stat_documents_matches_pdfcore_stat_document(spark):
+    """The stat pass through the Spark UDF equals single-process
+    pdfcore.stat_document on every fixture, for every stat column but
+    wall_ms (including err and all 8 /Info fields)."""
+    from delphi_pdf_parser_spark.operators.extraction import (
+        INFO_FIELDS,
+        STAT_COLUMNS,
+        stat_documents,
+    )
+    from delphi_pdf_parser_spark.pdfcore import stat_document
+
+    docs = fixture_documents(spark)
+    pdfs = {r.url: bytes(r.html) for r in docs.select("url", "html").collect()}
+    assert len(pdfs) == 77
+    got = {
+        r.url: r.asDict()
+        for r in stat_documents(docs, prefilter=False).collect()
+    }
+    assert set(got) == set(pdfs)
+    assert all(list(row) == STAT_COLUMNS for row in got.values())
+    for url, pdf in pdfs.items():
+        res = stat_document(pdf)
+        want = {
+            "url": url,
+            "npages": res.npages,
+            "n_objects": res.n_objects,
+            "status": res.status,
+            "err": res.error,
+            **{col: res.metadata.get(key) for col, key in INFO_FIELDS},
+        }
+        assert {k: v for k, v in got[url].items() if k != "wall_ms"} == want, url
