@@ -45,11 +45,8 @@ def benchmark_overlap(
     """-> (doc_id, n_contaminated_ngrams, contaminated) per corpus doc:
     how many DISTINCT benchmark n-grams the document contains, and the
     contamination flag (any overlap). Both inputs need (doc_id, text).
-    Deliberately NOT fanned out on under-split inputs (r8): the n-gram
-    explode feeds a broadcast semi-join that drops almost every row, so
-    the map side is cheap — quiet-window A/B at sf1.0 measured
-    0.32-0.43 s unguarded vs 0.34-0.55 s with the round-robin
-    exchange."""
+    Unguarded: the n-gram explode feeds a broadcast semi-join that drops
+    almost every row (parallelize.py)."""
     bench_grams = _ngram_rows(benchmark, n).select("ngram").distinct()
     doc_grams = _ngram_rows(documents, n)
     matched = doc_grams.join(F.broadcast(bench_grams), "ngram")

@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .parallelize import ensure_min_parallelism
+
 _NORM = lambda c: F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")  # noqa: E731
 
 
@@ -122,11 +124,6 @@ def _shingle_hash_table(
     JVM variant (xxhash64 inside F.transform) evaluates interpreted
     per element and measured 7x SLOWER than this Arrow pass.
 
-    Input is repartitioned up to cluster parallelism when under-split
-    (one-row-group parquet -> one scan partition would serialize the
-    whole Arrow shingle pass); no-op on properly-split tables — see
-    operators/parallelize.py.
-
     r8: the hash pass moved from a scalar ``@pandas_udf`` projection to
     ``mapInArrow`` (guide §4.2): same blake2b-8 per shingle, same
     set-accumulation order, but the output list<int64> column is built
@@ -142,9 +139,7 @@ def _shingle_hash_table(
     against the JVM), signed-min like ``F.min``. That removes the
     explode + 32-way min aggregate (and its corpus-sized exchange)
     that used to produce signatures from this table."""
-    from .parallelize import ensure_min_parallelism
-
-    documents = ensure_min_parallelism(documents, min_bytes=2 << 20)
+    documents = ensure_min_parallelism(documents)
 
     def shingle_batches(batches):
         import numpy as np
@@ -402,53 +397,32 @@ def lsh_recall(
     )
 
 
-def simhash(documents: DataFrame, bits: int = 64) -> DataFrame:
+def simhash(documents: DataFrame) -> DataFrame:
     """64-bit SimHash from token xxhash64 values, bit-majority counting.
 
-    Shape: explode tokens -> hash -> per-doc bit counts, with the 64
-    bit-counters PACKED into 20-bit lanes, three per long — 22 packed
-    sums instead of 64 scalar sums (r2 had 64; the aggregate buffer and
-    its generated code shrink ~3x, which is where the fixed per-query
-    cost of this operator lived). Signatures are bit-identical: each
-    lane accumulates exactly the old per-bit sum, and the majority test
-    unpacks lanes with shift/mask. Lane safety: tokens are capped at
-    2^20 - 1 per document (a ~4 MB+ text; beyond that the majority over
-    the first ~1M tokens is statistically identical), so a lane can
-    never overflow into its neighbor. Flat aggregate expressions stay
-    inside whole-stage codegen; the equivalent F.aggregate(...)
-    higher-order forms fall back to interpreted evaluation and run
-    ~10x slower.
+    One ``mapInArrow`` pass (guide §4.2): tokenization stays in the JVM
+    (trim/lower/split/slice expressions, so tokenizer parity is by
+    construction), and the Python side hashes each document's tokens
+    with the bit-exact vectorized XXH64 (xxh64.py, fuzz-pinned against
+    ``F.xxhash64``) and counts bit votes in NumPy — no per-token rows
+    and no shuffle (measured 2.6 s -> 0.6 s at sf1.0 against the
+    explode+aggregate form it replaced).
 
-    Under-split inputs are repartitioned up to cluster parallelism so
-    the signature pass isn't serialized on one scan partition (no-op on
-    properly-split tables — parallelize.py).
+    Only the first 2^20 - 1 tokens of a document vote (a ~4 MB+ text).
+    The slice decides which tokens vote, so it is part of the signature
+    definition: removing it would change the signatures of longer
+    documents.
 
-    r8 (guide §4.2): the per-token hash + bit-majority moved from an
-    explode (one row per token — tens of billions at corpus scale)
-    through a 22-lane packed aggregate into ONE ``mapInArrow`` pass:
-    tokenization stays in the JVM (identical trim/lower/split/slice
-    expressions, so tokenizer parity is by construction), and the
-    Python side hashes each document's tokens with the bit-exact
-    vectorized XXH64 (xxh64.py, fuzz-pinned against ``F.xxhash64``)
-    and counts bit votes in NumPy. Signatures are bit-identical
-    (integer majority over the same hashes — A/B-verified against the
-    aggregate form); the shuffle the explode+aggregate needed is gone
-    entirely. Measured 2.6 s -> 0.6 s at sf1.0. doc_id is assumed
-    unique per row (the corpus contract everywhere else in this
-    package; the old groupBy would instead have merged duplicate ids'
-    votes)."""
+    doc_id is assumed unique per row (the corpus contract everywhere
+    else in this package); duplicate ids get one signature each."""
     import pyarrow as pa
 
-    from .parallelize import ensure_min_parallelism
-
-    if bits != 64:
-        raise ValueError("simhash is a 64-bit signature")
-    documents = ensure_min_parallelism(documents, min_bytes=2 << 20)
-    lane_cap = (1 << 20) - 1
+    documents = ensure_min_parallelism(documents)
+    max_voters = (1 << 20) - 1
     toks = documents.select(
         "doc_id",
         F.slice(
-            F.split(F.trim(F.lower(F.col("text"))), r"\s+"), 1, lane_cap
+            F.split(F.trim(F.lower(F.col("text"))), r"\s+"), 1, max_voters
         ).alias("toks"),
     )
 

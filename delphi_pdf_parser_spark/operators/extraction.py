@@ -39,6 +39,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .parallelize import plan_bytes
+
 # the 8 /Info fields openfile1 surfaces (src/digPdfViewer.pas:236-312),
 # as (column, /Info key)
 INFO_FIELDS = (
@@ -179,10 +181,7 @@ def _auto_partitions(size_bytes: int, base_parallelism: int) -> int:
     """Scale the extraction-stage task count with DATA size, floored at
     the cluster's parallelism: at 100 TB a cores-only default would pull
     multi-GB Arrow batches through each python worker (OOM); at bench
-    scale the floor keeps every core busy. Catalyst reports Long.MaxValue
-    when statistics are unknown — treat anything absurd as unknown."""
-    if size_bytes >= 1 << 60:
-        size_bytes = 0
+    scale the floor keeps every core busy."""
     by_size = (size_bytes + _TARGET_TASK_BYTES - 1) // _TARGET_TASK_BYTES
     return int(min(max(base_parallelism, by_size), _MAX_AUTO_PARTITIONS))
 
@@ -192,21 +191,14 @@ def salt_by_size(df: DataFrame, partitions: int | None = None) -> DataFrame:
 
     The salt is a deterministic hash of the url (not rand()) so re-runs
     place rows identically — required for checkpoint-resume semantics.
-    ``partitions`` defaults to ``_auto_partitions`` of the plan's size
-    estimate: one task per ~256 MB of input, floored at the default
-    parallelism.
+    ``partitions`` defaults to ``_auto_partitions`` of ``plan_bytes``
+    (unknown counts as 0): one task per ~256 MB of input, floored at the
+    default parallelism.
     """
     if not partitions:
-        base = df.sparkSession.sparkContext.defaultParallelism
-        try:
-            # Catalyst's plan statistics: for parquet/Iceberg scans this is
-            # the (filter-pruned) input size in bytes
-            size = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:  # stats unavailable: fall back to parallelism
-            size = 0
-        partitions = _auto_partitions(size, base)
+        partitions = _auto_partitions(
+            plan_bytes(df) or 0, df.sparkSession.sparkContext.defaultParallelism
+        )
     # per-url hash: effectively-unique keys give multinomial balance
     # (coarse bucket+salt%k keys collide and leave partitions uneven);
     # giant documents land randomly, which with tasks ~= cores bounds the

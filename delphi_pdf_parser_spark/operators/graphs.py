@@ -43,6 +43,8 @@ from pyspark.sql.types import (
 
 from delphi_pdf_parser_spark.operators.urls import host_of, registered_domain
 
+from .parallelize import ensure_min_parallelism
+
 LINKS_SCHEMA = StructType(
     [
         StructField("src", StringType()),
@@ -161,19 +163,13 @@ def extract_links(
     """Out-links of every page: (src, dst, anchor, nofollow).
 
     One Arrow ``mapInPandas`` pass over (url, html) — column-pruned at
-    the scan, map-only, no shuffle on properly-split inputs. ``html``
-    may be binary or string. Under-split inputs fan out to cluster
-    parallelism first (a one-row-group parquet file would serialize
-    every regex scan onto one core; measured 4.8 s -> ~1 s at sf1.0) —
-    no-op on tiny inputs and at production split counts, see
-    operators/parallelize.py.
+    the scan, map-only behind the fan-out guard (parallelize.py).
+    ``html`` may be binary or string.
     """
-    from .parallelize import ensure_min_parallelism
-
     df = documents.select(
         F.col(url_col).alias("url"), F.col(html_col).alias("html")
     ).filter(F.col(html_col).isNotNull())
-    df = ensure_min_parallelism(df, min_bytes=2 << 20)
+    df = ensure_min_parallelism(df)
     return df.mapInPandas(_links_batches, LINKS_SCHEMA)
 
 

@@ -49,6 +49,8 @@ from delphi_pdf_parser_spark.htmlcore import (
     _decode_entities,
 )
 
+from .parallelize import ensure_min_parallelism
+
 MARKDOWN_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -363,18 +365,9 @@ def html_to_markdown(
     documents: DataFrame, url_col: str = "url", html_col: str = "html"
 ) -> DataFrame:
     """(url, html) -> (url, markdown, n_blocks, n_links); one map-only
-    Arrow pass, zero shuffle on properly-split inputs.
-
-    Under-split inputs (a one-row-group parquet file -> one scan
-    partition) are fanned out to cluster parallelism first, or the
-    whole Python render pass serializes onto a single core — measured
-    9.1 s -> ~1 s at sf1.0 (50k pages, one row group). No-op both on
-    tiny inputs (the zero-Exchange plan pin) and at production split
-    counts — see operators/parallelize.py."""
-    from .parallelize import ensure_min_parallelism
-
+    Arrow pass behind the fan-out guard (parallelize.py)."""
     df = documents.select(
         F.col(url_col).alias("url"), F.col(html_col).alias("html")
     ).filter(F.col(html_col).isNotNull())
-    df = ensure_min_parallelism(df, min_bytes=2 << 20)
+    df = ensure_min_parallelism(df)
     return df.mapInPandas(_md_batches, MARKDOWN_SCHEMA)

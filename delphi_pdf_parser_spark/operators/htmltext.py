@@ -22,6 +22,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .parallelize import ensure_min_parallelism
+
 HTML_EXTRACTED_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -73,13 +75,9 @@ def prefilter_html(documents: DataFrame) -> DataFrame:
 def extract_html_documents(
     documents: DataFrame, prefilter: bool = True
 ) -> DataFrame:
-    from .parallelize import ensure_min_parallelism
-
     df = prefilter_html(documents) if prefilter else documents.select(
         "url", "html"
     )
-    # under-split inputs fan out before the Python stage (no-op on
-    # properly-split tables — operators/parallelize.py)
-    return ensure_min_parallelism(df, min_bytes=2 << 20).mapInPandas(
+    return ensure_min_parallelism(df).mapInPandas(
         _html_batches, HTML_EXTRACTED_SCHEMA
     )

@@ -35,6 +35,7 @@ from .mediadec import (  # noqa: F401  (decode_image is this module's API too)
     decode_image,
     encode_bmp,
 )
+from .parallelize import ensure_min_parallelism
 
 MEDIA_SCHEMA = StructType(
     [
@@ -108,15 +109,8 @@ def _synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def synth_media(documents: DataFrame) -> DataFrame:
     """Attach a deterministic binary payload per document (stands in for
     a decoded-at-ingest thumbnail / audio clip). Image payloads are real
-    BMP files so the decode path below runs on real pixels.
-
-    The input is repartitioned up to cluster parallelism when it arrives
-    under-split (a one-row-group parquet file serializes every Python
-    codec call onto one core otherwise); on a properly-split table the
-    guard is a no-op — see operators/parallelize.py."""
-    from .parallelize import ensure_min_parallelism
-
-    docs = ensure_min_parallelism(documents.select("doc_id", "text"))
+    BMP files so the decode path below runs on real pixels."""
+    docs = ensure_min_parallelism(documents.select("doc_id", "text"), heavy=True)
     return docs.mapInPandas(_synth_batches, MEDIA_SCHEMA)
 
 
@@ -242,11 +236,8 @@ def _synth_video_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFra
 def synth_video(documents: DataFrame) -> DataFrame:
     """Attach a deterministic animated-GIF 'video' payload per document
     (the frame-sampling stand-in for real video containers; the GIF
-    animation decode is real — operators/mediadec.decode_gif_frames).
-    Under-split inputs fan out first (operators/parallelize.py)."""
-    from .parallelize import ensure_min_parallelism
-
-    docs = ensure_min_parallelism(documents.select("doc_id", "text"))
+    animation decode is real — operators/mediadec.decode_gif_frames)."""
+    docs = ensure_min_parallelism(documents.select("doc_id", "text"), heavy=True)
     return docs.mapInPandas(_synth_video_batches, VIDEO_SCHEMA)
 
 

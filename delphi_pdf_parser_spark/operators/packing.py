@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .parallelize import ensure_min_parallelism
+
 
 def _global_offsets(
     documents: DataFrame, n_expr, bucket_docs: int
@@ -40,12 +42,7 @@ def _global_offsets(
     bounded-bucket phase-1 window + O(n_buckets) phase-2 cumsum
     broadcast back. Shared by pack_sequences and assign_shards.
 
-    Deliberately NOT fanned out on under-split inputs (r8): the map
-    side here is one split-and-count per document — measured 1.2 s
-    unguarded vs 2.0 s with the round-robin exchange at sf1.0; the
-    extra shuffle costs more than the serial tokenize it would
-    parallelize (the same reasoning parallelize.py documents for cheap
-    map work)."""
+    Unguarded: one split-and-count per document (parallelize.py)."""
     toks = documents.select(
         "doc_id",
         n_expr.alias("n"),
@@ -192,17 +189,13 @@ def chunk_documents(
     the previous chunk's overlap is never emitted. Empty documents emit
     nothing.
 
-    Scale shape: one map-side split + explode (chunk rows never carry
-    the whole document, only their own slice) — no shuffle at all on
-    properly-split inputs. Under-split inputs fan out first so the
-    split+slice+explode parallelizes (no-op on tiny inputs — the
-    zero-Exchange plan pin — and at production split counts).
+    Scale shape: one map-side split + explode behind the fan-out guard
+    (parallelize.py); chunk rows never carry the whole document, only
+    their own slice.
     """
     if overlap < 0 or overlap >= chunk_tokens:
         raise ValueError("need 0 <= overlap < chunk_tokens")
-    from .parallelize import ensure_min_parallelism
-
-    documents = ensure_min_parallelism(documents, min_bytes=2 << 20)
+    documents = ensure_min_parallelism(documents)
     step = chunk_tokens - overlap
     toks = F.split(
         F.trim(F.coalesce(F.col("text"), F.lit(""))), r"\s+"

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .parallelize import ensure_min_parallelism
+
 
 def _terms(col, out):
     toks = F.split(F.trim(F.lower(col)), r"\s+")
@@ -43,9 +45,6 @@ def bm25_topk(
     text); ``queries``: (query_id, text). Returns (query_id, doc_id,
     score, rk), score rounded to 6 dp, ties broken by doc_id.
 
-    Under-split corpora fan out first so the tokenize+explode map side
-    parallelizes (no-op otherwise — parallelize.py).
-
     r8 (guide §1.2 "remove unnecessary passes"): doclen and the
     (N, avgdl) scalars no longer run explode + corpus-wide aggregates —
     ``len_d`` is the SIZE of the token array (integer-exact equal to
@@ -59,9 +58,7 @@ def bm25_topk(
     exchange was measured: better than the old shape at sf1.0 but a
     ~0.8 s stage-latency regression at sf0.1 — this map-only form wins
     at both scales.)"""
-    from .parallelize import ensure_min_parallelism
-
-    documents = ensure_min_parallelism(documents, min_bytes=2 << 20)
+    documents = ensure_min_parallelism(documents)
     toks = documents.select(
         "doc_id", F.explode(_terms(F.col("text"), "t")).alias("tok")
     )
@@ -136,11 +133,8 @@ def build_inverted_index(
     DETERMINISTICALLY to the ``max_postings`` lowest doc_ids with the
     true ``df`` still reported next to ``n_stored`` (no silent cap).
     One explode + two hash aggregates + a per-token rank window.
-    Under-split corpora fan out first (no-op otherwise).
     """
-    from .parallelize import ensure_min_parallelism
-
-    documents = ensure_min_parallelism(documents, min_bytes=2 << 20)
+    documents = ensure_min_parallelism(documents)
     toks = documents.select(
         "doc_id", F.explode(_terms(F.col("text"), "t")).alias("tok")
     )

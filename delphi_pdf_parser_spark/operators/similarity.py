@@ -18,6 +18,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import _cosine  # noqa: F401 — kept as the pinned expression spec
+from .parallelize import ensure_min_parallelism
 
 
 def _cosine_arrow():
@@ -49,13 +50,10 @@ def brute_force_topk(
 ) -> DataFrame:
     """queries(query_id, embedding) x embeddings(vec_id, embedding) ->
     top-k by cosine. Rank on rounded cosine with vec_id tiebreak so the
-    result is engine-independent. Under-split corpora fan out first so
-    the Arrow cosine pass parallelizes (no-op otherwise —
-    parallelize.py); the per-row einsum arithmetic is unchanged, so
-    every cosine is bit-identical regardless of batch composition."""
-    from .parallelize import ensure_min_parallelism
-
-    embeddings = ensure_min_parallelism(embeddings, min_bytes=2 << 20)
+    result is engine-independent. The per-row einsum arithmetic does
+    not depend on batch composition, so every cosine is bit-identical
+    with or without the fan-out guard."""
+    embeddings = ensure_min_parallelism(embeddings)
     q = F.broadcast(
         queries.select(
             F.col("vec_id").alias("query_id"),

@@ -14,6 +14,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .parallelize import ensure_min_parallelism
+
 # deterministic marker-word language classifier (the n-gram heuristic of
 # the task brief reduced to marker unigrams so the oracle SQL is exact)
 LANG_MARKERS = {
@@ -121,14 +123,12 @@ def compression_ratio(documents: DataFrame) -> DataFrame:
     boilerplate signal: highly repetitive text compresses far below
     natural prose). Arrow-batched pandas UDF — zlib is the one thing the
     JVM built-ins can't express; rows-only in the oracle gate (DuckDB has
-    no deflate). Under-split inputs fan out first (parallelize.py)."""
+    no deflate)."""
     import zlib
 
     from pyspark.sql.functions import pandas_udf
 
-    from .parallelize import ensure_min_parallelism
-
-    documents = ensure_min_parallelism(documents, min_bytes=2 << 20)
+    documents = ensure_min_parallelism(documents)
 
     @pandas_udf("double")
     def _ratio(text: pd.Series) -> pd.Series:
@@ -155,12 +155,8 @@ def top_ngrams(
     contamination/boilerplate hunting): explode word n-grams, one
     hash-aggregate count (map-side partial), deterministic top-k by
     (count desc, ngram asc). Shape: explode -> count -> global top-k;
-    the only full shuffle is the count's exchange. Under-split inputs
-    fan out first so the zip+explode map side parallelizes (no-op on
-    tiny inputs and at production split counts — parallelize.py)."""
-    from .parallelize import ensure_min_parallelism
-
-    documents = ensure_min_parallelism(documents, min_bytes=2 << 20)
+    the only full shuffle is the count's exchange."""
+    documents = ensure_min_parallelism(documents)
     toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
     # n shifted slices zipped together: plain (codegen-able) array
     # expressions — the equivalent F.transform(lambda ...) form runs
@@ -333,11 +329,7 @@ def unigram_logprob(
     below top_v, so the capped model equals the exact one and the
     DuckDB oracle (which mirrors the cap) pins it bit-for-bit.
 
-    Deliberately NOT fanned out on under-split inputs (r8): the map
-    side is a bare split+explode — A/B measured 1.55 s unguarded vs
-    1.7-2.1 s with the round-robin exchange at sf1.0 (contrast
-    top_ngrams/bigram_logprob, whose zip+slice map work is heavy
-    enough that the fan-out wins)."""
+    Unguarded: the map side is a bare split+explode (parallelize.py)."""
     toks = documents.select(
         "doc_id", F.explode(_tokens(F.col("text"))).alias("tok")
     ).filter(F.col("tok") != "")
@@ -399,13 +391,8 @@ def bigram_logprob(
     self-join on the token stream), counted in one hash-agg each for
     unigrams and bigrams, and scored via three broadcast joins on the
     exploded pair stream; one final groupBy(doc_id). Docs with < 2
-    tokens emit no row (no transitions to score).
-
-    Under-split inputs fan out first so the pair-zip/explode map side
-    parallelizes (no-op otherwise — parallelize.py)."""
-    from .parallelize import ensure_min_parallelism
-
-    documents = ensure_min_parallelism(documents, min_bytes=2 << 20)
+    tokens emit no row (no transitions to score)."""
+    documents = ensure_min_parallelism(documents)
     t = _tokens(F.col("text"))
     pre = F.slice(t, 1, F.size(t) - 1)
     nxt = F.slice(t, 2, F.size(t) - 1)
@@ -823,13 +810,8 @@ def token_idf_stats(documents: DataFrame) -> DataFrame:
     mean/max idf are rounded to 4 decimals like unigram_logprob so the
     DuckDB oracle pins values despite float summation order; hapax_frac
     is an exact rational (long/long division, bit-identical).
-
-    Under-split inputs fan out first so the distinct+explode map side
-    parallelizes (no-op otherwise — parallelize.py).
     """
-    from .parallelize import ensure_min_parallelism
-
-    documents = ensure_min_parallelism(documents, min_bytes=2 << 20)
+    documents = ensure_min_parallelism(documents)
     d = documents.select(
         "doc_id",
         F.array_distinct(_tokens(F.lower(F.col("text")))).alias("t"),

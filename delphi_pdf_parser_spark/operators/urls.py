@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .parallelize import ensure_min_parallelism
+
 _TRACKING_RE = "^(utm_[a-z]+|gclid|fbclid)="
 
 
@@ -114,10 +116,8 @@ def domain_stats(
     blocked). Scale shape (100 TB): host/eTLD+1 extraction is map-only
     string expressions; ONE hash-agg on the registered domain; the
     blocklist is an in-expression literal set (broadcast-join a table
-    instead when it outgrows a literal). Deliberately NOT fanned out on
-    under-split inputs (r8): the per-row host/eTLD+1 extraction is
-    cheap — quiet-window A/B at sf1.0 measured 0.34-0.39 s unguarded vs
-    0.36-0.59 s with the round-robin exchange."""
+    instead when it outgrows a literal). Unguarded: the per-row
+    host/eTLD+1 extraction is cheap (parallelize.py)."""
     reg = registered_domain(host_of(F.col(url_col)))
     blocked = (
         reg.isin(*blocklist) if blocklist else F.lit(False)
@@ -156,9 +156,7 @@ def host_quality_stats(
     """
     from delphi_pdf_parser_spark.operators.textstats import quality_exprs
 
-    from .parallelize import ensure_min_parallelism
-
-    documents = ensure_min_parallelism(documents, min_bytes=2 << 20)
+    documents = ensure_min_parallelism(documents)
     quality, _ = quality_exprs()
     reg = registered_domain(host_of(F.col(url_col)))
     agg = (
@@ -184,9 +182,7 @@ def host_quality_stats(
 
 def url_dedup(df: DataFrame, url_col: str = "url") -> DataFrame:
     """Keep one row per canonical URL (min original url as the winner —
-    deterministic, engine-portable tiebreak). Under-split inputs fan
-    out first so the regexp canonicalization map side parallelizes
-    (no-op otherwise — parallelize.py).
+    deterministic, engine-portable tiebreak).
 
     r8: the canonicalization is STAGED through layered projections
     instead of the single inline ``canonicalize_url`` expression — the
@@ -199,9 +195,7 @@ def url_dedup(df: DataFrame, url_col: str = "url") -> DataFrame:
     same composition — canonical urls are bit-identical
     (``canonicalize_url`` remains the pinned one-expression spec;
     tests/test_urls.py compares the two). With the regexps de-duplicated
-    the map side is cheap enough that an under-split fan-out exchange
-    would cost more than it buys (quiet-window A/B: 0.63 s unguarded vs
-    0.62-0.94 s guarded at sf1.0) — deliberately not guarded."""
+    the map side is cheap, so it is unguarded (parallelize.py)."""
     u = F.regexp_replace(F.trim(F.col(url_col)), "#.*$", "")
     staged = (
         df.withColumn("_u", u)

@@ -5,6 +5,9 @@ extraction pipeline has one exchange and one Python stage)."""
 from __future__ import annotations
 
 import os
+import re
+
+import pytest
 
 from delphi_pdf_parser_spark.plans import plan_report
 
@@ -276,3 +279,62 @@ def test_host_quality_single_exchange_jvm_only(spark):
     assert plan.count("Exchange") == 1, plan
     assert "Python" not in plan and "BatchEval" not in plan, plan
     assert "Join" not in plan, plan
+
+
+# (rows, heavy, fans out): spark.range(0, n, 1, 1) is one partition whose
+# Catalyst estimate is 8*n bytes
+FAN_OUT_RULES = [
+    (1_000, False, False),
+    (300_000, False, True),  # 2.4 MB: at or above the light floor
+    (1_000, True, True),
+    (1 << 27, False, False),  # 1 GB: at the ceiling
+    (1 << 27, True, False),
+]
+
+
+@pytest.mark.parametrize("rows,heavy,fans_out", FAN_OUT_RULES)
+def test_fan_out_rule_table(spark, rows, heavy, fans_out):
+    from delphi_pdf_parser_spark.operators.parallelize import (
+        ensure_min_parallelism,
+    )
+    from delphi_pdf_parser_spark.plans import explain_str
+
+    df = ensure_min_parallelism(spark.range(0, rows, 1, 1), heavy=heavy)
+    plan = explain_str(df, "simple")
+    if fans_out:
+        n = spark.sparkContext.defaultParallelism
+        assert plan.count("Exchange") == 1, plan
+        assert f"RoundRobinPartitioning({n})" in plan, plan
+    else:
+        assert "Exchange" not in plan, plan
+
+
+def test_unknown_estimate_adds_no_fan_out(spark):
+    """An RDD-backed frame has no statistics (Catalyst reports
+    Long.MaxValue): the guard leaves it alone, and the salt stage falls
+    back to defaultParallelism partitions."""
+    from delphi_pdf_parser_spark.operators.extraction import salt_by_size
+    from delphi_pdf_parser_spark.operators.parallelize import (
+        ensure_min_parallelism,
+    )
+    from delphi_pdf_parser_spark.plans import explain_str
+
+    rdd = spark.sparkContext.parallelize([("u", bytearray(b"%PDF-x"))])
+    df = spark.createDataFrame(rdd, "url string, html binary")
+    for heavy in (False, True):
+        plan = explain_str(ensure_min_parallelism(df, heavy=heavy), "simple")
+        assert "Exchange" not in plan, plan
+    plan = explain_str(salt_by_size(df), "simple")
+    parts = re.findall(r"hashpartitioning\(xxhash64\([^)]*\), (\d+)\)", plan)
+    assert parts == [str(spark.sparkContext.defaultParallelism)], plan
+
+
+def test_synth_media_fans_out_once(spark):
+    """The codec stage fans out at any known size below the ceiling: one
+    round-robin exchange over the sf0.01 documents."""
+    from delphi_pdf_parser_spark.operators.multimodal import synth_media
+    from delphi_pdf_parser_spark.plans import explain_str
+
+    docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
+    plan = explain_str(synth_media(docs), "simple")
+    assert plan.count("RoundRobinPartitioning") == 1, plan
