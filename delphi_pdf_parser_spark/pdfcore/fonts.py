@@ -42,7 +42,13 @@ import struct
 
 from .cff import CffError, CffFont
 from .sfnt import SfntError, SfntFont
+from .textdev import advances
 from .type1 import parse_type1_encoding
+
+# advance_table memo: key packing, the codes it spans, states kept per font
+_PACK_STATE = struct.Struct("4d").pack
+_CODES = np.arange(256)
+_ADV_TABLES_MAX = 64
 
 
 class FontError(Exception):
@@ -71,6 +77,7 @@ class FontDesc:
         "t3_render",
         "_fast_table",
         "_fast_arrays",
+        "_adv_tables",
         "_adv_array",
         "_cid_mode",
         "_cid_cache",
@@ -112,6 +119,7 @@ class FontDesc:
         self.t3_render = None
         self._fast_table = None
         self._fast_arrays = None
+        self._adv_tables: dict = {}
         self._adv_array = None
         self._cid_mode = None
         self._cid_cache: dict = {}
@@ -353,6 +361,22 @@ class FontDesc:
         # fancy-index instead of two
         self._fast_arrays = (ok, cid, ucs, w, np.stack([cid, ucs]))
         return self._fast_arrays
+
+    def advance_table(self, ks: float, cs: float, ws: float, ta: float) -> list:
+        """The 1-byte fast path's advance of every code at one text state
+        (``textdev.advances`` over codes 0..255, NaN at codes without a
+        single-codepoint mapping), as a list for per-string folds.
+        Memoized per font on the parameters' exact bits (so +0.0 and
+        -0.0 stay apart), a bounded number of states at a time."""
+        key = _PACK_STATE(ks, cs, ws, ta)
+        tbl = self._adv_tables.get(key)
+        if tbl is None:
+            if len(self._adv_tables) >= _ADV_TABLES_MAX:
+                self._adv_tables.clear()
+            w = self.fast_arrays()[3]
+            tbl = advances(w, _CODES, ks, cs, ws, ta).tolist()
+            self._adv_tables[key] = tbl
+        return tbl
 
 
 # Per-process memo of parsed ToUnicode CMap streams, keyed by content

@@ -25,6 +25,8 @@ Mirrors src/vcl/pdf_interprets.pas:
 from __future__ import annotations
 
 import zlib
+from functools import reduce
+from operator import add
 
 import numpy as np
 
@@ -33,11 +35,12 @@ from .cos import Name, is_indirect, is_name, to_int, to_name, to_real
 from .filters import a85_decode, ahx_decode
 from .fonts import FontError, load_font
 from .lexer import ContentTokens, Lexer
-from .textdev import TextRun, _concat
+from .textdev import TextRun, _concat, advances
 
 FLT_EPSILON = 1.19209290e-07
 IDENTITY = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
 MAX_XOBJECT_DEPTH = 16
+_NAN = float("nan")
 
 
 def _translate(tx, ty):
@@ -332,41 +335,33 @@ class CSI:
         if len(buf) >= 16:
             fa = font.fast_arrays()
             if fa is not None:
-                _ok, cid_a, ucs_a, w_a, cu_a = fa
-                codes = np.frombuffer(buf, dtype=np.uint8)
                 # per-char tx = (w*k + char_space)*scale, word_space
                 # added after code 32 — identical to the scalar fold.
                 # w_a is NaN at unmapped codes, so one NaN test on the
-                # final cumulative advance replaces an ok[codes].all()
-                # pre-pass; +0.0 / *1.0 skips are bit-exact identities.
-                tx = w_a[codes] * (k * scale)
-                cs_s = char_space * scale
-                if cs_s != 0.0:
-                    tx += cs_s
-                if word_space != 0.0:
-                    tx += (codes == 32) * (word_space * scale)
-                n = len(buf)
+                # final advance replaces an ok[codes].all() pre-pass
+                ks, cs_s = k * scale, char_space * scale
+                ws_s = word_space * scale if word_space != 0.0 else _NAN
                 if tb == 0.0:
                     # horizontal text (the overwhelmingly common case):
-                    # tf never moves, one cumsum row instead of two
-                    c = np.empty(n + 1)
-                    c[0] = te
-                    c[1:] = tx if ta == 1.0 else tx * ta
-                    np.cumsum(c, out=c)
-                    end_e = float(c[-1])
+                    # tf never moves; the end x is a left fold over the
+                    # font's advance table (the order np.cumsum adds in,
+                    # which sum() does not promise), the glyph positions
+                    # come from one pass per run in TextRun.columns
+                    tbl = font.advance_table(ks, cs_s, ws_s, ta)
+                    end_e = reduce(add, map(tbl.__getitem__, buf), te)
                     if end_e == end_e:  # NaN-free: every code mapped
-                        cu = cu_a[:, codes]
-                        t.add_block(
-                            cu[0],
-                            cu[1],
-                            c[:-1] if base_e == 0.0 else base_e + c[:-1],
-                            np.full(n, base_f + tf),
+                        t.add_segment(
+                            buf, te, base_e, base_f + tf, ks, cs_s, ws_s, ta
                         )
                         self.tm = (ta, tb, tc, td, end_e, tf)
                         return
                 else:
                     # bit-exact accumulation: seed the cumsum with te/tf
                     # so every partial sum matches the scalar fold order
+                    w_a, cu_a = fa[3], fa[4]
+                    codes = np.frombuffer(buf, dtype=np.uint8)
+                    tx = advances(w_a[codes], codes, ks, cs_s, ws_s, 1.0)
+                    n = len(buf)
                     c = np.empty((2, n + 1))
                     c[0, 0] = te
                     c[1, 0] = tf
@@ -524,99 +519,116 @@ def run_stream(csi: CSI, rdb, lexer: Lexer):
     csi.obj = None
     in_array = 0
     doc = csi.doc
-    # bulk-lex the stream; lex.handoff() rewinds the raw Lexer for the
-    # position-dependent consumers (object parsing, inline-image payloads)
+    # bulk-lex the stream one buffer at a time; a consumer that needs the
+    # raw Lexer (object parsing, inline-image payloads) takes it with
+    # lex.handoff(end) at its token and the loop refills after it
     lex = ContentTokens(lexer)
-    lexfn = lex.lex
+    fill = lex.fill
     # hot-loop locals: token-kind constants and the branch order follow
     # measured frequency (numbers > keywords > strings > names); the
-    # stack-overflow trim moved into the number branch (the only one
-    # that grows the stack) — observable state per token is unchanged
-    T_INT, T_REAL = lx.TOK_INT, lx.TOK_REAL
+    # stack-overflow trim sits in the number branches (the only ones
+    # that grow the stack) — observable state per token is unchanged
+    T_NUMS, T_INT, T_REAL = lx.TOK_NUMS, lx.TOK_INT, lx.TOK_REAL
     T_STRING, T_NAME, T_KW = lx.TOK_STRING, lx.TOK_NAME, lx.TOK_KEYWORD
     T_OPEN_ARR, T_CLOSE_ARR = lx.TOK_OPEN_ARRAY, lx.TOK_CLOSE_ARRAY
     T_OPEN_DICT, T_EOF = lx.TOK_OPEN_DICT, lx.TOK_EOF
     T_ENDSTREAM = lx.TOK_ENDSTREAM
     while True:
-        tok, val = lexfn()
-        if in_array:
-            if tok == T_CLOSE_ARR:
-                in_array = 0
-            elif tok == T_INT or tok == T_REAL:
-                gs = csi.gs
-                csi.show_space(-float(val) * gs.size * 0.001)
-            elif tok == T_STRING:
-                csi.show_string(val)
-            elif tok == T_KW:
-                if val in (b"Tw", b"Tc"):
-                    doc.note_failure("keyword_in_array")
+        for tok, val, end in fill():
+            if in_array:
+                if tok == T_CLOSE_ARR:
+                    in_array = 0
+                elif tok == T_NUMS:
+                    for v in val:
+                        csi.show_space(-v * csi.gs.size * 0.001)
+                elif tok == T_INT or tok == T_REAL:
+                    gs = csi.gs
+                    csi.show_space(-float(val) * gs.size * 0.001)
+                elif tok == T_STRING:
+                    csi.show_string(val)
+                elif tok == T_KW:
+                    if val in (b"Tw", b"Tc"):
+                        doc.note_failure("keyword_in_array")
+                    else:
+                        raise SyntaxError("syntax error in array")
+                elif tok == T_EOF:
+                    return
                 else:
                     raise SyntaxError("syntax error in array")
-            elif tok == T_EOF:
-                return
-            else:
-                raise SyntaxError("syntax error in array")
-            continue
-        if tok == T_INT or tok == T_REAL:
-            stack = csi.stack
-            stack.append(float(val))
-            if len(stack) > 32:
-                doc.note_failure("stack_overflow")
-                csi.stack = stack[:32]
-        elif tok == T_KW:
-            try:
-                run_keyword(csi, rdb, lex, val)
-            except SyntaxError:
-                raise
-            except Exception:
-                doc.note_failure(
-                    "keyword_error:" + val.decode("latin-1", "replace")
-                )
-            csi.stack = []
-            csi.name = ""
-            csi.string = None
-            csi.obj = None
-        elif tok == T_STRING:
-            csi.string = val
-        elif tok == T_NAME:
-            csi.name = val
-        elif tok == T_OPEN_ARR:
-            if not csi.in_text:
-                from .parser import parse_array
+                continue
+            if tok == T_NUMS:
+                stack = csi.stack
+                stack.extend(val)
+                if len(stack) > 32:
+                    for _ in range(len(stack) - 32):
+                        doc.note_failure("stack_overflow")
+                    csi.stack = stack[:32]
+            elif tok == T_KW:
+                inline_image = val == b"BI"
+                if inline_image:
+                    lex.handoff(end)  # run_keyword reads the raw payload
+                try:
+                    run_keyword(csi, rdb, lex, val)
+                except SyntaxError:
+                    raise
+                except Exception:
+                    doc.note_failure(
+                        "keyword_error:" + val.decode("latin-1", "replace")
+                    )
+                csi.stack = []
+                csi.name = ""
+                csi.string = None
+                csi.obj = None
+                if inline_image:
+                    break
+            elif tok == T_STRING:
+                csi.string = val
+            elif tok == T_INT or tok == T_REAL:
+                stack = csi.stack
+                stack.append(float(val))
+                if len(stack) > 32:
+                    doc.note_failure("stack_overflow")
+                    csi.stack = stack[:32]
+            elif tok == T_NAME:
+                csi.name = val
+            elif tok == T_OPEN_ARR:
+                if not csi.in_text:
+                    from .parser import parse_array
 
-                csi.obj = parse_array(lex.handoff())
-            else:
+                    csi.obj = parse_array(lex.handoff(end))
+                    break
                 in_array = 1
-        elif tok == T_OPEN_DICT:
-            from .parser import parse_dict
+            elif tok == T_OPEN_DICT:
+                from .parser import parse_dict
 
-            csi.obj = parse_dict(lex.handoff())
-        elif tok == T_ENDSTREAM or tok == T_EOF:
-            return
-        elif tok in (
-            lx.TOK_R,
-            lx.TOK_TRUE,
-            lx.TOK_FALSE,
-            lx.TOK_NULL,
-            lx.TOK_OBJ,
-            lx.TOK_ENDOBJ,
-            lx.TOK_XREF,
-            lx.TOK_TRAILER,
-            lx.TOK_STARTXREF,
-        ):
-            kw = val if isinstance(val, bytes) else b"?"
-            try:
-                run_keyword(csi, rdb, lex, kw)
-            except SyntaxError:
-                raise
-            except Exception:
-                doc.note_failure("keyword_error:" + kw.decode("latin-1", "replace"))
-            csi.stack = []
-            csi.name = ""
-            csi.string = None
-            csi.obj = None
-        else:
-            raise SyntaxError("syntax error in content stream")
+                csi.obj = parse_dict(lex.handoff(end))
+                break
+            elif tok == T_ENDSTREAM or tok == T_EOF:
+                return
+            elif tok in (
+                lx.TOK_R,
+                lx.TOK_TRUE,
+                lx.TOK_FALSE,
+                lx.TOK_NULL,
+                lx.TOK_OBJ,
+                lx.TOK_ENDOBJ,
+                lx.TOK_XREF,
+                lx.TOK_TRAILER,
+                lx.TOK_STARTXREF,
+            ):
+                kw = val if isinstance(val, bytes) else b"?"
+                try:
+                    run_keyword(csi, rdb, lex, kw)
+                except SyntaxError:
+                    raise
+                except Exception:
+                    doc.note_failure("keyword_error:" + kw.decode("latin-1", "replace"))
+                csi.stack = []
+                csi.name = ""
+                csi.string = None
+                csi.obj = None
+            else:
+                raise SyntaxError("syntax error in content stream")
 
 
 def _st(csi: CSI, i: int) -> float:

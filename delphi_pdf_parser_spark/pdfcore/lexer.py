@@ -50,6 +50,7 @@ TOK_ENDSTREAM = 20
 TOK_XREF = 21
 TOK_TRAILER = 22
 TOK_STARTXREF = 23
+TOK_NUMS = 24  # ContentTokens.fill() only: a number run, value list[float]
 
 _KEYWORD_TOKENS = {
     b"R": TOK_R,
@@ -69,6 +70,7 @@ _WHITESPACE = b"\x00\t\n\x0c\r "
 _DELIMS = b"()<>[]{}/%"
 
 _ws_re = re.compile(rb"[\x00\t\n\x0c\r ]+")
+_comment_re = re.compile(rb"%[^\r\n]*+")
 _num_re = re.compile(rb"[+-]?(?:\d+(?:\.\d*)?|\.\d*)")
 _name_re = re.compile(rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]*")
 _hexesc_re = re.compile(rb"#([0-9a-fA-F]{2})")
@@ -163,8 +165,7 @@ class Lexer:
                 pos = m.end()
                 continue
             if c == 0x25:  # %
-                while pos < end and data[pos] not in (10, 13):
-                    pos += 1
+                pos = _comment_re.match(data, pos, end).end()
                 continue
             break
         if c == 0x2F:  # /
@@ -343,74 +344,102 @@ class Lexer:
 
 
 # --- bulk content-stream tokenizer ------------------------------------------
-# One C-level finditer pass emits runs of simple tokens (numbers, names,
-# clean literal strings, [ ], keywords); anything position-dependent or
-# rare (escaped/nested strings, hex strings, dicts, stray delimiters)
-# falls back to Lexer.lex() one token at a time. Semantics are identical
-# to lex() for every byte sequence: the bulk patterns are exact subsets
-# of the corresponding lex() branches, and non-matching positions break
-# the bulk run so the classic scanner handles them.
+# One anchored C-level match per simple token (numbers, names, clean
+# literal strings, [ ], keywords), each match taking its leading
+# whitespace and comments with it; anything position-dependent or rare
+# (escaped/nested strings, hex strings, dicts, stray delimiters) falls
+# back to Lexer.lex() one token at a time. Semantics are identical to
+# lex() for every byte sequence: the bulk patterns are exact subsets of
+# the corresponding lex() branches, and a failed match hands the
+# position to the classic scanner. The whitespace prefix is possessive,
+# so a long run of whitespace costs no backtracking state.
 
-_BULK_TOKEN_RE = re.compile(
-    rb"(?:[\x00\t\n\x0c\r ]|%[^\r\n]*)+"
-    rb"|(?P<num>[+-]?(?:\d+(?:\.\d*)?|\.\d+))"
-    rb"|(?P<str>\((?P<sbody>[^()\\\r\n]*)\))"
-    rb"|(?P<name>/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|(?P<kw>[^\x00\t\n\x0c\r ()<>\[\]{}/%+\-.0-9][^\x00\t\n\x0c\r ()<>\[\]{}/%]*)"
-    rb"|(?P<arr>[\[\]])"
+_SKIP_RE = re.compile(rb"(?:[\x00\t\n\x0c\r ]++|%[^\r\n]*+)*+")
+
+# A run member: a whole number token (never followed by a digit or
+# '.') with at most 15 integer digits, so float(member) equals the
+# classic float(int(member)) (except "-0", see _bulk_fill); longer
+# integers stay single tokens and keep their classic failure modes. A
+# member that fails the guard only ends the run before it, so a run
+# costs one linear scan.
+_RUN_MEMBER = rb"[+-]?(?:\d{1,15}(?:\.\d*)?|\.\d+)(?![\d.])"
+
+
+def _token_re(nums: bytes):
+    # groups: nums=1 num=2 str=3 sbody=4 name=5 kw=6 arr=7 (a 'str'
+    # match reports lastindex 3, not 4)
+    return re.compile(
+        _SKIP_RE.pattern
+        + rb"(?:(?P<nums>" + nums + rb")"
+        rb"|(?P<num>[+-]?(?:\d+(?:\.\d*)?|\.\d+))"
+        rb"|(?P<str>\((?P<sbody>[^()\\\r\n]*+)\))"
+        rb"|(?P<name>/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*+)"
+        rb"|(?P<kw>[^\x00\t\n\x0c\r ()<>\[\]{}/%+\-.0-9][^\x00\t\n\x0c\r ()<>\[\]{}/%]*+)"
+        rb"|(?P<arr>[\[\]]))"
+    )
+
+
+# lex(): one token per number (the nums group never matches)
+_BULK_TOKEN_RE = _token_re(rb"(?!)")
+# fill(): two or more plain numbers separated only by whitespace (not
+# NUL or comments) become one TOK_NUMS token
+_RUN_TOKEN_RE = _token_re(
+    _RUN_MEMBER + rb"(?:[\t\n\x0c\r ]++" + _RUN_MEMBER + rb")++"
 )
 
 _BULK_CAP = 8192  # tokens per fill (bounds buffering on giant streams)
 
 
-def _bulk_fill(lexer: "Lexer") -> list:
+def _bulk_fill(lexer: "Lexer", token_re) -> list:
     """Tokenize from lexer.pos while tokens stay simple; returns
     [(tok, val, endpos), ...] and leaves lexer.pos after the last emitted
-    token (or after any trailing whitespace when stopping at a complex
-    byte, which the classic scanner then handles)."""
+    token (or after any trailing whitespace and comments when stopping at
+    a complex byte, which the classic scanner then handles)."""
     data = lexer.data
     pos = lexer.pos
     buf: list = []
     append = buf.append
-    # hot-loop locals (one m.span() C call instead of start()+end())
     t_real, t_int, t_str, t_name = TOK_REAL, TOK_INT, TOK_STRING, TOK_NAME
-    t_kw, t_oarr, t_carr = TOK_KEYWORD, TOK_OPEN_ARRAY, TOK_CLOSE_ARRAY
+    t_kw, t_oarr, t_carr, t_nums = (
+        TOK_KEYWORD, TOK_OPEN_ARRAY, TOK_CLOSE_ARRAY, TOK_NUMS,
+    )
     kwmap_get = _KEYWORD_TOKENS.get
-    # integer dispatch on lastindex (groupindex: num=1 str=2 sbody=3
-    # name=4 kw=5 arr=6; a 'str' match reports lastindex 2, not 3)
-    for m in _BULK_TOKEN_RE.finditer(data, pos, lexer.end):
-        s, e = m.span()
-        if s != pos:
-            break  # unhandled byte at pos -> classic scanner's turn
-        pos = e
+    for m in iter(token_re.scanner(data, pos, lexer.end).match, None):
+        pos = m.end()
         g = m.lastindex
-        if g is None:
-            continue  # whitespace / comment run
-        if g == 1:  # num
-            raw = data[s:e]
+        if g == 1:  # nums
+            raw = m[1]
+            if b"-0" in raw:
+                # an integer -0 is +0.0 in the classic float(int(raw))
+                append((t_nums, [
+                    float(p) if b"." in p else float(int(p)) for p in raw.split()
+                ], pos))
+            else:
+                append((t_nums, list(map(float, raw.split())), pos))
+        elif g == 2:  # num
+            raw = m[2]
             if b"." in raw:
-                try:
-                    append((t_real, float(raw), pos))
-                except ValueError:  # pragma: no cover - regex precludes
-                    append((t_real, 0.0, pos))
+                append((t_real, float(raw), pos))
             else:
                 append((t_int, int(raw), pos))
-        elif g == 5:  # kw
-            raw = data[s:e]
+        elif g == 6:  # kw
+            raw = m[6]
             append((kwmap_get(raw, t_kw), raw, pos))
-        elif g == 2:  # str
-            append((t_str, m.group(3), pos))
-        elif g == 4:  # name
-            raw = data[s + 1 : e]
+        elif g == 3:  # str
+            append((t_str, m[4], pos))
+        elif g == 5:  # name
+            raw = m[5][1:]
             if b"#" in raw:
                 raw = _hexesc_re.sub(
                     lambda mm: bytes([int(mm.group(1), 16)]), raw
                 )
             append((t_name, raw.decode("latin-1"), pos))
         else:  # arr
-            append((t_oarr if data[s] == 0x5B else t_carr, None, pos))
+            append((t_oarr if data[pos - 1] == 0x5B else t_carr, None, pos))
         if len(buf) >= _BULK_CAP:
             break
+    else:
+        pos = _SKIP_RE.match(data, pos, lexer.end).end()
     lexer.pos = pos
     return buf
 
@@ -419,7 +448,11 @@ class ContentTokens:
     """Token cursor over a content stream: bulk-lexed lookahead with a
     ``handoff()`` escape hatch that rewinds the underlying Lexer to just
     after the last consumed token — for consumers that need raw bytes or
-    tell/seek (inline-image payloads, dict/array object parsing)."""
+    tell/seek (inline-image payloads, dict/array object parsing).
+
+    ``lex()`` hands out the classic token stream one token at a time;
+    ``fill()`` hands out whole buffers with number runs folded into
+    TOK_NUMS tokens."""
 
     __slots__ = ("lexer", "buf", "i", "n", "_fill_start")
 
@@ -441,7 +474,7 @@ class ContentTokens:
     def _slow(self):
         lexer = self.lexer
         self._fill_start = lexer.pos
-        buf = self.buf = _bulk_fill(lexer)
+        buf = self.buf = _bulk_fill(lexer, _BULK_TOKEN_RE)
         n = self.n = len(buf)
         if n:
             self.i = 1
@@ -450,13 +483,29 @@ class ContentTokens:
         self.i = 0
         return lexer.lex()  # single complex token; lexer.pos advances
 
-    def handoff(self) -> Lexer:
-        """Discard buffered lookahead and return the Lexer positioned
-        right after the last token this cursor handed out."""
-        i, n = self.i, self.n
+    def fill(self) -> list:
+        """The next buffer of (tok, val, end) tuples: the bulk-lexed
+        simple tokens (TOK_NUMS value: list of floats), or else the one
+        complex token the classic scanner reads. The caller consumes the
+        buffer whole, or stops after some token and calls
+        ``handoff(end)`` with that token's end."""
         lexer = self.lexer
-        if n:
+        buf = _bulk_fill(lexer, _RUN_TOKEN_RE)
+        if not buf:
+            tok, val = lexer.lex()
+            buf = [(tok, val, lexer.pos)]
+        return buf
+
+    def handoff(self, end: int | None = None) -> Lexer:
+        """Discard buffered lookahead and return the Lexer positioned
+        right after the last token this cursor handed out; a ``fill()``
+        consumer passes that token's ``end``."""
+        lexer = self.lexer
+        if end is not None:
+            lexer.pos = end
+        elif self.n:
+            i = self.i
             lexer.pos = self.buf[i - 1][2] if i > 0 else self._fill_start
-            self.buf = []
-            self.i = self.n = 0
+        self.buf = []
+        self.i = self.n = 0
         return lexer

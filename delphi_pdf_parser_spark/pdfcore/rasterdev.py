@@ -635,13 +635,8 @@ class RasterDevice:
         ta, tb, tc, td = run.trm[:4]
         missing = False
         polys = []
-        glyphs = []
-        for part in run.parts:
-            if part[0] == "B":  # vectorized block: NumPy columns
-                _tag, gids, _ucs, xs, ys = part
-                glyphs.extend(zip(gids.tolist(), xs.tolist(), ys.tolist()))
-            else:
-                glyphs.append((part[0], part[2], part[3]))
+        gids, _ucs, xs, ys = run.columns()
+        glyphs = list(zip(gids.tolist(), xs.tolist(), ys.tolist()))
         if getattr(font, "is_type3", False):
             if doclip:
                 # Type3 clip would need charproc coverage capture; record

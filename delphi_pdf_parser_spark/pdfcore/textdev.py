@@ -19,6 +19,7 @@ fz_add_text_char) and fz_span_to_wchar
 from __future__ import annotations
 
 import math
+import re
 
 import numpy as np
 
@@ -29,6 +30,7 @@ SPACE_DIST = 0.2
 # surrogates (invalid in UTF-8)
 _FOLD = {i: "?" for i in range(32)}
 _FOLD.update({i: "?" for i in range(0xD800, 0xE000)})
+_NEEDS_FOLD = re.compile("[\x00-\x1f\ud800-\udfff]")
 
 _LIGATURES = {
     0xFB00: "ff",
@@ -52,13 +54,32 @@ class Span:
         self.eol = 0
 
 
+def advances(w, codes, ks, cs, ws, ta):
+    """Horizontal advance of each glyph on the 1-byte fast path:
+    ``(w*ks [+ cs] [+ ws at code 32]) [* ta]`` elementwise, where ks is
+    size*0.001*Tz, cs is Tc*Tz and ws is Tw*Tz. A bracketed step is
+    skipped where it would be an identity (cs == 0, ta == 1, ws NaN, which
+    stands for Tw == 0), since adding 0.0 still turns -0.0 into +0.0. The
+    parameters are scalars (one text state over all 256 codes, the font's
+    advance table) or per-glyph arrays (a whole text run); each glyph
+    gets the same bits either way."""
+    tx = w * ks
+    tx = np.where(cs != 0.0, tx + cs, tx)
+    tx = np.where(ws == ws, tx + (codes == 32) * ws, tx)
+    return np.where(ta != 1.0, tx * ta, tx)
+
+
 class TextRun:
     """fz_text_s: glyphs batched while font/trm/wmode/render unchanged.
 
-    Items are stored as ``parts``: scalar 4-tuples (gid, ucs, x, y) from
-    the per-char paths, interleaved (order-preserving) with 5-tuples
-    ('B', gids, ucs, xs, ys) of NumPy columns emitted by the vectorized
-    show-string fast path."""
+    Items are stored as ``parts`` in emission order:
+    - scalar 4-tuples (gid, ucs, x, y) from the per-char paths;
+    - ('B', gids, ucs, xs, ys) blocks of NumPy columns from the rotated
+      show-string fast path;
+    - ('S', codes, te, base_e, y, ks, cs, ws, ta) segments: one horizontal
+      string on a 1-byte fast font, its glyph x positions left to
+      ``columns()`` (te is the string's start x, the rest are the
+      ``advances`` parameters)."""
 
     __slots__ = ("font", "trm", "wmode", "parts", "n", "has_block")
 
@@ -79,42 +100,85 @@ class TextRun:
         self.n += len(gids)
         self.has_block = True
 
+    def add_segment(self, codes: bytes, te, base_e, y, ks, cs, ws, ta):
+        self.parts.append(("S", codes, te, base_e, y, ks, cs, ws, ta))
+        self.n += len(codes)
+        self.has_block = True
+
     def columns(self):
         """(gid int64, ucs int64, x f64, y f64) arrays in emission order."""
-        gs: list = []
-        us: list = []
-        xs: list = []
-        ys: list = []
+        parts = self.parts
+        segs = [p for p in parts if p[0] == "S"]
+        seg_cols = _segment_columns(self.font, segs) if segs else None
+        if segs and len(segs) == len(parts):
+            return seg_cols
+        chunks: list = []
         pend: list = []
-
-        def _flush():
-            a = np.array(pend, dtype=np.float64)
-            gs.append(a[:, 0].astype(np.int64))
-            us.append(a[:, 1].astype(np.int64))
-            xs.append(a[:, 2])
-            ys.append(a[:, 3])
-            pend.clear()
-
-        for p in self.parts:
-            if p[0] == "B":
+        off = 0
+        for p in parts:
+            tag = p[0]
+            if tag == "S" or tag == "B":
                 if pend:
-                    _flush()
-                gs.append(p[1])
-                us.append(p[2])
-                xs.append(p[3])
-                ys.append(p[4])
+                    chunks.append(_scalar_columns(pend))
+                    pend = []
+                if tag == "B":
+                    chunks.append(p[1:])
+                else:
+                    n = len(p[1])
+                    chunks.append([c[off : off + n] for c in seg_cols])
+                    off += n
             else:
                 pend.append(p)
         if pend:
-            _flush()
-        if len(gs) == 1:
-            return gs[0], us[0], xs[0], ys[0]
-        return (
-            np.concatenate(gs),
-            np.concatenate(us),
-            np.concatenate(xs),
-            np.concatenate(ys),
-        )
+            chunks.append(_scalar_columns(pend))
+        if not chunks:
+            return _scalar_columns([])
+        if len(chunks) == 1:
+            return tuple(chunks[0])
+        return tuple(np.concatenate(c) for c in zip(*chunks))
+
+
+def _scalar_columns(items):
+    a = np.array(items, dtype=np.float64).reshape(len(items), 4)
+    return a[:, 0].astype(np.int64), a[:, 1].astype(np.int64), a[:, 2], a[:, 3]
+
+
+def _segment_columns(font, segs):
+    """Columns of a run's segments, all at once. A segment's x positions
+    are its te followed by the running sum of its advances, summed in
+    order along one row of a padded matrix; a row-wise cumsum adds in the
+    same order as the per-string cumsum, so every position is bit-equal
+    to it (and the string's end x is the interpreter's fold)."""
+    lens = [len(s[1]) for s in segs]
+    codes = np.frombuffer(b"".join([s[1] for s in segs]), dtype=np.uint8)
+    params = np.array([s[2:] for s in segs])  # te, base_e, y, ks, cs, ws, ta
+    per = np.repeat(params, lens, axis=0)
+    _ok, _cid, _ucs, w_a, cu_a = font.fast_arrays()
+    tx = advances(w_a[codes], codes, per[:, 3], per[:, 4], per[:, 5], per[:, 6])
+    width = max(lens)
+    if len(segs) * width <= 4 * len(codes):
+        mask = np.arange(width) < np.array(lens)[:, None]
+        c = np.zeros((len(segs), width + 1))
+        c[:, 0] = params[:, 0]
+        c[:, 1:][mask] = tx
+        np.cumsum(c, axis=1, out=c)
+        xs = c[:, :-1][mask]
+    else:
+        # one long string among short ones: padding would cost more
+        # than it saves, sum each segment on its own
+        rows = []
+        off = 0
+        for s, n in zip(segs, lens):
+            c = np.empty(n + 1)
+            c[0] = s[2]
+            c[1:] = tx[off : off + n]
+            rows.append(np.cumsum(c)[:-1])
+            off += n
+        xs = np.concatenate(rows)
+    base_e = per[:, 1]
+    xs = np.where(base_e != 0.0, base_e + xs, xs)
+    cu = cu_a[:, codes]
+    return cu[0], cu[1], xs, per[:, 2]
 
 
 def _concat(m1, m2):
@@ -346,7 +410,10 @@ class TextDevice:
         n = len(self.spans)
         for i, span in enumerate(self.spans):
             if span.chars:
-                out.append("".join(map(chr, span.chars)).translate(_FOLD))
+                text = "".join(map(chr, span.chars))
+                if _NEEDS_FOLD.search(text):
+                    text = text.translate(_FOLD)
+                out.append(text)
             if span.eol == 0 and i + 1 < n:
                 continue
             out.append("\r\n")

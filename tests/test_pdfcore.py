@@ -652,3 +652,18 @@ def test_password_r6_aes256_user_owner_and_empty():
     assert extract_text(data, password="u6").text == golden
     assert extract_text(data, password="o6").text == golden
     assert extract_text(data, password="zz").error == "needs_password"
+
+
+def test_to_text_folds_control_chars_and_lone_surrogates():
+    """Code points below 32 and lone UTF-16 surrogates serialize as '?';
+    spans without them pass through unchanged."""
+    from delphi_pdf_parser_spark.pdfcore.textdev import TextDevice
+
+    dev = TextDevice()
+    dev.spans[-1].chars.extend([0x41, 0x01, 0xD800, 0x42])
+    dev._add_newline(None, 0.0, 0)
+    dev.spans[-1].chars.extend([0x43, 0xDFFF, 0x1F, 0x20, 0x1F600])
+    dev._add_newline(None, 0.0, 0)
+    dev.spans[-1].chars.extend([0xE9, 0x7E])
+    dev.close()
+    assert dev.to_text() == "A??B\r\nC?? \U0001F600\r\né~\r\n"

@@ -152,6 +152,92 @@ def test_bulk_tokenizer_equals_classic_lexer(data):
     assert drain(lx.Lexer(data)) == drain(lx.ContentTokens(lx.Lexer(data)))
 
 
+_RUN_PIECES = st.one_of(
+    st.sampled_from(
+        [bytes([c]) for c in b"0123456789+-.()[]<>/%\\\r\n\t ABCTdfmj*'\"ET#\x00\xff\x80"]
+        + [b"%c\n", b"Tm"]
+    ),
+    st.sampled_from([b" ", b" -0 ", b"\n", b" 0.5 "]),
+    st.text("0123456789", min_size=1, max_size=20).map(str.encode),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_RUN_PIECES, max_size=48).map(b"".join))
+def test_number_run_tokens_equal_classic_lexer(data):
+    """ContentTokens.fill() with every TOK_NUMS run expanded is the
+    classic token stream, numbers compared as the interpreter stores them
+    (float(val), sign of zero included), and every token's end is the
+    classic scanner's position after it."""
+    import math
+
+    from delphi_pdf_parser_spark.pdfcore import lexer as lx
+
+    classic = lx.Lexer(data)
+
+    def next_classic():
+        tok, val = classic.lex()
+        return tok, val, classic.pos
+
+    cur = lx.ContentTokens(lx.Lexer(data))
+    for _ in range(300):
+        buf = cur.fill()
+        for tok, val, end in buf:
+            if tok == lx.TOK_NUMS:
+                assert len(val) >= 2
+                for v in val:
+                    ctok, cval, cend = next_classic()
+                    assert ctok in (lx.TOK_INT, lx.TOK_REAL)
+                    assert v == float(cval)
+                    assert math.copysign(1.0, v) == math.copysign(1.0, float(cval))
+                assert end == cend
+            else:
+                assert (tok, val, end) == next_classic()
+        if buf[-1][0] == lx.TOK_EOF:
+            break
+
+
+def _content_doc(content: bytes) -> bytes:
+    from delphi_pdf_parser_spark.fixtures import simple_doc
+
+    b, cat = simple_doc(content)
+    return b.build_classic(cat)
+
+
+def test_number_run_negative_zero_pushes_positive_zero():
+    import math
+
+    from delphi_pdf_parser_spark.pdfcore import lexer as lx
+
+    (tok, val, _end), _tm = lx.ContentTokens(lx.Lexer(b"1 -0 2 Tm")).fill()
+    assert tok == lx.TOK_NUMS and val == [1.0, 0.0, 2.0]
+    assert math.copysign(1.0, val[1]) == 1.0
+
+
+# (content, text, failures) pinned from the one-token-per-number
+# interpreter that number runs replaced
+_RUN_CASES = [
+    (b"BT /F1 12 Tf 1 -0 2 Tm (ab) Tj ET", "a\r\nb\r\n", {}),
+    (b"BT /F1 12 Tf 72 1234567890123456 Td (x) Tj ET", "x\r\n", {}),
+    (b"BT /F1 12 Tf 1 0 0 1 72 " + b"9" * 400 + b" Tm (x) Tj ET", "", {"page_error:OverflowError": 1}),
+    (b"BT /F1 12 Tf 72 " + b"7" * 400 + b" Td (x) Tj ET", "", {"page_error:OverflowError": 1}),
+    (
+        b"BT /F1 12 Tf 1 0 0 1\x0072 720 Tm (a) Tj 1 0 0 1 72%c\n700 Tm (b) Tj ET",
+        "a\r\nb\r\n",
+        {},
+    ),
+    (b"BT /F1 12 Tf 1 0 0 1 72 720 " + b"9 " * 34 + b"Tm (over) Tj ET", "over\r\n", {"stack_overflow": 8}),
+    (b"BT /F1 12 Tf 72 720 Td [(a) 1 2 (b)] TJ ET", "ab\r\n", {}),
+    (b"BT /F1 12 Tf 72 720 Td [(a) -150 -150 (b) 150 (c)] TJ ET", "a bc\r\n", {}),
+]
+
+
+def test_number_runs_keep_text_and_failure_codes():
+    for content, text, failures in _RUN_CASES:
+        res = extract_text(_content_doc(content))
+        assert (res.text, res.failures) == (text, failures), content[:60]
+
+
 @settings(max_examples=120, deadline=None)
 @given(st.data())
 def test_mutated_font_programs_never_crash(data):
