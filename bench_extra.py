@@ -2,9 +2,6 @@
 this file holds the extra instrumentation the optimization round needs).
 
 Modes:
-  python bench_extra.py --plans [--tag before] [--queries a,b,c]
-      dump .explain("formatted") of each bench query to
-      plans/r08/<query>_<tag>.txt
   python bench_extra.py --time [--queries a,b,c] [--repeats 3]
       per-query noop-sink timing (guide section 1.4): cold + N warm runs,
       one JSON line per query. Unlike bench.py's .count() this computes
@@ -45,10 +42,8 @@ def main():
         "--sf-dir",
         default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0"),
     )
-    ap.add_argument("--plans", action="store_true")
     ap.add_argument("--time", action="store_true")
     ap.add_argument("--count-time", action="store_true")
-    ap.add_argument("--tag", default="before")
     ap.add_argument("--queries", default="")
     ap.add_argument("--repeats", type=int, default=2)
     args = ap.parse_args()
@@ -62,20 +57,6 @@ def main():
     qs = entry.queries()
     spark = _spark()
     sc = spark.sparkContext
-
-    if args.plans:
-        os.makedirs(os.path.join(REPO, "plans", "r08"), exist_ok=True)
-        for name in names:
-            if name not in qs:
-                continue
-            df = qs[name](spark, args.sf_dir)
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            path = os.path.join(REPO, "plans", "r08", f"{name}_{args.tag}.txt")
-            with open(path, "w") as f:
-                f.write(plan)
-            print(f"wrote {path} ({plan.count('Exchange')} Exchange refs)")
 
     if args.time or args.count_time:
         for name in names:

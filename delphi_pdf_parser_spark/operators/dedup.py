@@ -433,49 +433,51 @@ def simhash(documents: DataFrame) -> DataFrame:
 
         shifts = np.arange(64, dtype=np.uint64)
         one = np.uint64(1)
+
+        def group_sigs(rows, out_ids, sigs):
+            # null/empty token lists get no row (explode emitted none)
+            group = [
+                (did, tl)
+                for did, tl in zip(
+                    rows.column("doc_id").to_pylist(), rows.column("toks").to_pylist()
+                )
+                if tl
+            ]
+            if not group:
+                return
+            flat: list[bytes] = []
+            starts = []
+            ns = []
+            for did, tl in group:
+                starts.append(len(flat))
+                flat.extend(t.encode("utf-8") for t in tl)
+                ns.append(len(tl))
+            h = xxh64_many(flat)
+            starts_a = np.asarray(starts, dtype=np.int64)
+            ns_a = np.asarray(ns, dtype=np.int64)
+            sig = np.zeros(len(group), dtype=np.uint64)
+            for bit in range(64):
+                votes = (h >> shifts[bit]) & one
+                cnts = np.add.reduceat(votes, starts_a)
+                sig |= ((cnts * 2 >= ns_a.astype(np.uint64))
+                        .astype(np.uint64) << shifts[bit])
+            out_ids.extend(d for d, _ in group)
+            sigs.extend(sig.view(np.int64).tolist())
+
         for b in batches:
-            doc_ids = b.column("doc_id").to_pylist()
-            tok_lists = b.column("toks").to_pylist()
             out_ids: list[int] = []
             sigs: list[int] = []
-            # bounded flat-group processing: respects doc boundaries,
-            # caps the transient arrays regardless of document size
-            group_docs: list[tuple[int, list]] = []
-            group_tokens = 0
-
-            def flush():
-                nonlocal group_docs, group_tokens
-                if not group_docs:
-                    return
-                flat: list[bytes] = []
-                starts = []
-                ns = []
-                for did, tl in group_docs:
-                    starts.append(len(flat))
-                    flat.extend(t.encode("utf-8") for t in tl)
-                    ns.append(len(tl))
-                h = xxh64_many(flat)
-                starts_a = np.asarray(starts, dtype=np.int64)
-                ns_a = np.asarray(ns, dtype=np.int64)
-                sig = np.zeros(len(group_docs), dtype=np.uint64)
-                for bit in range(64):
-                    votes = (h >> shifts[bit]) & one
-                    cnts = np.add.reduceat(votes, starts_a)
-                    sig |= ((cnts * 2 >= ns_a.astype(np.uint64))
-                            .astype(np.uint64) << shifts[bit])
-                out_ids.extend(d for d, _ in group_docs)
-                sigs.extend(sig.view(np.int64).tolist())
-                group_docs = []
-                group_tokens = 0
-
-            for did, tl in zip(doc_ids, tok_lists):
-                if tl is None or len(tl) == 0:
-                    continue  # explode of null/empty emitted no row
-                group_docs.append((did, tl))
-                group_tokens += len(tl)
+            # bounded groups of whole documents, cut from Arrow token
+            # counts: only one group's tokens are ever Python objects,
+            # however large the batch's documents are
+            lens = b.column("toks").value_lengths().fill_null(0).to_pylist()
+            start = group_tokens = 0
+            for i, n in enumerate(lens):
+                group_tokens += n
                 if group_tokens >= 65536:
-                    flush()
-            flush()
+                    group_sigs(b.slice(start, i + 1 - start), out_ids, sigs)
+                    start, group_tokens = i + 1, 0
+            group_sigs(b.slice(start), out_ids, sigs)
             yield pa.RecordBatch.from_arrays(
                 [
                     pa.array(out_ids, pa.int64()),

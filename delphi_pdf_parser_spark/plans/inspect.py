@@ -15,6 +15,11 @@ import re
 
 from pyspark.sql import DataFrame
 
+# every Python plan node: MapInPandas, MapInArrow, FlatMapGroupsInPandas,
+# ArrowEvalPython, BatchEvalPython, Python UDTFs (perfbench's event-log
+# parser counts the same nodes)
+PYTHON_NODE = re.compile(r"InPandas|InArrow|EvalPython|PythonUDTF|PythonMapIn")
+
 
 def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     qe = df._jdf.queryExecution()
@@ -34,9 +39,7 @@ def plan_report(df: DataFrame) -> dict:
         "exchanges": len(re.findall(r"\bExchange\b", simple)),
         "broadcast_joins": len(re.findall(r"BroadcastHashJoin", simple)),
         "sortmerge_joins": len(re.findall(r"SortMergeJoin", simple)),
-        "python_stages": len(
-            re.findall(r"MapInPandas|ArrowEvalPython|BatchEvalPython", simple)
-        ),
+        "python_stages": len(PYTHON_NODE.findall(simple)),
         "codegen_spans": len(
             set(re.findall(r"codegen id : (\d+)", plan))
         )

@@ -9,6 +9,14 @@ pipeline, composed from the same operators the driver contract exposes.
 
 Build engine.zip with:  python -m zipfile -c engine.zip delphi_pdf_parser_spark
 
+Where the package is importable on executors when their Python daemon
+starts (installed, or its parent directory on PYTHONPATH; not through
+--py-files, which reach sys.path only later), add
+``--conf spark.python.daemon.module=delphi_pdf_parser_spark.sparkdaemon``:
+reused Python workers then skip re-reading the zip directories on
+sys.path at every task (see ``delphi_pdf_parser_spark/sparkdaemon.py``).
+Elsewhere leave it out; a daemon that cannot import fails every task.
+
 Pipeline: scan -> quality filter (Gopher and/or C4 rule sets; only the
 keep verdict is consumed, rule inputs land in the report) -> corpus
 dedup (exact fingerprint keep-first, paragraph-level CCNet rewrite, or

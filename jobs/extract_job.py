@@ -7,6 +7,14 @@
 
 Build engine.zip with:  python -m zipfile -c engine.zip delphi_pdf_parser_spark
 
+Where the package is importable on executors when their Python daemon
+starts (installed, or its parent directory on PYTHONPATH; not through
+--py-files, which reach sys.path only later), add
+``--conf spark.python.daemon.module=delphi_pdf_parser_spark.sparkdaemon``:
+reused Python workers then skip re-reading the zip directories on
+sys.path at every task (see ``delphi_pdf_parser_spark/sparkdaemon.py``).
+Elsewhere leave it out; a daemon that cannot import fails every task.
+
 Pipeline: scan (parquet / Iceberg table / raw WARC segments via --warc)
 -> %PDF prefilter -> deterministic per-url salting -> mapInPandas
 extraction -> extracted + metrics parquet (append). With --resume, urls

@@ -10,6 +10,14 @@ operators.
 
 Build engine.zip with:  python -m zipfile -c engine.zip delphi_pdf_parser_spark
 
+Where the package is importable on executors when their Python daemon
+starts (installed, or its parent directory on PYTHONPATH; not through
+--py-files, which reach sys.path only later), add
+``--conf spark.python.daemon.module=delphi_pdf_parser_spark.sparkdaemon``:
+reused Python workers then skip re-reading the zip directories on
+sys.path at every task (see ``delphi_pdf_parser_spark/sparkdaemon.py``).
+Elsewhere leave it out; a daemon that cannot import fails every task.
+
 Pipeline: scan (url, html) -> ``extract_links`` (one mapInPandas pass,
 map-only) -> persist the URL-level edge list -> optionally roll up to
 the eTLD+1 host graph -> PageRank (+ degrees, joined into one ranking

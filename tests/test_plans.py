@@ -25,6 +25,16 @@ def test_extraction_plan_shape(spark):
     assert rep["exchanges"] == 1, rep
 
 
+def test_python_stages_count_arrow_and_grouped_nodes(spark):
+    """mapInArrow (MapInArrow) and applyInPandas (FlatMapGroupsInPandas)
+    are Python stages too: each pays the per-task worker cost."""
+    df = spark.range(0, 4, 1, 1)
+    arrow = df.mapInArrow(lambda it: it, df.schema)
+    grouped = df.groupBy("id").applyInPandas(lambda pdf: pdf, df.schema)
+    assert plan_report(arrow)["python_stages"] == 1
+    assert plan_report(grouped)["python_stages"] == 1
+
+
 def test_broadcast_join_is_broadcast(spark):
     from delphi_pdf_parser_spark.operators.relational import broadcast_dim_join
 

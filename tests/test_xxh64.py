@@ -99,14 +99,11 @@ def edge_docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_simhash_matches_aggregate_formulation(spark, edge_docs):
-    """The mapInArrow+NumPy simhash must equal the explode + packed-lane
-    aggregate it replaced, bit for bit, including whitespace/unicode
-    edges and the null-text drop rule."""
-    from delphi_pdf_parser_spark.operators.dedup import simhash
-
+def _aggregate_simhash(docs) -> dict:
+    """Reference signatures: the explode + packed-lane aggregate that
+    the mapInArrow simhash replaced."""
     lane_cap = (1 << 20) - 1
-    toks = edge_docs.select(
+    toks = docs.select(
         "doc_id",
         F.slice(
             F.split(F.trim(F.lower(F.col("text"))), r"\s+"), 1, lane_cap
@@ -130,14 +127,49 @@ def test_simhash_matches_aggregate_formulation(spark, edge_docs):
             .cast("long")
         )
         sig = sig.bitwiseOR(F.shiftleft(bit, b))
-    ref = {
+    return {
         r["doc_id"]: r["simhash"]
         for r in counts.select("doc_id", sig.alias("simhash")).collect()
     }
+
+
+def test_simhash_matches_aggregate_formulation(spark, edge_docs):
+    """The mapInArrow+NumPy simhash must equal the explode + packed-lane
+    aggregate it replaced, bit for bit, including whitespace/unicode
+    edges and the null-text drop rule."""
+    from delphi_pdf_parser_spark.operators.dedup import simhash
+
     got = {
         r["doc_id"]: r["simhash"] for r in simhash(edge_docs).collect()
     }
-    assert got == ref
+    assert got == _aggregate_simhash(edge_docs)
+
+
+def test_simhash_bounded_groups_match_aggregate_formulation(spark):
+    """One Arrow batch of large documents is cut into several bounded
+    token groups (one document alone past the 65,536-token bound, two
+    sharing a group, a null and an empty text between): the signatures
+    still equal the aggregate's."""
+    from delphi_pdf_parser_spark.operators.dedup import simhash
+
+    rnd = random.Random(11)
+
+    def text(n):
+        return " ".join(f"w{rnd.randrange(5000)}" for _ in range(n))
+
+    rows = [
+        (0, text(70_000)),
+        (1, None),
+        (2, text(50_000)),
+        (3, text(50_000)),
+        (4, ""),
+        (5, text(20_000)),
+        (6, "tiny"),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string").coalesce(1)
+    got = {r["doc_id"]: r["simhash"] for r in simhash(docs).collect()}
+    assert sorted(got) == [0, 2, 3, 4, 5, 6]  # "" splits to one token
+    assert got == _aggregate_simhash(docs)
 
 
 def test_minhash_signature_matches_aggregate_formulation(spark, edge_docs):
