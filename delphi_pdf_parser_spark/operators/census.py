@@ -10,7 +10,6 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -20,6 +19,8 @@ from pyspark.sql.types import (
 )
 
 from delphi_pdf_parser_spark.pdfcore.opcensus import _CATS
+
+from .extraction import prefilter_pdfs
 
 CENSUS_SCHEMA = StructType(
     [
@@ -51,8 +52,4 @@ def _census_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def document_op_census(documents: DataFrame) -> DataFrame:
-    df = documents.select("url", "html").filter(
-        F.col("html").isNotNull()
-        & (F.substring(F.col("html"), 1, 5) == F.lit(b"%PDF-"))
-    )
-    return df.mapInPandas(_census_batches, CENSUS_SCHEMA)
+    return prefilter_pdfs(documents).mapInPandas(_census_batches, CENSUS_SCHEMA)

@@ -8,7 +8,6 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     IntegerType,
@@ -16,6 +15,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .extraction import prefilter_pdfs
 
 IMAGES_SCHEMA = StructType(
     [
@@ -60,8 +61,4 @@ def _image_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def extract_document_images(documents: DataFrame) -> DataFrame:
-    df = documents.select("url", "html").filter(
-        F.col("html").isNotNull()
-        & (F.substring(F.col("html"), 1, 5) == F.lit(b"%PDF-"))
-    )
-    return df.mapInPandas(_image_batches, IMAGES_SCHEMA)
+    return prefilter_pdfs(documents).mapInPandas(_image_batches, IMAGES_SCHEMA)

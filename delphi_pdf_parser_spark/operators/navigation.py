@@ -7,13 +7,14 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     IntegerType,
     StringType,
     StructField,
     StructType,
 )
+
+from .extraction import prefilter_pdfs
 
 NAV_SCHEMA = StructType(
     [
@@ -56,8 +57,4 @@ def _nav_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 
 
 def extract_navigation(documents: DataFrame) -> DataFrame:
-    df = documents.select("url", "html").filter(
-        F.col("html").isNotNull()
-        & (F.substring(F.col("html"), 1, 5) == F.lit(b"%PDF-"))
-    )
-    return df.mapInPandas(_nav_batches, NAV_SCHEMA)
+    return prefilter_pdfs(documents).mapInPandas(_nav_batches, NAV_SCHEMA)

@@ -14,7 +14,6 @@ from typing import Iterator
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
     IntegerType,
@@ -23,6 +22,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .extraction import prefilter_pdfs
 
 RENDER_SCHEMA = StructType(
     [
@@ -110,10 +111,6 @@ def render_documents(
     for the exact hard-edge rasterizer the pixel-pinned tests run
     against (tests/test_raster*.py drive render_page directly in that
     mode)."""
-    df = documents.select("url", "html").filter(
-        F.col("html").isNotNull()
-        & (F.substring(F.col("html"), 1, 5) == F.lit(b"%PDF-"))
-    )
-    return df.mapInPandas(
+    return prefilter_pdfs(documents).mapInPandas(
         _render_batches(scale, max_pages, supersample), RENDER_SCHEMA
     )

@@ -88,15 +88,14 @@ class FontDesc:
 
     _next_ident = 0
 
-    def __init__(self, ident=None):
+    def __init__(self):
         # identity key for the text-run flush comparison. Process-unique
         # counter, NOT the caller's (num, gen) load key: with the
         # cross-document font memo, a FontDesc cached from one document
         # can coexist with a DIFFERENT font whose load key happens to be
         # the same (num, gen) in another document — equal idents there
         # would merge two fonts' glyphs into one text run and advance
-        # the pen with the wrong metrics. The `ident` parameter is
-        # accepted for call-site compatibility and ignored.
+        # the pen with the wrong metrics.
         FontDesc._next_ident += 1
         self.ident = FontDesc._next_ident
         self.name = ""
@@ -172,6 +171,18 @@ class FontDesc:
             )
         return self._cid_mode
 
+    def ucs_of(self, cid: int) -> tuple:
+        """pdf_show_char's Unicode chain: the full ToUnicode mapping, else
+        cid_to_ucs, else '?' (also for a lone U+0000)."""
+        ucs = ()
+        if self.to_unicode is not None:
+            ucs = self.to_unicode.lookup_full(cid)
+        if not ucs and self.cid_to_ucs is not None and cid < len(self.cid_to_ucs):
+            ucs = (self.cid_to_ucs[cid],)
+        if not ucs or (len(ucs) == 1 and ucs[0] == 0):
+            return (63,)
+        return tuple(ucs)
+
     def cid_entry(self, code: int):
         """Memoized (cid, ucs_tuple, hmtx_w) per 2-byte code; None when
         the code has no CID (warn path)."""
@@ -179,17 +190,8 @@ class FontDesc:
         if ent is not None or code in self._cid_cache:
             return ent
         cid = self.encoding.lookup(code)
-        if cid < 0:
-            self._cid_cache[code] = None
-            return None
-        ucs: list[int] = []
-        if self.to_unicode is not None:
-            ucs = self.to_unicode.lookup_full(cid)
-        if not ucs and self.cid_to_ucs is not None and cid < len(self.cid_to_ucs):
-            ucs = [self.cid_to_ucs[cid]]
-        if not ucs or (len(ucs) == 1 and ucs[0] == 0):
-            ucs = [ord("?")]
-        ent = (cid, tuple(ucs), self.get_hmtx_w(cid))
+        if cid >= 0:
+            ent = (cid, self.ucs_of(cid), self.get_hmtx_w(cid))
         self._cid_cache[code] = ent
         return ent
 
@@ -295,8 +297,8 @@ class FontDesc:
 
     def fast_table(self):
         """For simple/Type3 fonts (1-byte identity encoding, wmode 0):
-        code -> (ucs_tuple, hmtx_w). Semantics identical to show_char's
-        per-char chain; precomputed once per font per document."""
+        code -> (cid, ucs_tuple, hmtx_w), None where the code has no CID;
+        precomputed once per font."""
         if self._fast_table is not None:
             return self._fast_table
         if self.wmode != 0 or self.encoding is None:
@@ -315,29 +317,19 @@ class FontDesc:
         table = []
         for code in range(256):
             cid = enc.lookup(code)
-            if cid < 0:
-                table.append(None)
-                continue
-            ucs: list[int] = []
-            if self.to_unicode is not None:
-                ucs = self.to_unicode.lookup_full(cid)
-            if not ucs and self.cid_to_ucs is not None and cid < len(self.cid_to_ucs):
-                ucs = [self.cid_to_ucs[cid]]
-            if not ucs or (len(ucs) == 1 and ucs[0] == 0):
-                ucs = [ord("?")]
-            table.append((cid, tuple(ucs), self.get_hmtx_w(cid)))
+            table.append(
+                (cid, self.ucs_of(cid), self.get_hmtx_w(cid)) if cid >= 0 else None
+            )
         self._fast_table = table
         return table
 
     def fast_arrays(self):
         """NumPy companion of fast_table for whole-string vectorization:
-        (ok bool[256], cid i64[256], ucs i64[256], w f64[256], cu
-        i64[2,256]); ok marks codes with a single-codepoint mapping
-        (multi-ucs/unencodable codes force the scalar loop for the whole
-        string). `w` carries NaN at not-ok codes — the show path detects
-        an invalid string from NaN in the cumulative advance (one scalar
-        compare) instead of an ok[codes].all() pre-pass. None when the
-        font has no 1-byte fast table."""
+        (w f64[256], cu i64[2,256]). ``w`` is the code's width, NaN at
+        codes without a single-codepoint mapping, so a NaN advance marks a
+        string the per-code loop must take. ``cu`` stacks each code's cid
+        and ucs, so one fancy-index gathers both. None when the font has
+        no 1-byte fast table."""
         fa = self._fast_arrays
         if fa is not None:
             return fa if fa is not False else None
@@ -347,19 +339,14 @@ class FontDesc:
             return None
         import numpy as np
 
-        ok = np.zeros(256, dtype=bool)
-        cid = np.zeros(256, dtype=np.int64)
-        ucs = np.zeros(256, dtype=np.int64)
+        cu = np.zeros((2, 256), dtype=np.int64)
         w = np.full(256, np.nan, dtype=np.float64)
         for code, ent in enumerate(table):
             if ent is not None and len(ent[1]) == 1:
-                ok[code] = True
-                cid[code] = ent[0]
-                ucs[code] = ent[1][0]
+                cu[0, code] = ent[0]
+                cu[1, code] = ent[1][0]
                 w[code] = ent[2]
-        # cu: stacked (2, 256) so the show path gathers cid+ucs with ONE
-        # fancy-index instead of two
-        self._fast_arrays = (ok, cid, ucs, w, np.stack([cid, ucs]))
+        self._fast_arrays = (w, cu)
         return self._fast_arrays
 
     def advance_table(self, ks: float, cs: float, ws: float, ta: float) -> list:
@@ -373,7 +360,7 @@ class FontDesc:
         if tbl is None:
             if len(self._adv_tables) >= _ADV_TABLES_MAX:
                 self._adv_tables.clear()
-            w = self.fast_arrays()[3]
+            w = self.fast_arrays()[0]
             tbl = advances(w, _CODES, ks, cs, ws, ta).tolist()
             self._adv_tables[key] = tbl
         return tbl
@@ -517,10 +504,10 @@ def _apply_differences(estrings: list, encoding_dict: dict, doc):
             k = min(max(k, 0), 255)
 
 
-def load_simple_font(doc, dict_: dict, ident) -> FontDesc:
+def load_simple_font(doc, dict_: dict) -> FontDesc:
     """Type1 / MMType1 / TrueType (pdf_load_simple_font,
     src/vcl/pdf_fontss.pas:501-862), FreeType-free reformulation."""
-    font = FontDesc(ident)
+    font = FontDesc()
     basefont = to_name(doc.get(dict_, "BaseFont"))
     fontname = clean_base14_name(basefont)
     font.name = fontname
@@ -689,9 +676,9 @@ def load_simple_font(doc, dict_: dict, ident) -> FontDesc:
     return font
 
 
-def load_cid_font(doc, dict_: dict, encoding, to_unicode, ident) -> FontDesc:
+def load_cid_font(doc, dict_: dict, encoding, to_unicode) -> FontDesc:
     """(load_cid_font, src/vcl/pdf_fontss.pas:868-1121)."""
-    font = FontDesc(ident)
+    font = FontDesc()
     cidinfo = doc.get(dict_, "CIDSystemInfo")
     if not isinstance(cidinfo, dict):
         raise FontError("cid_font_missing_info")
@@ -788,7 +775,7 @@ def load_cid_font(doc, dict_: dict, encoding, to_unicode, ident) -> FontDesc:
     return font
 
 
-def load_type0_font(doc, dict_: dict, ident) -> FontDesc:
+def load_type0_font(doc, dict_: dict) -> FontDesc:
     dfonts = doc.get(dict_, "DescendantFonts")
     if not isinstance(dfonts, list) or not dfonts:
         raise FontError("cid_font_missing_descendants")
@@ -801,14 +788,14 @@ def load_type0_font(doc, dict_: dict, ident) -> FontDesc:
     to_unicode = dict_.get("ToUnicode")
     subtype = to_name(doc.get(dfont, "Subtype"))
     if subtype in ("CIDFontType0", "CIDFontType2"):
-        return load_cid_font(doc, dfont, encoding, to_unicode, ident)
+        return load_cid_font(doc, dfont, encoding, to_unicode)
     raise FontError("unknown_cid_font_type")
 
 
-def load_type3_font(doc, rdb, dict_: dict, ident) -> FontDesc:
+def load_type3_font(doc, rdb, dict_: dict) -> FontDesc:
     """(pdf_load_type3_font, src/vcl/pdf_type3s.pas:19-182). Only widths +
     ToUnicode matter for text extraction; charprocs are not rasterized."""
-    font = FontDesc(ident)
+    font = FontDesc()
     font.is_type3 = True
     obj = doc.get(dict_, "Name")
     font.name = str(obj) if is_name(obj) else "Unnamed-T3"
@@ -953,15 +940,15 @@ def load_font(doc, rdb, ref_or_dict, cache: dict) -> FontDesc:
             return font
         before = dict(doc.failures)
     if subtype == "Type0":
-        font = load_type0_font(doc, dict_, key)
+        font = load_type0_font(doc, dict_)
     elif subtype in ("Type1", "MMType1", "TrueType"):
-        font = load_simple_font(doc, dict_, key)
+        font = load_simple_font(doc, dict_)
     elif is_type3:
-        font = load_type3_font(doc, rdb, dict_, key)
+        font = load_type3_font(doc, rdb, dict_)
     elif doc.get(dict_, "DescendantFonts") is not None:
-        font = load_type0_font(doc, dict_, key)
+        font = load_type0_font(doc, dict_)
     else:
-        font = load_simple_font(doc, dict_, key)
+        font = load_simple_font(doc, dict_)
     if pure_key is not None:
         delta = {
             c: doc.failures[c] - before.get(c, 0)

@@ -35,7 +35,7 @@ from .cos import Name, is_indirect, is_name, to_int, to_name, to_real
 from .filters import a85_decode, ahx_decode
 from .fonts import FontError, load_font
 from .lexer import ContentTokens, Lexer
-from .textdev import TextRun, _concat, advances
+from .textdev import TextRun, _concat
 
 FLT_EPSILON = 1.19209290e-07
 IDENTITY = (1.0, 0.0, 0.0, 1.0, 0.0, 0.0)
@@ -45,6 +45,25 @@ _NAN = float("nan")
 
 def _translate(tx, ty):
     return (1.0, 0.0, 0.0, 1.0, tx, ty)
+
+
+def _codes_2byte(buf: bytes, spaces) -> list:
+    """The codes of a string on a pure-2-byte encoding, as the general
+    decode reads them: a big-endian byte pair inside some codespace, else
+    one byte read as code 0."""
+    codes = []
+    pos = 0
+    end = len(buf)
+    while pos < end:
+        if pos + 1 < end:
+            code = (buf[pos] << 8) | buf[pos + 1]
+            if any(lo <= code <= hi for _n, lo, hi in spaces):
+                codes.append(code)
+                pos += 2
+                continue
+        codes.append(0)
+        pos += 1
+    return codes
 
 
 class GState:
@@ -212,19 +231,32 @@ class CSI:
         else:
             self.tm = _concat(_translate(0, tadj), self.tm)
 
+    def _run(self, font, a, b, c, d, wmode) -> TextRun:
+        """The TextRun the next glyph joins: the current one while font,
+        wmode, render mode and trm a-d (within FLT_EPSILON) are unchanged,
+        else a new one after flushing it (pdf_show_char :431-519)."""
+        t = self.text
+        render = self.gs.render
+        if (
+            t is None
+            or font.ident != t.font.ident
+            or wmode != t.wmode
+            or abs(a - t.trm[0]) > FLT_EPSILON
+            or abs(b - t.trm[1]) > FLT_EPSILON
+            or abs(c - t.trm[2]) > FLT_EPSILON
+            or abs(d - t.trm[3]) > FLT_EPSILON
+            or render != self.text_mode
+        ):
+            self.flush_text()
+            t = self.text = TextRun(font, (a, b, c, d, 0.0, 0.0), wmode)
+            self.text_mode = render
+        return t
+
     def show_char(self, cid: int):
         gs = self.gs
         font = gs.font
         tsm = (gs.size * gs.scale, 0.0, 0.0, gs.size, 0.0, gs.rise)
-
-        ucs: list[int] = []
-        if font.to_unicode is not None:
-            ucs = font.to_unicode.lookup_full(cid)
-        if not ucs and font.cid_to_ucs is not None and cid < len(font.cid_to_ucs):
-            ucs = [font.cid_to_ucs[cid]]
-        if not ucs or (len(ucs) == 1 and ucs[0] == 0):
-            ucs = [ord("?")]
-
+        ucs = font.ucs_of(cid)
         gid = cid  # no FreeType: glyph id == cid (see fonts.py docstring)
 
         if font.wmode == 1:
@@ -239,23 +271,7 @@ class CSI:
             )
 
         trm = _concat(tsm, self.tm)
-
-        t = self.text
-        if (
-            t is None
-            or font.ident != t.font.ident
-            or font.wmode != t.wmode
-            or abs(trm[0] - t.trm[0]) > FLT_EPSILON
-            or abs(trm[1] - t.trm[1]) > FLT_EPSILON
-            or abs(trm[2] - t.trm[2]) > FLT_EPSILON
-            or abs(trm[3] - t.trm[3]) > FLT_EPSILON
-            or gs.render != self.text_mode
-        ):
-            self.flush_text()
-            self.text = TextRun(font, (trm[0], trm[1], trm[2], trm[3], 0.0, 0.0), font.wmode)
-            self.text_mode = gs.render
-            t = self.text
-
+        t = self._run(font, trm[0], trm[1], trm[2], trm[3], font.wmode)
         t.add(gid, ucs[0], trm[4], trm[5])
         for extra in ucs[1:]:
             t.add(-1, extra, trm[4], trm[5])
@@ -278,10 +294,11 @@ class CSI:
             return
         table = font.fast_table()
         if table:
-            self._show_string_simple(buf, table)
+            self._show_codes(buf, table.__getitem__, len(buf) >= 16)
             return
         if font.is_pure_2byte():
-            self._show_string_cid2(buf, font)
+            codes = _codes_2byte(buf, font.encoding.codespaces)
+            self._show_codes(codes, font.cid_entry, False)
             return
         pos = 0
         end = len(buf)
@@ -296,97 +313,51 @@ class CSI:
             if cpt == 32:
                 self.show_space(gs.word_space)
 
-    def _show_string_simple(self, buf: bytes, table):
-        """Tight loop for 1-byte identity fonts (the hot path).
-
-        Semantically identical to decode->lookup->show_char per byte:
-        within one string trm.a-d, render mode, font and wmode cannot
-        change, so the flush decision runs once and the advance reduces
-        to tm.e/f increments along (tm.a, tm.b)."""
+    def _show_codes(self, codes, entry, segment: bool):
+        """Tight per-code loop for horizontal fonts whose codes map
+        straight to (cid, ucs_tuple, hmtx_w) through ``entry`` (None: no
+        CID). Semantically identical to decode->lookup->show_char per
+        code: within one string trm a-d, render mode, font and wmode
+        cannot change, so the run check runs once and the advance reduces
+        to tm.e/f increments along (tm.a, tm.b). ``segment`` lets a
+        horizontal 1-byte string become one TextRun segment instead."""
         gs = self.gs
         font = gs.font
         size, scale, rise = gs.size, gs.scale, gs.rise
         char_space, word_space = gs.char_space, gs.word_space
         ta, tb, tc, td, te, tf = self.tm
         sa = size * scale
-        trm_a, trm_b = sa * ta, sa * tb
-        trm_c, trm_d = size * tc, size * td
-
-        t = self.text
-        if (
-            t is None
-            or font.ident != t.font.ident
-            or t.wmode != 0
-            or abs(trm_a - t.trm[0]) > FLT_EPSILON
-            or abs(trm_b - t.trm[1]) > FLT_EPSILON
-            or abs(trm_c - t.trm[2]) > FLT_EPSILON
-            or abs(trm_d - t.trm[3]) > FLT_EPSILON
-            or gs.render != self.text_mode
-        ):
-            self.flush_text()
-            self.text = TextRun(font, (trm_a, trm_b, trm_c, trm_d, 0.0, 0.0), 0)
-            self.text_mode = gs.render
-            t = self.text
+        t = self._run(font, sa * ta, sa * tb, size * tc, size * td, 0)
 
         base_e = rise * tc
         base_f = rise * td
         k = size * 0.001
 
-        if len(buf) >= 16:
-            fa = font.fast_arrays()
-            if fa is not None:
-                # per-char tx = (w*k + char_space)*scale, word_space
-                # added after code 32 — identical to the scalar fold.
-                # w_a is NaN at unmapped codes, so one NaN test on the
-                # final advance replaces an ok[codes].all() pre-pass
-                ks, cs_s = k * scale, char_space * scale
-                ws_s = word_space * scale if word_space != 0.0 else _NAN
-                if tb == 0.0:
-                    # horizontal text (the overwhelmingly common case):
-                    # tf never moves; the end x is a left fold over the
-                    # font's advance table (the order np.cumsum adds in,
-                    # which sum() does not promise), the glyph positions
-                    # come from one pass per run in TextRun.columns
-                    tbl = font.advance_table(ks, cs_s, ws_s, ta)
-                    end_e = reduce(add, map(tbl.__getitem__, buf), te)
-                    if end_e == end_e:  # NaN-free: every code mapped
-                        t.add_segment(
-                            buf, te, base_e, base_f + tf, ks, cs_s, ws_s, ta
-                        )
-                        self.tm = (ta, tb, tc, td, end_e, tf)
-                        return
-                else:
-                    # bit-exact accumulation: seed the cumsum with te/tf
-                    # so every partial sum matches the scalar fold order
-                    w_a, cu_a = fa[3], fa[4]
-                    codes = np.frombuffer(buf, dtype=np.uint8)
-                    tx = advances(w_a[codes], codes, ks, cs_s, ws_s, 1.0)
-                    n = len(buf)
-                    c = np.empty((2, n + 1))
-                    c[0, 0] = te
-                    c[1, 0] = tf
-                    c[0, 1:] = tx * ta
-                    c[1, 1:] = tx * tb
-                    np.cumsum(c, axis=1, out=c)
-                    end_e = float(c[0, -1])
-                    if end_e == end_e:
-                        cu = cu_a[:, codes]
-                        t.add_block(
-                            cu[0],
-                            cu[1],
-                            base_e + c[0, :-1],
-                            base_f + c[1, :-1],
-                        )
-                        self.tm = (ta, tb, tc, td, end_e, float(c[1, -1]))
-                        return
-                # NaN advance -> unmapped code: the scalar loop below
-                # handles it (and records cannot_encode_cpt)
+        if segment and tb == 0.0:
+            # horizontal text (the overwhelmingly common case): tf never
+            # moves; the end x is a left fold over the font's advance
+            # table (the order np.cumsum adds in, which sum() does not
+            # promise), the glyph positions come from one pass per run in
+            # TextRun.columns. Per-char tx = (w*k + char_space)*scale,
+            # word_space added after code 32, identical to the scalar
+            # fold; the table is NaN at unmapped and multi-codepoint
+            # codes, so one NaN test on the end x replaces a pre-pass
+            ks, cs_s = k * scale, char_space * scale
+            ws_s = word_space * scale if word_space != 0.0 else _NAN
+            tbl = font.advance_table(ks, cs_s, ws_s, ta)
+            end_e = reduce(add, map(tbl.__getitem__, codes), te)
+            if end_e == end_e:
+                t.add_segment(codes, te, base_e, base_f + tf, ks, cs_s, ws_s, ta)
+                self.tm = (ta, tb, tc, td, end_e, tf)
+                return
+            # NaN: the loop below handles the string (and records
+            # cannot_encode_cpt)
 
         parts = t.parts
         n0 = len(parts)
         append = parts.append
-        for code in buf:
-            ent = table[code]
+        for code in codes:
+            ent = entry(code)
             if ent is None:
                 self.doc.note_failure("cannot_encode_cpt")
                 continue
@@ -402,73 +373,6 @@ class CSI:
             te += tx * ta
             tf += tx * tb
         t.n += len(parts) - n0
-        self.tm = (ta, tb, tc, td, te, tf)
-
-    def _show_string_cid2(self, buf: bytes, font):
-        """Tight loop for pure-2-byte CID encodings (Identity-H,
-        Uni*-UCS2-H). Same semantics as decode->lookup->show_char with a
-        per-font memo of (cid, ucs, width) per code."""
-        gs = self.gs
-        size, scale, rise = gs.size, gs.scale, gs.rise
-        char_space, word_space = gs.char_space, gs.word_space
-        ta, tb, tc, td, te, tf = self.tm
-        sa = size * scale
-        trm_a, trm_b = sa * ta, sa * tb
-        trm_c, trm_d = size * tc, size * td
-        t = self.text
-        if (
-            t is None
-            or font.ident != t.font.ident
-            or t.wmode != 0
-            or abs(trm_a - t.trm[0]) > FLT_EPSILON
-            or abs(trm_b - t.trm[1]) > FLT_EPSILON
-            or abs(trm_c - t.trm[2]) > FLT_EPSILON
-            or abs(trm_d - t.trm[3]) > FLT_EPSILON
-            or gs.render != self.text_mode
-        ):
-            self.flush_text()
-            self.text = TextRun(font, (trm_a, trm_b, trm_c, trm_d, 0.0, 0.0), 0)
-            self.text_mode = gs.render
-            t = self.text
-
-        items = t.parts
-        n0 = len(items)
-        base_e = rise * tc
-        base_f = rise * td
-        k = size * 0.001
-        spaces = font.encoding.codespaces
-        cid_entry = font.cid_entry
-        pos = 0
-        end = len(buf)
-        while pos < end:
-            if pos + 1 < end:
-                code = (buf[pos] << 8) | buf[pos + 1]
-                if any(lo <= code <= hi for _n, lo, hi in spaces):
-                    pos += 2
-                else:
-                    # outside every codespace: general decode consumes one
-                    # byte and yields codepoint 0
-                    code = 0
-                    pos += 1
-            else:
-                code = 0
-                pos += 1
-            ent = cid_entry(code)
-            if ent is None:
-                self.doc.note_failure("cannot_encode_cpt")
-                continue
-            _cid, ucs, w = ent
-            ex = base_e + te
-            ey = base_f + tf
-            items.append((ent[0], ucs[0], ex, ey))
-            for extra in ucs[1:]:
-                items.append((-1, extra, ex, ey))
-            tx = (w * k + char_space) * scale
-            if code == 32:
-                tx += word_space * scale
-            te += tx * ta
-            tf += tx * tb
-        t.n += len(items) - n0
         self.tm = (ta, tb, tc, td, te, tf)
 
     def show_text(self, obj):
@@ -565,10 +469,11 @@ def run_stream(csi: CSI, rdb, lexer: Lexer):
                     csi.stack = stack[:32]
             elif tok == T_KW:
                 inline_image = val == b"BI"
-                if inline_image:
-                    lex.handoff(end)  # run_keyword reads the raw payload
                 try:
-                    run_keyword(csi, rdb, lex, val)
+                    # BI reads the raw payload from the handed-off Lexer
+                    run_keyword(
+                        csi, rdb, lex.handoff(end) if inline_image else None, val
+                    )
                 except SyntaxError:
                     raise
                 except Exception:
@@ -618,7 +523,7 @@ def run_stream(csi: CSI, rdb, lexer: Lexer):
             ):
                 kw = val if isinstance(val, bytes) else b"?"
                 try:
-                    run_keyword(csi, rdb, lex, kw)
+                    run_keyword(csi, rdb, None, kw)
                 except SyntaxError:
                     raise
                 except Exception:
@@ -635,7 +540,8 @@ def _st(csi: CSI, i: int) -> float:
     return csi.stack[i] if i < len(csi.stack) else 0.0
 
 
-def run_keyword(csi: CSI, rdb, lex: Lexer, kw: bytes):
+def run_keyword(csi: CSI, rdb, lex: Lexer | None, kw: bytes):
+    """``lex`` is the raw Lexer after the operator (only BI reads it)."""
     doc = csi.doc
     gs = csi.gs
     # frequency-ordered fast heads (text-showing + positioning dominate
@@ -740,7 +646,7 @@ def run_keyword(csi: CSI, rdb, lex: Lexer, kw: bytes):
     elif kw == b"Do":
         run_do(csi, rdb)
     elif kw == b"BI":
-        run_inline_image(csi, rdb, lex.handoff())
+        run_inline_image(csi, rdb, lex)
     elif kw == b"BX":
         csi.xbalance += 1
     elif kw == b"EX":

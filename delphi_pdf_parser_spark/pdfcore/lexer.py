@@ -365,32 +365,23 @@ _SKIP_RE = re.compile(rb"(?:[\x00\t\n\x0c\r ]++|%[^\r\n]*+)*+")
 _RUN_MEMBER = rb"[+-]?(?:\d{1,15}(?:\.\d*)?|\.\d+)(?![\d.])"
 
 
-def _token_re(nums: bytes):
-    # groups: nums=1 num=2 str=3 sbody=4 name=5 kw=6 arr=7 (a 'str'
-    # match reports lastindex 3, not 4)
-    return re.compile(
-        _SKIP_RE.pattern
-        + rb"(?:(?P<nums>" + nums + rb")"
-        rb"|(?P<num>[+-]?(?:\d+(?:\.\d*)?|\.\d+))"
-        rb"|(?P<str>\((?P<sbody>[^()\\\r\n]*+)\))"
-        rb"|(?P<name>/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*+)"
-        rb"|(?P<kw>[^\x00\t\n\x0c\r ()<>\[\]{}/%+\-.0-9][^\x00\t\n\x0c\r ()<>\[\]{}/%]*+)"
-        rb"|(?P<arr>[\[\]]))"
-    )
-
-
-# lex(): one token per number (the nums group never matches)
-_BULK_TOKEN_RE = _token_re(rb"(?!)")
-# fill(): two or more plain numbers separated only by whitespace (not
-# NUL or comments) become one TOK_NUMS token
-_RUN_TOKEN_RE = _token_re(
-    _RUN_MEMBER + rb"(?:[\t\n\x0c\r ]++" + _RUN_MEMBER + rb")++"
+# groups: nums=1 num=2 str=3 sbody=4 name=5 kw=6 arr=7 (a 'str' match
+# reports lastindex 3, not 4); nums: two or more plain numbers separated
+# only by whitespace (not NUL or comments) become one TOK_NUMS token
+_RUN_TOKEN_RE = re.compile(
+    _SKIP_RE.pattern
+    + rb"(?:(?P<nums>" + _RUN_MEMBER + rb"(?:[\t\n\x0c\r ]++" + _RUN_MEMBER + rb")++)"
+    rb"|(?P<num>[+-]?(?:\d+(?:\.\d*)?|\.\d+))"
+    rb"|(?P<str>\((?P<sbody>[^()\\\r\n]*+)\))"
+    rb"|(?P<name>/[^\x00\t\n\x0c\r ()<>\[\]{}/%]*+)"
+    rb"|(?P<kw>[^\x00\t\n\x0c\r ()<>\[\]{}/%+\-.0-9][^\x00\t\n\x0c\r ()<>\[\]{}/%]*+)"
+    rb"|(?P<arr>[\[\]]))"
 )
 
 _BULK_CAP = 8192  # tokens per fill (bounds buffering on giant streams)
 
 
-def _bulk_fill(lexer: "Lexer", token_re) -> list:
+def _bulk_fill(lexer: "Lexer") -> list:
     """Tokenize from lexer.pos while tokens stay simple; returns
     [(tok, val, endpos), ...] and leaves lexer.pos after the last emitted
     token (or after any trailing whitespace and comments when stopping at
@@ -404,7 +395,7 @@ def _bulk_fill(lexer: "Lexer", token_re) -> list:
         TOK_KEYWORD, TOK_OPEN_ARRAY, TOK_CLOSE_ARRAY, TOK_NUMS,
     )
     kwmap_get = _KEYWORD_TOKENS.get
-    for m in iter(token_re.scanner(data, pos, lexer.end).match, None):
+    for m in iter(_RUN_TOKEN_RE.scanner(data, pos, lexer.end).match, None):
         pos = m.end()
         g = m.lastindex
         if g == 1:  # nums
@@ -445,43 +436,17 @@ def _bulk_fill(lexer: "Lexer", token_re) -> list:
 
 
 class ContentTokens:
-    """Token cursor over a content stream: bulk-lexed lookahead with a
-    ``handoff()`` escape hatch that rewinds the underlying Lexer to just
-    after the last consumed token — for consumers that need raw bytes or
-    tell/seek (inline-image payloads, dict/array object parsing).
+    """Token cursor over a content stream: ``fill()`` hands out the stream
+    one bulk-lexed buffer at a time, and ``handoff(end)`` rewinds the
+    underlying Lexer to just after a consumed token, for consumers that
+    need raw bytes or tell/seek (inline-image payloads, dict/array object
+    parsing); the next ``fill()`` continues where that consumer stopped."""
 
-    ``lex()`` hands out the classic token stream one token at a time;
-    ``fill()`` hands out whole buffers with number runs folded into
-    TOK_NUMS tokens."""
-
-    __slots__ = ("lexer", "buf", "i", "n", "_fill_start")
+    __slots__ = ("lexer", "_pending")
 
     def __init__(self, lexer: Lexer):
         self.lexer = lexer
-        self.buf: list = []
-        self.i = 0
-        self.n = 0
-        self._fill_start = lexer.pos
-
-    def lex(self):
-        i = self.i
-        if i < self.n:
-            tok, val, _end = self.buf[i]
-            self.i = i + 1
-            return tok, val
-        return self._slow()
-
-    def _slow(self):
-        lexer = self.lexer
-        self._fill_start = lexer.pos
-        buf = self.buf = _bulk_fill(lexer, _BULK_TOKEN_RE)
-        n = self.n = len(buf)
-        if n:
-            self.i = 1
-            tok, val, _end = buf[0]
-            return tok, val
-        self.i = 0
-        return lexer.lex()  # single complex token; lexer.pos advances
+        self._pending: list = []
 
     def fill(self) -> list:
         """The next buffer of (tok, val, end) tuples: the bulk-lexed
@@ -490,22 +455,28 @@ class ContentTokens:
         buffer whole, or stops after some token and calls
         ``handoff(end)`` with that token's end."""
         lexer = self.lexer
-        buf = _bulk_fill(lexer, _RUN_TOKEN_RE)
+        buf = _bulk_fill(lexer)
         if not buf:
             tok, val = lexer.lex()
             buf = [(tok, val, lexer.pos)]
         return buf
 
-    def handoff(self, end: int | None = None) -> Lexer:
-        """Discard buffered lookahead and return the Lexer positioned
-        right after the last token this cursor handed out; a ``fill()``
-        consumer passes that token's ``end``."""
+    def handoff(self, end: int) -> Lexer:
+        """The Lexer positioned at ``end``, the end of the last token
+        the caller consumed from ``fill()``."""
         lexer = self.lexer
-        if end is not None:
-            lexer.pos = end
-        elif self.n:
-            i = self.i
-            lexer.pos = self.buf[i - 1][2] if i > 0 else self._fill_start
-        self.buf = []
-        self.i = self.n = 0
+        lexer.pos = end
         return lexer
+
+    def lex(self):
+        """The next (tok, val) from ``fill()`` with each number of a run
+        as its own TOK_REAL, so a token tally matches the classic
+        scanner's (the benchmark's per-page token count reads it)."""
+        pending = self._pending
+        if not pending:
+            for tok, val, _end in reversed(self.fill()):
+                if tok == TOK_NUMS:
+                    pending.extend((TOK_REAL, v) for v in reversed(val))
+                else:
+                    pending.append((tok, val))
+        return pending.pop()

@@ -92,87 +92,86 @@ def _census_stream(
     toks = ContentTokens(Lexer(contents))
     last_name: str | None = None
     while True:
-        tok, val = toks.lex()
-        if tok in (lx.TOK_EOF, lx.TOK_ENDSTREAM, lx.TOK_ERROR):
-            return
-        if tok == lx.TOK_NAME:
-            last_name = val
-            continue
-        if tok != lx.TOK_KEYWORD:
-            continue
-        op = val.decode("latin-1") if isinstance(val, bytes) else str(val)
-        if op == "BI":
-            counts["image"] += 1
-            counts["n_ops"] += 1
-            lex = toks.handoff()
-            try:
-                d = parse_dict(lex)
-                ch = lex.read_byte()
-                if ch == 13 and lex.peek_byte() == 10:
-                    lex.read_byte()
-                _consume_inline_data(doc, lex, d)
-                ch = lex.read_byte()
-                while ch != 0x45 and ch != -1:  # scan to 'EI'
-                    ch = lex.read_byte()
-                lex.read_byte()
-            except Exception:
-                return  # corrupt inline payload: stop this stream
-            toks = ContentTokens(lex)
-            continue
-        counts["n_ops"] += 1
-        if op == "Do":
-            target = None
-            if xobjects is not None and last_name is not None:
-                target = doc.resolve(xobjects.get(last_name))
-            sub = to_name(doc.get(target, "Subtype")) if isinstance(
-                target, dict
-            ) else ""
-            if sub == "Image":
+        for tok, val, end in toks.fill():
+            if tok in (lx.TOK_EOF, lx.TOK_ENDSTREAM, lx.TOK_ERROR):
+                return
+            if tok == lx.TOK_NAME:
+                last_name = val
+                continue
+            if tok != lx.TOK_KEYWORD:
+                continue
+            op = val.decode("latin-1") if isinstance(val, bytes) else str(val)
+            if op == "BI":
                 counts["image"] += 1
-            elif sub == "Form":
-                counts["form"] += 1
-                if depth < _MAX_FORM_DEPTH:
-                    num = None
-                    raw = xobjects.get(last_name)
-                    if isinstance(raw, IndirectRef):
-                        num = raw.num
-                    if num is not None:
-                        try:
-                            body = doc.load_stream(num)
-                        except Exception:
-                            body = b""
-                        fres = doc.resolve(target.get("Resources"))
-                        _census_stream(
-                            doc, body,
-                            fres if isinstance(fres, dict) else resources,
-                            counts, depth + 1,
-                        )
+                counts["n_ops"] += 1
+                lex = toks.handoff(end)
+                try:
+                    d = parse_dict(lex)
+                    ch = lex.read_byte()
+                    if ch == 13 and lex.peek_byte() == 10:
+                        lex.read_byte()
+                    _consume_inline_data(doc, lex, d)
+                    ch = lex.read_byte()
+                    while ch != 0x45 and ch != -1:  # scan to 'EI'
+                        ch = lex.read_byte()
+                    lex.read_byte()
+                except Exception:
+                    return  # corrupt inline payload: stop this stream
+                break  # refill after the payload
+            counts["n_ops"] += 1
+            if op == "Do":
+                target = None
+                if xobjects is not None and last_name is not None:
+                    target = doc.resolve(xobjects.get(last_name))
+                sub = to_name(doc.get(target, "Subtype")) if isinstance(
+                    target, dict
+                ) else ""
+                if sub == "Image":
+                    counts["image"] += 1
+                elif sub == "Form":
+                    counts["form"] += 1
+                    if depth < _MAX_FORM_DEPTH:
+                        num = None
+                        raw = xobjects.get(last_name)
+                        if isinstance(raw, IndirectRef):
+                            num = raw.num
+                        if num is not None:
+                            try:
+                                body = doc.load_stream(num)
+                            except Exception:
+                                body = b""
+                            fres = doc.resolve(target.get("Resources"))
+                            _census_stream(
+                                doc, body,
+                                fres if isinstance(fres, dict) else resources,
+                                counts, depth + 1,
+                            )
+                else:
+                    counts["other"] += 1
+            elif op == "sh":
+                counts["shading"] += 1
+                if shadings is not None and last_name is not None:
+                    _classify_shading(doc, shadings.get(last_name), counts)
+                else:
+                    counts["sh_type_other"] += 1
             else:
-                counts["other"] += 1
-        elif op == "sh":
-            counts["shading"] += 1
-            if shadings is not None and last_name is not None:
-                _classify_shading(doc, shadings.get(last_name), counts)
-            else:
-                counts["sh_type_other"] += 1
-        else:
-            cat = _CATEGORY.get(op)
-            counts[cat if cat is not None else "other"] += 1
-            # a shading PATTERN set as fill/stroke color (the second
-            # entry path into pdf_shadess.pas): scn/SCN with a name
-            # operand whose pattern is PatternType 2
-            if (
-                op in ("scn", "SCN")
-                and patterns is not None
-                and last_name is not None
-            ):
-                p = doc.resolve(patterns.get(last_name))
-                if isinstance(p, dict):
-                    pt = doc.resolve(p.get("PatternType"))
-                    if pt == 2:
-                        counts["sh_pattern"] += 1
-                        _classify_shading(doc, p.get("Shading"), counts)
-        last_name = None
+                cat = _CATEGORY.get(op)
+                counts[cat if cat is not None else "other"] += 1
+                # a shading PATTERN set as fill/stroke color (the second
+                # entry path into pdf_shadess.pas): scn/SCN with a name
+                # operand whose pattern is PatternType 2
+                if (
+                    op in ("scn", "SCN")
+                    and patterns is not None
+                    and last_name is not None
+                ):
+                    p = doc.resolve(patterns.get(last_name))
+                    if isinstance(p, dict):
+                        pt = doc.resolve(p.get("PatternType"))
+                        if pt == 2:
+                            counts["sh_pattern"] += 1
+                            _classify_shading(doc, p.get("Shading"), counts)
+            last_name = None
 
 
 def op_census(data: bytes) -> list[dict]:

@@ -72,16 +72,14 @@ def advances(w, codes, ks, cs, ws, ta):
 class TextRun:
     """fz_text_s: glyphs batched while font/trm/wmode/render unchanged.
 
-    Items are stored as ``parts`` in emission order:
-    - scalar 4-tuples (gid, ucs, x, y) from the per-char paths;
-    - ('B', gids, ucs, xs, ys) blocks of NumPy columns from the rotated
-      show-string fast path;
+    Items are stored as ``parts`` in emission order, of two kinds:
+    - scalar 4-tuples (gid, ucs, x, y) from the per-code paths;
     - ('S', codes, te, base_e, y, ks, cs, ws, ta) segments: one horizontal
-      string on a 1-byte fast font, its glyph x positions left to
-      ``columns()`` (te is the string's start x, the rest are the
-      ``advances`` parameters)."""
+      string of at least 16 codes on a 1-byte fast font, its glyph x
+      positions left to ``columns()`` (te is the string's start x, the
+      rest are the ``advances`` parameters)."""
 
-    __slots__ = ("font", "trm", "wmode", "parts", "n", "has_block")
+    __slots__ = ("font", "trm", "wmode", "parts", "n")
 
     def __init__(self, font, trm, wmode):
         self.font = font
@@ -89,52 +87,39 @@ class TextRun:
         self.wmode = wmode
         self.parts: list = []
         self.n = 0
-        self.has_block = False
 
     def add(self, gid: int, ucs: int, x: float, y: float):
         self.parts.append((gid, ucs, x, y))
         self.n += 1
 
-    def add_block(self, gids, ucs, xs, ys):
-        self.parts.append(("B", gids, ucs, xs, ys))
-        self.n += len(gids)
-        self.has_block = True
-
     def add_segment(self, codes: bytes, te, base_e, y, ks, cs, ws, ta):
         self.parts.append(("S", codes, te, base_e, y, ks, cs, ws, ta))
         self.n += len(codes)
-        self.has_block = True
 
     def columns(self):
         """(gid int64, ucs int64, x f64, y f64) arrays in emission order."""
         parts = self.parts
         segs = [p for p in parts if p[0] == "S"]
-        seg_cols = _segment_columns(self.font, segs) if segs else None
-        if segs and len(segs) == len(parts):
+        if not segs:
+            return _scalar_columns(parts)
+        seg_cols = _segment_columns(self.font, segs)
+        if len(segs) == len(parts):
             return seg_cols
         chunks: list = []
         pend: list = []
         off = 0
         for p in parts:
-            tag = p[0]
-            if tag == "S" or tag == "B":
+            if p[0] == "S":
                 if pend:
                     chunks.append(_scalar_columns(pend))
                     pend = []
-                if tag == "B":
-                    chunks.append(p[1:])
-                else:
-                    n = len(p[1])
-                    chunks.append([c[off : off + n] for c in seg_cols])
-                    off += n
+                n = len(p[1])
+                chunks.append([c[off : off + n] for c in seg_cols])
+                off += n
             else:
                 pend.append(p)
         if pend:
             chunks.append(_scalar_columns(pend))
-        if not chunks:
-            return _scalar_columns([])
-        if len(chunks) == 1:
-            return tuple(chunks[0])
         return tuple(np.concatenate(c) for c in zip(*chunks))
 
 
@@ -153,7 +138,7 @@ def _segment_columns(font, segs):
     codes = np.frombuffer(b"".join([s[1] for s in segs]), dtype=np.uint8)
     params = np.array([s[2:] for s in segs])  # te, base_e, y, ks, cs, ws, ta
     per = np.repeat(params, lens, axis=0)
-    _ok, _cid, _ucs, w_a, cu_a = font.fast_arrays()
+    w_a, cu_a = font.fast_arrays()
     tx = advances(w_a[codes], codes, per[:, 3], per[:, 4], per[:, 5], per[:, 6])
     width = max(lens)
     if len(segs) * width <= 4 * len(codes):
@@ -254,7 +239,7 @@ class TextDevice:
         size = math.sqrt(abs(trm[0] * trm[3] - trm[1] * trm[2]))
 
         items = run.parts
-        if run.n >= 16 or run.has_block:
+        if run.n >= 16:  # a run holding a segment always qualifies
             cols = run.columns()
             done = self._extract_span_vectorized(
                 run, cols, ctm, ndir, size, dx, dy

@@ -3,6 +3,7 @@ bulk path must be byte-identical to the general (per-char) paths."""
 
 from __future__ import annotations
 
+import math
 import random
 
 from delphi_pdf_parser_spark.fixtures import PdfBuilder
@@ -36,6 +37,33 @@ def _random_doc(seed: int) -> bytes:
         else:
             ops.append(f"{rng.uniform(-10, 10):.2f} Ts")
     ops.append("ET")
+    return _page_doc(ops)
+
+
+def _rotated_doc(seed: int) -> bytes:
+    """Strings of 16 bytes or more under rotated text matrices, with
+    horizontal scaling and nonzero char/word spacing and rise."""
+    rng = random.Random(seed)
+    ops = ["BT /F1 %g Tf" % rng.choice([8, 10.5, 12])]
+    for _ in range(rng.randint(2, 10)):
+        ang = rng.uniform(0.05, 2 * math.pi - 0.05)
+        c, s = math.cos(ang), math.sin(ang)
+        ops.append(f"{c:.4f} {s:.4f} {-s:.4f} {c:.4f} {rng.randint(50, 550)} {rng.randint(50, 750)} Tm")
+        ops.append(f"{rng.choice([50, 80, 120])} Tz")
+        ops.append(f"{rng.choice([-1, 1]) * rng.uniform(0.1, 3):.2f} Tc")
+        ops.append(f"{rng.choice([-1, 1]) * rng.uniform(0.5, 8):.2f} Tw")
+        ops.append(f"{rng.choice([-1, 1]) * rng.uniform(0.5, 8):.2f} Ts")
+        for _ in range(rng.randint(1, 3)):
+            txt = "".join(
+                rng.choice("ABCDEFGH ijklm nopq 0123")
+                for _ in range(rng.randint(16, 60))
+            )
+            ops.append(f"({txt}) Tj" if rng.random() < 0.7 else f"[({txt}) -250 ({txt})] TJ")
+    ops.append("ET")
+    return _page_doc(ops)
+
+
+def _page_doc(ops: list[str]) -> bytes:
     content = " ".join(ops).encode()
     b = PdfBuilder()
     cat = b.add("<< /Type /Catalog /Pages 2 0 R >>")
@@ -50,7 +78,7 @@ def _random_doc(seed: int) -> bytes:
 
 
 def test_fast_paths_match_reference_paths(monkeypatch):
-    docs = [_random_doc(s) for s in range(40)]
+    docs = [_random_doc(s) for s in range(40)] + [_rotated_doc(s) for s in range(40)]
     fast = [extract_text(d).text for d in docs]
 
     # disable the string fast path AND the vectorized span path

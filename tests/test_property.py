@@ -124,59 +124,22 @@ def test_random_content_streams_extract(ops):
         assert any(c == ch for c in it), (shown, res.text)
 
 
-@settings(max_examples=300, deadline=None)
-@given(
-    st.lists(
-        st.sampled_from(
-            b"0123456789+-.()[]<>/%\\\r\n\t ABCTdfmj*'\"ET#\x00\xff\x80"
-            b"truefalsnulobjendstramxi"
-        ),
-        max_size=64,
-    ).map(bytes)
-)
-def test_bulk_tokenizer_equals_classic_lexer(data):
-    """ContentTokens (the bulk regex content lexer) must emit the exact
-    token stream of the classic byte scanner for ANY input — the bulk
-    patterns are strict subsets and everything else falls back."""
-    from delphi_pdf_parser_spark.pdfcore import lexer as lx
-
-    def drain(src):
-        out = []
-        while len(out) < 300:
-            t = src.lex()
-            out.append(t)
-            if t[0] == lx.TOK_EOF:
-                break
-        return out
-
-    assert drain(lx.Lexer(data)) == drain(lx.ContentTokens(lx.Lexer(data)))
-
-
-_RUN_PIECES = st.one_of(
-    st.sampled_from(
-        [bytes([c]) for c in b"0123456789+-.()[]<>/%\\\r\n\t ABCTdfmj*'\"ET#\x00\xff\x80"]
-        + [b"%c\n", b"Tm"]
-    ),
-    st.sampled_from([b" ", b" -0 ", b"\n", b" 0.5 "]),
-    st.text("0123456789", min_size=1, max_size=20).map(str.encode),
-)
-
-
-@settings(max_examples=300, deadline=None)
-@given(st.lists(_RUN_PIECES, max_size=48).map(b"".join))
-def test_number_run_tokens_equal_classic_lexer(data):
+def _assert_fill_is_classic(data: bytes):
     """ContentTokens.fill() with every TOK_NUMS run expanded is the
     classic token stream, numbers compared as the interpreter stores them
     (float(val), sign of zero included), and every token's end is the
-    classic scanner's position after it."""
+    classic scanner's position after it. ContentTokens.lex() hands out
+    the same tokens one at a time, each run member as a TOK_REAL."""
     import math
 
     from delphi_pdf_parser_spark.pdfcore import lexer as lx
 
     classic = lx.Lexer(data)
+    seen = []
 
     def next_classic():
         tok, val = classic.lex()
+        seen.append((tok, val))
         return tok, val, classic.pos
 
     cur = lx.ContentTokens(lx.Lexer(data))
@@ -195,6 +158,49 @@ def test_number_run_tokens_equal_classic_lexer(data):
                 assert (tok, val, end) == next_classic()
         if buf[-1][0] == lx.TOK_EOF:
             break
+
+    one = lx.ContentTokens(lx.Lexer(data))
+    for ctok, cval in seen:
+        tok, val = one.lex()
+        if tok == lx.TOK_REAL and ctok == lx.TOK_INT:
+            assert val == float(cval)
+        else:
+            assert (tok, val) == (ctok, cval)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.lists(
+        st.sampled_from(
+            b"0123456789+-.()[]<>/%\\\r\n\t ABCTdfmj*'\"ET#\x00\xff\x80"
+            b"truefalsnulobjendstramxi"
+        ),
+        max_size=64,
+    ).map(bytes)
+)
+def test_bulk_tokenizer_equals_classic_lexer(data):
+    """ContentTokens (the bulk regex content lexer) must emit the exact
+    token stream of the classic byte scanner for ANY input — the bulk
+    patterns are strict subsets and everything else falls back."""
+    _assert_fill_is_classic(data)
+
+
+_RUN_PIECES = st.one_of(
+    st.sampled_from(
+        [bytes([c]) for c in b"0123456789+-.()[]<>/%\\\r\n\t ABCTdfmj*'\"ET#\x00\xff\x80"]
+        + [b"%c\n", b"Tm"]
+    ),
+    st.sampled_from([b" ", b" -0 ", b"\n", b" 0.5 "]),
+    st.text("0123456789", min_size=1, max_size=20).map(str.encode),
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(st.lists(_RUN_PIECES, max_size=48).map(b"".join))
+def test_number_run_tokens_equal_classic_lexer(data):
+    """Number-heavy streams: every TOK_NUMS run from ContentTokens.fill()
+    expands to the classic scanner's number tokens."""
+    _assert_fill_is_classic(data)
 
 
 def _content_doc(content: bytes) -> bytes:

@@ -9,13 +9,17 @@ of the per-round ratio b/a. Paired ratios repeat far more tightly than
 whole-benchmark wall times, which move with the host's load.
 
     python tools/pdfcore_ab.py PARENT_CHECKOUT CHANGE_CHECKOUT \\
-        [--docs 300] [--rounds 40] [--seed 1]
+        [--corpus bench|fixtures] [--docs 300] [--rounds 40] [--seed 1]
 
-The docs come from ``fixtures.bench_pdf`` of the checkout this script is
-in, seeded as perfbench's extract_uniform workload seeds them (so
-``--docs 3000 --seed N`` is that workload's corpus at seed N). Before
-timing, the two sides' page texts, statuses and failure codes are
-compared and any difference is printed; ``--rounds 0`` only compares.
+The docs come from the ``fixtures`` module of the checkout this script is
+in. ``--corpus bench`` (the default) takes ``bench_pdf`` docs seeded as
+perfbench's extract_uniform workload seeds them (so ``--docs 3000 --seed
+N`` is that workload's corpus at seed N). ``--corpus fixtures`` takes the
+``generate_fixtures()`` PDFs (``--docs`` does not apply): few docs, but
+the only ones that reach the short-string, 2-byte CID and general
+per-char text paths. Before timing, the two sides' statuses, page texts,
+failure codes and metadata are compared and any difference is printed;
+``--rounds 0`` only compares.
 """
 
 from __future__ import annotations
@@ -43,10 +47,12 @@ def load_pdfcore(checkout: str, name: str):
     return mod
 
 
-def bench_docs(n: int, seed: int) -> list[bytes]:
+def corpus_docs(corpus: str, n: int, seed: int) -> list[bytes]:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from delphi_pdf_parser_spark.fixtures import bench_pdf
+    from delphi_pdf_parser_spark.fixtures import bench_pdf, generate_fixtures
 
+    if corpus == "fixtures":
+        return [fx["pdf"] for _case, fx in sorted(generate_fixtures().items())]
     return [
         bench_pdf(seed=(seed * 1_000_003 + i) & 0x7FFFFFFF, npages=1 + i % 2)
         for i in range(n)
@@ -57,8 +63,9 @@ def result_digest(extract_text, docs: list[bytes]) -> list[str]:
     out = []
     for d in docs:
         r = extract_text(d)
-        key = [r.status, r.pages, sorted(r.failures.items())]
-        out.append(hashlib.sha256(json.dumps(key).encode("utf-8")).hexdigest())
+        key = [r.status, r.pages, sorted(r.failures.items()), r.metadata]
+        blob = json.dumps(key, sort_keys=True)
+        out.append(hashlib.sha256(blob.encode("utf-8")).hexdigest())
     return out
 
 
@@ -73,12 +80,13 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("a", help="checkout A (the parent)")
     ap.add_argument("b", help="checkout B (the change)")
+    ap.add_argument("--corpus", choices=("bench", "fixtures"), default="bench")
     ap.add_argument("--docs", type=int, default=300)
     ap.add_argument("--rounds", type=int, default=40)
     ap.add_argument("--seed", type=int, default=1)
     args = ap.parse_args(argv)
 
-    docs = bench_docs(args.docs, args.seed)
+    docs = corpus_docs(args.corpus, args.docs, args.seed)
     sides = {
         "a": load_pdfcore(args.a, "pdfcore_a").extract_text,
         "b": load_pdfcore(args.b, "pdfcore_b").extract_text,
