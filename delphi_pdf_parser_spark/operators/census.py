@@ -5,10 +5,6 @@ without rasterizing it — a corpus-triage statistic at 100 TB scale."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -21,6 +17,7 @@ from pyspark.sql.types import (
 from delphi_pdf_parser_spark.pdfcore.opcensus import _CATS
 
 from .extraction import prefilter_pdfs
+from .parallelize import map_rows, page_rows
 
 CENSUS_SCHEMA = StructType(
     [
@@ -32,24 +29,16 @@ CENSUS_SCHEMA = StructType(
 )
 
 
-def _census_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _census_rows(url: str, data: bytes) -> list:
     from delphi_pdf_parser_spark.pdfcore.opcensus import op_census
 
-    cols = [f.name for f in CENSUS_SCHEMA.fields]
-    for b in batches:
-        rows = []
-        for url, html in zip(b["url"], b["html"]):
-            try:
-                pages = op_census(bytes(html))
-            except Exception:
-                continue
-            for p in pages:
-                rows.append(
-                    (url, p["page"], p["n_ops"])
-                    + tuple(p[c] for c in _CATS)
-                )
-        yield pd.DataFrame(rows, columns=cols)
+    return [
+        (url, p["page"], p["n_ops"]) + tuple(p[c] for c in _CATS)
+        for p in op_census(data)
+    ]
 
 
 def document_op_census(documents: DataFrame) -> DataFrame:
-    return prefilter_pdfs(documents).mapInPandas(_census_batches, CENSUS_SCHEMA)
+    return map_rows(
+        prefilter_pdfs(documents), page_rows(_census_rows), CENSUS_SCHEMA
+    )

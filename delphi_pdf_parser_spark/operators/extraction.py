@@ -23,8 +23,6 @@ Spark-side design per SURVEY.md §2.B / §4:
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -39,7 +37,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .parallelize import plan_bytes
+from .parallelize import map_rows, plan_bytes
 
 # the 8 /Info fields openfile1 surfaces (src/digPdfViewer.pas:236-312),
 # as (column, /Info key)
@@ -84,50 +82,43 @@ STAT_COLUMNS = ["url", "npages", "n_objects", "status", "err"] + [
 _ALL_PAGES = 2**31 - 1  # open page_hi: pdfcore clamps it to npages
 
 
-def _extract_ranges(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """The mapInPandas body. Each row is one (url, html, password,
-    page_lo, page_hi) page range, extracted by one pdfcore call; the
-    /Info fields are read only for ranges that start at page 0. Imports
-    stay inside so the function pickles cheaply to executors; pdfcore
-    loads once per worker."""
+def _extract_range(url, html, pw, lo, hi) -> list:
+    """The extraction row function: one (url, html, password, page_lo,
+    page_hi) page range, extracted by one pdfcore call; the /Info fields
+    are read only for ranges that start at page 0. Imports stay inside
+    so the function pickles cheaply to executors; pdfcore loads once per
+    worker."""
     from pyspark import TaskContext
 
     from delphi_pdf_parser_spark.pdfcore.extract import extract_text_pages
 
     tc = TaskContext.get()
-    pid = tc.partitionId() if tc is not None else -1
-    for b in batches:
-        rows = []
-        for url, html, pw, lo, hi in zip(
-            b["url"], b["html"], b["password"], b["page_lo"], b["page_hi"]
-        ):
-            lo = int(lo)
-            res = extract_text_pages(
-                bytes(html) if html is not None else b"",
-                lo,
-                int(hi),
-                want_metadata=lo == 0,
-                password=pw or b"",
-            )
-            ok = res.status != "failed"
-            meta = res.metadata or {}
-            rows.append(
-                (
-                    url,
-                    res.text if ok else None,
-                    res.pages if ok else None,
-                    res.npages,
-                    res.n_objects,
-                    res.status,
-                    res.error,
-                    {k: int(v) for k, v in res.failures.items()},
-                    res.wall_ms,
-                    pid,
-                    *(meta.get(key) for _, key in INFO_FIELDS),
-                    lo,
-                )
-            )
-        yield pd.DataFrame(rows, columns=RANGE_SCHEMA.fieldNames())
+    lo = int(lo)
+    res = extract_text_pages(
+        bytes(html) if html is not None else b"",
+        lo,
+        int(hi),
+        want_metadata=lo == 0,
+        password=pw or b"",
+    )
+    ok = res.status != "failed"
+    meta = res.metadata or {}
+    return [
+        (
+            url,
+            res.text if ok else None,
+            res.pages if ok else None,
+            res.npages,
+            res.n_objects,
+            res.status,
+            res.error,
+            {k: int(v) for k, v in res.failures.items()},
+            res.wall_ms,
+            tc.partitionId() if tc is not None else -1,
+            *(meta.get(key) for _, key in INFO_FIELDS),
+            lo,
+        )
+    ]
 
 
 def _password(df: DataFrame):
@@ -142,13 +133,14 @@ def _extract_pages(df: DataFrame, page_lo, page_hi) -> DataFrame:
     page range [page_lo, page_hi) given as ints or columns. The range and
     the null password of password-less input are added here, after any
     exchange, so shuffles carry only the document columns."""
-    return df.select(
+    ranges = df.select(
         "url",
         "html",
         _password(df).alias("password"),
         F.lit(page_lo).cast("int").alias("page_lo"),
         F.lit(page_hi).cast("int").alias("page_hi"),
-    ).mapInPandas(_extract_ranges, RANGE_SCHEMA)
+    )
+    return map_rows(ranges, _extract_range, RANGE_SCHEMA)
 
 
 def stat_documents(documents: DataFrame, prefilter: bool = True) -> DataFrame:

@@ -27,10 +27,8 @@ Scale shape (100 TB / 10^12 pages):
 from __future__ import annotations
 
 import re
-from typing import Iterator, Optional
+from typing import Optional
 from urllib.parse import urljoin, urldefrag
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -43,7 +41,7 @@ from pyspark.sql.types import (
 
 from delphi_pdf_parser_spark.operators.urls import host_of, registered_domain
 
-from .parallelize import ensure_min_parallelism
+from .parallelize import ensure_min_parallelism, map_rows, page_rows
 
 LINKS_SCHEMA = StructType(
     [
@@ -142,21 +140,6 @@ def _page_links(
     return rows
 
 
-def _links_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in LINKS_SCHEMA.fields]
-    for b in batches:
-        rows = []
-        for url, html in zip(b["url"], b["html"]):
-            if html is None:
-                continue
-            raw = bytes(html) if not isinstance(html, str) else html.encode()
-            try:
-                rows.extend(_page_links(url, raw))
-            except Exception:
-                continue  # a malformed page must never kill the batch
-        yield pd.DataFrame(rows, columns=cols)
-
-
 def extract_links(
     documents: DataFrame, url_col: str = "url", html_col: str = "html"
 ) -> DataFrame:
@@ -170,7 +153,7 @@ def extract_links(
         F.col(url_col).alias("url"), F.col(html_col).alias("html")
     ).filter(F.col(html_col).isNotNull())
     df = ensure_min_parallelism(df)
-    return df.mapInPandas(_links_batches, LINKS_SCHEMA)
+    return map_rows(df, page_rows(_page_links), LINKS_SCHEMA)
 
 
 def host_graph(
@@ -266,13 +249,61 @@ def _decode_node_ids(scores: DataFrame, mapping: DataFrame) -> DataFrame:
     )
 
 
+def _graph_tables(edges: DataFrame, src: str, dst: str, encode_ids: bool):
+    """(edges, nodes, mapping) for the rank loops: the (src, dst) edge
+    list with string keys and its distinct node set, dictionary-encoded
+    to int64 ids when ``encode_ids`` (mapping is None otherwise)."""
+    e = edges.select(
+        F.col(src).cast("string").alias("src"),
+        F.col(dst).cast("string").alias("dst"),
+    )
+    nodes = (
+        e.select(F.col("src").alias("node"))
+        .union(e.select(F.col("dst").alias("node")))
+        .distinct()
+    )
+    if encode_ids:
+        return _encode_node_ids(e, nodes)
+    return e, nodes, None
+
+
+def _shuffle_partitions(df: DataFrame) -> int:
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
+
+
+def _weighted_edges(e: DataFrame):
+    """(outdeg, edges_w): per-source out-degrees and the degree-annotated
+    edge table, hash-partitioned by ``src`` and checkpointed once, so the
+    rank loop shuffles only the node-sized rank table."""
+    outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
+    edges_w = (
+        e.join(outdeg, "src")
+        .repartition(_shuffle_partitions(e), "src")
+        .localCheckpoint()
+    )
+    return outdeg, edges_w
+
+
+def _converged(cur: DataFrame, prev: DataFrame, col: str, tol) -> bool:
+    """The ``tol`` early stop: True when ``tol`` is set and the L1 delta
+    of ``col`` between two score tables is below it (one node-sized join
+    and one scalar action)."""
+    if tol is None:
+        return False
+    delta = (
+        cur.join(prev.select("node", F.col(col).alias("_prev")), "node")
+        .agg(F.sum(F.abs(F.col(col) - F.col("_prev"))).alias("d"))
+        .first()["d"]
+    )
+    return delta is not None and delta < tol
+
+
 def pagerank(
     edges: DataFrame,
     iterations: int = 5,
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    partitions: Optional[int] = None,
     encode_ids: bool = False,
     tol: Optional[float] = None,
 ) -> DataFrame:
@@ -286,7 +317,8 @@ def pagerank(
     simple-graph semantics ``distinct()`` first.
 
     Plan shape: the degree-annotated edge table is repartitioned by
-    ``src`` and checkpointed ONCE — per iteration only the node-sized
+    ``src`` into ``spark.sql.shuffle.partitions`` parts and checkpointed
+    ONCE — per iteration only the node-sized
     rank table moves (one shuffle onto the edge partitioning + one
     map-side-combined groupBy(dst)). N and the per-iteration dangling
     mass are single-scalar aggregates (bounded driver values); rank
@@ -302,29 +334,8 @@ def pagerank(
     iteration (loop control needs the driver), so production runs
     trade that sync for not paying fixed iterations past convergence.
     """
-    spark = edges.sparkSession
-    e = edges.select(
-        F.col(src).cast("string").alias("src"),
-        F.col(dst).cast("string").alias("dst"),
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    mapping = None
-    if encode_ids:
-        e, nodes, mapping = _encode_node_ids(e, nodes)
-    if partitions is None:
-        partitions = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    edges_w = (
-        e.join(outdeg, "src")
-        .repartition(partitions, "src")
-        .localCheckpoint()
-    )
+    e, nodes, mapping = _graph_tables(edges, src, dst, encode_ids)
+    outdeg, edges_w = _weighted_edges(e)
     nodes = nodes.localCheckpoint()
     n = nodes.count()  # one scalar action; the only full-graph count
     if n == 0:
@@ -379,23 +390,8 @@ def pagerank(
             )
             .localCheckpoint()
         )
-        if tol is not None:
-            delta = (
-                ranks.join(
-                    prev.select(
-                        "node", F.col("rank").alias("_prev")
-                    ),
-                    "node",
-                )
-                .agg(
-                    F.sum(F.abs(F.col("rank") - F.col("_prev"))).alias(
-                        "d"
-                    )
-                )
-                .first()["d"]
-            )
-            if delta is not None and delta < tol:
-                break
+        if _converged(ranks, prev, "rank", tol):
+            break
     if mapping is not None:
         ranks = _decode_node_ids(ranks, mapping)
     return ranks
@@ -463,19 +459,7 @@ def hits(
     """
     if iterations < 1:
         raise ValueError("hits: iterations must be >= 1")
-    spark = edges.sparkSession
-    e = edges.select(
-        F.col(src).cast("string").alias("src"),
-        F.col(dst).cast("string").alias("dst"),
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    mapping = None
-    if encode_ids:
-        e, nodes, mapping = _encode_node_ids(e, nodes)
+    e, nodes, mapping = _graph_tables(edges, src, dst, encode_ids)
     nodes = nodes.localCheckpoint()
     n = nodes.count()
     if n == 0:
@@ -487,7 +471,7 @@ def hits(
             if mapping is not None
             else empty
         )
-    partitions = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    partitions = _shuffle_partitions(e)
     # one copy per join orientation, each partitioned on ITS join key so
     # the per-iteration shuffles move only the node-sized score tables
     e_by_src = e.repartition(partitions, "src").localCheckpoint()
@@ -536,23 +520,8 @@ def hits(
             .agg(F.sum("auth").alias("s"))
         )
         hub = _normalized(raw_hub, "hub")
-        if tol is not None:
-            delta = (
-                hub.join(
-                    prev_hub.select(
-                        "node", F.col("hub").alias("_prev")
-                    ),
-                    "node",
-                )
-                .agg(
-                    F.sum(F.abs(F.col("hub") - F.col("_prev"))).alias(
-                        "d"
-                    )
-                )
-                .first()["d"]
-            )
-            if delta is not None and delta < tol:
-                break
+        if _converged(hub, prev_hub, "hub", tol):
+            break
     out = hub.join(auth, "node")
     if mapping is not None:
         out = _decode_node_ids(out, mapping)
@@ -566,7 +535,6 @@ def personalized_pagerank(
     damping: float = 0.85,
     src: str = "src",
     dst: str = "dst",
-    partitions: Optional[int] = None,
     encode_ids: bool = False,
     tol: Optional[float] = None,
 ) -> DataFrame:
@@ -584,29 +552,8 @@ def personalized_pagerank(
     :func:`pagerank` — the only addition is the node-sized weight
     table, which rides the same partitioning as the ranks.
     """
-    spark = edges.sparkSession
-    e = edges.select(
-        F.col(src).cast("string").alias("src"),
-        F.col(dst).cast("string").alias("dst"),
-    )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    mapping = None
-    if encode_ids:
-        e, nodes, mapping = _encode_node_ids(e, nodes)
-    if partitions is None:
-        partitions = int(
-            spark.conf.get("spark.sql.shuffle.partitions", "32")
-        )
-    outdeg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    edges_w = (
-        e.join(outdeg, "src")
-        .repartition(partitions, "src")
-        .localCheckpoint()
-    )
+    e, nodes, mapping = _graph_tables(edges, src, dst, encode_ids)
+    outdeg, edges_w = _weighted_edges(e)
     # sum duplicate teleport rows up front — a left join against a
     # multi-row seed entry would otherwise multiply the node row
     seed_w = (
@@ -670,23 +617,8 @@ def personalized_pagerank(
             )
             .localCheckpoint()
         )
-        if tol is not None:
-            delta = (
-                ranks.join(
-                    prev.select(
-                        "node", F.col("rank").alias("_prev")
-                    ),
-                    "node",
-                )
-                .agg(
-                    F.sum(F.abs(F.col("rank") - F.col("_prev"))).alias(
-                        "d"
-                    )
-                )
-                .first()["d"]
-            )
-            if delta is not None and delta < tol:
-                break
+        if _converged(ranks, prev, "rank", tol):
+            break
     if mapping is not None:
         ranks = _decode_node_ids(ranks, mapping)
     return ranks

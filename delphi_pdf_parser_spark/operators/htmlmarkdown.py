@@ -29,10 +29,7 @@ extract_main_content.
 from __future__ import annotations
 
 import re
-from typing import Iterator
 from urllib.parse import urljoin
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -49,7 +46,7 @@ from delphi_pdf_parser_spark.htmlcore import (
     _decode_entities,
 )
 
-from .parallelize import ensure_min_parallelism
+from .parallelize import ensure_min_parallelism, map_rows, page_rows
 
 MARKDOWN_SCHEMA = StructType(
     [
@@ -346,19 +343,11 @@ def _close_table(md: _MD):
     md.blocks.append("\n".join(lines))
 
 
-def _md_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in MARKDOWN_SCHEMA.fields]
-    for b in batches:
-        rows = []
-        for url, html in zip(b["url"], b["html"]):
-            if html is None:
-                continue
-            raw = bytes(html) if not isinstance(html, str) else html.encode()
-            try:
-                rows.append(_render_markdown(url, raw))
-            except Exception:
-                rows.append((url, None, 0, 0))
-        yield pd.DataFrame(rows, columns=cols)
+def _md_rows(url: str, html: bytes) -> list:
+    try:
+        return [_render_markdown(url, html)]
+    except Exception:
+        return [(url, None, 0, 0)]
 
 
 def html_to_markdown(
@@ -370,4 +359,4 @@ def html_to_markdown(
         F.col(url_col).alias("url"), F.col(html_col).alias("html")
     ).filter(F.col(html_col).isNotNull())
     df = ensure_min_parallelism(df)
-    return df.mapInPandas(_md_batches, MARKDOWN_SCHEMA)
+    return map_rows(df, page_rows(_md_rows), MARKDOWN_SCHEMA)

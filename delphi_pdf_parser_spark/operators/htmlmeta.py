@@ -17,10 +17,8 @@ same zero-per-row-Python contract as every extraction stage.
 from __future__ import annotations
 
 import re
-from typing import Iterator, Optional
+from typing import Optional
 from urllib.parse import urljoin
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -33,6 +31,8 @@ from pyspark.sql.types import (
 )
 
 from delphi_pdf_parser_spark.operators.graphs import _attrs
+
+from .parallelize import map_rows, page_rows
 
 META_SCHEMA = StructType(
     [
@@ -122,19 +122,11 @@ def _page_meta(url: str, html: bytes, stripped: bool = False) -> tuple:
     )
 
 
-def _meta_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in META_SCHEMA.fields]
-    for b in batches:
-        rows = []
-        for url, html in zip(b["url"], b["html"]):
-            if html is None:
-                continue
-            raw = bytes(html) if not isinstance(html, str) else html.encode()
-            try:
-                rows.append(_page_meta(url, raw))
-            except Exception:
-                rows.append((url,) + (None,) * 6 + (False,))
-        yield pd.DataFrame(rows, columns=cols)
+def _meta_rows(url: str, html: bytes) -> list:
+    try:
+        return [_page_meta(url, html)]
+    except Exception:
+        return [(url,) + (None,) * 6 + (False,)]
 
 
 JSONLD_SCHEMA = StructType(
@@ -165,23 +157,6 @@ def _page_jsonld(url: str, html: bytes) -> list:
     return out
 
 
-def _jsonld_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in JSONLD_SCHEMA.fields]
-    for b in batches:
-        rows = []
-        for url, html in zip(b["url"], b["html"]):
-            if html is None:
-                continue
-            raw = bytes(html) if not isinstance(html, str) else html.encode()
-            try:
-                rows.extend(_page_jsonld(url, raw))
-            except Exception:
-                continue
-        yield pd.DataFrame(rows, columns=cols)
-
-
 def extract_jsonld(
     documents: DataFrame, url_col: str = "url", html_col: str = "html"
 ) -> DataFrame:
@@ -195,7 +170,7 @@ def extract_jsonld(
     df = documents.select(
         F.col(url_col).alias("url"), F.col(html_col).alias("html")
     ).filter(F.col(html_col).isNotNull())
-    blobs = df.mapInPandas(_jsonld_batches, JSONLD_SCHEMA)
+    blobs = map_rows(df, page_rows(_page_jsonld), JSONLD_SCHEMA)
     return blobs.select(
         "url",
         "blob_id",
@@ -213,7 +188,7 @@ def extract_html_metadata(
     df = documents.select(
         F.col(url_col).alias("url"), F.col(html_col).alias("html")
     ).filter(F.col(html_col).isNotNull())
-    return df.mapInPandas(_meta_batches, META_SCHEMA)
+    return map_rows(df, page_rows(_meta_rows), META_SCHEMA)
 
 
 HEADINGS_SCHEMA = StructType(
@@ -253,23 +228,6 @@ def _page_headings(
     return rows
 
 
-def _headings_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in HEADINGS_SCHEMA.fields]
-    for b in batches:
-        rows = []
-        for url, html in zip(b["url"], b["html"]):
-            if html is None:
-                continue
-            raw = bytes(html) if not isinstance(html, str) else html.encode()
-            try:
-                rows.extend(_page_headings(url, raw))
-            except Exception:
-                continue
-        yield pd.DataFrame(rows, columns=cols)
-
-
 def extract_headings(
     documents: DataFrame, url_col: str = "url", html_col: str = "html"
 ) -> DataFrame:
@@ -282,4 +240,4 @@ def extract_headings(
     df = documents.select(
         F.col(url_col).alias("url"), F.col(html_col).alias("html")
     ).filter(F.col(html_col).isNotNull())
-    return df.mapInPandas(_headings_batches, HEADINGS_SCHEMA)
+    return map_rows(df, page_rows(_page_headings), HEADINGS_SCHEMA)

@@ -18,10 +18,6 @@ One Arrow ``mapInPandas`` pass — map-only, no shuffle.
 from __future__ import annotations
 
 import re
-from typing import Iterator
-from delphi_pdf_parser_spark.operators.graphs import _attrs
-
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -32,6 +28,10 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from delphi_pdf_parser_spark.operators.graphs import _attrs
+
+from .parallelize import map_rows, page_rows
 
 TABLE_SCHEMA = StructType(
     [
@@ -117,21 +117,6 @@ def _page_tables(
     return rows
 
 
-def _table_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in TABLE_SCHEMA.fields]
-    for b in batches:
-        out = []
-        for url, html in zip(b["url"], b["html"]):
-            if html is None:
-                continue
-            raw = bytes(html) if not isinstance(html, str) else html.encode()
-            try:
-                out.extend(_page_tables(url, raw))
-            except Exception:
-                continue
-        yield pd.DataFrame(out, columns=cols)
-
-
 def extract_html_tables(
     documents: DataFrame, url_col: str = "url", html_col: str = "html"
 ) -> DataFrame:
@@ -140,7 +125,7 @@ def extract_html_tables(
     df = documents.select(
         F.col(url_col).alias("url"), F.col(html_col).alias("html")
     ).filter(F.col(html_col).isNotNull())
-    return df.mapInPandas(_table_batches, TABLE_SCHEMA)
+    return map_rows(df, page_rows(_page_tables), TABLE_SCHEMA)
 
 
 def table_profile(cells: DataFrame, min_rows: int = 2) -> DataFrame:

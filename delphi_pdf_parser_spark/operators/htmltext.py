@@ -9,10 +9,6 @@ extract_documents, text/html payloads here, union the text columns.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -22,7 +18,9 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .parallelize import ensure_min_parallelism
+from delphi_pdf_parser_spark.htmlcore import extract_main_content
+
+from .parallelize import ensure_min_parallelism, map_rows
 
 HTML_EXTRACTED_SCHEMA = StructType(
     [
@@ -36,28 +34,14 @@ HTML_EXTRACTED_SCHEMA = StructType(
 )
 
 
-def _html_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from delphi_pdf_parser_spark.htmlcore import extract_main_content
-
-    cols = [f.name for f in HTML_EXTRACTED_SCHEMA.fields]
-    for b in batches:
-        rows = []
-        for url, html in zip(b["url"], b["html"]):
-            try:
-                r = extract_main_content(bytes(html))
-                rows.append(
-                    (
-                        url,
-                        r["title"],
-                        r["text"],
-                        r["n_blocks"],
-                        r["n_content_blocks"],
-                        "ok",
-                    )
-                )
-            except Exception as e:  # tolerant, like the PDF path
-                rows.append((url, None, None, 0, 0, f"failed:{e}"))
-        yield pd.DataFrame(rows, columns=cols)
+def _html_rows(url: str, html) -> list:
+    try:
+        r = extract_main_content(bytes(html))
+    except Exception as e:  # tolerant, like the PDF path
+        return [(url, None, None, 0, 0, f"failed:{e}")]
+    return [
+        (url, r["title"], r["text"], r["n_blocks"], r["n_content_blocks"], "ok")
+    ]
 
 
 def prefilter_html(documents: DataFrame) -> DataFrame:
@@ -78,6 +62,4 @@ def extract_html_documents(
     df = prefilter_html(documents) if prefilter else documents.select(
         "url", "html"
     )
-    return ensure_min_parallelism(df).mapInPandas(
-        _html_batches, HTML_EXTRACTED_SCHEMA
-    )
+    return map_rows(ensure_min_parallelism(df), _html_rows, HTML_EXTRACTED_SCHEMA)

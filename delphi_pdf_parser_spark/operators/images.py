@@ -3,10 +3,6 @@ mapInPandas sweep emitting (url, obj_num, ..., data BINARY) rows."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BinaryType,
@@ -17,6 +13,7 @@ from pyspark.sql.types import (
 )
 
 from .extraction import prefilter_pdfs
+from .parallelize import map_rows, page_rows
 
 IMAGES_SCHEMA = StructType(
     [
@@ -33,32 +30,24 @@ IMAGES_SCHEMA = StructType(
 )
 
 
-def _image_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _image_rows(url: str, data: bytes) -> list:
     from delphi_pdf_parser_spark.pdfcore.images import extract_images
 
-    for b in batches:
-        rows = []
-        for url, html in zip(b["url"], b["html"]):
-            try:
-                images = extract_images(bytes(html))
-            except Exception:
-                continue
-            for im in images:
-                rows.append(
-                    (
-                        url,
-                        im.obj_num,
-                        im.width,
-                        im.height,
-                        im.bpc,
-                        im.colorspace,
-                        im.filter_name,
-                        im.format,
-                        im.data,
-                    )
-                )
-        yield pd.DataFrame(rows, columns=[f.name for f in IMAGES_SCHEMA.fields])
+    return [
+        (
+            url,
+            im.obj_num,
+            im.width,
+            im.height,
+            im.bpc,
+            im.colorspace,
+            im.filter_name,
+            im.format,
+            im.data,
+        )
+        for im in extract_images(data)
+    ]
 
 
 def extract_document_images(documents: DataFrame) -> DataFrame:
-    return prefilter_pdfs(documents).mapInPandas(_image_batches, IMAGES_SCHEMA)
+    return map_rows(prefilter_pdfs(documents), page_rows(_image_rows), IMAGES_SCHEMA)

@@ -13,9 +13,9 @@ mapInPandas signature, partitioning — is identical for every format.
 
 from __future__ import annotations
 
-from typing import Iterator
+import hashlib
 
-import pandas as pd
+import numpy as np
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -32,10 +32,13 @@ from pyspark.sql.types import (
 from .mediadec import (  # noqa: F401  (decode_image is this module's API too)
     MediaDecodeError,
     UnsupportedMediaError,
+    decode_audio,
+    decode_gif_frames,
     decode_image,
     encode_bmp,
+    encode_wav,
 )
-from .parallelize import ensure_min_parallelism
+from .parallelize import ensure_min_parallelism, map_rows
 
 MEDIA_SCHEMA = StructType(
     [
@@ -68,42 +71,38 @@ FEATURE_SCHEMA = StructType(
 )
 
 
-def _synth_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _leading(df: DataFrame, *names: str) -> DataFrame:
+    """``df`` with ``names`` as its first columns, for row functions that
+    read them by position: ``df`` itself when they lead already (as in
+    ``synth_media`` and ``synth_video`` output), else their projection."""
+    return df if df.columns[: len(names)] == list(names) else df.select(*names)
+
+
+def _synth_row(doc_id, text) -> list:
     """Deterministic REAL payloads: doc_id % 4 == 0 gets an 8x8 gray BMP
     whose pixels derive from md5(text); % 4 == 2 gets the SAME pixels as
     a lossless WebP (VP8L — the web's second image format); odd doc_ids
     get an opaque 'audio' blob (no pure-Python audio codec — byte
     features only)."""
-    import hashlib
-
     from delphi_pdf_parser_spark.fixtures import webp_encode
 
-    for b in batches:
-        rows = []
-        for doc_id, text in zip(b["doc_id"], b["text"]):
-            doc_id = int(doc_id)
-            seed = hashlib.md5((text or "").encode("utf-8")).digest()
-            blob = (seed * ((64 // len(seed)) + 1))[:64]
-            if doc_id % 4 == 0:
-                payload = encode_bmp(8, 8, 1, blob)
-                mtype = "image/bmp"
-            elif doc_id % 4 == 2:
-                payload = webp_encode(8, 8, 1, blob, use_lz77=True)
-                mtype = "image/webp"
-            else:
-                # real PCM clip: 64 signed 16-bit samples from the seed
-                from .mediadec import encode_wav
-
-                samples = b"".join(
-                    (blob[i] - 128).to_bytes(2, "little", signed=True)
-                    for i in range(64)
-                )
-                payload = encode_wav(16000, 1, 16, samples)
-                mtype = "audio/wav"
-            rows.append((doc_id, payload, mtype, 8, 8))
-        yield pd.DataFrame(
-            rows, columns=[f.name for f in MEDIA_SCHEMA.fields]
+    doc_id = int(doc_id)
+    seed = hashlib.md5((text or "").encode("utf-8")).digest()
+    blob = (seed * ((64 // len(seed)) + 1))[:64]
+    if doc_id % 4 == 0:
+        payload = encode_bmp(8, 8, 1, blob)
+        mtype = "image/bmp"
+    elif doc_id % 4 == 2:
+        payload = webp_encode(8, 8, 1, blob, use_lz77=True)
+        mtype = "image/webp"
+    else:
+        # real PCM clip: 64 signed 16-bit samples from the seed
+        samples = b"".join(
+            (blob[i] - 128).to_bytes(2, "little", signed=True) for i in range(64)
         )
+        payload = encode_wav(16000, 1, 16, samples)
+        mtype = "audio/wav"
+    return [(doc_id, payload, mtype, 8, 8)]
 
 
 def synth_media(documents: DataFrame) -> DataFrame:
@@ -111,79 +110,67 @@ def synth_media(documents: DataFrame) -> DataFrame:
     a decoded-at-ingest thumbnail / audio clip). Image payloads are real
     BMP files so the decode path below runs on real pixels."""
     docs = ensure_min_parallelism(documents.select("doc_id", "text"), heavy=True)
-    return docs.mapInPandas(_synth_batches, MEDIA_SCHEMA)
+    return map_rows(docs, _synth_row, MEDIA_SCHEMA)
 
 
-def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    import hashlib
-
-    import numpy as np
-
-    for b in batches:
-        rows = []
-        for doc_id, media, mtype in zip(b["doc_id"], b["media"], b["media_type"]):
-            data = bytes(media)
-            arr = np.frombuffer(data, dtype=np.uint8)
-            status, w, h, nc, mp = "not_media", None, None, None, None
-            rate, dur, amp = None, None, None
-            if str(mtype).startswith("image/"):
-                try:
-                    w, h, nc, pixels = decode_image(data)
-                    px = np.frombuffer(pixels, dtype=np.uint8)
-                    mp = round(float(px.mean()), 4) if len(px) else 0.0
-                    status = "ok"
-                except UnsupportedMediaError as e:
-                    status, w, h, nc = f"unsupported:{e}", None, None, None
-                except MediaDecodeError as e:
-                    status = f"corrupt:{e}"
-            elif str(mtype).startswith("audio/"):
-                from .mediadec import decode_audio
-
-                try:
-                    rate, channels, bits, samples = decode_audio(data)
-                    dt = np.int16 if bits == 16 else np.uint8
-                    sv = np.frombuffer(samples, dtype=dt).astype(np.float64)
-                    if bits == 8:
-                        sv -= 128.0
-                    scale = 32768.0 if bits == 16 else 128.0
-                    n_frames = len(sv) // channels
-                    dur = round(n_frames / rate * 1000.0, 3)
-                    amp = (
-                        round(float(np.abs(sv).mean()) / scale, 6)
-                        if len(sv)
-                        else 0.0
-                    )
-                    nc = channels
-                    status = "ok"
-                except UnsupportedMediaError as e:
-                    status, rate = f"unsupported:{e}", None
-                except MediaDecodeError as e:
-                    status = f"corrupt:{e}"
-            rows.append(
-                (
-                    int(doc_id),
-                    mtype,
-                    len(data),
-                    round(float(arr.mean()), 4) if len(arr) else 0.0,
-                    hashlib.md5(data).hexdigest(),
-                    status,
-                    w,
-                    h,
-                    nc,
-                    mp,
-                    rate,
-                    dur,
-                    amp,
-                )
-            )
-        yield pd.DataFrame(rows, columns=[f.name for f in FEATURE_SCHEMA.fields])
+def _feature_row(doc_id, media, mtype, *_) -> list:
+    data = bytes(media)
+    arr = np.frombuffer(data, dtype=np.uint8)
+    status, w, h, nc, mp = "not_media", None, None, None, None
+    rate, dur, amp = None, None, None
+    if str(mtype).startswith("image/"):
+        try:
+            w, h, nc, pixels = decode_image(data)
+            px = np.frombuffer(pixels, dtype=np.uint8)
+            mp = round(float(px.mean()), 4) if len(px) else 0.0
+            status = "ok"
+        except UnsupportedMediaError as e:
+            status, w, h, nc = f"unsupported:{e}", None, None, None
+        except MediaDecodeError as e:
+            status = f"corrupt:{e}"
+    elif str(mtype).startswith("audio/"):
+        try:
+            rate, channels, bits, samples = decode_audio(data)
+            dt = np.int16 if bits == 16 else np.uint8
+            sv = np.frombuffer(samples, dtype=dt).astype(np.float64)
+            if bits == 8:
+                sv -= 128.0
+            scale = 32768.0 if bits == 16 else 128.0
+            n_frames = len(sv) // channels
+            dur = round(n_frames / rate * 1000.0, 3)
+            amp = round(float(np.abs(sv).mean()) / scale, 6) if len(sv) else 0.0
+            nc = channels
+            status = "ok"
+        except UnsupportedMediaError as e:
+            status, rate = f"unsupported:{e}", None
+        except MediaDecodeError as e:
+            status = f"corrupt:{e}"
+    return [
+        (
+            int(doc_id),
+            mtype,
+            len(data),
+            round(float(arr.mean()), 4) if len(arr) else 0.0,
+            hashlib.md5(data).hexdigest(),
+            status,
+            w,
+            h,
+            nc,
+            mp,
+            rate,
+            dur,
+            amp,
+        )
+    ]
 
 
 def extract_media_features(media: DataFrame) -> DataFrame:
     """mapInPandas feature extraction over the binary column: byte-level
     stats for every payload + real decoded-pixel features (dimensions,
     components, mean pixel) for decodable image formats."""
-    return media.mapInPandas(_feature_batches, FEATURE_SCHEMA)
+    return map_rows(
+        _leading(media, "doc_id", "media", "media_type"), _feature_row, FEATURE_SCHEMA
+    )
 
 
 # --- video (animated GIF) frame sampling ------------------------------------
@@ -211,26 +198,19 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def _synth_video_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _synth_video_row(doc_id, text) -> list:
     """Deterministic animated GIF per document: 8x8, 6 frames whose
     palette indices derive from md5(text || frame)."""
-    import hashlib
-
     from delphi_pdf_parser_spark.fixtures import gif_encode_animated
 
-    for b in batches:
-        rows = []
-        for doc_id, text in zip(b["doc_id"], b["text"]):
-            doc_id = int(doc_id)
-            seed = (text or "").encode("utf-8")
-            palette = hashlib.md5(seed + b"|pal").digest()[:12]  # 4 colors
-            frames = []
-            for f in range(6):
-                d = hashlib.md5(seed + b"|f%d" % f).digest()
-                frames.append([d[i % 16] & 3 for i in range(64)])
-            payload = gif_encode_animated(8, 8, frames, palette)
-            rows.append((doc_id, payload, "video/gif", 6))
-        yield pd.DataFrame(rows, columns=[f.name for f in VIDEO_SCHEMA.fields])
+    seed = (text or "").encode("utf-8")
+    palette = hashlib.md5(seed + b"|pal").digest()[:12]  # 4 colors
+    frames = []
+    for f in range(6):
+        d = hashlib.md5(seed + b"|f%d" % f).digest()
+        frames.append([d[i % 16] & 3 for i in range(64)])
+    payload = gif_encode_animated(8, 8, frames, palette)
+    return [(int(doc_id), payload, "video/gif", 6)]
 
 
 def synth_video(documents: DataFrame) -> DataFrame:
@@ -238,7 +218,7 @@ def synth_video(documents: DataFrame) -> DataFrame:
     (the frame-sampling stand-in for real video containers; the GIF
     animation decode is real — operators/mediadec.decode_gif_frames)."""
     docs = ensure_min_parallelism(documents.select("doc_id", "text"), heavy=True)
-    return docs.mapInPandas(_synth_video_batches, VIDEO_SCHEMA)
+    return map_rows(docs, _synth_video_row, VIDEO_SCHEMA)
 
 
 def sample_video_frames(video: DataFrame, every_k: int = 2) -> DataFrame:
@@ -246,44 +226,28 @@ def sample_video_frames(video: DataFrame, every_k: int = 2) -> DataFrame:
     features (the training-data 'frame-sample' primitive: one input row
     fans out to ceil(n_frames/k) frame rows). Map-only — scales linearly
     with corpus size; frame decode cost is bounded by max_frames=64."""
-    import hashlib
 
-    import numpy as np
-
-    from .mediadec import MediaDecodeError, decode_gif_frames
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for doc_id, media in zip(b["doc_id"], b["media"]):
-                data = bytes(media)
-                try:
-                    w, h, frames = decode_gif_frames(data)
-                except MediaDecodeError as e:
-                    rows.append(
-                        (int(doc_id), -1, None, None, None, None, None,
-                         f"corrupt:{e}")
-                    )
-                    continue
-                for fi in range(0, len(frames), every_k):
-                    px = np.frombuffer(frames[fi], dtype=np.uint8)
-                    rows.append(
-                        (
-                            int(doc_id),
-                            fi,
-                            w,
-                            h,
-                            len(frames),
-                            round(float(px.mean()), 4),
-                            hashlib.md5(frames[fi]).hexdigest(),
-                            "ok",
-                        )
-                    )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in FRAME_SCHEMA.fields]
+    def frame_rows(doc_id, media, *_) -> list:
+        doc_id = int(doc_id)
+        try:
+            w, h, frames = decode_gif_frames(bytes(media))
+        except MediaDecodeError as e:
+            return [(doc_id, -1, None, None, None, None, None, f"corrupt:{e}")]
+        return [
+            (
+                doc_id,
+                fi,
+                w,
+                h,
+                len(frames),
+                round(float(np.frombuffer(frames[fi], dtype=np.uint8).mean()), 4),
+                hashlib.md5(frames[fi]).hexdigest(),
+                "ok",
             )
+            for fi in range(0, len(frames), every_k)
+        ]
 
-    return video.mapInPandas(_batches, FRAME_SCHEMA)
+    return map_rows(_leading(video, "doc_id", "media"), frame_rows, FRAME_SCHEMA)
 
 
 # --- image resize ------------------------------------------------------------
@@ -310,54 +274,32 @@ def resize_images(
     thumbnail/normalize step of a multimodal ingest pipeline), emitted
     as raw interleaved bytes. Vectorized per image via NumPy fancy
     indexing; map-only."""
-    import numpy as np
 
-    from .mediadec import (
-        MediaDecodeError,
-        UnsupportedMediaError,
-        decode_image,
-    )
-
-    def _batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            rows = []
-            for doc_id, media in zip(b["doc_id"], b["media"]):
-                data = bytes(media)
-                try:
-                    w, h, nc, pixels = decode_image(data)
-                except UnsupportedMediaError as e:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None,
-                         None, f"unsupported:{e}")
-                    )
-                    continue
-                except MediaDecodeError as e:
-                    rows.append(
-                        (int(doc_id), None, None, None, None, None, None,
-                         None, f"corrupt:{e}")
-                    )
-                    continue
-                px = np.frombuffer(pixels, dtype=np.uint8).reshape(h, w, nc)
-                ys = (np.arange(out_h) * h) // out_h
-                xs = (np.arange(out_w) * w) // out_w
-                resized = px[ys][:, xs]
-                rows.append(
-                    (
-                        int(doc_id),
-                        w,
-                        h,
-                        out_w,
-                        out_h,
-                        resized.tobytes(),
-                        round(float(px.mean()), 4),
-                        round(float(resized.mean()), 4),
-                        "ok",
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in RESIZED_SCHEMA.fields]
+    def resized_rows(doc_id, media, *_) -> list:
+        doc_id = int(doc_id)
+        try:
+            w, h, nc, pixels = decode_image(bytes(media))
+        except UnsupportedMediaError as e:
+            return [(doc_id,) + (None,) * 7 + (f"unsupported:{e}",)]
+        except MediaDecodeError as e:
+            return [(doc_id,) + (None,) * 7 + (f"corrupt:{e}",)]
+        px = np.frombuffer(pixels, dtype=np.uint8).reshape(h, w, nc)
+        ys = (np.arange(out_h) * h) // out_h
+        xs = (np.arange(out_w) * w) // out_w
+        resized = px[ys][:, xs]
+        return [
+            (
+                doc_id,
+                w,
+                h,
+                out_w,
+                out_h,
+                resized.tobytes(),
+                round(float(px.mean()), 4),
+                round(float(resized.mean()), 4),
+                "ok",
             )
+        ]
 
-    return media.filter(
-        F.col("media_type").startswith("image/")
-    ).mapInPandas(_batches, RESIZED_SCHEMA)
+    images = media.filter(F.col("media_type").startswith("image/"))
+    return map_rows(_leading(images, "doc_id", "media"), resized_rows, RESIZED_SCHEMA)

@@ -2,10 +2,6 @@
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     IntegerType,
@@ -15,6 +11,7 @@ from pyspark.sql.types import (
 )
 
 from .extraction import prefilter_pdfs
+from .parallelize import map_rows, page_rows
 
 NAV_SCHEMA = StructType(
     [
@@ -28,7 +25,7 @@ NAV_SCHEMA = StructType(
 )
 
 
-def _nav_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _nav_rows(url: str, data: bytes) -> list:
     from delphi_pdf_parser_spark.pdfcore.document import PdfDocument
     from delphi_pdf_parser_spark.pdfcore.navigation import (
         extract_links,
@@ -36,25 +33,18 @@ def _nav_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     )
     from delphi_pdf_parser_spark.pdfcore.pages import load_page_tree
 
-    for b in batches:
-        rows = []
-        for url, html in zip(b["url"], b["html"]):
-            try:
-                doc = PdfDocument(bytes(html))
-                load_page_tree(doc)
-            except Exception:
-                continue
-            try:
-                for o in extract_outline(doc):
-                    rows.append((url, "outline", o.level, -1, o.title, o.dest))
-                for link in extract_links(doc):
-                    rows.append(
-                        (url, "link", -1, link.page, link.kind, link.target)
-                    )
-            except Exception:
-                continue
-        yield pd.DataFrame(rows, columns=[f.name for f in NAV_SCHEMA.fields])
+    doc = PdfDocument(data)
+    load_page_tree(doc)
+    rows = []
+    try:  # the outline rows stay when the link walk raises
+        for o in extract_outline(doc):
+            rows.append((url, "outline", o.level, -1, o.title, o.dest))
+        for link in extract_links(doc):
+            rows.append((url, "link", -1, link.page, link.kind, link.target))
+    except Exception:
+        pass
+    return rows
 
 
 def extract_navigation(documents: DataFrame) -> DataFrame:
-    return prefilter_pdfs(documents).mapInPandas(_nav_batches, NAV_SCHEMA)
+    return map_rows(prefilter_pdfs(documents), page_rows(_nav_rows), NAV_SCHEMA)

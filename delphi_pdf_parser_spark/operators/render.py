@@ -9,10 +9,6 @@ one mapInPandas, map-only.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     DoubleType,
@@ -24,6 +20,7 @@ from pyspark.sql.types import (
 )
 
 from .extraction import prefilter_pdfs
+from .parallelize import map_rows
 
 RENDER_SCHEMA = StructType(
     [
@@ -39,59 +36,47 @@ RENDER_SCHEMA = StructType(
 )
 
 
-def _render_batches(scale: float, max_pages: int, supersample: int = 1):
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _render_rows(scale: float, max_pages: int, supersample: int):
+    def fn(url, html) -> list:
         import hashlib
 
-        from delphi_pdf_parser_spark.pdfcore.pages import count_pages
+        from delphi_pdf_parser_spark.pdfcore.document import PdfDocument
+        from delphi_pdf_parser_spark.pdfcore.pages import (
+            count_pages,
+            load_page_tree,
+        )
         from delphi_pdf_parser_spark.pdfcore.rasterdev import (
             render_loaded_page,
         )
 
-        cols = [f.name for f in RENDER_SCHEMA.fields]
-        for b in batches:
-            rows = []
-            for url, html in zip(b["url"], b["html"]):
-                data = bytes(html) if html is not None else b""
-                try:
-                    from delphi_pdf_parser_spark.pdfcore.document import (
-                        PdfDocument,
+        try:
+            doc = PdfDocument(bytes(html) if html is not None else b"")
+            load_page_tree(doc)
+            npages = count_pages(doc)
+        except Exception:
+            return [(url, -1, 0, 0, 0, 0.0, None, "failed")]
+        rows = []
+        for p in range(min(npages, max_pages)):
+            try:
+                # reuse the parsed doc: xref/page-tree work happens once
+                # per document, not once per page
+                w, h, pix, _fails = render_loaded_page(doc, p, scale, supersample)
+                inked = int((pix != 255).any(axis=2).sum())
+                rows.append(
+                    (
+                        url,
+                        p,
+                        w,
+                        h,
+                        inked,
+                        round(inked / float(w * h), 6),
+                        hashlib.md5(pix.tobytes()).hexdigest(),
+                        "ok",
                     )
-                    from delphi_pdf_parser_spark.pdfcore.pages import (
-                        load_page_tree,
-                    )
-
-                    doc = PdfDocument(data)
-                    load_page_tree(doc)
-                    npages = count_pages(doc)
-                except Exception:
-                    rows.append((url, -1, 0, 0, 0, 0.0, None, "failed"))
-                    continue
-                for p in range(min(npages, max_pages)):
-                    try:
-                        # reuse the parsed doc: xref/page-tree work happens
-                        # once per document, not once per page
-                        w, h, pix, _fails = render_loaded_page(
-                            doc, p, scale, supersample
-                        )
-                        inked = int((pix != 255).any(axis=2).sum())
-                        rows.append(
-                            (
-                                url,
-                                p,
-                                w,
-                                h,
-                                inked,
-                                round(inked / float(w * h), 6),
-                                hashlib.md5(pix.tobytes()).hexdigest(),
-                                "ok",
-                            )
-                        )
-                    except Exception:
-                        rows.append(
-                            (url, p, 0, 0, 0, 0.0, None, "failed")
-                        )
-            yield pd.DataFrame(rows, columns=cols)
+                )
+            except Exception:
+                rows.append((url, p, 0, 0, 0, 0.0, None, "failed"))
+        return rows
 
     return fn
 
@@ -111,6 +96,8 @@ def render_documents(
     for the exact hard-edge rasterizer the pixel-pinned tests run
     against (tests/test_raster*.py drive render_page directly in that
     mode)."""
-    return prefilter_pdfs(documents).mapInPandas(
-        _render_batches(scale, max_pages, supersample), RENDER_SCHEMA
+    return map_rows(
+        prefilter_pdfs(documents),
+        _render_rows(scale, max_pages, supersample),
+        RENDER_SCHEMA,
     )

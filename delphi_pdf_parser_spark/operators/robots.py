@@ -22,9 +22,6 @@ per-URL window over its few matching rules (never global).
 from __future__ import annotations
 
 import re
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -36,6 +33,8 @@ from pyspark.sql.types import (
 )
 
 from delphi_pdf_parser_spark.operators.urls import host_of
+
+from .parallelize import map_rows, page_rows
 
 RULES_SCHEMA = StructType(
     [
@@ -93,21 +92,8 @@ def _parse_robots(host: str, txt: str) -> list:
     return rows
 
 
-def _robots_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in RULES_SCHEMA.fields]
-    for b in batches:
-        rows = []
-        for host, txt in zip(b["host"], b["robots_txt"]):
-            if txt is None:
-                continue
-            raw = txt if isinstance(txt, str) else bytes(txt).decode(
-                "utf-8", "replace"
-            )
-            try:
-                rows.extend(_parse_robots(host, raw))
-            except Exception:
-                continue
-        yield pd.DataFrame(rows, columns=cols)
+def _robots_rows(host: str, raw: bytes) -> list:
+    return _parse_robots(host, raw.decode("utf-8", "replace"))
 
 
 def parse_robots(
@@ -118,7 +104,7 @@ def parse_robots(
     df = robots.select(
         F.col(host_col).alias("host"), F.col(txt_col).alias("robots_txt")
     ).filter(F.col(txt_col).isNotNull())
-    return df.mapInPandas(_robots_batches, RULES_SCHEMA)
+    return map_rows(df, page_rows(_robots_rows), RULES_SCHEMA)
 
 
 def robots_filter(
@@ -270,21 +256,6 @@ def _parse_sitemap(host: str, xml: bytes) -> list:
     return rows
 
 
-def _sitemap_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in SITEMAP_SCHEMA.fields]
-    for b in batches:
-        rows = []
-        for host, xml in zip(b["host"], b["sitemap_xml"]):
-            if xml is None:
-                continue
-            raw = xml.encode() if isinstance(xml, str) else bytes(xml)
-            try:
-                rows.extend(_parse_sitemap(host, raw))
-            except Exception:
-                continue
-        yield pd.DataFrame(rows, columns=cols)
-
-
 def parse_sitemaps(
     sitemaps: DataFrame,
     host_col: str = "host",
@@ -300,7 +271,7 @@ def parse_sitemaps(
         F.col(host_col).alias("host"),
         F.col(xml_col).alias("sitemap_xml"),
     ).filter(F.col(xml_col).isNotNull())
-    return df.mapInPandas(_sitemap_batches, SITEMAP_SCHEMA)
+    return map_rows(df, page_rows(_parse_sitemap), SITEMAP_SCHEMA)
 
 
 def resolve_sitemap_index(

@@ -15,10 +15,6 @@ equality against each of them.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -29,6 +25,13 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from delphi_pdf_parser_spark.htmlcore import strip_inert_bytes
+from delphi_pdf_parser_spark.operators.graphs import _page_links
+from delphi_pdf_parser_spark.operators.htmlmeta import _page_jsonld, _page_meta
+from delphi_pdf_parser_spark.operators.htmltables import _page_tables
+
+from .parallelize import map_rows, page_rows
 
 LINK_ITEM = StructType(
     [
@@ -63,51 +66,22 @@ WEB_PAGE_SCHEMA = StructType(
 )
 
 
-def _annotation_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    from delphi_pdf_parser_spark.htmlcore import strip_inert_bytes
-    from delphi_pdf_parser_spark.operators.graphs import _page_links
-    from delphi_pdf_parser_spark.operators.htmlmeta import (
-        _page_jsonld,
-        _page_meta,
-    )
-    from delphi_pdf_parser_spark.operators.htmltables import _page_tables
-
-    cols = [f.name for f in WEB_PAGE_SCHEMA.fields]
-    for b in batches:
-        rows = []
-        for url, html in zip(b["url"], b["html"]):
-            if html is None:
-                continue
-            raw = bytes(html) if not isinstance(html, str) else html.encode()
-            try:
-                # inert regions blanked ONCE for the three structural
-                # scanners; jsonld reads the ORIGINAL bytes because its
-                # payload lives inside <script type="application/ld+json">
-                clean = strip_inert_bytes(raw)
-                links = [
-                    {"dst": d, "anchor": a, "nofollow": nf}
-                    for _, d, a, nf in _page_links(url, clean, stripped=True)
-                ]
-                meta = _page_meta(url, clean, stripped=True)
-                cells = [
-                    {
-                        "table_id": t,
-                        "row_id": r,
-                        "col_id": c,
-                        "cell": cell,
-                        "is_header": h,
-                    }
-                    for _, t, r, c, cell, h in _page_tables(
-                        url, clean, stripped=True
-                    )
-                ]
-                blobs = [body for _, _, body in _page_jsonld(url, raw)]
-            except Exception:
-                continue
-            rows.append((url, links) + meta[1:] + (cells, blobs))
-        yield pd.DataFrame(rows, columns=cols)
+def _annotation_rows(url: str, raw: bytes) -> list:
+    # inert regions blanked ONCE for the three structural scanners;
+    # jsonld reads the ORIGINAL bytes because its payload lives inside
+    # <script type="application/ld+json">
+    clean = strip_inert_bytes(raw)
+    links = [
+        {"dst": d, "anchor": a, "nofollow": nf}
+        for _, d, a, nf in _page_links(url, clean, stripped=True)
+    ]
+    meta = _page_meta(url, clean, stripped=True)
+    cells = [
+        {"table_id": t, "row_id": r, "col_id": c, "cell": cell, "is_header": h}
+        for _, t, r, c, cell, h in _page_tables(url, clean, stripped=True)
+    ]
+    blobs = [body for _, _, body in _page_jsonld(url, raw)]
+    return [(url, links) + meta[1:] + (cells, blobs)]
 
 
 def extract_web_annotations(
@@ -119,4 +93,4 @@ def extract_web_annotations(
     df = documents.select(
         F.col(url_col).alias("url"), F.col(html_col).alias("html")
     ).filter(F.col(html_col).isNotNull())
-    return df.mapInPandas(_annotation_batches, WEB_PAGE_SCHEMA)
+    return map_rows(df, page_rows(_annotation_rows), WEB_PAGE_SCHEMA)

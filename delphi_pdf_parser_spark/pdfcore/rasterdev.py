@@ -1282,66 +1282,18 @@ class RasterDevice:
         centers (the reference evaluates meshes in
         src/vcl/pdf_shadess.pas and paints through the draw device's
         triangle path)."""
-        from .cos import to_int, to_name
-        from .functions import eval_function, load_function
+        from .cos import to_int
+        from .functions import eval_function
 
-        if shd_ref is None or not doc.is_stream(shd_ref):
-            doc.note_failure("raster_shading_stream")
+        ms = _MeshStream.open(doc, shd_ref, shd)
+        if ms is None:
             return
-        try:
-            data = doc.load_stream(shd_ref.num)
-        except Exception:
-            doc.note_failure("raster_shading_stream")
-            return
-        csname = to_name(doc.resolve(shd.get("ColorSpace")))
-        if csname not in ("DeviceRGB", "DeviceGray"):
-            doc.note_failure(f"raster_shading_cs:{csname}")
-            return
-        bpc = to_int(doc.resolve(shd.get("BitsPerCoordinate"))) or 0
-        bpcomp = to_int(doc.resolve(shd.get("BitsPerComponent"))) or 0
-        bpf = to_int(doc.resolve(shd.get("BitsPerFlag"))) or 8
-        dec = doc.resolve(shd.get("Decode"))
-        if not (isinstance(dec, list) and len(dec) >= 6 and bpc and bpcomp):
-            doc.note_failure("raster_shading_mesh")
-            return
-        dec = [float(doc.resolve(v)) for v in dec]
-        fn_obj = shd.get("Function")
-        fn = None
-        if doc.resolve(fn_obj) is not None:
-            try:
-                fn = load_function(doc, fn_obj)
-            except Exception:
-                doc.note_failure("raster_shading_fn")
-                return
-        ncomp = 1 if fn is not None else (1 if csname == "DeviceGray" else 3)
-        if len(dec) < 4 + 2 * ncomp:
-            doc.note_failure("raster_shading_mesh")
-            return
-
-        bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8))
-        pos = 0
-
-        def read(nbits: int) -> int:
-            nonlocal pos
-            if pos + nbits > len(bits):
-                raise EOFError
-            v = 0
-            for b in bits[pos : pos + nbits]:
-                v = (v << 1) | int(b)
-            pos += nbits
-            return v
-
-        def dval(raw: int, nbits: int, lo: float, hi: float) -> float:
-            return lo + raw * (hi - lo) / ((1 << nbits) - 1)
+        fn, ncomp = ms.fn, ms.ncomp
+        # one vertex: its coordinates and color components
+        vbits = 2 * ms.bpc + ncomp * ms.bpcomp
 
         def read_vertex():
-            x = dval(read(bpc), bpc, dec[0], dec[1])
-            y = dval(read(bpc), bpc, dec[2], dec[3])
-            comps = [
-                dval(read(bpcomp), bpcomp, dec[4 + 2 * k], dec[5 + 2 * k])
-                for k in range(ncomp)
-            ]
-            return x, y, comps
+            return (*ms.point(), ms.comps())
 
         verts = []  # (x, y, comps)
         tris = []  # (i, j, k) indices into verts
@@ -1352,7 +1304,7 @@ class RasterDevice:
                     doc.note_failure("raster_shading_mesh")
                     return
                 rows = []
-                while pos + (2 * bpc + ncomp * bpcomp) <= len(bits):
+                while ms.left() >= vbits:
                     row = [read_vertex() for _ in range(vpr)]
                     rows.append(row)
                 for r in range(len(rows) - 1):
@@ -1367,10 +1319,10 @@ class RasterDevice:
             else:  # type 4: free-form with edge flags, byte-aligned rows
                 va = vb = vc = None
                 while True:
-                    pos = (pos + 7) & ~7  # each vertex starts on a byte
-                    if pos + bpf + 2 * bpc + ncomp * bpcomp > len(bits):
+                    ms.align()  # each vertex starts on a byte
+                    if ms.left() < ms.bpf + vbits:
                         break
-                    flag = read(bpf)
+                    flag = ms.read(ms.bpf)
                     v = read_vertex()
                     verts.append(v)
                     i = len(verts) - 1
@@ -1490,68 +1442,17 @@ class RasterDevice:
         the grid cells Gouraud-fill with bilinear corner colors.
         Edge flags 1-3 share the previous patch's D2/C2... edges per
         PDF 32000 Table 85/86."""
-        from .cos import to_int, to_name
-        from .functions import eval_function, load_function
+        from .functions import eval_function
 
-        if shd_ref is None or not doc.is_stream(shd_ref):
-            doc.note_failure("raster_shading_stream")
+        ms = _MeshStream.open(doc, shd_ref, shd)
+        if ms is None:
             return
-        try:
-            data = doc.load_stream(shd_ref.num)
-        except Exception:
-            doc.note_failure("raster_shading_stream")
-            return
-        csname = to_name(doc.resolve(shd.get("ColorSpace")))
-        if csname not in ("DeviceRGB", "DeviceGray"):
-            doc.note_failure(f"raster_shading_cs:{csname}")
-            return
-        bpc = to_int(doc.resolve(shd.get("BitsPerCoordinate"))) or 0
-        bpcomp = to_int(doc.resolve(shd.get("BitsPerComponent"))) or 0
-        bpf = to_int(doc.resolve(shd.get("BitsPerFlag"))) or 8
-        dec = doc.resolve(shd.get("Decode"))
-        if not (isinstance(dec, list) and len(dec) >= 6 and bpc and bpcomp):
-            doc.note_failure("raster_shading_mesh")
-            return
-        dec = [float(doc.resolve(v)) for v in dec]
-        fn_obj = shd.get("Function")
-        fn = None
-        if doc.resolve(fn_obj) is not None:
-            try:
-                fn = load_function(doc, fn_obj)
-            except Exception:
-                doc.note_failure("raster_shading_fn")
-                return
-        ncomp = 1 if fn is not None else (1 if csname == "DeviceGray" else 3)
-        if len(dec) < 4 + 2 * ncomp:
-            doc.note_failure("raster_shading_mesh")
-            return
+        fn, ncomp = ms.fn, ms.ncomp
         npts_full = 12 if stype == 6 else 16
-        bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8))
-        pos = 0
-
-        def read(nbits: int) -> int:
-            nonlocal pos
-            if pos + nbits > len(bits):
-                raise EOFError
-            v = 0
-            for bb in bits[pos : pos + nbits]:
-                v = (v << 1) | int(bb)
-            pos += nbits
-            return v
-
-        def dval(raw, nbits, lo, hi):
-            return lo + raw * (hi - lo) / ((1 << nbits) - 1)
-
-        def read_pt():
-            x = dval(read(bpc), bpc, dec[0], dec[1])
-            y = dval(read(bpc), bpc, dec[2], dec[3])
-            return (x, y)
+        read_pt = ms.point
 
         def read_col():
-            comps = [
-                dval(read(bpcomp), bpcomp, dec[4 + 2 * k], dec[5 + 2 * k])
-                for k in range(ncomp)
-            ]
+            comps = ms.comps()
             if fn is not None:
                 cols = eval_function(fn, np.array([[comps[0]]]))
                 if cols.shape[1] == 1:
@@ -1624,10 +1525,10 @@ class RasterDevice:
         tris = []
         try:
             while True:
-                pos = (pos + 7) & ~7  # each patch starts on a byte
-                if pos + bpf > len(bits):
+                ms.align()  # each patch starts on a byte
+                if ms.left() < ms.bpf:
                     break
-                flag = read(bpf)
+                flag = ms.read(ms.bpf)
                 if flag == 0:
                     pts = [read_pt() for _ in range(npts_full)]
                     cols = [read_col() for _ in range(4)]
@@ -1695,6 +1596,93 @@ class RasterDevice:
             doc.note_failure("raster_shading_mesh")
             return
         self._paint_gouraud_tris(tris, alpha, blend)
+
+
+class _MeshStream:
+    """The packed vertex stream of a mesh shading (ShadingType 4-7, PDF
+    32000 8.7.4.5.5-8): its bits, /BitsPerCoordinate, /BitsPerComponent,
+    /BitsPerFlag, /Decode, the optional /Function and the number of
+    color components per vertex, with a big-endian field reader. Reads
+    past the end raise EOFError."""
+
+    def __init__(self, bits, bpc, bpcomp, bpf, dec, fn, ncomp):
+        self.bits, self.pos = bits, 0
+        self.bpc, self.bpcomp, self.bpf = bpc, bpcomp, bpf
+        self.dec, self.fn, self.ncomp = dec, fn, ncomp
+
+    @classmethod
+    def open(cls, doc, shd_ref, shd):
+        """The stream of shading ``shd`` (indirect ``shd_ref``), or None
+        after recording why it cannot be read."""
+        from .cos import to_int, to_name
+        from .functions import load_function
+
+        if shd_ref is None or not doc.is_stream(shd_ref):
+            doc.note_failure("raster_shading_stream")
+            return None
+        try:
+            data = doc.load_stream(shd_ref.num)
+        except Exception:
+            doc.note_failure("raster_shading_stream")
+            return None
+        csname = to_name(doc.resolve(shd.get("ColorSpace")))
+        if csname not in ("DeviceRGB", "DeviceGray"):
+            doc.note_failure(f"raster_shading_cs:{csname}")
+            return None
+        bpc = to_int(doc.resolve(shd.get("BitsPerCoordinate"))) or 0
+        bpcomp = to_int(doc.resolve(shd.get("BitsPerComponent"))) or 0
+        bpf = to_int(doc.resolve(shd.get("BitsPerFlag"))) or 8
+        dec = doc.resolve(shd.get("Decode"))
+        if not (isinstance(dec, list) and len(dec) >= 6 and bpc and bpcomp):
+            doc.note_failure("raster_shading_mesh")
+            return None
+        dec = [float(doc.resolve(v)) for v in dec]
+        fn_obj = shd.get("Function")
+        fn = None
+        if doc.resolve(fn_obj) is not None:
+            try:
+                fn = load_function(doc, fn_obj)
+            except Exception:
+                doc.note_failure("raster_shading_fn")
+                return None
+        ncomp = 1 if fn is not None else (1 if csname == "DeviceGray" else 3)
+        if len(dec) < 4 + 2 * ncomp:
+            doc.note_failure("raster_shading_mesh")
+            return None
+        bits = np.unpackbits(np.frombuffer(data, dtype=np.uint8))
+        return cls(bits, bpc, bpcomp, bpf, dec, fn, ncomp)
+
+    def left(self) -> int:
+        return len(self.bits) - self.pos
+
+    def align(self) -> None:
+        self.pos = (self.pos + 7) & ~7
+
+    def read(self, nbits: int) -> int:
+        if self.pos + nbits > len(self.bits):
+            raise EOFError
+        v = 0
+        for b in self.bits[self.pos : self.pos + nbits]:
+            v = (v << 1) | int(b)
+        self.pos += nbits
+        return v
+
+    def _dval(self, nbits: int, lo: float, hi: float) -> float:
+        return lo + self.read(nbits) * (hi - lo) / ((1 << nbits) - 1)
+
+    def point(self) -> tuple:
+        dec = self.dec
+        return (
+            self._dval(self.bpc, dec[0], dec[1]),
+            self._dval(self.bpc, dec[2], dec[3]),
+        )
+
+    def comps(self) -> list:
+        dec = self.dec
+        return [
+            self._dval(self.bpcomp, dec[4 + 2 * k], dec[5 + 2 * k])
+            for k in range(self.ncomp)
+        ]
 
 
 def render_page(

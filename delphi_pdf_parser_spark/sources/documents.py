@@ -27,6 +27,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from delphi_pdf_parser_spark.operators.parallelize import map_rows
+
 DOCUMENTS_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -87,35 +89,17 @@ def bench_documents(
     """Deterministic synthetic corpus (BASELINE.md bench-uniform /
     bench-skew). Built distributed: the PDF bytes are generated on the
     executors from the seed, so the driver never materializes the corpus."""
-    from pyspark.sql import functions as F
-
     ids = spark.range(0, n_docs, 1, slices or spark.sparkContext.defaultParallelism)
 
-    def gen(batches):
-        import pandas as pd
-
+    def gen(i) -> list:
         from delphi_pdf_parser_spark.fixtures import bench_pdf
 
-        for b in batches:
-            rows = []
-            for i in b["id"]:
-                i = int(i)
-                npages = skew_pages if i < skew_docs else 1 + (i % pages_per_doc)
-                pdf = bench_pdf(seed=42 + i, npages=npages)
-                rows.append(
-                    (
-                        f"pdf://bench/{i:08d}",
-                        _EPOCH,
-                        pdf,
-                        None,
-                        "en",
-                    )
-                )
-            yield pd.DataFrame(
-                rows, columns=["url", "warc_ts", "html", "text", "lang"]
-            )
+        i = int(i)
+        npages = skew_pages if i < skew_docs else 1 + (i % pages_per_doc)
+        pdf = bench_pdf(seed=42 + i, npages=npages)
+        return [(f"pdf://bench/{i:08d}", _EPOCH, pdf, None, "en")]
 
-    return ids.mapInPandas(gen, DOCUMENTS_SCHEMA)
+    return map_rows(ids, gen, DOCUMENTS_SCHEMA)
 
 
 def load_documents(spark: SparkSession, path: str) -> DataFrame:

@@ -19,11 +19,10 @@ scan → parse → write stays a single stage.
 from __future__ import annotations
 
 import datetime
-from typing import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
+
+from delphi_pdf_parser_spark.operators.parallelize import map_rows, page_rows
 
 from .documents import DOCUMENTS_SCHEMA
 
@@ -99,27 +98,22 @@ def parse_warc(data: bytes) -> list[dict]:
     return out
 
 
-def _warc_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = [f.name for f in DOCUMENTS_SCHEMA.fields]
-    for b in batches:
-        rows = []
-        for path, content in zip(b["path"], b["content"]):
-            try:
-                records = parse_warc(bytes(content))
-            except Exception:
-                continue  # corrupt segment: skip file, lineage notes it
-            for r in records:
-                if r["rectype"] != "response" or not r["url"]:
-                    continue
-                ts = None
-                try:
-                    ts = datetime.datetime.fromisoformat(
-                        r["ts"].replace("Z", "+00:00")
-                    ).replace(tzinfo=None)
-                except ValueError:
-                    pass
-                rows.append((r["url"], ts, bytearray(r["payload"]), None, None))
-        yield pd.DataFrame(rows, columns=cols)
+def _warc_rows(path: str, data: bytes) -> list:
+    """The documents rows of one WARC file's response records; a corrupt
+    segment raises, and ``page_rows`` skips the file."""
+    rows = []
+    for r in parse_warc(data):
+        if r["rectype"] != "response" or not r["url"]:
+            continue
+        ts = None
+        try:
+            ts = datetime.datetime.fromisoformat(
+                r["ts"].replace("Z", "+00:00")
+            ).replace(tzinfo=None)
+        except ValueError:
+            pass
+        rows.append((r["url"], ts, bytearray(r["payload"]), None, None))
+    return rows
 
 
 def read_warc(spark: SparkSession, path_glob: str) -> DataFrame:
@@ -131,4 +125,4 @@ def read_warc(spark: SparkSession, path_glob: str) -> DataFrame:
         .load(path_glob)
         .select("path", "content")
     )
-    return files.mapInPandas(_warc_batches, DOCUMENTS_SCHEMA)
+    return map_rows(files, page_rows(_warc_rows), DOCUMENTS_SCHEMA)

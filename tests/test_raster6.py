@@ -590,6 +590,41 @@ def test_mesh_type4_with_function_colors():
     assert bl[2] > 180 and bl[0] < 80, bl
 
 
+@pytest.mark.parametrize("stype", [4, 6])
+@pytest.mark.parametrize(
+    "cs, decode, code",
+    [
+        (
+            "DeviceCMYK",
+            "[0 612 0 792 0 1 0 1 0 1 0 1]",
+            "raster_shading_cs:DeviceCMYK",
+        ),
+        ("DeviceRGB", "[0 612 0 792]", "raster_shading_mesh"),
+        ("DeviceRGB", "[0 612 0 792 0 1]", "raster_shading_mesh"),
+    ],
+)
+def test_mesh_stream_failure_codes(stype, cs, decode, code):
+    """A mesh (type 4) or patch (type 6) shading the vertex-stream header
+    rejects: unsupported colorspace, or a /Decode too short for the
+    coordinates (len < 6) or for the color components (len < 4 + 2n)
+    records its code and paints nothing."""
+    data = _mesh_vertex(100, 100, (255, 0, 0), flag=0) * 16
+    res = "<< /Shading << /SH 5 0 R >> >>"
+
+    def extra(b):
+        b.add(
+            f"<< /ShadingType {stype} /ColorSpace /{cs}"
+            " /BitsPerCoordinate 32 /BitsPerComponent 8 /BitsPerFlag 8"
+            f" /Decode {decode} /Length {len(data)} >>",
+            data,
+            num=5,
+        )
+
+    pix, fails = render(b"/SH sh", res, extra)
+    assert set(fails) == {code}, fails
+    assert (pix == 255).all()
+
+
 # --- CFF flex (ADVICE r5 #2) ------------------------------------------------
 
 def test_cff_flex1_keeps_outline_anchored():
