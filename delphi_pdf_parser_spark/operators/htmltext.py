@@ -36,7 +36,9 @@ HTML_EXTRACTED_SCHEMA = StructType(
 
 def _html_rows(url: str, html) -> list:
     try:
-        r = extract_main_content(bytes(html))
+        r = extract_main_content(
+            html.encode() if isinstance(html, str) else bytes(html)
+        )
     except Exception as e:  # tolerant, like the PDF path
         return [(url, None, None, 0, 0, f"failed:{e}")]
     return [

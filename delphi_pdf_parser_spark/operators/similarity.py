@@ -1,12 +1,27 @@
 """Similarity search over the embeddings table.
 
-- brute-force cosine top-k: broadcast the (small) query set, JVM-side
-  zip_with/aggregate dot products, window rank. This is the exactness
-  baseline and the verify stage of any ANN index.
-- LSH-bucketed ANN: deterministic random-hyperplane signatures (signs of
-  hash-derived pseudo-random projections), bucket join, rank within
-  bucket. The scale path: the crossJoin disappears, each query probes
-  one bucket.
+Five top-k searchers, each returning (query_id, rank, vec_id, score)
+ranked by 4-dp score with a vec_id tiebreak:
+
+- `brute_force_topk`: broadcast the (small) query set, cross join,
+  Arrow-batched cosine, window rank. The exactness baseline and the
+  verify stage of every index below.
+- `ann_lsh_topk`: deterministic random-hyperplane signatures (signs of
+  hash-derived pseudo-random projections) and a multi-probe bucket
+  join; the crossJoin disappears.
+- `ivf_topk`: a spherical-k-means coarse quantizer
+  (`kmeans_centroids`); a query scans only its n_probe nearest cells.
+- `pq_topk`: product-quantized codes (`pq_train_codebooks`) scored by
+  asymmetric distance, optionally re-ranked by exact cosine.
+- `ivfpq_topk`: the two composed (IVFADC), on raw or residual codes.
+
+They share one copy of each vector kernel, and `dedup.semdedup` and
+`dedup.embedding_near_dups` import the same ones: `_vectors` (vec_id +
+double embedding), `_matrix` (float64 rows), `_unit` (zero-guarded unit
+rows), `_cell_udf` (nearest-centroid argmax), `_pq_codes` (subspace
+argmin), `_train_rows` / `_first_centroids` (training sample and seeds),
+`_query_side`, `_query_luts` and `_top_k` (the (score desc, vec_id asc)
+window).
 """
 
 from __future__ import annotations
@@ -16,9 +31,100 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
-from .dedup import _cosine  # noqa: F401 — kept as the pinned expression spec
 from .parallelize import ensure_min_parallelism
+
+# the candidate rows of every ADC scorer (see _adc_score_batches)
+_ADC_SCHEMA = "query_id long, vec_id long, approx_cosine double"
+
+
+def _vectors(df: DataFrame, *cols) -> DataFrame:
+    """(vec_id, *cols, embedding) with the embedding as array<double>."""
+    return df.select(
+        "vec_id", *cols, F.col("embedding").cast("array<double>").alias("embedding")
+    )
+
+
+def _matrix(values) -> np.ndarray:
+    """The (n, dim) float64 matrix of a column of vectors."""
+    return np.stack([np.asarray(v, dtype=np.float64) for v in values])
+
+
+def _unit(m: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm; a zero row stays zero. Every cosine
+    the oracle pins (semdedup clusters, IVF cells) goes through this
+    exact expression."""
+    n = np.linalg.norm(m, axis=1)
+    n[n == 0] = 1.0
+    return m / n[:, None]
+
+
+def _cell_udf(bc):
+    """Pandas UDF: each vector's nearest centroid among the broadcast
+    unit rows `bc`, the argmax of its unit row's dot products (a tie
+    goes to the lowest cell: np.argmax takes the first maximum)."""
+
+    @pandas_udf("int")
+    def cell_of(emb: pd.Series) -> pd.Series:
+        return pd.Series(np.argmax(_unit(_matrix(emb)) @ bc.value.T, axis=1))
+
+    return cell_of
+
+
+def _first_centroids(embeddings: DataFrame, k: int) -> np.ndarray:
+    """The k lowest-vec_id vectors as unit rows: the training-free
+    centroids of ivf_topk(train="first") and semdedup(train=False)."""
+    rows = _vectors(embeddings).orderBy("vec_id").limit(k).collect()
+    return _unit(_matrix([r["embedding"] for r in rows]))
+
+
+def _train_rows(embeddings: DataFrame, train_limit: int | None, n_seeds: int):
+    """-> (training rows, seed matrix) for the Lloyd trainers. The rows
+    are every vector or, with `train_limit`, the lowest-xxhash64(vec_id)
+    ones (at 100 TB you train on a deterministic sample, not the
+    corpus). The seeds are the n_seeds lowest-hash training rows: a
+    pseudo-random but reproducible spread, unlike lowest-vec_id which
+    clusters on ingest order. A smaller corpus gives fewer seeds, so the
+    trainers size everything from the seed matrix."""
+    e = _vectors(embeddings)
+    if train_limit is not None:
+        e = (
+            e.withColumn("_h", F.xxhash64("vec_id"))
+            .orderBy("_h", "vec_id")
+            .limit(train_limit)
+            .drop("_h")
+            .localCheckpoint(eager=False)
+        )
+    seeds = e.orderBy(F.xxhash64("vec_id"), "vec_id").limit(n_seeds).collect()
+    return e, _matrix([r["embedding"] for r in seeds])
+
+
+def _query_side(queries: DataFrame) -> DataFrame:
+    """(query_id, qvec array<double>): the probe side of every search."""
+    return queries.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("qvec"),
+    )
+
+
+def _top_k(scored: DataFrame, k: int, score_col: str = "cosine") -> DataFrame:
+    """The k best rows per query under the total order (score desc,
+    vec_id asc) -> (query_id, rank, vec_id, score_col)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score_col), F.asc("vec_id"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", "vec_id", score_col)
+    )
+
+
+def _exact_top_k(joined: DataFrame, k: int) -> DataFrame:
+    """Rank (embedding, qvec) candidate pairs by exact cosine, rounded
+    to 4 dp BEFORE ranking: float32 inputs summed in different orders
+    diverge around 1e-6, 4 dp + vec_id tiebreak is engine-stable."""
+    cos = F.round(_cosine_arrow()(F.col("embedding"), F.col("qvec")), 4)
+    return _top_k(joined.select("query_id", "vec_id", cos.alias("cosine")), k)
 
 
 def _cosine_arrow():
@@ -27,16 +133,15 @@ def _cosine_arrow():
     per row — `F.zip_with`/`F.aggregate` cannot be codegen'd and measured
     7-70x slower in this repo's other kernels (shingles, signatures,
     n-grams). The expression form `dedup._cosine` stays as the spec this
-    UDF is pinned against (tests/test_similarity.py::test_cosine_parity).
+    UDF is pinned against
+    (tests/test_similarity.py::test_cosine_arrow_matches_expression_form).
     IEEE semantics match Spark's double division (inf/nan on zero norms)."""
-    from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
     def cosine(a: pd.Series, b: pd.Series) -> pd.Series:
         if len(a) == 0:
             return pd.Series([], dtype="float64")
-        ma = np.stack([np.asarray(v, dtype=np.float64) for v in a])
-        mb = np.stack([np.asarray(v, dtype=np.float64) for v in b])
+        ma, mb = _matrix(a), _matrix(b)
         dots = np.einsum("ij,ij->i", ma, mb)
         den = np.linalg.norm(ma, axis=1) * np.linalg.norm(mb, axis=1)
         with np.errstate(divide="ignore", invalid="ignore"):
@@ -54,28 +159,9 @@ def brute_force_topk(
     not depend on batch composition, so every cosine is bit-identical
     with or without the fan-out guard."""
     embeddings = ensure_min_parallelism(embeddings)
-    q = F.broadcast(
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("qvec"),
-        )
-    )
-    e = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    joined = e.crossJoin(q).filter(F.col("vec_id") != F.col("query_id"))
-    # round to 4 dp BEFORE ranking: float32 inputs summed in different
-    # orders diverge around 1e-6, 4 dp + vec_id tiebreak is engine-stable
-    cos = F.round(_cosine_arrow()(F.col("embedding"), F.col("qvec")), 4)
-    scored = joined.select("query_id", "vec_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    q = F.broadcast(_query_side(queries))
+    joined = _vectors(embeddings).crossJoin(q)
+    return _exact_top_k(joined.filter(F.col("vec_id") != F.col("query_id")), k)
 
 
 def _hyperplane_sign(vec, plane_seed: int):
@@ -165,15 +251,13 @@ def _signature_udf(spark, num_planes: int):
     plane projections at once (vs num_planes interpreted array passes
     per row in the expression form). This is the per-vector pass over
     the whole corpus at scale, so it must be the vectorized one."""
-    from pyspark.sql.functions import pandas_udf
-
     bc = _plane_broadcast(spark, num_planes)
     weights = (1 << np.arange(num_planes)).astype(np.int64)
 
     @pandas_udf("int")
     def signature(emb: pd.Series) -> pd.Series:
         planes = bc.value
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
+        m = _matrix(emb)
         d = m.shape[1]
         if d > planes.shape[1]:
             raise ValueError(
@@ -192,8 +276,6 @@ def _probe_udf(spark, num_planes: int, n_probe: int):
     |projection| — vectors near a hyperplane boundary land on either side
     of exactly those planes, so flipping them recovers the neighbors a
     single-bucket probe loses (the standard multi-probe LSH heuristic)."""
-    from pyspark.sql.functions import pandas_udf
-
     bc = _plane_broadcast(spark, num_planes)
     weights = (1 << np.arange(num_planes)).astype(np.int64)
 
@@ -202,7 +284,7 @@ def _probe_udf(spark, num_planes: int, n_probe: int):
         planes = bc.value
         if len(emb) == 0:
             return pd.Series([], dtype="object")
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
+        m = _matrix(emb)
         proj = m @ planes[:, : m.shape[1]].T  # (n, num_planes)
         sig = ((proj >= 0.0) @ weights).astype(np.int64)
         order = np.argsort(np.abs(proj), axis=1, kind="stable")
@@ -232,25 +314,13 @@ def ann_lsh_topk(
     in the corpus."""
     spark = embeddings.sparkSession
     sig = _signature_udf(spark, num_planes)
-    e = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    ).withColumn("bucket", sig(F.col("embedding")))
+    e = _vectors(embeddings).withColumn("bucket", sig(F.col("embedding")))
     probes = _probe_udf(spark, num_planes, n_probe)
     q = F.broadcast(
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("qvec"),
-        ).withColumn("bucket", F.explode(probes(F.col("qvec"))))
+        _query_side(queries).withColumn("bucket", F.explode(probes(F.col("qvec"))))
     )
     joined = e.join(q, on="bucket").filter(F.col("vec_id") != F.col("query_id"))
-    cos = F.round(_cosine_arrow()(F.col("embedding"), F.col("qvec")), 4)
-    scored = joined.select("query_id", "vec_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    return _exact_top_k(joined, k)
 
 
 def kmeans_centroids(
@@ -260,55 +330,22 @@ def kmeans_centroids(
     train_limit: int | None = None,
 ) -> np.ndarray:
     """Spherical k-means (Lloyd) as a Spark job, for IVF coarse-quantizer
-    training. Deterministic throughout: seeding takes the n_cells vectors
-    with the lowest xxhash64(vec_id) (a pseudo-random but reproducible
-    spread, unlike lowest-vec_id which clusters on ingest order), and each
-    Lloyd iteration is one distributed pass — Arrow-batched assignment
-    against broadcast centroids, then a posexplode + (cell, pos) sum/count
-    hash-agg (map-side combined, JVM-side) whose n_cells x dim result is
-    the only collect. `train_limit` keeps the lowest-hash rows only —
-    at 100 TB you train the quantizer on a deterministic sample, not the
-    corpus. Empty cells keep their previous centroid. Centroids are
-    L2-normalized (the metric is cosine)."""
-    spark = embeddings.sparkSession
-    from pyspark.sql.functions import pandas_udf
-
-    e = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    if train_limit is not None:
-        e = (
-            e.withColumn("_h", F.xxhash64("vec_id"))
-            .orderBy("_h", "vec_id")
-            .limit(train_limit)
-            .drop("_h")
-        )
-        e = e.localCheckpoint(eager=False)
-    seed_rows = (
-        e.orderBy(F.xxhash64("vec_id"), "vec_id").limit(n_cells).collect()
-    )
-    cmat = np.stack(
-        [np.asarray(r["embedding"], dtype=np.float64) for r in seed_rows]
-    )
-
-    def _norm(m):
-        n = np.linalg.norm(m, axis=1)
-        n[n == 0] = 1.0
-        return m / n[:, None]
-
-    cmat = _norm(cmat)
-    sc = spark.sparkContext
+    training. Deterministic throughout: seeds and the optional
+    `train_limit` sample come from `_train_rows` (lowest xxhash64), and
+    each Lloyd iteration is one distributed pass — Arrow-batched
+    assignment against broadcast centroids, then a posexplode + (cell,
+    pos) sum/count hash-agg (map-side combined, JVM-side) whose
+    n_cells x dim result is the only collect. Empty cells keep their
+    previous centroid. Centroids are L2-normalized (the metric is
+    cosine); a corpus of fewer than n_cells vectors gets one centroid
+    per vector."""
+    e, cmat = _train_rows(embeddings, train_limit, n_cells)
+    cmat = _unit(cmat)
+    sc = embeddings.sparkSession.sparkContext
     for _ in range(max_iter):
         bc = sc.broadcast(cmat)
-
-        @pandas_udf("int")
-        def assign(emb: pd.Series) -> pd.Series:
-            c = bc.value
-            m = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-            return pd.Series(np.argmax(_norm(m) @ c.T, axis=1))
-
         stats = (
-            e.select(assign("embedding").alias("cell"), "embedding")
+            e.select(_cell_udf(bc)("embedding").alias("cell"), "embedding")
             .select("cell", F.posexplode("embedding").alias("pos", "v"))
             .groupBy("cell", "pos")
             .agg(F.sum("v").alias("s"), F.count("*").alias("n"))
@@ -316,13 +353,13 @@ def kmeans_centroids(
         )
         new = cmat.copy()
         sums = np.zeros_like(cmat)
-        counts = np.zeros(n_cells)
+        counts = np.zeros(len(cmat))
         for r in stats:
             sums[r["cell"], r["pos"]] = r["s"]
             counts[r["cell"]] = r["n"]
         nonempty = counts > 0
         new[nonempty] = sums[nonempty] / counts[nonempty, None]
-        cmat = _norm(new)
+        cmat = _unit(new)
         bc.unpersist()
     return cmat
 
@@ -350,66 +387,59 @@ def ivf_topk(
     pass, and the search join fans each query out to n_probe cells
     instead of the whole corpus.
     """
-    from pyspark.sql.functions import pandas_udf
-
-    spark = embeddings.sparkSession
     if train == "kmeans":
         cmat = kmeans_centroids(embeddings, n_cells=n_cells)
     else:
-        cent_rows = (
-            embeddings.select("vec_id", "embedding")
-            .orderBy("vec_id")
-            .limit(n_cells)
-            .collect()
-        )
-        cmat = np.stack(
-            [np.asarray(r["embedding"], dtype=np.float64) for r in cent_rows]
-        )
-        norms = np.linalg.norm(cmat, axis=1)
-        norms[norms == 0] = 1.0
-        cmat = cmat / norms[:, None]
-    bc = spark.sparkContext.broadcast(cmat)
-
-    @pandas_udf("int")
-    def cell_of(emb: pd.Series) -> pd.Series:
-        c = bc.value
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-        n = np.linalg.norm(m, axis=1)
-        n[n == 0] = 1.0
-        return pd.Series(np.argmax((m / n[:, None]) @ c.T, axis=1))
+        cmat = _first_centroids(embeddings, n_cells)
+    bc = embeddings.sparkSession.sparkContext.broadcast(cmat)
 
     @pandas_udf("array<int>")
     def probe_cells(emb: pd.Series) -> pd.Series:
-        c = bc.value
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-        n = np.linalg.norm(m, axis=1)
-        n[n == 0] = 1.0
-        sims = (m / n[:, None]) @ c.T
+        sims = _unit(_matrix(emb)) @ bc.value.T
         order = np.argsort(-sims, axis=1)[:, :n_probe]
         return pd.Series(list(order.astype("int32")))
 
-    e = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    ).withColumn("cell", cell_of("embedding"))
+    e = _vectors(embeddings).withColumn("cell", _cell_udf(bc)("embedding"))
     q = F.broadcast(
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("qvec"),
-        )
-        .withColumn("cell", F.explode(probe_cells("qvec")))
+        _query_side(queries).withColumn("cell", F.explode(probe_cells("qvec")))
     )
     joined = e.join(q, on="cell").filter(F.col("vec_id") != F.col("query_id"))
-    cos = F.round(_cosine_arrow()(F.col("embedding"), F.col("qvec")), 4)
-    scored = joined.select("query_id", "vec_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    return _exact_top_k(joined, k)
 
 
 # --- product quantization (IVF-PQ's compression half) -------------------------
+
+
+def _pq_codes(mat: np.ndarray, books: np.ndarray, normalize: bool) -> np.ndarray:
+    """(n, m) int32 codes: per subspace s, the index of the codeword of
+    books[s] nearest (squared L2) to each row's s-th slice; rows are
+    unit-scaled first when `normalize`."""
+    if normalize:
+        mat = _unit(mat)
+    m, _, dsub = books.shape
+    out = np.empty((len(mat), m), dtype=np.int32)
+    for s in range(m):
+        sub = mat[:, s * dsub : (s + 1) * dsub]
+        d2 = (
+            (sub ** 2).sum(1)[:, None]
+            - 2.0 * sub @ books[s].T
+            + (books[s] ** 2).sum(1)[None, :]
+        )
+        out[:, s] = np.argmin(d2, axis=1)
+    return out
+
+
+def _pq_encoder_udf(bc, normalize: bool = True):
+    """Arrow pandas_udf mapping an embedding column to its m subspace
+    code indices against the broadcast codebooks `bc` — shared by the
+    codebook trainer, pq_encode and the IVF-PQ corpus pass (which
+    computes codes and cell in ONE scan)."""
+
+    @pandas_udf("array<int>")
+    def enc(emb: pd.Series) -> pd.Series:
+        return pd.Series(list(_pq_codes(_matrix(emb), bc.value, normalize)))
+
+    return enc
 
 
 def pq_train_codebooks(
@@ -426,35 +456,14 @@ def pq_train_codebooks(
     IVF-PQ, the standard layout for web-scale ANN (an encoded vector is
     m bytes instead of 4*dim).
 
-    Distributed the same way as kmeans_centroids: deterministic
-    lowest-xxhash seeding, per-iteration Arrow-batched assignment
-    against broadcast codebooks, then ONE (sub, code, pos) sum/count
-    hash-agg (map-side combined) whose m*kcodes*dsub result is the only
-    collect. `train_limit` trains on a deterministic sample at scale."""
-    from pyspark.sql.functions import pandas_udf
-
-    spark = embeddings.sparkSession
-    e = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    if train_limit is not None:
-        e = (
-            e.withColumn("_h", F.xxhash64("vec_id"))
-            .orderBy("_h", "vec_id")
-            .limit(train_limit)
-            .drop("_h")
-        )
-        e = e.localCheckpoint(eager=False)
-    seed_rows = (
-        e.orderBy(F.xxhash64("vec_id"), "vec_id").limit(kcodes).collect()
-    )
-    seeds = np.stack(
-        [np.asarray(r["embedding"], dtype=np.float64) for r in seed_rows]
-    )
+    Distributed the same way as kmeans_centroids: `_train_rows` seeds
+    and sample, per-iteration Arrow-batched assignment against broadcast
+    codebooks, then ONE (sub, code, pos) sum/count hash-agg (map-side
+    combined) whose m*kcodes*dsub result is the only collect. A corpus
+    of fewer than kcodes vectors gets one code per vector."""
+    e, seeds = _train_rows(embeddings, train_limit, kcodes)
     if normalize:
-        norms = np.linalg.norm(seeds, axis=1)
-        norms[norms == 0] = 1.0
-        seeds = seeds / norms[:, None]
+        seeds = _unit(seeds)
     dim = seeds.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -463,29 +472,10 @@ def pq_train_codebooks(
     books = np.stack(
         [seeds[:, s * dsub : (s + 1) * dsub] for s in range(m)]
     ).copy()
-    sc = spark.sparkContext
+    sc = embeddings.sparkSession.sparkContext
     for _ in range(max_iter):
         bc = sc.broadcast(books)
-
-        @pandas_udf("array<int>")
-        def assign(emb: pd.Series) -> pd.Series:
-            b = bc.value
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-            if normalize:
-                n = np.linalg.norm(mat, axis=1)
-                n[n == 0] = 1.0
-                mat = mat / n[:, None]
-            out = np.empty((len(mat), m), dtype=np.int32)
-            for s in range(m):
-                sub = mat[:, s * dsub : (s + 1) * dsub]
-                d2 = (
-                    (sub ** 2).sum(1)[:, None]
-                    - 2.0 * sub @ b[s].T
-                    + (b[s] ** 2).sum(1)[None, :]
-                )
-                out[:, s] = np.argmin(d2, axis=1)
-            return pd.Series(list(out))
-
+        assign = _pq_encoder_udf(bc, normalize)
         stats = (
             e.select(assign("embedding").alias("codes"), "embedding")
             .select("codes", F.posexplode("embedding").alias("pos", "v"))
@@ -503,7 +493,7 @@ def pq_train_codebooks(
         )
         new = books.copy()
         sums = np.zeros_like(books)
-        counts = np.zeros((m, kcodes))
+        counts = np.zeros(books.shape[:2])
         for r in stats:
             sums[r["sub"], r["code"], r["pos"] % dsub] = r["s"]
             counts[r["sub"], r["code"]] = r["n"]
@@ -516,42 +506,11 @@ def pq_train_codebooks(
     return books
 
 
-def _pq_encoder_udf(spark, books: np.ndarray, normalize: bool = True):
-    """Arrow pandas_udf mapping an embedding column to its m subspace
-    code indices against broadcast `books` — shared by pq_encode and
-    the IVF-PQ corpus pass (which computes codes and cell in ONE scan)."""
-    from pyspark.sql.functions import pandas_udf
-
-    m, _, dsub = books.shape
-    bc = spark.sparkContext.broadcast(books)
-
-    @pandas_udf("array<int>")
-    def enc(emb: pd.Series) -> pd.Series:
-        b = bc.value
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-        if normalize:
-            n = np.linalg.norm(mat, axis=1)
-            n[n == 0] = 1.0
-            mat = mat / n[:, None]
-        out = np.empty((len(mat), m), dtype=np.int32)
-        for s in range(m):
-            sub = mat[:, s * dsub : (s + 1) * dsub]
-            d2 = (
-                (sub ** 2).sum(1)[:, None]
-                - 2.0 * sub @ b[s].T
-                + (b[s] ** 2).sum(1)[None, :]
-            )
-            out[:, s] = np.argmin(d2, axis=1)
-        return pd.Series(list(out))
-
-    return enc
-
-
 def pq_encode(embeddings: DataFrame, books: np.ndarray) -> DataFrame:
     """-> (vec_id, codes array<int>): each (normalized) vector reduced
     to m subspace code indices — the m-byte representation that makes
     100 TB of embeddings fit scan-speed ANN."""
-    enc = _pq_encoder_udf(embeddings.sparkSession, books)
+    enc = _pq_encoder_udf(embeddings.sparkSession.sparkContext.broadcast(books))
     return embeddings.select(
         "vec_id",
         enc(F.col("embedding").cast("array<double>")).alias("codes"),
@@ -625,39 +584,15 @@ def _adc_score_batches(bc, keep: int):
     return score_batches
 
 
-def _pq_scored(
-    embeddings: DataFrame, queries: DataFrame, books: np.ndarray, keep: int
-) -> DataFrame:
-    """Encode the corpus with `books` and ADC-score it against
-    `queries`, emitting at most nq*keep candidate rows per Arrow batch
-    (see _adc_score_batches). Split out of pq_topk so tests can pin the
-    exchange row bound directly."""
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    spark = embeddings.sparkSession
-    enc = pq_encode(embeddings, books)
-    q_rows = (
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("qvec"),
-        )
-        .orderBy("query_id")
-        .collect()
-    )
+def _query_luts(queries: DataFrame, books: np.ndarray):
+    """-> (qids, unit query matrix, LUT) over the queries collected in
+    query_id order, LUT[q, s, c] = <query subvector s, books[s][c]>.
+    The queries are the tiny side, driver-resident anyway because they
+    feed the broadcast LUT."""
+    rows = _query_side(queries).orderBy("query_id").collect()
+    qids = np.array([r["query_id"] for r in rows], dtype=np.int64)
+    qmat = _unit(_matrix([r["qvec"] for r in rows]))
     dsub = books.shape[2]
-    qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    qmat = np.stack(
-        [np.asarray(r["qvec"], dtype=np.float64) for r in q_rows]
-    )
-    qn = np.linalg.norm(qmat, axis=1)
-    qn[qn == 0] = 1.0
-    qmat = qmat / qn[:, None]
-    # LUT[q, s, c] = <query subvector s, codebook[s][c]>
     lut = np.stack(
         [
             qmat[:, s * dsub : (s + 1) * dsub] @ books[s].T
@@ -665,15 +600,20 @@ def _pq_scored(
         ],
         axis=1,
     )
-    bc = spark.sparkContext.broadcast((qids, lut))
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("vec_id", LongType()),
-            StructField("approx_cosine", DoubleType()),
-        ]
-    )
-    return enc.mapInPandas(_adc_score_batches(bc, keep), out_schema)
+    return qids, qmat, lut
+
+
+def _pq_scored(
+    embeddings: DataFrame, queries: DataFrame, books: np.ndarray, keep: int
+) -> DataFrame:
+    """Encode the corpus with `books` and ADC-score it against
+    `queries`, emitting at most nq*keep candidate rows per Arrow batch
+    (see _adc_score_batches). Split out of pq_topk so tests can pin the
+    exchange row bound directly."""
+    enc = pq_encode(embeddings, books)
+    qids, _, lut = _query_luts(queries, books)
+    bc = embeddings.sparkSession.sparkContext.broadcast((qids, lut))
+    return enc.mapInPandas(_adc_score_batches(bc, keep), _ADC_SCHEMA)
 
 
 def pq_topk(
@@ -729,51 +669,17 @@ def _cut_or_rerank(
     stream; with refine_factor, cut a k*rf shortlist and re-rank it by
     EXACT cosine via one join of the tiny shortlist back to the
     embeddings table (queries stay the broadcast side)."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_cosine"), F.asc("vec_id")
-    )
     if not refine_factor:
-        return (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "vec_id", "approx_cosine")
-        )
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k * refine_factor)
-        .select("query_id", "vec_id")
+        return _top_k(scored, k, "approx_cosine")
+    shortlist = _top_k(scored, k * refine_factor, "approx_cosine").select(
+        "query_id", "vec_id"
     )
-    e = embeddings.select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
-    )
-    q = F.broadcast(
-        queries.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("qvec"),
-        )
-    )
+    q = F.broadcast(_query_side(queries))
     # the shortlist is nq*k*rf rows — broadcast it so the (100-TB)
     # embeddings table is NEVER shuffled by vec_id for the re-rank;
     # without the hint this leans on AQE to discover the small side
-    exact = (
-        F.broadcast(shortlist).join(e, "vec_id")
-        .join(q, "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            F.round(
-                _cosine_arrow()(F.col("embedding"), F.col("qvec")), 4
-            ).alias("cosine"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("vec_id")
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cosine")
-    )
+    joined = F.broadcast(shortlist).join(_vectors(embeddings), "vec_id")
+    return _exact_top_k(joined.join(q, "query_id"), k)
 
 
 def ivfpq_topk(
@@ -814,14 +720,6 @@ def ivfpq_topk(
     every vector is scanned regardless of centroid placement, which is
     how the driver oracle pins this end-to-end ≡ brute force (training-
     independent, same trick as ann_pq_rerank_topk)."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     spark = embeddings.sparkSession
     cmat = kmeans_centroids(
         embeddings, n_cells=n_cells, max_iter=max_iter,
@@ -830,27 +728,15 @@ def ivfpq_topk(
     keep = k * refine_factor if refine_factor else k
 
     bc_cent = spark.sparkContext.broadcast(cmat)
-
-    @pandas_udf("int")
-    def cell_of(emb: pd.Series) -> pd.Series:
-        c = bc_cent.value
-        mat = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-        n = np.linalg.norm(mat, axis=1)
-        n[n == 0] = 1.0
-        return pd.Series(np.argmax((mat / n[:, None]) @ c.T, axis=1))
-
+    cell_of = _cell_udf(bc_cent)
     emb_d = F.col("embedding").cast("array<double>")
     if residual:
 
         @pandas_udf("array<double>")
         def residual_of(emb: pd.Series) -> pd.Series:
             c = bc_cent.value
-            mat = np.stack([np.asarray(v, dtype=np.float64) for v in emb])
-            n = np.linalg.norm(mat, axis=1)
-            n[n == 0] = 1.0
-            mat = mat / n[:, None]
-            cells_ = np.argmax(mat @ c.T, axis=1)
-            return pd.Series(list(mat - c[cells_]))
+            mat = _unit(_matrix(emb))
+            return pd.Series(list(mat - c[np.argmax(mat @ c.T, axis=1)]))
 
         res_df = embeddings.select(
             "vec_id", residual_of(emb_d).alias("embedding")
@@ -860,7 +746,7 @@ def ivfpq_topk(
             res_df, m=m, kcodes=kcodes, max_iter=max_iter,
             train_limit=train_limit, normalize=False,
         )
-        enc = _pq_encoder_udf(spark, books, normalize=False)
+        enc = _pq_encoder_udf(spark.sparkContext.broadcast(books), normalize=False)
         codes = embeddings.select(
             "vec_id",
             cell_of(emb_d).alias("cell"),
@@ -871,7 +757,7 @@ def ivfpq_topk(
             embeddings, m=m, kcodes=kcodes, max_iter=max_iter,
             train_limit=train_limit,
         )
-        enc = _pq_encoder_udf(spark, books)
+        enc = _pq_encoder_udf(spark.sparkContext.broadcast(books))
         # one scan: vec_id + cell + m-byte codes (the stored layout)
         codes = embeddings.select(
             "vec_id",
@@ -879,32 +765,14 @@ def ivfpq_topk(
             enc(emb_d).alias("codes"),
         )
 
-    # query side is driver-resident anyway (it feeds the broadcast LUT):
     # probe cells + LUT in one pass over the collected queries
-    q_rows = (
-        queries.select(
-            F.col("vec_id").alias("query_id"), emb_d.alias("qvec")
-        )
-        .orderBy("query_id")
-        .collect()
-    )
-    dsub = books.shape[2]
-    qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    qmat = np.stack([np.asarray(r["qvec"], dtype=np.float64) for r in q_rows])
-    qn = np.linalg.norm(qmat, axis=1)
-    qn[qn == 0] = 1.0
-    qmat = qmat / qn[:, None]
-    lut = np.stack(
-        [
-            qmat[:, s * dsub : (s + 1) * dsub] @ books[s].T
-            for s in range(books.shape[0])
-        ],
-        axis=1,
-    )
+    qids, qmat, lut = _query_luts(queries, books)
     sims = qmat @ cmat.T
-    # deterministic probe pick: (sim desc, cell asc)
-    order = np.lexsort((np.arange(n_cells)[None, :].repeat(len(qids), 0), -sims))
-    probe_masks = np.zeros((len(qids), n_cells), dtype=bool)
+    # deterministic probe pick: (sim desc, cell asc), over the centroids
+    # actually trained (a corpus smaller than n_cells has fewer)
+    cells = np.broadcast_to(np.arange(sims.shape[1]), sims.shape)
+    order = np.lexsort((cells, -sims))
+    probe_masks = np.zeros(sims.shape, dtype=bool)
     for qi in range(len(qids)):
         probe_masks[qi, order[qi, :n_probe]] = True
     probed_union = sorted(int(c) for c in np.where(probe_masks.any(axis=0))[0])
@@ -917,13 +785,6 @@ def ivfpq_topk(
         else (qids, lut, probe_masks)
     )
     bc = spark.sparkContext.broadcast(payload)
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("vec_id", LongType()),
-            StructField("approx_cosine", DoubleType()),
-        ]
-    )
     pruned = codes.filter(F.col("cell").isin(probed_union))
-    scored = pruned.mapInPandas(_adc_score_batches(bc, keep), out_schema)
+    scored = pruned.mapInPandas(_adc_score_batches(bc, keep), _ADC_SCHEMA)
     return _cut_or_rerank(scored, embeddings, queries, k, refine_factor)

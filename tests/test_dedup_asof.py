@@ -362,6 +362,19 @@ def test_semdedup_trained_mode_invariants(spark):
                 assert not m["is_dup"]
 
 
+def test_semdedup_trained_on_corpus_smaller_than_k(spark):
+    """train=True with k=8 on 5 vectors: every vector gets a verdict."""
+    from delphi_pdf_parser_spark.operators.dedup import semdedup
+
+    rows = [
+        (i, [float((i * 7 + j * 3) % 5) - 2.0 for j in range(4)])
+        for i in range(5)
+    ]
+    e = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    out = semdedup(e, k=8, threshold=0.9, train=True).collect()
+    assert sorted(r["vec_id"] for r in out) == list(range(5))
+
+
 def test_canonical_by_quality_keeps_best_not_first(spark):
     """Cluster resolution by QUALITY: the higher-quality later member
     wins its cluster (min-doc_id policy would keep doc 0); singletons

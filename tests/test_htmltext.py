@@ -66,6 +66,15 @@ def test_tolerant_parsing():
     assert extract_main_content(b"\xff\xfe\x00garbage")["n_blocks"] >= 0
 
 
+def test_str_page_reads_as_its_utf8_bytes():
+    from delphi_pdf_parser_spark.operators.htmltext import _html_rows
+
+    page = PAGE.decode() + "<p>caf\u00e9 \u2014 na\u00efve text</p>"
+    got = _html_rows("u", page)
+    assert got == _html_rows("u", page.encode())
+    assert got[0][-1] == "ok"
+
+
 def test_spark_html_extraction(spark):
     """Mixed corpus: html rows route to the html extractor, PDFs are
     prefiltered out (and vice versa for the PDF path)."""

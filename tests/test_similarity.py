@@ -389,3 +389,42 @@ def test_ivfpq_residual_exactness_and_recall_gain(spark):
     # measured: ~0.44 residual vs ~0.08 raw at m=8 on this corpus
     assert r_res > r_raw, (r_res, r_raw)
     assert r_res >= 0.3, r_res
+
+
+def _tiny_corpus(spark, n=5, dim=32):
+    """Fewer vectors than the cells and codes the trainers ask for."""
+    import numpy as np
+
+    rng = np.random.default_rng(11)
+    rows = [(i, [float(x) for x in rng.normal(size=dim)]) for i in range(n)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
+def test_ivf_kmeans_on_corpus_smaller_than_n_cells(spark):
+    """5 vectors, n_cells=8: k-means trains one centroid per vector and
+    the full probe still equals brute force."""
+    from delphi_pdf_parser_spark.operators.similarity import (
+        brute_force_topk,
+        ivf_topk,
+    )
+
+    e = _tiny_corpus(spark)
+    bf = brute_force_topk(e, e, k=5).collect()
+    out = ivf_topk(e, e, k=5, n_cells=8, n_probe=8, train="kmeans").collect()
+    assert len(bf) == 20
+    assert sorted(map(tuple, out)) == sorted(map(tuple, bf))
+
+
+def test_ivfpq_on_corpus_smaller_than_cells_and_codes(spark):
+    """5 vectors, n_cells=8, kcodes=16: centroids, codebooks and probe
+    masks are sized from the rows trained, and the exact re-rank of the
+    full probe equals brute force."""
+    from delphi_pdf_parser_spark.operators.similarity import (
+        brute_force_topk,
+        ivfpq_topk,
+    )
+
+    e = _tiny_corpus(spark)
+    bf = brute_force_topk(e, e, k=5).collect()
+    out = ivfpq_topk(e, e, k=5, n_cells=8, n_probe=8, kcodes=16).collect()
+    assert sorted(map(tuple, out)) == sorted(map(tuple, bf))

@@ -10,10 +10,17 @@ compare equal across sessions and across a renamed helper. An entry
 whose DataFrame could not be built is recorded as ``ERROR: <type>``.
 
     python tools/plan_snapshot.py SF_DIR OUT.json [--against OTHER.json]
+        [--rows NAME[,NAME...]]
 
-With ``--against`` it prints the names of the entries whose plans differ
-from (or are missing in) the other snapshot, one a line, and a last line
-``compared N, differ M``. The session is ``session.get_spark`` of this
+``--rows`` also collects each named entry and records the SHA-256 of its
+rows (each row's ``repr``, sorted, one a line), so a refactor can show
+that it returns the same rows, not only the same plan. The output is
+``{"plans": {name: plan}, "rows": {name: digest}}``.
+
+With ``--against`` it prints the entries whose plans differ from (or
+are missing in) the other snapshot, then those whose row digests
+differ, one a line, and a last line
+``compared N, differ M; rows compared R, differ S``. The session is ``session.get_spark`` of this
 checkout with ``local[4]``, so two checkouts compare by running each
 one's copy of this script from its root.
 """
@@ -21,6 +28,7 @@ one's copy of this script from its root.
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import re
@@ -53,19 +61,35 @@ def normalized_plan(df) -> str:
     return _EXPR_ID.sub("#", text)
 
 
-def snapshot(spark, sf_dir: str) -> dict:
+def rows_digest(df) -> str:
+    lines = sorted(repr(tuple(r)) for r in df.collect())
+    return hashlib.sha256("\n".join(lines).encode()).hexdigest()
+
+
+def snapshot(spark, sf_dir: str, rows: set) -> dict:
     import __spark_entry__ as E
 
     builders = {"entry": lambda s, _d: E.entry(s)}
     builders.update(E.queries())
-    plans = {}
+    unknown = rows - set(builders)
+    if unknown:
+        raise SystemExit(f"--rows: no such entry: {', '.join(sorted(unknown))}")
+    out = {"plans": {}, "rows": {}}
     for name, build in builders.items():
         try:
-            plans[name] = normalized_plan(build(spark, sf_dir))
+            df = build(spark, sf_dir)
+            out["plans"][name] = normalized_plan(df)
+            if name in rows:
+                out["rows"][name] = rows_digest(df)
         except Exception as e:  # noqa: BLE001 - recorded, not fatal
-            plans[name] = f"ERROR: {type(e).__name__}"
+            out["plans"][name] = f"ERROR: {type(e).__name__}"
         print(name, file=sys.stderr, flush=True)
-    return plans
+    return out
+
+
+def _differ(mine: dict, other: dict) -> list:
+    names = [n for n in sorted(mine) if other.get(n) != mine[n]]
+    return names + [n for n in sorted(other) if n not in mine]
 
 
 def main() -> None:
@@ -73,7 +97,11 @@ def main() -> None:
     ap.add_argument("sf_dir")
     ap.add_argument("out")
     ap.add_argument("--against", help="a snapshot to compare with")
+    ap.add_argument(
+        "--rows", default="", help="comma-separated entries whose rows to hash"
+    )
     args = ap.parse_args()
+    rows = {n for n in args.rows.split(",") if n}
     sf_dir = os.path.abspath(args.sf_dir)
     out = os.path.abspath(args.out)
 
@@ -82,18 +110,23 @@ def main() -> None:
     from delphi_pdf_parser_spark.session import get_spark
 
     spark = get_spark("plan_snapshot", master="local[4]", shuffle_partitions=8)
-    plans = snapshot(spark, sf_dir)
+    snap = snapshot(spark, sf_dir, rows)
     spark.stop()
     with open(out, "w") as f:
-        json.dump(plans, f, indent=1, sort_keys=True)
+        json.dump(snap, f, indent=1, sort_keys=True)
     if args.against:
         with open(args.against) as f:
             other = json.load(f)
-        differ = [n for n in sorted(plans) if other.get(n) != plans[n]]
-        differ += [n for n in sorted(other) if n not in plans]
-        for n in differ:
+        plans = _differ(snap["plans"], other["plans"])
+        digests = _differ(snap["rows"], other["rows"])
+        for n in plans:
             print(n)
-        print(f"compared {len(plans)}, differ {len(differ)}")
+        for n in digests:
+            print(f"rows: {n}")
+        print(
+            f"compared {len(snap['plans'])}, differ {len(plans)}; "
+            f"rows compared {len(snap['rows'])}, differ {len(digests)}"
+        )
 
 
 if __name__ == "__main__":
