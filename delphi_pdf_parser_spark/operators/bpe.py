@@ -24,12 +24,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import words
+
 EOW = "</w>"
 
 
 def _word_freqs(documents: DataFrame, vocab_words: int | None) -> DataFrame:
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
-    words = (
+    toks = words(F.col("text"))
+    freqs = (
         documents.select(F.explode(toks).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
@@ -39,8 +41,8 @@ def _word_freqs(documents: DataFrame, vocab_words: int | None) -> DataFrame:
         # deterministic cap (TakeOrderedAndProject): train on the top-V
         # words — the standard practice; rare-word tails add noise and
         # driver-independent size bounds matter more
-        words = words.orderBy(F.desc("freq"), F.asc("word")).limit(vocab_words)
-    return words
+        freqs = freqs.orderBy(F.desc("freq"), F.asc("word")).limit(vocab_words)
+    return freqs
 
 
 def bpe_train(
@@ -157,7 +159,7 @@ def bpe_encode(
             out.append(total)
         return pd.Series(out, dtype="int32")
 
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.col("text"))
     return documents.select(
         "doc_id",
         count_tokens(F.col("text")).alias("n_bpe_tokens"),

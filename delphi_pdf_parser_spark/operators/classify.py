@@ -27,12 +27,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import words
+
 
 def _featurize(documents: DataFrame, num_features: int):
     from pyspark.ml.feature import HashingTF
 
     toks = documents.withColumn(
-        "_toks", F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+        "_toks", words(F.col("text"))
     )
     tf = HashingTF(
         inputCol="_toks", outputCol="features", numFeatures=num_features

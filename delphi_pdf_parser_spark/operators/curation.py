@@ -19,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_NORM = lambda c: F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")  # noqa: E731
+from .textstats import normalized
+
 
 
 def curation_base(
@@ -45,7 +46,7 @@ def curation_base(
         (
             (n_words >= min_words) & (alpha_frac >= min_alpha_frac)
         ).alias("q_pass"),
-        F.md5(_NORM(F.col("text"))).alias("fingerprint"),
+        F.md5(normalized(F.col("text"))).alias("fingerprint"),
         F.substring(
             F.md5(
                 F.concat_ws(

@@ -23,11 +23,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .textstats import words
+
 
 def _ngram_rows(df: DataFrame, n: int) -> DataFrame:
     """(doc_id, text) -> (doc_id, ngram) with exactly size-n+1 grams per
     doc (docs shorter than n tokens produce none)."""
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.col("text"))
     parts = [
         F.slice(toks, j + 1, F.greatest(F.size(toks) - n + 1, F.lit(0)))
         for j in range(n)

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .parallelize import ensure_min_parallelism
+from .textstats import normalized, words
 from .similarity import (
     _first_centroids,
     _matrix,
@@ -33,14 +34,13 @@ from .similarity import (
     kmeans_centroids,
 )
 
-_NORM = lambda c: F.regexp_replace(F.lower(F.trim(c)), r"\s+", " ")  # noqa: E731
 
 
 def exact_dedup(documents: DataFrame) -> DataFrame:
     """Fingerprint group: keep-first semantics mirror the reference xref's
     first-entry-wins (SURVEY §2.B 'Dedup')."""
     fp = documents.select(
-        F.md5(_NORM(F.col("text"))).alias("fingerprint"), "doc_id"
+        F.md5(normalized(F.col("text"))).alias("fingerprint"), "doc_id"
     )
     return fp.groupBy("fingerprint").agg(
         F.count("*").alias("n_docs"), F.min("doc_id").alias("keep_doc_id")
@@ -67,7 +67,7 @@ def token_jaccard_pairs(
     toks = documents.select(
         "doc_id",
         "source",
-        F.array_distinct(F.split(F.trim(F.lower(F.col("text"))), r"\s+")).alias(
+        F.array_distinct(words(F.col("text"))).alias(
             "tokset"
         ),
     )
@@ -98,7 +98,7 @@ def token_jaccard_pairs(
 
 def _shingles(col, n: int = 3):
     """Word n-gram shingles as an array column (JVM-side)."""
-    toks = F.split(F.trim(F.lower(col)), r"\s+")
+    toks = words(col)
     idx = F.sequence(F.lit(0), F.greatest(F.size(toks) - n, F.lit(0)))
     return F.array_distinct(
         F.transform(
@@ -429,7 +429,7 @@ def simhash(documents: DataFrame) -> DataFrame:
     toks = documents.select(
         "doc_id",
         F.slice(
-            F.split(F.trim(F.lower(F.col("text"))), r"\s+"), 1, max_voters
+            words(F.col("text")), 1, max_voters
         ).alias("toks"),
     )
 
@@ -656,7 +656,7 @@ def span_dup_stats(
     global sort, no driver collects. The suffix-array construction of
     the paper is replaced by hashing because spans are fixed-length
     here — the census is exact for length-k spans."""
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.col("text"))
     base = documents.select("doc_id", toks.alias("t")).filter(
         F.size("t") >= k
     )
@@ -719,7 +719,7 @@ def span_dedup_rewrite(documents: DataFrame, k: int = 5) -> DataFrame:
     groupBy(doc_id) whose in-group array_sort is bounded by document
     length. No global sorts in the pipeline (the trailing orderBy is
     presentation-only), no driver collects, no Python UDFs."""
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.col("text"))
     base = documents.select("doc_id", toks.alias("t"))
     idx = F.sequence(F.lit(1), F.size("t") - F.lit(k - 1))
     win = lambda i: F.md5(  # noqa: E731
@@ -814,7 +814,7 @@ def minhash_band_stats(documents: DataFrame) -> DataFrame:
     Scale shape: one shingle explode + one minhash aggregate + one
     compact (band, key) aggregate — the same shuffle count as the
     production path, map-side combined throughout."""
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.col("text"))
     base = documents.select("doc_id", toks.alias("t")).filter(
         F.size("t") >= 3
     )
@@ -859,7 +859,7 @@ def simhash_band_stats(documents: DataFrame) -> DataFrame:
     Scale shape: token explode -> one 16-column vote aggregate ->
     compact (band, nibble) aggregate; all map-side combined."""
     toks = F.array_distinct(
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+        words(F.col("text"))
     )
     t = (
         documents.select("doc_id", F.explode(toks).alias("tok"))

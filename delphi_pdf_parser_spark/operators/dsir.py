@@ -34,6 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .textstats import words
+
 
 def _bucket_rows(df: DataFrame, with_doc_id: bool, n_buckets: int) -> DataFrame:
     """Explode a documents-shaped frame into hashed (unigram + bigram)
@@ -41,7 +43,7 @@ def _bucket_rows(df: DataFrame, with_doc_id: bool, n_buckets: int) -> DataFrame:
     grams are built with the shifted-slice arrays_zip trick (see
     top_ngrams — the transform-lambda form runs interpreted and
     measured 70x slower) and hashed AFTER the explode."""
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.col("text"))
     ids = ["doc_id"] if with_doc_id else []
     uni = df.select(*ids, F.explode(toks).alias("g"))
     parts = [

@@ -26,7 +26,6 @@ Scale shape (100 TB / 10^12 pages):
 
 from __future__ import annotations
 
-import re
 from typing import Optional
 from urllib.parse import urljoin, urldefrag
 
@@ -39,6 +38,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from delphi_pdf_parser_spark.htmlcore import (
+    _decode_entities,
+    attrs_of,
+    inner_text,
+    pair_elements,
+    scan_bytes,
+    spaced,
+)
 from delphi_pdf_parser_spark.operators.urls import host_of, registered_domain
 
 from .parallelize import ensure_min_parallelism, map_rows, page_rows
@@ -52,36 +59,10 @@ LINKS_SCHEMA = StructType(
     ]
 )
 
-# <a ...> open tags and the matching close; DOTALL because anchors span
-# lines in real pages. Nested <a> is invalid HTML — browsers auto-close,
-# and so does the non-greedy match here.
-_A_RE = re.compile(rb"<a\s([^>]*)>(.*?)</a\s*>", re.I | re.S)
-_BASE_RE = re.compile(rb"<base\s[^>]*>", re.I)
-# attribute parser: name = "v" | 'v' | bare
-_ATTR_RE = re.compile(
-    rb"""([a-zA-Z-]+)\s*=\s*("([^"]*)"|'([^']*)'|([^\s"'>]+))"""
-)
-_TAG_RE = re.compile(rb"<[^>]*>")
-_WS_RE = re.compile(r"\s+")
-
 _SKIP_SCHEMES = ("javascript:", "mailto:", "tel:", "data:", "about:")
 
 
-def _attrs(tag: bytes) -> dict:
-    out = {}
-    for m in _ATTR_RE.finditer(tag):
-        val = m.group(3)
-        if val is None:
-            val = m.group(4)
-        if val is None:
-            val = m.group(5)
-        out[m.group(1).lower()] = val
-    return out
-
-
-def _page_links(
-    url: str, html: bytes, stripped: bool = False
-) -> list:
+def _page_links(url: str, html) -> list:
     """All followable anchors on one page: (src, dst, anchor, nofollow).
 
     Resolution is RFC 3986 (stdlib urljoin) against the page URL, or
@@ -90,41 +71,30 @@ def _page_links(
     server, so two anchors differing only in #frag are the same edge
     target); fragment-only and non-http(s) hrefs are skipped.
 
-    Comments, CDATA, and script/style/template raw text are blanked
-    before the scan so commented-out navigation and script-embedded
-    ``<a href>`` string literals never become edges; ``stripped=True``
-    skips the blanking when the caller already did it once for several
-    scanners (webannotations' single-scan pass).
+    ``html`` is the page bytes or their ``htmlcore.scan_bytes`` scan, which
+    skips comments and script/style/template bodies, so commented-out nav
+    and script ``<a href>`` literals never become edges. The first
+    ``</a>`` after an open closes it, as browsers auto-close nested ``<a>``.
     """
-    from delphi_pdf_parser_spark.htmlcore import (
-        _decode_entities,
-        strip_inert_bytes,
-    )
-
-    if not stripped:
-        html = strip_inert_bytes(html)
+    s, tags = scan_bytes(html)
     base = url
-    bm = _BASE_RE.search(html)
-    if bm is not None:
-        bhref = _attrs(bm.group(0)).get(b"href")
-        if bhref:
-            try:
-                base = urljoin(url, bhref.decode("utf-8", "replace"))
-            except ValueError:
-                base = url
+    for t in tags:
+        if t[3] == "base" and not t[2] and spaced(t):
+            bhref = attrs_of(t).get("href")
+            if bhref:
+                try:
+                    base = urljoin(url, bhref)
+                except ValueError:
+                    base = url
+            break
     rows = []
-    for m in _A_RE.finditer(html):
-        attrs = _attrs(m.group(1))
-        href = attrs.get(b"href")
-        if not href:
-            continue
-        href_s = _decode_entities(
-            href.decode("utf-8", "replace")
-        ).strip()
+    for i, j in pair_elements(tags, lambda t: t[3] == "a" and spaced(t)):
+        attrs = attrs_of(tags[i])
+        href_s = _decode_entities(attrs.get("href") or "").strip()
         if not href_s or href_s.startswith("#"):
             continue
         low = href_s.lower()
-        if any(low.startswith(s) for s in _SKIP_SCHEMES):
+        if low.startswith(_SKIP_SCHEMES):
             continue
         try:
             dst = urldefrag(urljoin(base, href_s))[0]
@@ -132,10 +102,8 @@ def _page_links(
             continue
         if not dst.lower().startswith(("http://", "https://")):
             continue
-        text = _TAG_RE.sub(b" ", m.group(2)).decode("utf-8", "replace")
-        anchor = _WS_RE.sub(" ", _decode_entities(text)).strip()
-        rel = attrs.get(b"rel", b"")
-        nofollow = b"nofollow" in rel.lower().split()
+        anchor = inner_text(s, tags, i, j)
+        nofollow = "nofollow" in attrs.get("rel", "").lower().split()
         rows.append((url, dst, anchor, nofollow))
     return rows
 

@@ -6,9 +6,9 @@ STRUCTURE kept — headings, lists, links, emphasis, code, tables — in
 Markdown, the lingua franca of pretraining corpora (the web analogue of
 the reference's layout-preserving PDF text mode). No HTML or Markdown
 library exists in this runtime, so this is a from-scratch single-pass
-renderer over the same tolerant tag scan `htmlcore._segment` uses
-(comments/CDATA skipped inline, script/style/template raw text
-swallowed, entities decoded).
+renderer over `htmlcore.scan_tags`, the one tag scanner every HTML
+parser here uses (comments/CDATA skipped, script/style/template/title
+raw text swallowed, entities decoded).
 
 Determinism contract (same bytes -> same markdown everywhere):
 inline whitespace collapses to single spaces; blocks join with one
@@ -28,7 +28,6 @@ extract_main_content.
 
 from __future__ import annotations
 
-import re
 from urllib.parse import urljoin
 
 from pyspark.sql import DataFrame
@@ -41,9 +40,10 @@ from pyspark.sql.types import (
 )
 
 from delphi_pdf_parser_spark.htmlcore import (
-    _TAG_RE,
     _WS_RE,
     _decode_entities,
+    parse_attrs,
+    scan_tags,
 )
 
 from .parallelize import ensure_min_parallelism, map_rows, page_rows
@@ -64,19 +64,6 @@ _HEADING = {f"h{i}": i for i in range(1, 7)}
 _BLOCK_BREAK = frozenset(
     "p div section article main dd dt figcaption summary center".split()
 )
-_ATTR_RE = re.compile(
-    r"""([a-zA-Z][a-zA-Z0-9:-]*)\s*=\s*("[^"]*"|'[^']*'|[^\s>]*)"""
-)
-
-
-def _attrs(raw: str) -> dict:
-    out = {}
-    for m in _ATTR_RE.finditer(raw):
-        v = m.group(2)
-        if v[:1] in "\"'":
-            v = v[1:-1]
-        out[m.group(1).lower()] = v
-    return out
 
 
 class _MD:
@@ -135,52 +122,21 @@ def _render_markdown(url: str, html: bytes) -> tuple:
     except UnicodeDecodeError:
         s = bytes(html).decode("latin-1")
     md = _MD(url)
-    raw_until: str | None = None
     pre_depth = 0
-    pos, n = 0, len(s)
-    while pos < n:
-        lt = s.find("<", pos)
-        if lt < 0:
-            lt = n
-        if lt > pos:
-            if raw_until is None:
-                txt = _decode_entities(s[pos:lt])
-                if pre_depth:
-                    md.emit(txt)
-                elif txt and not txt.isspace():
-                    md.text(txt)
-                elif txt and (md.cur or md.cell or md.link_text):
-                    md.text(" ")  # inter-word whitespace survives
-            pos = lt
-            continue
-        if s.startswith("<!--", pos):
-            end = s.find("-->", pos + 4)
-            pos = (end + 3) if end >= 0 else n
-            continue
-        if s.startswith("<![CDATA[", pos):
-            end = s.find("]]>", pos + 9)
-            pos = (end + 3) if end >= 0 else n
-            continue
-        if s.startswith("<!", pos) or s.startswith("<?", pos):
-            end = s.find(">", pos)
-            pos = (end + 1) if end >= 0 else n
-            continue
-        m = _TAG_RE.match(s, pos)
-        if m is None:
-            if raw_until is None:
+    for start, end, closing, name, attrs_raw in scan_tags(s, _RAWTEXT):
+        if name is None:
+            if s.startswith("<", start):  # a stray '<' is text
                 md.text("<")
-            pos += 1
+                continue
+            txt = _decode_entities(s[start:end])
+            if pre_depth:
+                md.emit(txt)
+            elif txt and not txt.isspace():
+                md.text(txt)
+            elif txt and (md.cur or md.cell or md.link_text):
+                md.text(" ")  # inter-word whitespace survives
             continue
-        closing, name, attrs_raw, selfclose = m.groups()
-        name = name.lower()
-        pos = m.end()
-        if raw_until is not None:
-            if closing and name == raw_until:
-                raw_until = None
-            continue
-        if not closing and name in _RAWTEXT:
-            if not selfclose:
-                raw_until = name
+        if name in _RAWTEXT:
             continue
         # ---- tables (depth-1 only, like extract_html_tables) ----------
         if name == "table":
@@ -284,15 +240,15 @@ def _render_markdown(url: str, html: bytes) -> tuple:
             md.code = max(0, md.code + (-1 if closing else 1))
             continue
         if name == "a":
-            if not closing and not selfclose:
+            if not closing:
                 if md.href is None:
-                    href = _attrs(attrs_raw).get("href", "")
+                    href = parse_attrs(attrs_raw).get("href", "")
                     try:
                         md.href = urljoin(url, _decode_entities(href).strip())
                     except ValueError:
                         md.href = ""
                     md.link_text = []
-            elif closing and md.href is not None:
+            elif md.href is not None:
                 text = _WS_RE.sub(" ", "".join(md.link_text)).strip()
                 href, md.href = md.href, None
                 if text and href:
@@ -302,8 +258,9 @@ def _render_markdown(url: str, html: bytes) -> tuple:
                     md.emit(text)
             continue
         if name == "img":
-            alt = _decode_entities(_attrs(attrs_raw).get("alt", "")).strip()
-            src = _attrs(attrs_raw).get("src", "")
+            attrs = parse_attrs(attrs_raw)
+            alt = _decode_entities(attrs.get("alt", "")).strip()
+            src = attrs.get("src", "")
             try:
                 src = urljoin(url, _decode_entities(src).strip())
             except ValueError:

@@ -30,7 +30,16 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from delphi_pdf_parser_spark.operators.graphs import _attrs
+from delphi_pdf_parser_spark.htmlcore import (
+    _HEADING,
+    attrs_of,
+    clean_text,
+    inner_text,
+    pair_elements,
+    scan_bytes,
+    spaced,
+    utf8,
+)
 
 from .parallelize import map_rows, page_rows
 
@@ -47,79 +56,51 @@ META_SCHEMA = StructType(
     ]
 )
 
-_TITLE_RE = re.compile(rb"<title[^>]*>(.*?)</title\s*>", re.I | re.S)
-_META_RE = re.compile(rb"<meta\s[^>]*>", re.I)
-_LINK_RE = re.compile(rb"<link\s[^>]*>", re.I)
-_WS_RE = re.compile(r"\s+")
+
+def _text(raw: str) -> Optional[str]:
+    return clean_text(raw) or None
 
 
-def _text(raw: Optional[bytes]) -> Optional[str]:
-    from delphi_pdf_parser_spark.htmlcore import _decode_entities
-
-    if raw is None:
-        return None
-    s = _decode_entities(raw.decode("utf-8", "replace"))
-    s = _WS_RE.sub(" ", s).strip()
-    return s or None
-
-
-def _page_meta(url: str, html: bytes, stripped: bool = False) -> tuple:
-    # blank comments/CDATA/script/style/template first: a <title> or
-    # <meta> inside a commented block or a script string literal is not
-    # page metadata (VERDICT r6 finding #1)
-    if not stripped:
-        from delphi_pdf_parser_spark.htmlcore import strip_inert_bytes
-
-        html = strip_inert_bytes(html)
+def _page_meta(url: str, html) -> tuple:
+    # tags come from the one scanner, so a <title> or <meta> inside a
+    # comment or a script string literal is not page metadata
+    s, tags = scan_bytes(html)
     title = None
-    tm = _TITLE_RE.search(html)
-    if tm is not None:
-        title = _text(tm.group(1))
-    description = og_title = og_image = published = None
-    noindex = False
-    for m in _META_RE.finditer(html):
-        attrs = _attrs(m.group(0))
-        key = (attrs.get(b"name") or attrs.get(b"property") or b"").lower()
-        content = attrs.get(b"content")
+    for i, j in pair_elements(tags, lambda t: t[3] == "title"):
+        title = inner_text(s, tags, i, j, markup=True) or None
+        break
+    description = og_title = og_image = published = canonical = None
+    noindex = link_seen = False
+    for t in tags:
+        if t[3] not in ("meta", "link") or t[2] or not spaced(t):
+            continue
+        attrs = attrs_of(t)
+        if t[3] == "link":
+            rel = (attrs.get("rel") or "").lower().split()
+            href = attrs.get("href")
+            if not link_seen and "canonical" in rel and href:
+                link_seen = True  # the first canonical wins, like crawlers
+                try:
+                    canonical = urljoin(url, href.strip())
+                except ValueError:
+                    canonical = None
+            continue
+        key = (attrs.get("name") or attrs.get("property") or "").lower()
+        content = attrs.get("content")
         if content is None:
             continue
-        if key == b"description" and description is None:
+        if key == "description" and description is None:
             description = _text(content)
-        elif key == b"og:title" and og_title is None:
+        elif key == "og:title" and og_title is None:
             og_title = _text(content)
-        elif key == b"og:image" and og_image is None:
+        elif key == "og:image" and og_image is None:
             og_image = _text(content)
-        elif key == b"article:published_time" and published is None:
+        elif key == "article:published_time" and published is None:
             published = _text(content)
-        elif key == b"robots":
-            toks = re.split(
-                r"[,\s]+", content.decode("utf-8", "replace").lower()
-            )
-            if "noindex" in toks:
-                noindex = True
-    canonical = None
-    for m in _LINK_RE.finditer(html):
-        attrs = _attrs(m.group(0))
-        rel = (attrs.get(b"rel") or b"").lower().split()
-        href = attrs.get(b"href")
-        if b"canonical" in rel and href:
-            try:
-                canonical = urljoin(
-                    url, href.decode("utf-8", "replace").strip()
-                )
-            except ValueError:
-                canonical = None
-            break  # first canonical wins, like browsers/crawlers
-    return (
-        url,
-        title,
-        description,
-        canonical,
-        og_title,
-        og_image,
-        published,
-        noindex,
-    )
+        elif key == "robots" and "noindex" in re.split(r"[,\s]+", content.lower()):
+            noindex = True
+    return (url, title, description, canonical, og_title, og_image,
+            published, noindex)
 
 
 def _meta_rows(url: str, html: bytes) -> list:
@@ -137,23 +118,16 @@ JSONLD_SCHEMA = StructType(
     ]
 )
 
-_SCRIPT_RE = re.compile(
-    rb"<script\s[^>]*>(.*?)</script\s*>", re.I | re.S
-)
-
-
-def _page_jsonld(url: str, html: bytes) -> list:
+def _page_jsonld(url: str, html) -> list:
+    s, tags = scan_bytes(html)
     out = []
-    i = 0
-    for m in _SCRIPT_RE.finditer(html):
-        attrs = _attrs(m.group(0)[: m.group(0).find(b">") + 1])
-        mtype = (attrs.get(b"type") or b"").lower().strip()
-        if mtype != b"application/ld+json":
+    for i, j in pair_elements(tags, lambda t: t[3] == "script" and spaced(t)):
+        mtype = (attrs_of(tags[i]).get("type") or "").lower().strip()
+        if mtype != "application/ld+json":
             continue
-        body = m.group(1).decode("utf-8", "replace").strip()
+        body = utf8(s[tags[i][1] : tags[j][0]]).strip()
         if body:
-            out.append((url, i, body))
-            i += 1
+            out.append((url, len(out), body))
     return out
 
 
@@ -200,31 +174,16 @@ HEADINGS_SCHEMA = StructType(
     ]
 )
 
-_H_RE = re.compile(rb"<h([1-6])[^>]*>(.*?)</h\1\s*>", re.I | re.S)
-_INNER_TAG_RE = re.compile(rb"<[^>]*>")
-
-
-def _page_headings(
-    url: str, html: bytes, stripped: bool = False
-) -> list:
-    from delphi_pdf_parser_spark.htmlcore import (
-        _decode_entities,
-        strip_inert_bytes,
-    )
-
-    # commented-out or script-embedded <h1-6> must not enter the outline
-    if not stripped:
-        html = strip_inert_bytes(html)
+def _page_headings(url: str, html) -> list:
+    # commented-out or script-embedded <h1-6> never reach the tag list
+    s, tags = scan_bytes(html)
     rows = []
-    for m in _H_RE.finditer(html):
-        text = _INNER_TAG_RE.sub(b" ", m.group(2)).decode(
-            "utf-8", "replace"
-        )
-        heading = _WS_RE.sub(" ", _decode_entities(text)).strip()
+    for i, j in pair_elements(tags, lambda t: t[3] in _HEADING):
+        heading = inner_text(s, tags, i, j)
         if heading:
             # pos indexes KEPT headings (gap-free even when empty
             # headings are dropped mid-document)
-            rows.append((url, len(rows), int(m.group(1)), heading))
+            rows.append((url, len(rows), int(tags[i][3][1]), heading))
     return rows
 
 

@@ -3,8 +3,9 @@ embedded in pages becomes (url, table_id, row_id, col_id, cell,
 is_header) rows, the input to table-corpus curation (WDC), table QA
 training sets, and schema-matching pipelines.
 
-From-scratch tolerant scanner (no HTML parser dependency, same policy
-as ``htmlcore``): one token scan over ``<table|tr|td|th>`` structural
+Reads the page through ``htmlcore.scan_bytes``, the tag scanner every
+HTML parser here shares (comments, CDATA and script/style/template
+bodies skipped): one pass over its ``<table|tr|td|th>`` structural
 tags with a depth counter — only depth-1 tables are extracted and a
 nested table's content is skipped (recorded per page as
 ``n_nested_skipped`` in :func:`table_stats` if needed); a cell closes
@@ -17,8 +18,6 @@ One Arrow ``mapInPandas`` pass — map-only, no shuffle.
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -29,7 +28,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from delphi_pdf_parser_spark.operators.graphs import _attrs
+from delphi_pdf_parser_spark.htmlcore import (
+    attrs_of,
+    inner_text,
+    scan_bytes,
+    spaced,
+)
 
 from .parallelize import map_rows, page_rows
 
@@ -44,54 +48,37 @@ TABLE_SCHEMA = StructType(
     ]
 )
 
-_STRUCT_RE = re.compile(rb"<(/?)(table|tr|td|th)(?=[\s/>])[^>]*>", re.I)
-_TAG_RE = re.compile(rb"<[^>]*>")
-_WS_RE = re.compile(r"\s+")
+_STRUCT = frozenset("table tr td th".split())
 
 
-def _clean(raw: bytes) -> str:
-    from delphi_pdf_parser_spark.htmlcore import _decode_entities
-
-    s = _decode_entities(
-        _TAG_RE.sub(b" ", raw).decode("utf-8", "replace")
-    )
-    return _WS_RE.sub(" ", s).strip()
-
-
-def _page_tables(
-    url: str, html: bytes, stripped: bool = False
-) -> list:
-    # a <table> inside <!-- --> or a script string is not page content;
-    # blanking keeps offsets self-consistent (cells slice the stripped
-    # bytes, and cell text never contained inert regions anyway)
-    if not stripped:
-        from delphi_pdf_parser_spark.htmlcore import strip_inert_bytes
-
-        html = strip_inert_bytes(html)
+def _page_tables(url: str, html) -> list:
+    s, tags = scan_bytes(html)
     rows = []
     depth = 0
     tid = -1
     rid = -1
     cid = 0
-    cell_start = None
+    cell = None  # index in tags of the open cell's <td>/<th>
     cell_th = False
     cell_span = 1
 
-    def close_cell(end: int):
-        nonlocal cell_start, cid
-        if cell_start is not None and rid >= 0:
-            rows.append(
-                (url, tid, rid, cid, _clean(html[cell_start:end]), cell_th)
-            )
+    def close_cell(k: int):
+        nonlocal cell, cid
+        if cell is not None and rid >= 0:
+            text = inner_text(s, tags, cell, k)
+            rows.append((url, tid, rid, cid, text, cell_th))
             cid += cell_span
-        cell_start = None
+        cell = None
 
-    for m in _STRUCT_RE.finditer(html):
-        closing = m.group(1) == b"/"
-        name = m.group(2).lower()
+    for k, t in enumerate(tags):
+        name = t[3]
+        # a structural name ends at whitespace, '/' or '>' (not <td.x>)
+        if name not in _STRUCT or not (t[4][:1] in ("", "/") or spaced(t)):
+            continue
+        closing = t[2]
         if depth == 1:
-            close_cell(m.start())
-        if name == b"table":
+            close_cell(k)
+        if name == "table":
             if closing:
                 depth = max(depth - 1, 0)
             else:
@@ -99,21 +86,20 @@ def _page_tables(
                 if depth == 1:
                     tid += 1
                     rid = -1
-        elif depth == 1 and name == b"tr" and not closing:
+        elif depth == 1 and name == "tr" and not closing:
             rid += 1
             cid = 0
-        elif depth == 1 and name in (b"td", b"th") and not closing:
-            attrs = _attrs(m.group(0))
+        elif depth == 1 and name in ("td", "th") and not closing:
             try:
-                cell_span = max(int(attrs.get(b"colspan", b"1")), 1)
+                cell_span = max(int(attrs_of(t).get("colspan", "1")), 1)
             except ValueError:
                 cell_span = 1
-            cell_th = name == b"th"
-            cell_start = m.end()
+            cell_th = name == "th"
+            cell = k
     # truncated-page flush: crawl HTML routinely ends mid-table; a cell
     # still open at EOF keeps its text instead of vanishing
     if depth == 1:
-        close_cell(len(html))
+        close_cell(len(tags))
     return rows
 
 

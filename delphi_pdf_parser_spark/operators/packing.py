@@ -32,6 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .parallelize import ensure_min_parallelism
+from .textstats import words
 
 
 def _global_offsets(
@@ -99,7 +100,7 @@ def pack_sequences(
     # non-empty tokens only: an empty/whitespace/null document carries
     # exactly its EOS slot (n=1); `div` is true integer division —
     # float `/`+cast rounds once offsets pass 2^53 tokens
-    t = F.split(F.trim(F.lower(F.coalesce(F.col("text"), F.lit("")))), r"\s+")
+    t = words(F.coalesce(F.col("text"), F.lit("")))
     nt = F.size(F.filter(t, lambda x: x != ""))
     g = _global_offsets(documents, (nt + 1).cast("long"), bucket_docs)
     first_seq = F.expr(f"start div {int(seq_len)}")

@@ -27,10 +27,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .parallelize import ensure_min_parallelism
+from .textstats import words
 
 
 def _terms(col, out):
-    toks = F.split(F.trim(F.lower(col)), r"\s+")
+    toks = words(col)
     return F.filter(toks, lambda t: t != "").alias(out)
 
 

@@ -32,6 +32,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from delphi_pdf_parser_spark.htmlcore import _decode_entities, pair_elements
 from delphi_pdf_parser_spark.operators.urls import host_of
 
 from .parallelize import map_rows, page_rows
@@ -214,27 +215,29 @@ SITEMAP_SCHEMA = StructType(
     ]
 )
 
-_SM_ENTRY_RE = re.compile(
-    rb"<(url|sitemap)\s*>(.*?)</\1\s*>", re.I | re.S
+# sitemap tags only, no HTML skip rules: one linear finditer, paired by
+# htmlcore.pair_elements (an unclosed <url> pairs with nothing)
+_SM_TAG_RE = re.compile(
+    rb"<(/?)(url|sitemap|loc|lastmod|changefreq|priority)\s*>", re.I
 )
-_SM_FIELD_RE = re.compile(
-    rb"<(loc|lastmod|changefreq|priority)\s*>(.*?)</\1\s*>",
-    re.I | re.S,
-)
+_SM_ENTRIES = (b"url", b"sitemap")
 
 
 def _parse_sitemap(host: str, xml: bytes) -> list:
-    from delphi_pdf_parser_spark.htmlcore import _decode_entities
-
+    tags = [
+        (m.start(), m.end(), bool(m.group(1)), m.group(2).lower(), None)
+        for m in _SM_TAG_RE.finditer(xml)
+    ]
     rows = []
-    for m in _SM_ENTRY_RE.finditer(xml):
-        kind = "url" if m.group(1).lower() == b"url" else "sitemap"
+    for i, j in pair_elements(tags, lambda t: t[3] in _SM_ENTRIES):
+        inner = tags[i + 1 : j]
         fields = {}
-        for f in _SM_FIELD_RE.finditer(m.group(2)):
-            fields[f.group(1).lower()] = _decode_entities(
-                f.group(2).decode("utf-8", "replace").strip()
+        for a, b in pair_elements(inner, lambda t: t[3] not in _SM_ENTRIES):
+            fields[inner[a][3]] = _decode_entities(
+                xml[inner[a][1] : inner[b][0]].decode("utf-8", "replace").strip()
             )
         loc = fields.get(b"loc")
+        kind = "url" if tags[i][3] == b"url" else "sitemap"
         if not loc:
             continue
         pr = None

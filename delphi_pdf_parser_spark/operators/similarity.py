@@ -47,8 +47,11 @@ def _vectors(df: DataFrame, *cols) -> DataFrame:
 
 
 def _matrix(values) -> np.ndarray:
-    """The (n, dim) float64 matrix of a column of vectors."""
-    return np.stack([np.asarray(v, dtype=np.float64) for v in values])
+    """The (n, dim) float64 matrix of a column of vectors, (0, 0) for no
+    vectors: trained on an empty table, centroids, codebooks and query
+    LUTs come out empty and the search returns no rows."""
+    rows = [np.asarray(v, dtype=np.float64) for v in values]
+    return np.stack(rows) if rows else np.zeros((0, 0))
 
 
 def _unit(m: np.ndarray) -> np.ndarray:

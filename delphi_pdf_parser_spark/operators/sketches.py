@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .textstats import words
+
 def _hex_fraction(col):
     """First 12 hex nibbles of an md5 string -> value in [0, 1).
 
@@ -49,7 +51,7 @@ def kmv_distinct_tokens(
         documents.select(
             F.col(group_col).alias("grp"),
             F.explode(
-                F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+                words(F.col("text"))
             ).alias("tok"),
         )
         .filter(F.col("tok") != "")

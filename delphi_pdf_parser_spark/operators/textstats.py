@@ -30,6 +30,16 @@ def _tokens(col):
     return F.split(F.trim(col), r"\s+")
 
 
+def words(col):
+    """Lowercased whitespace tokens, ``split(trim(lower(col)), '\\s+')``."""
+    return _tokens(F.lower(col))
+
+
+def normalized(col):
+    """``lower(trim(col))`` with each whitespace run as one space."""
+    return F.regexp_replace(F.lower(F.trim(col)), r"\s+", " ")
+
+
 # BPE-ish pre-tokenization (GPT-2-style word/number/punct split, ASCII
 # simplification so Java regex and the DuckDB oracle agree byte-for-byte)
 _BPE_RE = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]"
@@ -157,7 +167,7 @@ def top_ngrams(
     (count desc, ngram asc). Shape: explode -> count -> global top-k;
     the only full shuffle is the count's exchange."""
     documents = ensure_min_parallelism(documents)
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.col("text"))
     # n shifted slices zipped together: plain (codegen-able) array
     # expressions — the equivalent F.transform(lambda ...) form runs
     # INTERPRETED per element and measured 70x slower at sf0.1
@@ -569,7 +579,7 @@ def gopher_repetition(documents: DataFrame) -> DataFrame:
     groups, never a global sort)."""
     from pyspark.sql import Window
 
-    toks = F.split(F.trim(F.lower(F.col("text"))), r"\s+")
+    toks = words(F.col("text"))
     lines = F.filter(
         F.transform(F.split(F.col("text"), "\n"), F.trim),
         lambda x: x != "",

@@ -8,9 +8,10 @@ consumers ``explode`` only the annotation family they need and column
 pruning drops the rest at the scan).
 
 Reuses the per-page parsers of ``graphs`` / ``htmlmeta`` /
-``htmltables`` verbatim — the combined pass cannot drift from the
-single-purpose operators, and the parity tests assert exploded
-equality against each of them.
+``htmltables`` verbatim, fed one ``htmlcore.scan_bytes`` tag scan of
+the page — the combined pass cannot drift from the single-purpose
+operators, and the parity tests assert exploded equality against each
+of them.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from delphi_pdf_parser_spark.htmlcore import strip_inert_bytes
+from delphi_pdf_parser_spark.htmlcore import scan_bytes
 from delphi_pdf_parser_spark.operators.graphs import _page_links
 from delphi_pdf_parser_spark.operators.htmlmeta import _page_jsonld, _page_meta
 from delphi_pdf_parser_spark.operators.htmltables import _page_tables
@@ -67,20 +68,18 @@ WEB_PAGE_SCHEMA = StructType(
 
 
 def _annotation_rows(url: str, raw: bytes) -> list:
-    # inert regions blanked ONCE for the three structural scanners;
-    # jsonld reads the ORIGINAL bytes because its payload lives inside
-    # <script type="application/ld+json">
-    clean = strip_inert_bytes(raw)
+    # one tag scan serves all four parsers
+    page = scan_bytes(raw)
     links = [
         {"dst": d, "anchor": a, "nofollow": nf}
-        for _, d, a, nf in _page_links(url, clean, stripped=True)
+        for _, d, a, nf in _page_links(url, page)
     ]
-    meta = _page_meta(url, clean, stripped=True)
+    meta = _page_meta(url, page)
     cells = [
         {"table_id": t, "row_id": r, "col_id": c, "cell": cell, "is_header": h}
-        for _, t, r, c, cell, h in _page_tables(url, clean, stripped=True)
+        for _, t, r, c, cell, h in _page_tables(url, page)
     ]
-    blobs = [body for _, _, body in _page_jsonld(url, raw)]
+    blobs = [body for _, _, body in _page_jsonld(url, page)]
     return [(url, links) + meta[1:] + (cells, blobs)]
 
 

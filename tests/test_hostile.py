@@ -62,3 +62,84 @@ def test_hostile_lexing_stays_in_budget(case):
     assert proc.returncode == 0, (proc.returncode, proc.stderr[-2000:])
     status, text, failures = json.loads(proc.stdout)
     assert (status, text, failures) == ("ok", "after\r\n", {})
+
+
+_HTML_RUNNER = r"""
+import json, resource, sys
+
+resource.setrlimit(resource.RLIMIT_AS, (1 << 30, 1 << 30))
+
+from delphi_pdf_parser_spark.htmlcore import extract_main_content
+from delphi_pdf_parser_spark.operators.graphs import _page_links
+from delphi_pdf_parser_spark.operators.htmlmarkdown import _render_markdown
+from delphi_pdf_parser_spark.operators.htmlmeta import (
+    _page_headings, _page_jsonld, _page_meta,
+)
+from delphi_pdf_parser_spark.operators.htmltables import _page_tables
+from delphi_pdf_parser_spark.operators.robots import _parse_sitemap
+from delphi_pdf_parser_spark.operators.webannotations import _annotation_rows
+
+MB = 1 << 20
+UNITS = {
+    "a_href": b"<a href=x>",
+    "h1": b"<h1>",
+    "title": b"<title>",
+    "open_quote": b"<a href='",
+    "script_no_gt": b"<script ",
+    "jsonld_unclosed": b"<script type='application/ld+json'>",
+    "url_unclosed": b"<url>",
+}
+case = sys.argv[1]
+if case == "tag_20mb":
+    page = b"<a " + b"x" * (20 * MB) + b">"
+else:
+    page = UNITS[case] * (2 * MB // len(UNITS[case]))
+parsers = [
+    lambda: extract_main_content(page),
+    lambda: _render_markdown("https://h.example/", page),
+    lambda: _page_links("https://h.example/", page),
+    lambda: _page_meta("https://h.example/", page),
+    lambda: _page_headings("u", page),
+    lambda: _page_jsonld("u", page),
+    lambda: _page_tables("u", page),
+    lambda: _annotation_rows("https://h.example/", page),
+    lambda: _parse_sitemap("h", page),
+]
+counts = []
+for parse in parsers:
+    # at least 5 s of CPU for each parser on top of what was used so far
+    ru = resource.getrusage(resource.RUSAGE_SELF)
+    resource.setrlimit(resource.RLIMIT_CPU, (int(ru.ru_utime + ru.ru_stime) + 6, 1000))
+    out = parse()
+    counts.append(len(out) if isinstance(out, list) else 1)
+print(json.dumps(counts))
+"""
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "a_href",
+        "h1",
+        "title",
+        "open_quote",
+        "script_no_gt",
+        "jsonld_unclosed",
+        "url_unclosed",
+        "tag_20mb",
+    ],
+)
+def test_hostile_html_stays_in_budget(case):
+    """Every HTML parser, and the sitemap parser, returns on each page
+    inside 1 GB and 5 s of CPU: the one tag scanner is linear."""
+    env = dict(os.environ, PYTHONPATH=_REPO, OPENBLAS_NUM_THREADS="1")
+    proc = subprocess.run(
+        [sys.executable, "-c", _HTML_RUNNER, case],
+        capture_output=True,
+        text=True,
+        cwd=_REPO,
+        env=env,
+        timeout=300,
+    )
+    assert proc.returncode == 0, (proc.returncode, proc.stderr[-2000:])
+    assert len(json.loads(proc.stdout)) == 9

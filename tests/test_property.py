@@ -382,12 +382,3 @@ def test_render_markdown_arbitrary_bytes(raw):
     )
 
     _render_markdown("u", raw)
-
-
-@given(st.binary(min_size=0, max_size=2048))
-@settings(max_examples=100, deadline=None)
-def test_strip_inert_bytes_never_raises_and_idempotent(raw):
-    from delphi_pdf_parser_spark.htmlcore import strip_inert_bytes
-
-    once = strip_inert_bytes(raw)
-    assert strip_inert_bytes(once) == once

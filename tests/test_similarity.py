@@ -428,3 +428,29 @@ def test_ivfpq_on_corpus_smaller_than_cells_and_codes(spark):
     bf = brute_force_topk(e, e, k=5).collect()
     out = ivfpq_topk(e, e, k=5, n_cells=8, n_probe=8, kcodes=16).collect()
     assert sorted(map(tuple, out)) == sorted(map(tuple, bf))
+
+
+def test_embedding_entries_answer_an_empty_table(spark, tmp_path):
+    """On a 0-row embeddings table the training and query collects find
+    no vectors; each search returns no rows in its declared schema."""
+    import pyarrow.parquet as pq
+
+    import __spark_entry__
+
+    src = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
+    for name in os.listdir(src):
+        if name != "embeddings.parquet":
+            os.symlink(os.path.join(src, name), tmp_path / name)
+    table = pq.read_table(os.path.join(src, "embeddings.parquet"))
+    pq.write_table(table.slice(0, 0), tmp_path / "embeddings.parquet")
+    queries = __spark_entry__.queries()
+    want = {
+        "semdedup": ["vec_id", "cluster_id", "centroid_cos", "is_dup"],
+        "ann_ivf_topk": ["query_id", "rank", "vec_id", "cosine"],
+        "ann_ivf_full_probe": ["query_id", "rank", "vec_id", "cosine"],
+        "ann_pq_rerank_topk": ["query_id", "rank", "vec_id", "cosine"],
+        "ann_ivfpq_topk": ["query_id", "rank", "vec_id", "cosine"],
+    }
+    for name, columns in want.items():
+        df = queries[name](spark, str(tmp_path))
+        assert df.columns == columns and df.collect() == [], name
