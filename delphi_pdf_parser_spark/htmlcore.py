@@ -68,11 +68,12 @@ def scan_tags(s: str, rawtext: frozenset) -> Iterator[tuple]:
     text up to the first ``>`` outside quotes; an unpartnered quote ends
     no tag, and a ``<`` that starts no tag is a text run of its own.
     Comments, CDATA and ``<!...>``/``<?...>`` yield nothing, and after an
-    open tag named in ``rawtext`` nothing does up to its closing tag;
-    unterminated, each runs to the end. Linear: ``_TAG_RE`` never walks
-    past a ``<`` or a quoted ``<``/``>``, and ``walk``, which takes over
-    there, marks each quote whose walk found no ``>``, so no later ``<``
-    walks the same quotes again.
+    open tag named in ``rawtext``, bar a self-closed ``<svg .../>``,
+    nothing does up to its closing tag; unterminated, each runs to the
+    end. Linear: ``_TAG_RE`` never walks past a ``<`` or a quoted
+    ``<``/``>``, and ``walk``, which takes over there, marks each quote
+    whose walk found no ``>``, so no later ``<`` walks the same quotes
+    again.
     """
     n = len(s)
     pos = 0
@@ -139,7 +140,11 @@ def scan_tags(s: str, rawtext: frozenset) -> Iterator[tuple]:
         closing, name = closing == "/", name.lower()
         pos = end + 1
         if raw is None:
-            if not closing and name in rawtext:
+            # HTML5 honours "/>" on a foreign element: <svg/> opens no
+            # raw text; <script/> and the other names ignore the slash
+            if not closing and name in rawtext and not (
+                name == "svg" and s[end - 1] == "/"
+            ):
                 raw = name
             yield (m.start(), pos, closing, name, attrs)
         elif closing and name == raw:

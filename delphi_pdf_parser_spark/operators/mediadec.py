@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import struct
 import zlib
+from itertools import islice
 
 
 class UnsupportedMediaError(Exception):
@@ -376,11 +377,14 @@ def _gif_lzw(data: bytes, min_code: int, npix: int) -> list:
     return out[:npix]
 
 
-def _decode_gif(data: bytes) -> tuple[int, int, int, bytes]:
-    """First frame of a GIF87a/GIF89a: global/local color tables,
-    interlacing, GCE transparency -> RGB(A)."""
-    if len(data) < 13:
-        raise MediaDecodeError("gif: truncated header")
+def _gif_blocks(data: bytes):
+    """The one GIF block walker; callers check the 13-byte header first.
+    Yields the logical screen (width, height, background index, global
+    color table), then per image (gces, left, top, w, h, color table,
+    palette indices in display row order), where gces lists the
+    (transparent index or -1, disposal) of each graphic control
+    extension since the previous image. Stops at the trailer or at the
+    end of the data."""
     sw, sh = struct.unpack_from("<HH", data, 6)
     flags = data[10]
     pos = 13
@@ -389,17 +393,20 @@ def _decode_gif(data: bytes) -> tuple[int, int, int, bytes]:
         n = 2 << (flags & 7)
         gct = data[pos : pos + 3 * n]
         pos += 3 * n
-    transparent = -1
+    yield sw, sh, data[11], gct
+    gces = []
     while pos < len(data):
         b = data[pos]
         if b == 0x3B:  # trailer
-            break
+            return
         if b == 0x21:  # extension
             label = data[pos + 1]
             pos += 2
             if label == 0xF9 and data[pos] >= 4:  # GCE
-                if data[pos + 1] & 1:
-                    transparent = data[pos + 4]
+                packed = data[pos + 1]
+                gces.append(
+                    (data[pos + 4] if packed & 1 else -1, (packed >> 2) & 7)
+                )
             while pos < len(data) and data[pos]:
                 pos += 1 + data[pos]
             pos += 1
@@ -440,6 +447,22 @@ def _decode_gif(data: bytes) -> tuple[int, int, int, bytes]:
             for src_y, dst_y in enumerate(order):
                 grid[dst_y] = rows[src_y]
             idx = [v for row in grid for v in row]
+        yield gces, left, top, w, h, table, idx
+        gces = []
+
+
+def _decode_gif(data: bytes) -> tuple[int, int, int, bytes]:
+    """First frame of a GIF87a/GIF89a: global/local color tables,
+    interlacing, GCE transparency -> RGB(A)."""
+    if len(data) < 13:
+        raise MediaDecodeError("gif: truncated header")
+    blocks = _gif_blocks(data)
+    next(blocks)
+    for gces, _left, _top, w, h, table, idx in blocks:
+        transparent = -1
+        for t, _disposal in gces:  # the last GCE with a transparent index
+            if t >= 0:
+                transparent = t
         out_n = 4 if transparent >= 0 else 3
         npal = len(table) // 3
         out = bytearray(w * h * out_n)
@@ -477,17 +500,10 @@ def decode_gif_frames(
 def _decode_gif_frames(data: bytes, max_frames: int) -> tuple[int, int, list]:
     if len(data) < 13 or data[:6] not in (b"GIF87a", b"GIF89a"):
         raise MediaDecodeError("gif: bad header")
-    sw, sh = struct.unpack_from("<HH", data, 6)
-    flags = data[10]
-    bg_index = data[11]
+    blocks = _gif_blocks(data)
+    sw, sh, bg_index, gct = next(blocks)
     if sw * sh > 50_000_000 or not sw or not sh:
         raise MediaDecodeError("gif: implausible dimensions")
-    pos = 13
-    gct = b""
-    if flags & 0x80:
-        n = 2 << (flags & 7)
-        gct = data[pos : pos + 3 * n]
-        pos += 3 * n
     bg_rgb = (
         gct[3 * bg_index : 3 * bg_index + 3]
         if gct and bg_index < len(gct) // 3
@@ -495,58 +511,9 @@ def _decode_gif_frames(data: bytes, max_frames: int) -> tuple[int, int, list]:
     )
     canvas = bytearray(bg_rgb * (sw * sh))
     frames: list = []
-    transparent = -1
-    disposal = 0
-    while pos < len(data) and len(frames) < max_frames:
-        b = data[pos]
-        if b == 0x3B:
-            break
-        if b == 0x21:
-            label = data[pos + 1]
-            pos += 2
-            if label == 0xF9 and data[pos] >= 4:
-                transparent = data[pos + 4] if data[pos + 1] & 1 else -1
-                disposal = (data[pos + 1] >> 2) & 7
-            while pos < len(data) and data[pos]:
-                pos += 1 + data[pos]
-            pos += 1
-            continue
-        if b != 0x2C:
-            raise MediaDecodeError(f"gif: unknown block {b:#x}")
-        left, top, w, h = struct.unpack_from("<HHHH", data, pos + 1)
-        iflags = data[pos + 9]
-        pos += 10
-        table = gct
-        if iflags & 0x80:
-            n = 2 << (iflags & 7)
-            table = data[pos : pos + 3 * n]
-            pos += 3 * n
-        if not table:
-            raise MediaDecodeError("gif: no color table")
-        if w * h > 50_000_000 or not w or not h:
-            raise MediaDecodeError("gif: implausible dimensions")
-        min_code = data[pos]
-        pos += 1
-        if not 2 <= min_code <= 11:
-            raise MediaDecodeError(f"gif: LZW min code {min_code}")
-        lzw = bytearray()
-        while pos < len(data) and data[pos]:
-            n = data[pos]
-            lzw += data[pos + 1 : pos + 1 + n]
-            pos += 1 + n
-        pos += 1
-        idx = _gif_lzw(bytes(lzw), min_code, w * h)
-        idx += [0] * (w * h - len(idx))
-        if iflags & 0x40:
-            order = (
-                list(range(0, h, 8)) + list(range(4, h, 8))
-                + list(range(2, h, 4)) + list(range(1, h, 2))
-            )
-            rows = [idx[y * w : (y + 1) * w] for y in range(h)]
-            grid = [None] * h
-            for src_y, dst_y in enumerate(order):
-                grid[dst_y] = rows[src_y]
-            idx = [v for row in grid for v in row]
+    for gces, left, top, w, h, table, idx in islice(blocks, max_frames):
+        # the last GCE before the image applies to it alone
+        transparent, disposal = gces[-1] if gces else (-1, 0)
         npal = len(table) // 3
         # disposal 3 = restore-to-previous: snapshot before compositing
         prev_canvas = bytes(canvas) if disposal == 3 else None
@@ -577,8 +544,6 @@ def _decode_gif_frames(data: bytes, max_frames: int) -> tuple[int, int, list]:
                     canvas[k : k + 3] = bg_rgb
         elif disposal == 3 and prev_canvas is not None:
             canvas = bytearray(prev_canvas)
-        transparent = -1
-        disposal = 0
     if not frames:
         raise MediaDecodeError("gif: no image descriptor")
     return sw, sh, frames

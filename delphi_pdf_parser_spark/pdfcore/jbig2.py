@@ -1,35 +1,27 @@
-"""JBIG2 (embedded, PDF flavor) — generic-region decoding, from scratch.
+"""JBIG2 (embedded, PDF flavor) decoding, from scratch.
 
 ABOVE-REFERENCE: the reference's own JBIG2 filter is a stub returning
 nil (src/vcl/fz_filterss.pas:441-445), so nothing here is required for
-parity — this implements the useful subset for real scanned PDFs whose
-pages are coded as generic regions: the MQ arithmetic decoder (ITU T.88
-Annex E software conventions), the embedded-stream segment parser
-(T.88 Annex D.2 / PDF 32000 §7.4.7, incl. JBIG2Globals), page info, and
-generic region decoding (T.88 §6.2) for templates 0-3 with nominal or
-custom AT pixels and TPGDON typical-prediction, integer arithmetic
-decoding (Annex A IAx/IAID), SYMBOL DICTIONARIES and TEXT REGIONS
-(§6.5/§6.4, arithmetic — the coding real scanned-text PDFs use), and
-MMR regions via the CCITT G4 decoder, and the HUFFMAN coding family
-(T.88 Annex B standard tables B.1-B.15 with canonical B.3 code
-assignment; SDHUFF symbol dictionaries with raw/MMR height-class
-collective bitmaps per §6.5.9; SBHUFF text regions with the runcode
-symbol ID table of §7.4.3.1.7), GENERIC REFINEMENT (§6.3 templates 0/1
-with TPGRON — refinement region segments, REFINE=1 text-region
-instances, and SDREFAGG dictionaries incl. REFAGGNINST>1 aggregates
-coded as nested text regions, in BOTH the arithmetic and the Huffman
-form: SDHUFF+SDREFAGG dictionaries decode fixed-length symbol IDs,
-B.15 offsets and byte-aligned BMSIZE-byte MQ refinement segments per
-§6.5.8.2.2, with REFAGGNINST>1 aggregates as nested Huffman text
-regions per §6.5.8.2.1), and PATTERN
-DICTIONARIES + HALFTONE REGIONS (§6.7/§6.6: collective-bitmap pattern
-split, gray-coded bitplane grids sharing one coder, 8.8 fixed-point
-skew grid, HENABLESKIP geometry skip — ignored in MMR grayscale mode
-per Annex C.5). Custom Huffman
-table segments (T.88 B.2, type 53) parse and feed selector-3 table
-slots. No typed fallbacks remain: every T.88 segment family the
-embedded (PDF) profile can carry decodes (the reference's own JBIG2
-filter passes everything through).
+parity. Every T.88 segment family the embedded (PDF) profile can carry
+decodes: the embedded-stream segment parser (T.88 Annex D.2 / PDF 32000
+§7.4.7, incl. JBIG2Globals) and page info; the MQ arithmetic decoder
+(Annex E software conventions); generic regions (§6.2: templates 0-3,
+nominal or custom AT pixels, TPGDON, or MMR via the CCITT G4 decoder);
+generic refinement (§6.3: templates 0/1, TPGRON) for refinement region
+segments; symbol dictionaries (§6.5) and text regions (§6.4) in both
+codings, incl. refined text instances and SDREFAGG dictionaries whose
+REFAGGNINST>1 aggregates are nested text regions; pattern dictionaries
+and halftone regions (§6.7/§6.6: collective-bitmap pattern split,
+gray-coded bitplanes, 8.8 fixed-point skew grid, HENABLESKIP, ignored in
+MMR grayscale mode per Annex C.5); and custom Huffman table segments
+(B.2, type 53) beside the standard tables B.1-B.15.
+
+Like jbig2dec, the decoder the paper's reference MuPDF uses, there is
+one symbol-dictionary and one text-region decoder: each reads its
+integers through one source object, arithmetic (Annex A IAx/IAID
+contexts) or Huffman (Annex B tables, the §7.4.3.1.7 symbol ID table),
+and only the source branches on SDHUFF/SBHUFF. Every region lands in its
+destination through one composition helper, _compose.
 
 Caveat recorded for honesty: with no JBIG2 library in this runtime the
 MQ coder is validated by encoder/decoder round-trip (fixtures ship an
@@ -38,6 +30,8 @@ invariants — not against third-party streams.
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 
 class Jbig2Error(Exception):
@@ -343,6 +337,17 @@ def decode_generic_region(
     return _decode_generic_into(mq, cx, width, height, template, at, tpgdon)
 
 
+def _read_at(body: bytes, pos: int, n: int) -> tuple[list, int]:
+    """n signed (x, y) AT-pixel byte pairs at body[pos:] -> (pairs, pos
+    after them); bytes past the end of body read 0."""
+    at = [
+        (int.from_bytes(body[p : p + 1], "big", signed=True),
+         int.from_bytes(body[p + 1 : p + 2], "big", signed=True))
+        for p in range(pos, pos + 2 * n, 2)
+    ]
+    return at, pos + 2 * n
+
+
 def _check_at(at, template):
     at = tuple(at) if at else _NOMINAL_AT[template]
     for ax, ay in at:
@@ -415,6 +420,41 @@ def encode_generic_region(
     return enc.flush()
 
 
+def _unpack_rows(packed: bytes, width: int, height: int) -> list:
+    """MSB-first packed rows (byte-aligned stride) -> rows of 0/1."""
+    stride = (width + 7) // 8
+    return [
+        [(packed[y * stride + (x >> 3)] >> (7 - (x & 7))) & 1
+         for x in range(width)]
+        for y in range(height)
+    ]
+
+
+def _compose(dst: list, src: list, x: int, y: int, op: int) -> None:
+    """Combine bitmap src into dst with its top-left pixel at (x, y),
+    clipped to dst. op: 0 OR, 1 AND, 2 XOR, 3 XNOR, 4-7 REPLACE (the
+    T.88 combination operators of region info and text regions)."""
+    sh, sw, dh, dw = len(src), len(src[0]), len(dst), len(dst[0])
+    if y >= dh or y + sh <= 0 or x >= dw or x + sw <= 0:
+        return  # a halftone grid places most patterns outside the region
+    x0 = -x if x < 0 else 0
+    x1 = sw if x + sw <= dw else dw - x
+    for sy in range(-y if y < 0 else 0, sh if y + sh <= dh else dh - y):
+        drow, srow = dst[y + sy], src[sy]
+        for sx in range(x0, x1):
+            v = srow[sx]
+            if op == 0:
+                drow[x + sx] |= v
+            elif op == 1:
+                drow[x + sx] &= v
+            elif op == 2:
+                drow[x + sx] ^= v
+            elif op == 3:
+                drow[x + sx] = 1 - (drow[x + sx] ^ v)
+            else:
+                drow[x + sx] = v
+
+
 # --- embedded-stream segment parsing (T.88 7.2, PDF 32000 7.4.7) -------------
 
 
@@ -434,6 +474,9 @@ def _parse_segment_header(data: bytes, pos: int) -> tuple[dict, int]:
     else:
         pos += 1
     ref_size = 1 if number <= 256 else (2 if number <= 65536 else 4)
+    if pos + count * ref_size > len(data):
+        # a long-form count reaches 2^29 refs: bound it by the data
+        raise Jbig2Error("truncated segment header")
     refs = []
     for _ in range(count):
         refs.append(int.from_bytes(data[pos : pos + ref_size], "big"))
@@ -524,9 +567,9 @@ def _jbig2_decode(
 
     JBIG2 codes 1 = black; with invert=True (default) the output follows
     the PDF imaging convention for 1-bpc DeviceGray (0 = black), like the
-    CCITT path's BlackIs1=false. Regions needing symbol/halftone/
-    refinement machinery raise Jbig2Unsupported (the sink falls back to
-    raw passthrough — still strictly more than the reference's nil stub).
+    CCITT path's BlackIs1=false. Intermediate regions and anything past
+    max_pixels raise Jbig2Unsupported (the sink falls back to raw
+    passthrough — still strictly more than the reference's nil stub).
     """
     page_w, page_h = width, height
     page = None
@@ -571,65 +614,16 @@ def _jbig2_decode(
             mmr = flags & 1
             template = (flags >> 1) & 3
             tpgdon = bool(flags & 8)
-            pos = 18
-            at = None
-            if not mmr:
-                n_at = 4 if template == 0 else 1
-                at = []
-                for _ in range(n_at):
-                    ax = int.from_bytes(
-                        body[pos : pos + 1], "big", signed=True
-                    )
-                    ay = int.from_bytes(
-                        body[pos + 1 : pos + 2], "big", signed=True
-                    )
-                    at.append((ax, ay))
-                    pos += 2
-            payload = body[pos:]
             if mmr:
-                from .ccitt import CcittError, ccitt_decode
-
-                try:
-                    packed = ccitt_decode(
-                        payload, columns=info["w"], rows=info["h"], k=-1,
-                        black_is_1=True,
-                    )
-                except CcittError as e:
-                    raise Jbig2Error(f"mmr: {e}")
-                stride = (info["w"] + 7) // 8
-                region = [
-                    [
-                        (packed[y * stride + (x >> 3)] >> (7 - (x & 7))) & 1
-                        for x in range(info["w"])
-                    ]
-                    for y in range(info["h"])
-                ]
+                region = _mmr_bitmap(body[18:], info["w"], info["h"])
             else:
+                at, pos = _read_at(body, 18, 4 if template == 0 else 1)
                 region = decode_generic_region(
-                    payload, info["w"], info["h"], template=template,
+                    body[pos:], info["w"], info["h"], template=template,
                     at=at, tpgdon=tpgdon, max_pixels=max_pixels,
                 )
             ensure_page(info["x"] + info["w"], info["y"] + info["h"])
-            comb = info["comb_op"]  # 0=OR 1=AND 2=XOR 3=XNOR 4=REPLACE
-            for ry, row in enumerate(region):
-                py = info["y"] + ry
-                if py >= page_h:
-                    break
-                prow = page[py]
-                for rx, v in enumerate(row):
-                    px = info["x"] + rx
-                    if px >= page_w:
-                        break
-                    if comb == 0:
-                        prow[px] |= v
-                    elif comb == 1:
-                        prow[px] &= v
-                    elif comb == 2:
-                        prow[px] ^= v
-                    elif comb == 3:
-                        prow[px] = 1 - (prow[px] ^ v)
-                    else:
-                        prow[px] = v
+            _compose(page, region, info["x"], info["y"], info["comb_op"])
         elif t in (_T_END_PAGE, _T_END_STRIPE, _T_END_FILE, _T_PROFILES,
                    _T_EXTENSION):
             continue
@@ -656,26 +650,7 @@ def _jbig2_decode(
             if t == 4:
                 raise Jbig2Unsupported("intermediate text region")
             ensure_page(info["x"] + info["w"], info["y"] + info["h"])
-            comb = info["comb_op"]
-            for ry, row in enumerate(region):
-                py = info["y"] + ry
-                if py >= page_h:
-                    break
-                prow = page[py]
-                for rx, v in enumerate(row):
-                    px = info["x"] + rx
-                    if px >= page_w:
-                        break
-                    if comb == 0:
-                        prow[px] |= v
-                    elif comb == 1:
-                        prow[px] &= v
-                    elif comb == 2:
-                        prow[px] ^= v
-                    elif comb == 3:
-                        prow[px] = 1 - (prow[px] ^ v)
-                    else:
-                        prow[px] = v
+            _compose(page, region, info["x"], info["y"], info["comb_op"])
         elif t == _T_PATTERN_DICT:
             pat_dicts[hdr["number"]] = decode_pattern_dict(body, max_pixels)
         elif t in _T_HALFTONE:
@@ -688,26 +663,7 @@ def _jbig2_decode(
                 body, pats, max_pixels=max_pixels
             )
             ensure_page(info["x"] + info["w"], info["y"] + info["h"])
-            comb = info["comb_op"]
-            for ry, row in enumerate(region):
-                py = info["y"] + ry
-                if py >= page_h:
-                    break
-                prow = page[py]
-                for rx, v in enumerate(row):
-                    px = info["x"] + rx
-                    if px >= page_w:
-                        break
-                    if comb == 0:
-                        prow[px] |= v
-                    elif comb == 1:
-                        prow[px] &= v
-                    elif comb == 2:
-                        prow[px] ^= v
-                    elif comb == 3:
-                        prow[px] = 1 - (prow[px] ^ v)
-                    else:
-                        prow[px] = v
+            _compose(page, region, info["x"], info["y"], info["comb_op"])
         elif t in _T_REFINE:
             # generic refinement region (T.88 §7.4.7): refine the current
             # page content inside the region rect
@@ -719,15 +675,9 @@ def _jbig2_decode(
             rflags = body[17]
             template = rflags & 1
             tpgron = bool(rflags & 2)
-            pos = 18
-            at = list(_GR_NOMINAL_AT)
+            at, pos = _GR_NOMINAL_AT, 18
             if template == 0:
-                at = []
-                for _ in range(2):
-                    ax = int.from_bytes(body[pos : pos + 1], "big", signed=True)
-                    ay = int.from_bytes(body[pos + 1 : pos + 2], "big", signed=True)
-                    at.append((ax, ay))
-                    pos += 2
+                at, pos = _read_at(body, pos, 2)
             ensure_page(info["x"] + info["w"], info["y"] + info["h"])
             ref = [
                 page[info["y"] + ry][info["x"] : info["x"] + info["w"]]
@@ -741,26 +691,7 @@ def _jbig2_decode(
                 mq, gr_cx, info["w"], info["h"], ref, 0, 0,
                 template=template, at=at, tpgron=tpgron,
             )
-            comb = info["comb_op"]
-            for ry, row in enumerate(region):
-                py = info["y"] + ry
-                if py >= page_h:
-                    break
-                prow = page[py]
-                for rx, v in enumerate(row):
-                    px = info["x"] + rx
-                    if px >= page_w:
-                        break
-                    if comb == 0:
-                        prow[px] |= v
-                    elif comb == 1:
-                        prow[px] &= v
-                    elif comb == 2:
-                        prow[px] ^= v
-                    elif comb == 3:
-                        prow[px] = 1 - (prow[px] ^ v)
-                    else:
-                        prow[px] = v
+            _compose(page, region, info["x"], info["y"], info["comb_op"])
         elif t == _T_TABLES:
             custom_tables[hdr["number"]] = decode_table_segment(body)
         # unknown types: skip (forward compatibility)
@@ -892,294 +823,7 @@ def encode_id(mq: MQEncoder, ia: IdCtx, value: int) -> None:
         prev = (prev << 1) | b
 
 
-# --- symbol dictionary (T.88 6.5, arithmetic, no refinement) ------------------
-
-
-def decode_symbol_dict(
-    body: bytes, input_syms: list, max_pixels: int = 1 << 22,
-    tables: list | None = None,
-) -> list:
-    """Symbol-dictionary segment body -> list of EXPORTED symbol bitmaps
-    (rows of 0/1). Arithmetic coding only; SDHUFF / refinement-aggregate
-    raise Jbig2Unsupported."""
-    flags = int.from_bytes(body[0:2], "big")
-    sdhuff = flags & 1
-    sdrefagg = (flags >> 1) & 1
-    template = (flags >> 10) & 3
-    rtemplate = (flags >> 12) & 1
-    if sdhuff:
-        return _decode_symbol_dict_huffman(
-            body, flags, input_syms, max_pixels, tables or []
-        )
-    pos = 2
-    n_at = 4 if template == 0 else 1
-    at = []
-    for _ in range(n_at):
-        ax = int.from_bytes(body[pos : pos + 1], "big", signed=True)
-        ay = int.from_bytes(body[pos + 1 : pos + 2], "big", signed=True)
-        at.append((ax, ay))
-        pos += 2
-    at = _check_at(at, template)
-    r_at = list(_GR_NOMINAL_AT)
-    if sdrefagg and rtemplate == 0:
-        r_at = []
-        for _ in range(2):
-            ax = int.from_bytes(body[pos : pos + 1], "big", signed=True)
-            ay = int.from_bytes(body[pos + 1 : pos + 2], "big", signed=True)
-            r_at.append((ax, ay))
-            pos += 2
-    num_ex = int.from_bytes(body[pos : pos + 4], "big")
-    num_new = int.from_bytes(body[pos + 4 : pos + 8], "big")
-    pos += 8
-    if num_new > 10000 or num_ex > 10000:
-        raise Jbig2Unsupported("implausible symbol counts")
-
-    mq = MQDecoder(body[pos:])
-    gb_cx = [[0, 0] for _ in range(_CTX_SIZE[template])]
-    iadh, iadw, iaex, iaai = IntCtx(), IntCtx(), IntCtx(), IntCtx()
-    iardx, iardy = IntCtx(), IntCtx()
-    # contexts for REFAGGNINST > 1 nested text regions (6.5.8.2.1:
-    # shared across the whole dictionary decode)
-    iadt, iafs, iads, iari = IntCtx(), IntCtx(), IntCtx(), IntCtx()
-    iardw, iardh = IntCtx(), IntCtx()
-    gr_cx = (
-        [[0, 0] for _ in range(_GR_CTX_SIZE[rtemplate])] if sdrefagg else None
-    )
-    # IAID code length spans input + new symbols (6.5.8.2.3)
-    id_codelen = max(1, (len(input_syms) + num_new - 1).bit_length()) if (
-        len(input_syms) + num_new > 1
-    ) else 1
-    iaid = IdCtx(id_codelen) if sdrefagg else None
-    new_syms: list = []
-    hcheight = 0
-    budget = max_pixels
-    while len(new_syms) < num_new:
-        dh = decode_int(mq, iadh)
-        if dh is OOB:
-            raise Jbig2Error("OOB height delta")
-        hcheight += dh
-        if hcheight <= 0 or hcheight > 10000:
-            raise Jbig2Error(f"bad symbol height {hcheight}")
-        symwidth = 0
-        while True:
-            dw = decode_int(mq, iadw)
-            if dw is OOB:
-                break  # end of height class
-            symwidth += dw
-            if symwidth <= 0 or symwidth > 10000:
-                raise Jbig2Error(f"bad symbol width {symwidth}")
-            budget -= symwidth * hcheight
-            if budget < 0:
-                raise Jbig2Unsupported("symbol dict exceeds max_pixels")
-            if sdrefagg:
-                # 6.5.8.2: refinement/aggregate coding of the new symbol
-                nrefs = decode_int(mq, iaai)
-                if nrefs is OOB or not 1 <= nrefs <= 10000:
-                    raise Jbig2Error("bad REFAGGNINST")
-                pool = list(input_syms) + new_syms
-                if nrefs != 1:
-                    # nested text region (6.5.8.2.1): SBSTRIPS=1, TL
-                    # corner, OR composition, DSOFFSET 0, contexts shared
-                    new_syms.append(
-                        _refagg_text(
-                            mq, symwidth, hcheight, nrefs, pool,
-                            rtemplate, r_at, gr_cx, iadt, iafs, iads,
-                            iaid, iari, iardw, iardh, iardx, iardy,
-                        )
-                    )
-                    if len(new_syms) > num_new:
-                        raise Jbig2Error(
-                            "too many symbols in height classes"
-                        )
-                    continue
-                rid = decode_id(mq, iaid)
-                rdx = decode_int(mq, iardx)
-                rdy = decode_int(mq, iardy)
-                if OOB in (rdx, rdy):
-                    raise Jbig2Error("OOB refinement offset")
-                if rid >= len(pool):
-                    raise Jbig2Error(f"refinement symbol id {rid}")
-                new_syms.append(
-                    decode_refinement(
-                        mq, gr_cx, symwidth, hcheight, pool[rid],
-                        rdx, rdy, template=rtemplate, at=r_at,
-                    )
-                )
-                if len(new_syms) > num_new:
-                    raise Jbig2Error("too many symbols in height classes")
-                continue
-            new_syms.append(
-                _decode_generic_into(
-                    mq, gb_cx, symwidth, hcheight, template, at, False
-                )
-            )
-            if len(new_syms) > num_new:
-                raise Jbig2Error("too many symbols in height classes")
-    # export flags over input + new symbols (T.88 6.5.10)
-    all_syms = list(input_syms) + new_syms
-    exported: list = []
-    cur_flag = 0
-    idx = 0
-    while idx < len(all_syms) and len(exported) <= num_ex:
-        run = decode_int(mq, iaex)
-        if run is OOB or run < 0:
-            raise Jbig2Error("bad export run")
-        if cur_flag:
-            exported.extend(all_syms[idx : idx + run])
-        idx += run
-        cur_flag ^= 1
-    if len(exported) != num_ex:
-        raise Jbig2Error(
-            f"exported {len(exported)} symbols, header says {num_ex}"
-        )
-    return exported
-
-
-# --- text region (T.88 6.4, arithmetic, no refinement) ------------------------
-
-
-def decode_text_region(
-    body: bytes, syms: list, max_pixels: int = 1 << 22,
-    tables: list | None = None,
-) -> tuple[dict, list]:
-    """Text-region segment body + symbol list -> (region info, bitmap)."""
-    info = _parse_region_info(body)
-    if info["w"] * info["h"] > max_pixels or not info["w"] or not info["h"]:
-        raise Jbig2Unsupported("text region exceeds max_pixels")
-    flags = int.from_bytes(body[17:19], "big")
-    sbhuff = flags & 1
-    refine = (flags >> 1) & 1
-    log_strips = (flags >> 2) & 3
-    ref_corner = (flags >> 4) & 3  # 0 BL, 1 TL, 2 BR, 3 TR
-    transposed = (flags >> 6) & 1
-    comb_op = (flags >> 7) & 3
-    def_pixel = (flags >> 9) & 1
-    ds_offset = (flags >> 10) & 0x1F
-    if ds_offset > 15:
-        ds_offset -= 32  # signed 5-bit
-    if sbhuff:
-        return _decode_text_region_huffman(
-            body, info, flags, syms, max_pixels, tables or []
-        )
-    strips = 1 << log_strips
-    pos = 19
-    rtemplate = (flags >> 15) & 1
-    r_at = list(_GR_NOMINAL_AT)
-    if refine and rtemplate == 0:
-        r_at = []
-        for _ in range(2):
-            ax = int.from_bytes(body[pos : pos + 1], "big", signed=True)
-            ay = int.from_bytes(body[pos + 1 : pos + 2], "big", signed=True)
-            r_at.append((ax, ay))
-            pos += 2
-    num_instances = int.from_bytes(body[pos : pos + 4], "big")
-    pos += 4
-    if num_instances > 100000:
-        raise Jbig2Unsupported("implausible instance count")
-    if not syms:
-        raise Jbig2Error("text region with no symbols")
-    codelen = max(1, (len(syms) - 1).bit_length())
-
-    mq = MQDecoder(body[pos:])
-    iadt, iafs, iads, iait = IntCtx(), IntCtx(), IntCtx(), IntCtx()
-    iari = IntCtx()
-    iardw, iardh, iardx, iardy = IntCtx(), IntCtx(), IntCtx(), IntCtx()
-    gr_cx = (
-        [[0, 0] for _ in range(_GR_CTX_SIZE[rtemplate])] if refine else None
-    )
-    iaid = IdCtx(codelen)
-    w, h = info["w"], info["h"]
-    bitmap = [[def_pixel] * w for _ in range(h)]
-
-    def draw(sym, s, t):
-        sh = len(sym)
-        sw = len(sym[0]) if sh else 0
-        for yy in range(sh):
-            py = t + yy
-            if 0 <= py < h:
-                prow = bitmap[py]
-                srow = sym[yy]
-                for xx in range(sw):
-                    px = s + xx
-                    if 0 <= px < w:
-                        v = srow[xx]
-                        if comb_op == 0:
-                            prow[px] |= v
-                        elif comb_op == 1:
-                            prow[px] &= v
-                        elif comb_op == 2:
-                            prow[px] ^= v
-                        else:
-                            prow[px] = v
-
-    stript = decode_int(mq, iadt)
-    if stript is OOB:
-        raise Jbig2Error("OOB strip T")
-    stript = -stript * strips
-    firsts = 0
-    ninst = 0
-    while ninst < num_instances:
-        dt = decode_int(mq, iadt)
-        if dt is OOB:
-            raise Jbig2Error("OOB DT")
-        stript += dt * strips
-        dfs = decode_int(mq, iafs)
-        if dfs is OOB:
-            raise Jbig2Error("OOB first S")
-        firsts += dfs
-        curs = firsts
-        first = True
-        while True:
-            if not first:
-                ids = decode_int(mq, iads)
-                if ids is OOB:
-                    break  # end of strip
-                curs += ids + ds_offset
-            first = False
-            curt = 0 if strips == 1 else decode_int(mq, iait)
-            if curt is OOB:
-                raise Jbig2Error("OOB CURT")
-            tt = stript + curt
-            sid = decode_id(mq, iaid)
-            if sid >= len(syms):
-                raise Jbig2Error(f"symbol id {sid} out of range")
-            sym = syms[sid]
-            if refine and decode_int(mq, iari):
-                # 6.4.11: instance is a refinement of the symbol
-                rdw = decode_int(mq, iardw)
-                rdh = decode_int(mq, iardh)
-                rdx = decode_int(mq, iardx)
-                rdy = decode_int(mq, iardy)
-                if OOB in (rdw, rdh, rdx, rdy):
-                    raise Jbig2Error("OOB refinement delta")
-                nw = (len(sym[0]) if sym else 0) + rdw
-                nh = len(sym) + rdh
-                if not (0 < nw <= 10000 and 0 < nh <= 10000):
-                    raise Jbig2Error("bad refined symbol dims")
-                sym = decode_refinement(
-                    mq, gr_cx, nw, nh, sym,
-                    (rdw >> 1) + rdx, (rdh >> 1) + rdy,
-                    template=rtemplate, at=r_at,
-                )
-            sh = len(sym)
-            sw = len(sym[0]) if sh else 0
-            if not transposed:
-                # T.88 6.4.5 3(c)(x): S is the left edge, T per corner
-                ty = tt if ref_corner in (1, 3) else tt - sh + 1
-                draw(sym, curs, ty)
-                curs += sw - 1
-            else:
-                tx = tt if ref_corner in (0, 1) else tt - sw + 1
-                draw(sym, tx, curs)
-                curs += sh - 1
-            ninst += 1
-            if ninst > num_instances:
-                raise Jbig2Error("text instance overflow")
-        # the strip ends only on the IDS OOB, which is always consumed
-    return info, bitmap
-
-
-# --- Huffman-coded variants (T.88 §6.4/§6.5 with Annex B tables) --------------
+# --- Huffman coding (T.88 Annex B) ------------------------------------------
 
 
 class _BitReader:
@@ -1451,172 +1095,7 @@ def _mmr_bitmap(payload: bytes, width: int, height: int) -> list:
         )
     except CcittError as e:
         raise Jbig2Error(f"mmr: {e}")
-    stride = (width + 7) // 8
-    return [
-        [(packed[y * stride + (x >> 3)] >> (7 - (x & 7))) & 1
-         for x in range(width)]
-        for y in range(height)
-    ]
-
-
-def _decode_symbol_dict_huffman(
-    body: bytes, flags: int, input_syms: list, max_pixels: int,
-    tables: list,
-) -> list:
-    """SDHUFF=1 dictionaries. SDREFAGG=0: height classes with collective
-    bitmaps, uncompressed or MMR (T.88 6.5.9). SDREFAGG=1: each symbol
-    is refinement/aggregate coded (6.5.8.2) — REFAGGNINST via SDHUFFAGG,
-    single-instance refinements as byte-aligned BMSIZE-byte MQ segments
-    (ID read as a SBSYMCODELEN-bit value, RDX/RDY via Table B.15, BMSIZE
-    via Table B.1), multi-instance aggregates as a nested Huffman text
-    region (6.5.8.2.1). Custom table selectors consume the referred
-    table segments in DH, DW, BMSIZE, AGG order (7.4.4.1.7)."""
-    sdrefagg = (flags >> 1) & 1
-    rtemplate = (flags >> 12) & 1
-    dh_sel = (flags >> 2) & 3
-    dw_sel = (flags >> 4) & 3
-    bm_sel = (flags >> 6) & 1
-    agg_sel = (flags >> 7) & 1
-    it = iter(tables)
-
-    def custom():
-        try:
-            return next(it)
-        except StopIteration:
-            raise Jbig2Error("missing referred custom table")
-
-    t_dh = custom() if dh_sel == 3 else std_table(4 if dh_sel == 0 else 5)
-    t_dw = custom() if dw_sel == 3 else std_table(2 if dw_sel == 0 else 3)
-    t_bm = custom() if bm_sel else std_table(1)
-    t_agg = custom() if agg_sel else std_table(1)
-    t_ex = std_table(1)
-    pos = 2  # no generic AT pixels in huffman mode (7.4.4.1.2)
-    r_at = list(_GR_NOMINAL_AT)
-    if sdrefagg and rtemplate == 0:
-        # SDRAT present iff SDREFAGG=1 and SDRTEMPLATE=0 (7.4.4.1.3)
-        r_at = []
-        for _ in range(2):
-            ax = int.from_bytes(body[pos : pos + 1], "big", signed=True)
-            ay = int.from_bytes(body[pos + 1 : pos + 2], "big", signed=True)
-            r_at.append((ax, ay))
-            pos += 2
-    num_ex = int.from_bytes(body[pos : pos + 4], "big")
-    num_new = int.from_bytes(body[pos + 4 : pos + 8], "big")
-    pos += 8
-    if num_new > 10000 or num_ex > 10000:
-        raise Jbig2Unsupported("implausible symbol counts")
-    # 6.5.8.2.3: fixed-length symbol ID codes span input + new symbols
-    total_ids = len(input_syms) + num_new
-    codelen = max(1, (total_ids - 1).bit_length()) if total_ids > 1 else 1
-    t_rd = std_table(15)
-    t_rsize = std_table(1)
-
-    br = _BitReader(body[pos:])
-    new_syms: list = []
-    hcheight = 0
-    budget = max_pixels
-    while len(new_syms) < num_new:
-        dh = t_dh.decode(br)
-        if dh is OOB:
-            raise Jbig2Error("OOB height delta")
-        hcheight += dh
-        if hcheight <= 0 or hcheight > 10000:
-            raise Jbig2Error(f"bad symbol height {hcheight}")
-        symwidth = 0
-        widths = []
-        totwidth = 0
-        while True:
-            dw = t_dw.decode(br)
-            if dw is OOB:
-                break
-            symwidth += dw
-            if symwidth <= 0 or symwidth > 10000:
-                raise Jbig2Error(f"bad symbol width {symwidth}")
-            totwidth += symwidth
-            budget -= symwidth * hcheight
-            if budget < 0:
-                raise Jbig2Unsupported("symbol dict exceeds max_pixels")
-            if sdrefagg:
-                # 6.5.8.2: each symbol coded individually, inline
-                nrefs = t_agg.decode(br)
-                if nrefs is OOB or not 1 <= nrefs <= 10000:
-                    raise Jbig2Error("bad REFAGGNINST")
-                pool = list(input_syms) + new_syms
-                if nrefs == 1:
-                    # 6.5.8.2.2 huffman form: fixed-length ID, B.15
-                    # offsets, then a byte-aligned BMSIZE-byte MQ
-                    # refinement segment with fresh contexts
-                    rid = br.read(codelen)
-                    rdx = t_rd.decode(br)
-                    rdy = t_rd.decode(br)
-                    bmsize = t_rsize.decode(br)
-                    if OOB in (rdx, rdy, bmsize) or bmsize <= 0:
-                        raise Jbig2Error("bad huffman refinement fields")
-                    if rid >= len(pool):
-                        raise Jbig2Error(f"refinement symbol id {rid}")
-                    seg = br.read_bytes(bmsize)
-                    mq = MQDecoder(seg)
-                    gr_cx = [
-                        [0, 0] for _ in range(_GR_CTX_SIZE[rtemplate])
-                    ]
-                    new_syms.append(
-                        decode_refinement(
-                            mq, gr_cx, symwidth, hcheight, pool[rid],
-                            rdx, rdy, template=rtemplate, at=r_at,
-                        )
-                    )
-                else:
-                    # 6.5.8.2.1: nested huffman text region (SBSTRIPS=1,
-                    # TL corner, OR, DSOFFSET 0, standard tables)
-                    new_syms.append(
-                        _refagg_text_huffman(
-                            br, symwidth, hcheight, nrefs, pool,
-                            rtemplate, r_at, codelen,
-                        )
-                    )
-                if len(new_syms) > num_new:
-                    raise Jbig2Error("too many symbols in height classes")
-                continue
-            widths.append(symwidth)
-            if len(new_syms) + len(widths) > num_new:
-                raise Jbig2Error("too many symbols in height classes")
-        if sdrefagg or not widths:
-            continue
-        bmsize = t_bm.decode(br)
-        if bmsize is OOB or bmsize < 0:
-            raise Jbig2Error("bad BMSIZE")
-        stride = (totwidth + 7) // 8
-        if bmsize == 0:
-            raw = br.read_bytes(stride * hcheight)
-            coll = [
-                [(raw[y * stride + (x >> 3)] >> (7 - (x & 7))) & 1
-                 for x in range(totwidth)]
-                for y in range(hcheight)
-            ]
-        else:
-            coll = _mmr_bitmap(br.read_bytes(bmsize), totwidth, hcheight)
-        x0 = 0
-        for w in widths:
-            new_syms.append([row[x0 : x0 + w] for row in coll])
-            x0 += w
-    # export runs (6.5.10), Table B.1
-    all_syms = list(input_syms) + new_syms
-    exported: list = []
-    cur_flag = 0
-    idx = 0
-    while idx < len(all_syms) and len(exported) <= num_ex:
-        run = t_ex.decode(br)
-        if run is OOB or run < 0:
-            raise Jbig2Error("bad export run")
-        if cur_flag:
-            exported.extend(all_syms[idx : idx + run])
-        idx += run
-        cur_flag ^= 1
-    if len(exported) != num_ex:
-        raise Jbig2Error(
-            f"exported {len(exported)} symbols, header says {num_ex}"
-        )
-    return exported
+    return _unpack_rows(packed, width, height)
 
 
 def _symbol_id_table(br: _BitReader, nsyms: int) -> HuffTable:
@@ -1648,111 +1127,309 @@ def _symbol_id_table(br: _BitReader, nsyms: int) -> HuffTable:
     return HuffTable([(l, 0, i, _N) for i, l in enumerate(lengths) if l])
 
 
-def _decode_text_region_huffman(
-    body: bytes, info: dict, flags: int, syms: list, max_pixels: int,
-    tables: list,
+# --- integer sources: one per coding ------------------------------------------
+#
+# The symbol-dictionary and text-region loops read every integer field
+# through one source object: DH DW AGGINST EX DT FS DS IT ID RI RDW RDH
+# RDX RDY (the T.88 names), each a zero-argument reader, plus
+# refine(sym, w, h, dx, dy). Only here do SDHUFF and SBHUFF branch.
+
+_INT_FIELDS = ("DH", "DW", "AGGINST", "EX", "DT", "FS", "DS", "IT", "RI",
+               "RDW", "RDH", "RDX", "RDY")
+
+
+class _ArithFields:
+    """Arithmetic source (Annex A): one IAx context per field and the
+    IAID tree over one MQ decoder; a refinement decodes on that same
+    coder with the owner's GR contexts."""
+
+    def __init__(self, data: bytes, codelen: int, rtemplate: int, r_at):
+        self.mq = mq = MQDecoder(data)
+        for name in _INT_FIELDS:
+            setattr(self, name, partial(decode_int, mq, IntCtx()))
+        self.codelen, self.iaid = codelen, None
+        self.rtemplate, self.r_at, self.gr_cx = rtemplate, r_at, None
+
+    def ID(self) -> int:
+        # built on first use: 2^(codelen+1) contexts that a dictionary
+        # without SDREFAGG never reads
+        if self.iaid is None:
+            self.iaid = IdCtx(self.codelen)
+        return decode_id(self.mq, self.iaid)
+
+    def refine(self, sym, w, h, dx, dy):
+        if self.gr_cx is None:
+            self.gr_cx = [[0, 0] for _ in range(_GR_CTX_SIZE[self.rtemplate])]
+        return decode_refinement(
+            self.mq, self.gr_cx, w, h, sym, dx, dy,
+            template=self.rtemplate, at=self.r_at,
+        )
+
+
+class _HuffmanFields:
+    """Huffman source: each field decodes with its table (tables maps
+    field -> HuffTable, RSIZE and BMSIZE included); IT is LOGSBSTRIPS raw
+    bits, RI one bit, ID the given reader. A refinement reads an RSIZE
+    byte count, then that many byte-aligned bytes as an MQ segment
+    decoded with fresh contexts; a count below min_size is an error."""
+
+    def __init__(self, br: _BitReader, tables: dict, read_id, log_strips: int,
+                 rtemplate: int, r_at, min_size: int):
+        for name, table in tables.items():
+            setattr(self, name, partial(table.decode, br))
+        self.br, self.ID, self.RI = br, read_id, br.read1
+        self.IT = partial(br.read, log_strips)
+        self.rtemplate, self.r_at, self.min_size = rtemplate, r_at, min_size
+
+    def refine(self, sym, w, h, dx, dy):
+        size = self.RSIZE()
+        if size is OOB or size < self.min_size:
+            raise Jbig2Error(f"bad refinement data size {size}")
+        mq = MQDecoder(self.br.read_bytes(size))
+        gr_cx = [[0, 0] for _ in range(_GR_CTX_SIZE[self.rtemplate])]
+        return decode_refinement(
+            mq, gr_cx, w, h, sym, dx, dy, template=self.rtemplate, at=self.r_at
+        )
+
+
+def _pick_tables(referred: list, selectors: dict) -> dict:
+    """{field: (selector, standard table numbers)} -> {field: HuffTable}.
+    A selector one past the standard numbers takes the next referred
+    custom table, in the order given (T.88 7.4.3.1.6, 7.4.4.1.7); a None
+    number is a reserved selector."""
+    custom = iter(referred)
+    out = {}
+    for field, (sel, std) in selectors.items():
+        if sel == len(std):
+            out[field] = next(custom, None)
+            if out[field] is None:
+                raise Jbig2Error("missing referred custom table")
+        elif std[sel] is None:
+            raise Jbig2Error(f"reserved {field} table selector {sel}")
+        else:
+            out[field] = std_table(std[sel])
+    return out
+
+
+def _codelen(nsyms: int) -> int:
+    """Fixed symbol-ID code length over nsyms symbols (at least 1)."""
+    return max(1, (nsyms - 1).bit_length())
+
+
+# --- symbol dictionary (T.88 6.5) ---------------------------------------------
+
+
+def decode_symbol_dict(
+    body: bytes, input_syms: list, max_pixels: int = 1 << 22,
+    tables: list | None = None,
+) -> list:
+    """Symbol-dictionary segment body -> list of EXPORTED symbol bitmaps
+    (rows of 0/1). Height classes of new symbols, each a generic region
+    (arithmetic), a slice of the class's collective bitmap (SDHUFF:
+    uncompressed or MMR, 6.5.9), or with SDREFAGG a refinement of one
+    earlier symbol (6.5.8.2.2) or an aggregate of several placed by a
+    nested text region (6.5.8.2.1); then the export runs (6.5.10)."""
+    flags = int.from_bytes(body[0:2], "big")
+    sdhuff = flags & 1
+    sdrefagg = (flags >> 1) & 1
+    template = (flags >> 10) & 3
+    rtemplate = (flags >> 12) & 1
+    if sdhuff:
+        # custom tables are consumed in DH, DW, BMSIZE, AGG order
+        tabs = _pick_tables(tables or [], {
+            "DH": ((flags >> 2) & 3, (4, 5, 5)),
+            "DW": ((flags >> 4) & 3, (2, 3, 3)),
+            "BMSIZE": ((flags >> 6) & 1, (1,)),
+            "AGGINST": ((flags >> 7) & 1, (1,)),
+        })
+    pos = 2
+    if not sdhuff:  # no generic AT pixels in huffman mode (7.4.4.1.2)
+        at, pos = _read_at(body, pos, 4 if template == 0 else 1)
+        at = _check_at(at, template)
+    r_at = _GR_NOMINAL_AT
+    if sdrefagg and rtemplate == 0:
+        r_at, pos = _read_at(body, pos, 2)
+    num_ex = int.from_bytes(body[pos : pos + 4], "big")
+    num_new = int.from_bytes(body[pos + 4 : pos + 8], "big")
+    pos += 8
+    if num_new > 10000 or num_ex > 10000:
+        raise Jbig2Unsupported("implausible symbol counts")
+    # symbol IDs span input + new symbols (6.5.8.2.3)
+    total = len(input_syms) + num_new
+    codelen = _codelen(total)
+    if sdhuff:
+        br = _BitReader(body[pos:])
+        # the nested aggregate region's tables are fixed (6.5.8.2.1)
+        tabs.update(EX=std_table(1), DT=std_table(11), FS=std_table(6),
+                    DS=std_table(8), RSIZE=std_table(1))
+        tabs.update(dict.fromkeys(("RDW", "RDH", "RDX", "RDY"), std_table(15)))
+        # IDs are codelen raw bits; an empty refinement segment is an error
+        src = _HuffmanFields(br, tabs, partial(br.read, codelen),
+                             log_strips=0, rtemplate=rtemplate, r_at=r_at,
+                             min_size=1)
+    else:
+        src = _ArithFields(body[pos:], codelen, rtemplate, r_at)
+        gb_cx = [[0, 0] for _ in range(_CTX_SIZE[template])]
+    syms = list(input_syms)  # input + new so far: the refinement pool
+    hcheight = 0
+    budget = max_pixels
+    while len(syms) < total:
+        dh = src.DH()
+        if dh is OOB:
+            raise Jbig2Error("OOB height delta")
+        hcheight += dh
+        if hcheight <= 0 or hcheight > 10000:
+            raise Jbig2Error(f"bad symbol height {hcheight}")
+        symwidth = 0
+        widths = []  # huffman: the class's collective bitmap follows it
+        while True:
+            dw = src.DW()
+            if dw is OOB:
+                break  # end of height class
+            symwidth += dw
+            if symwidth <= 0 or symwidth > 10000:
+                raise Jbig2Error(f"bad symbol width {symwidth}")
+            budget -= symwidth * hcheight
+            if budget < 0:
+                raise Jbig2Unsupported("symbol dict exceeds max_pixels")
+            if sdrefagg:
+                nrefs = src.AGGINST()
+                if nrefs is OOB or not 1 <= nrefs <= 10000:
+                    raise Jbig2Error("bad REFAGGNINST")
+                if nrefs == 1:
+                    rid = src.ID()
+                    rdx = src.RDX()
+                    rdy = src.RDY()
+                    if OOB in (rdx, rdy):
+                        raise Jbig2Error("OOB refinement offset")
+                    if rid >= len(syms):
+                        raise Jbig2Error(f"refinement symbol id {rid}")
+                    sym = src.refine(syms[rid], symwidth, hcheight, rdx, rdy)
+                else:
+                    sym = [[0] * symwidth for _ in range(hcheight)]
+                    _place_instances(src, sym, nrefs, syms, 1, 1, 0, 0, 0, 1)
+                syms.append(sym)
+            elif sdhuff:
+                widths.append(symwidth)
+            else:
+                syms.append(_decode_generic_into(
+                    src.mq, gb_cx, symwidth, hcheight, template, at, False
+                ))
+            if len(syms) + len(widths) > total:
+                raise Jbig2Error("too many symbols in height classes")
+        if widths:
+            bmsize = src.BMSIZE()
+            if bmsize is OOB or bmsize < 0:
+                raise Jbig2Error("bad BMSIZE")
+            totwidth = sum(widths)
+            if bmsize == 0:
+                raw = br.read_bytes((totwidth + 7) // 8 * hcheight)
+                coll = _unpack_rows(raw, totwidth, hcheight)
+            else:
+                coll = _mmr_bitmap(br.read_bytes(bmsize), totwidth, hcheight)
+            x0 = 0
+            for w in widths:
+                syms.append([row[x0 : x0 + w] for row in coll])
+                x0 += w
+    # export flags over input + new symbols (T.88 6.5.10)
+    exported: list = []
+    cur_flag = 0
+    idx = 0
+    while idx < len(syms) and len(exported) <= num_ex:
+        run = src.EX()
+        if run is OOB or run < 0:
+            raise Jbig2Error("bad export run")
+        if cur_flag:
+            exported.extend(syms[idx : idx + run])
+        idx += run
+        cur_flag ^= 1
+    if len(exported) != num_ex:
+        raise Jbig2Error(
+            f"exported {len(exported)} symbols, header says {num_ex}"
+        )
+    return exported
+
+
+# --- text region (T.88 6.4) ---------------------------------------------------
+
+
+def decode_text_region(
+    body: bytes, syms: list, max_pixels: int = 1 << 22,
+    tables: list | None = None,
 ) -> tuple[dict, list]:
-    """SBHUFF=1 text region (T.88 6.4 Huffman side, incl. REFINE=1
-    instances whose refinement data arrives as byte-aligned RSIZE-byte
-    MQ segments)."""
+    """Text-region segment body + symbol list -> (region info, bitmap)."""
+    info = _parse_region_info(body)
+    if info["w"] * info["h"] > max_pixels or not info["w"] or not info["h"]:
+        raise Jbig2Unsupported("text region exceeds max_pixels")
+    flags = int.from_bytes(body[17:19], "big")
+    sbhuff = flags & 1
+    refine = (flags >> 1) & 1
     log_strips = (flags >> 2) & 3
-    ref_corner = (flags >> 4) & 3
+    ref_corner = (flags >> 4) & 3  # 0 BL, 1 TL, 2 BR, 3 TR
     transposed = (flags >> 6) & 1
     comb_op = (flags >> 7) & 3
     def_pixel = (flags >> 9) & 1
     ds_offset = (flags >> 10) & 0x1F
     if ds_offset > 15:
-        ds_offset -= 32
-    refine = (flags >> 1) & 1
+        ds_offset -= 32  # signed 5-bit
     rtemplate = (flags >> 15) & 1
-    hf = int.from_bytes(body[19:21], "big")
-    fs_sel, ds_sel, dt_sel = hf & 3, (hf >> 2) & 3, (hf >> 4) & 3
-    rdw_sel, rdh_sel = (hf >> 6) & 3, (hf >> 8) & 3
-    rdx_sel, rdy_sel = (hf >> 10) & 3, (hf >> 12) & 3
-    rsize_sel = (hf >> 14) & 1
-    it = iter(tables)
-
-    def custom():
-        try:
-            return next(it)
-        except StopIteration:
-            raise Jbig2Error("missing referred custom table")
-
-    # assignment order: FS, DS, DT, RDW, RDH, RDX, RDY, RSIZE (7.4.3.1.6)
-    t_fs = custom() if fs_sel == 3 else std_table(6 + fs_sel)
-    t_ds = custom() if ds_sel == 3 else std_table(8 + ds_sel)
-    t_dt = custom() if dt_sel == 3 else std_table(11 + dt_sel)
-    pos = 21
-    t_rdw = t_rdh = t_rdx = t_rdy = t_rsize = None
-    r_at = list(_GR_NOMINAL_AT)
-    if refine:
-        def rtab(sel):
-            if sel == 3:
-                return custom()
-            if sel > 1:
-                raise Jbig2Error(f"reserved refinement table selector {sel}")
-            return std_table(14 + sel)
-
-        t_rdw = rtab(rdw_sel)
-        t_rdh = rtab(rdh_sel)
-        t_rdx = rtab(rdx_sel)
-        t_rdy = rtab(rdy_sel)
-        t_rsize = custom() if rsize_sel else std_table(1)
-        if rtemplate == 0:
-            r_at = []
-            for _ in range(2):
-                ax = int.from_bytes(body[pos : pos + 1], "big", signed=True)
-                ay = int.from_bytes(
-                    body[pos + 1 : pos + 2], "big", signed=True
-                )
-                r_at.append((ax, ay))
-                pos += 2
+    pos = 19
+    if sbhuff:
+        hf = int.from_bytes(body[19:21], "big")
+        pos = 21
+        # custom tables are consumed in FS, DS, DT, RDW, RDH, RDX, RDY,
+        # RSIZE order (7.4.3.1.6)
+        selectors = {
+            "FS": (hf & 3, (6, 7, 8)),
+            "DS": ((hf >> 2) & 3, (8, 9, 10)),
+            "DT": ((hf >> 4) & 3, (11, 12, 13)),
+        }
+        if refine:
+            for i, name in enumerate(("RDW", "RDH", "RDX", "RDY")):
+                selectors[name] = ((hf >> (6 + 2 * i)) & 3, (14, 15, None))
+            selectors["RSIZE"] = ((hf >> 14) & 1, (1,))
+        tabs = _pick_tables(tables or [], selectors)
+    r_at = _GR_NOMINAL_AT
+    if refine and rtemplate == 0:
+        r_at, pos = _read_at(body, pos, 2)
     num_instances = int.from_bytes(body[pos : pos + 4], "big")
     pos += 4
     if num_instances > 100000:
         raise Jbig2Unsupported("implausible instance count")
     if not syms:
         raise Jbig2Error("text region with no symbols")
-    strips = 1 << log_strips
+    if sbhuff:
+        br = _BitReader(body[pos:])
+        symtab = _symbol_id_table(br, len(syms))
+        src = _HuffmanFields(br, tabs, partial(symtab.decode, br),
+                             log_strips=log_strips, rtemplate=rtemplate,
+                             r_at=r_at, min_size=0)
+    else:
+        src = _ArithFields(body[pos:], _codelen(len(syms)), rtemplate, r_at)
+    bitmap = [[def_pixel] * info["w"] for _ in range(info["h"])]
+    _place_instances(src, bitmap, num_instances, syms, 1 << log_strips,
+                     ref_corner, transposed, comb_op, ds_offset, refine)
+    return info, bitmap
 
-    br = _BitReader(body[pos:])
-    symtab = _symbol_id_table(br, len(syms))
-    w, h = info["w"], info["h"]
-    bitmap = [[def_pixel] * w for _ in range(h)]
 
-    def draw(sym, s, t):
-        sh = len(sym)
-        sw = len(sym[0]) if sh else 0
-        for yy in range(sh):
-            py = t + yy
-            if 0 <= py < h:
-                prow = bitmap[py]
-                srow = sym[yy]
-                for xx in range(sw):
-                    px = s + xx
-                    if 0 <= px < w:
-                        v = srow[xx]
-                        if comb_op == 0:
-                            prow[px] |= v
-                        elif comb_op == 1:
-                            prow[px] &= v
-                        elif comb_op == 2:
-                            prow[px] ^= v
-                        else:
-                            prow[px] = v
-
-    stript = t_dt.decode(br)
+def _place_instances(src, bitmap, ninst, syms, strips, ref_corner,
+                     transposed, comb_op, ds_offset, refine) -> None:
+    """Decode ninst symbol instances from src and compose each into
+    bitmap (T.88 6.4.5). A REFAGGNINST > 1 aggregate symbol calls this
+    with the fixed parameters of 6.5.8.2.1: SBSTRIPS 1, TL corner, not
+    transposed, OR, DSOFFSET 0, REFINE 1, on a 0-filled bitmap."""
+    stript = src.DT()
     if stript is OOB:
         raise Jbig2Error("OOB strip T")
     stript = -stript * strips
     firsts = 0
-    ninst = 0
-    while ninst < num_instances:
-        dt = t_dt.decode(br)
+    placed = 0
+    while placed < ninst:
+        dt = src.DT()
         if dt is OOB:
             raise Jbig2Error("OOB DT")
         stript += dt * strips
-        dfs = t_fs.decode(br)
+        dfs = src.FS()
         if dfs is OOB:
             raise Jbig2Error("OOB first S")
         firsts += dfs
@@ -1760,54 +1437,49 @@ def _decode_text_region_huffman(
         first = True
         while True:
             if not first:
-                ids = t_ds.decode(br)
+                ids = src.DS()
                 if ids is OOB:
-                    break
+                    break  # end of strip
                 curs += ids + ds_offset
             first = False
-            curt = 0 if strips == 1 else br.read(log_strips)
+            curt = 0 if strips == 1 else src.IT()
+            if curt is OOB:
+                raise Jbig2Error("OOB CURT")
             tt = stript + curt
-            sid = symtab.decode(br)
+            sid = src.ID()
             if sid is OOB or sid >= len(syms):
                 raise Jbig2Error(f"symbol id {sid} out of range")
             sym = syms[sid]
-            if refine and br.read1():
-                # 6.4.11 huffman form: deltas via B.14/B.15, then a
-                # byte-aligned RSIZE-byte MQ refinement segment
-                rdw = t_rdw.decode(br)
-                rdh = t_rdh.decode(br)
-                rdx = t_rdx.decode(br)
-                rdy = t_rdy.decode(br)
-                rsize = t_rsize.decode(br)
-                if OOB in (rdw, rdh, rdx, rdy, rsize):
-                    raise Jbig2Error("OOB refinement field")
+            if refine and src.RI():
+                # 6.4.11: instance is a refinement of the symbol
+                rdw = src.RDW()
+                rdh = src.RDH()
+                rdx = src.RDX()
+                rdy = src.RDY()
+                if OOB in (rdw, rdh, rdx, rdy):
+                    raise Jbig2Error("OOB refinement delta")
                 nw = (len(sym[0]) if sym else 0) + rdw
                 nh = len(sym) + rdh
                 if not (0 < nw <= 10000 and 0 < nh <= 10000):
                     raise Jbig2Error("bad refined symbol dims")
-                seg = br.read_bytes(rsize)
-                mq = MQDecoder(seg)
-                gr_cx = [[0, 0] for _ in range(_GR_CTX_SIZE[rtemplate])]
-                sym = decode_refinement(
-                    mq, gr_cx, nw, nh, sym,
-                    (rdw >> 1) + rdx, (rdh >> 1) + rdy,
-                    template=rtemplate, at=r_at,
-                )
+                sym = src.refine(sym, nw, nh, (rdw >> 1) + rdx,
+                                 (rdh >> 1) + rdy)
             sh = len(sym)
             sw = len(sym[0]) if sh else 0
             if not transposed:
+                # T.88 6.4.5 3(c)(x): S is the left edge, T per corner
                 ty = tt if ref_corner in (1, 3) else tt - sh + 1
-                draw(sym, curs, ty)
+                _compose(bitmap, sym, curs, ty, comb_op)
                 curs += sw - 1
             else:
                 tx = tt if ref_corner in (0, 1) else tt - sw + 1
-                draw(sym, tx, curs)
+                _compose(bitmap, sym, tx, curs, comb_op)
                 curs += sh - 1
-            ninst += 1
-            if ninst > num_instances:
+            placed += 1
+            if placed > ninst:
                 raise Jbig2Error("text instance overflow")
-        # the strip ends only on the IDS OOB, which is always consumed
-    return info, bitmap
+        # the strip ends only on the IDS OOB, which is always consumed:
+        # an aggregate's dictionary stream continues after it
 
 
 # --- generic refinement decoding (T.88 §6.3) ----------------------------------
@@ -1957,23 +1629,18 @@ def decode_pattern_dict(body: bytes, max_pixels: int) -> list:
     ]
 
 
-def _decode_grayscale(
-    mq: MQDecoder, gb_cx: list, w: int, h: int, bits: int, template: int, at,
-    skip=None,
-) -> list:
-    """Annex C.5 gray-coded bitplane image -> rows of int values.
-    Planes decode MSB-first sharing ONE coder + context; bit j of the
-    value is plane_j XOR bit_{j+1}."""
+def _gray_values(planes, w: int, h: int) -> list:
+    """Annex C.5 gray-coded bitplanes, most significant first -> rows of
+    int values; bit j of a value is plane_j XOR bit_{j+1}."""
     vals = [[0] * w for _ in range(h)]
-    prev_bit = [[0] * w for _ in range(h)]
-    for j in range(bits - 1, -1, -1):
-        plane = _decode_generic_into(mq, gb_cx, w, h, template, at, False,
-                                     skip=skip)
+    prev = [[0] * w for _ in range(h)]
+    for plane in planes:
         for y in range(h):
+            vrow, prow, srow = vals[y], prev[y], plane[y]
             for x in range(w):
-                b = plane[y][x] ^ prev_bit[y][x]
-                vals[y][x] |= b << j
-                prev_bit[y][x] = b
+                b = srow[x] ^ prow[x]
+                vrow[x] = (vrow[x] << 1) | b
+                prow[x] = b
     return vals
 
 
@@ -2027,200 +1694,26 @@ def decode_halftone_region(
         # C.5 MMR form: all bitplanes as ONE G4 stream of hgh*bits rows
         # (the reference line carries across plane boundaries)
         stacked = _mmr_bitmap(body[38:], hgw, hgh * bits)
-        vals = [[0] * hgw for _ in range(hgh)]
-        prev = [[0] * hgw for _ in range(hgh)]
-        for j in range(bits - 1, -1, -1):
-            plane = stacked[(bits - 1 - j) * hgh : (bits - j) * hgh]
-            for y in range(hgh):
-                for x in range(hgw):
-                    b = plane[y][x] ^ prev[y][x]
-                    vals[y][x] |= b << j
-                    prev[y][x] = b
+        planes = (stacked[k * hgh : (k + 1) * hgh] for k in range(bits))
     else:
+        # the arithmetic planes share ONE coder + context
         mq = MQDecoder(body[38:])
         gb_cx = [[0, 0] for _ in range(_CTX_SIZE[template])]
         at = _NOMINAL_AT[template]
-        vals = _decode_grayscale(mq, gb_cx, hgw, hgh, bits, template, at,
+        planes = (
+            _decode_generic_into(mq, gb_cx, hgw, hgh, template, at, False,
                                  skip=skip)
-    w, h = info["w"], info["h"]
-    bitmap = [[def_pixel] * w for _ in range(h)]
+            for _ in range(bits)
+        )
+    vals = _gray_values(planes, hgw, hgh)
+    bitmap = [[def_pixel] * info["w"] for _ in range(info["h"])]
     pmax = len(patterns) - 1
     for mg in range(hgh):
         for ng in range(hgw):
             x = (hgx + mg * hry + ng * hrx) >> 8
             y = (hgy + mg * hrx - ng * hry) >> 8
-            pat = patterns[min(vals[mg][ng], pmax)]
-            for yy, row in enumerate(pat):
-                py = y + yy
-                if 0 <= py < h:
-                    prow = bitmap[py]
-                    for xx, v in enumerate(row):
-                        px = x + xx
-                        if 0 <= px < w:
-                            if comb_op == 0:
-                                prow[px] |= v
-                            elif comb_op == 1:
-                                prow[px] &= v
-                            elif comb_op == 2:
-                                prow[px] ^= v
-                            elif comb_op == 3:
-                                prow[px] = 1 - (prow[px] ^ v)
-                            else:
-                                prow[px] = v
+            _compose(bitmap, patterns[min(vals[mg][ng], pmax)], x, y, comb_op)
     return info, bitmap
-
-
-def _refagg_text(
-    mq, w, h, ninst, syms, rtemplate, r_at, gr_cx,
-    iadt, iafs, iads, iaid, iari, iardw, iardh, iardx, iardy,
-):
-    """Nested text region for aggregate symbol coding (6.5.8.2.1):
-    fixed parameters SBSTRIPS=1, REFCORNER=TL, TRANSPOSED=0, COMBOP=OR,
-    SBDEFPIXEL=0, SBDSOFFSET=0, REFINE=1; every context is the
-    dictionary's own (shared across all aggregates in the dict)."""
-    bitmap = [[0] * w for _ in range(h)]
-    stript = decode_int(mq, iadt)
-    if stript is OOB:
-        raise Jbig2Error("OOB aggregate strip T")
-    stript = -stript
-    firsts = 0
-    count = 0
-    while count < ninst:
-        dt = decode_int(mq, iadt)
-        if dt is OOB:
-            raise Jbig2Error("OOB aggregate DT")
-        stript += dt
-        dfs = decode_int(mq, iafs)
-        if dfs is OOB:
-            raise Jbig2Error("OOB aggregate first S")
-        firsts += dfs
-        curs = firsts
-        first = True
-        while True:
-            if not first:
-                ids = decode_int(mq, iads)
-                if ids is OOB:
-                    break
-                curs += ids
-            first = False
-            sid = decode_id(mq, iaid)
-            if sid >= len(syms):
-                raise Jbig2Error(f"aggregate symbol id {sid}")
-            sym = syms[sid]
-            if decode_int(mq, iari):
-                rdw = decode_int(mq, iardw)
-                rdh = decode_int(mq, iardh)
-                rdx = decode_int(mq, iardx)
-                rdy = decode_int(mq, iardy)
-                if OOB in (rdw, rdh, rdx, rdy):
-                    raise Jbig2Error("OOB aggregate refinement delta")
-                nw = (len(sym[0]) if sym else 0) + rdw
-                nh = len(sym) + rdh
-                if not (0 < nw <= 10000 and 0 < nh <= 10000):
-                    raise Jbig2Error("bad aggregate refined dims")
-                sym = decode_refinement(
-                    mq, gr_cx, nw, nh, sym,
-                    (rdw >> 1) + rdx, (rdh >> 1) + rdy,
-                    template=rtemplate, at=r_at,
-                )
-            sh = len(sym)
-            sw = len(sym[0]) if sh else 0
-            for yy in range(sh):
-                py = stript + yy
-                if 0 <= py < h:
-                    prow = bitmap[py]
-                    srow = sym[yy]
-                    for xx in range(sw):
-                        px = curs + xx
-                        if 0 <= px < w:
-                            prow[px] |= srow[xx]
-            curs += sw - 1
-            count += 1
-            if count > ninst:
-                raise Jbig2Error("aggregate instance overflow")
-        # strips end only on the IDS OOB (always consumed — this
-        # matters here because the dictionary stream continues)
-    return bitmap
-
-
-def _refagg_text_huffman(
-    br: _BitReader, w: int, h: int, ninst: int, syms: list,
-    rtemplate: int, r_at, codelen: int,
-) -> list:
-    """Nested Huffman text region for aggregate symbol coding
-    (6.5.8.2.1 with SDHUFF=1): fixed parameters SBSTRIPS=1,
-    REFCORNER=TL, TRANSPOSED=0, COMBOP=OR, SBDEFPIXEL=0, SBDSOFFSET=0,
-    REFINE=1; FS/DS/DT from Tables B.6/B.8/B.11, RDW/RDH/RDX/RDY from
-    Table B.15, RSIZE from Table B.1; symbol IDs are fixed
-    SBSYMCODELEN-bit values (Table 17); refinement data arrives as
-    byte-aligned RSIZE-byte MQ segments with fresh contexts."""
-    t_fs, t_ds, t_dt = std_table(6), std_table(8), std_table(11)
-    t_rd, t_rsize = std_table(15), std_table(1)
-    bitmap = [[0] * w for _ in range(h)]
-    stript = t_dt.decode(br)
-    if stript is OOB:
-        raise Jbig2Error("OOB aggregate strip T")
-    stript = -stript
-    firsts = 0
-    count = 0
-    while count < ninst:
-        dt = t_dt.decode(br)
-        if dt is OOB:
-            raise Jbig2Error("OOB aggregate DT")
-        stript += dt
-        dfs = t_fs.decode(br)
-        if dfs is OOB:
-            raise Jbig2Error("OOB aggregate first S")
-        firsts += dfs
-        curs = firsts
-        first = True
-        while True:
-            if not first:
-                ids = t_ds.decode(br)
-                if ids is OOB:
-                    break
-                curs += ids
-            first = False
-            sid = br.read(codelen)
-            if sid >= len(syms):
-                raise Jbig2Error(f"aggregate symbol id {sid}")
-            sym = syms[sid]
-            if br.read1():  # R bit (REFINE=1: present per instance)
-                rdw = t_rd.decode(br)
-                rdh = t_rd.decode(br)
-                rdx = t_rd.decode(br)
-                rdy = t_rd.decode(br)
-                rsize = t_rsize.decode(br)
-                if OOB in (rdw, rdh, rdx, rdy, rsize) or rsize <= 0:
-                    raise Jbig2Error("OOB aggregate refinement delta")
-                nw = (len(sym[0]) if sym else 0) + rdw
-                nh = len(sym) + rdh
-                if not (0 < nw <= 10000 and 0 < nh <= 10000):
-                    raise Jbig2Error("bad aggregate refined dims")
-                seg = br.read_bytes(rsize)
-                mq = MQDecoder(seg)
-                gr_cx = [[0, 0] for _ in range(_GR_CTX_SIZE[rtemplate])]
-                sym = decode_refinement(
-                    mq, gr_cx, nw, nh, sym,
-                    (rdw >> 1) + rdx, (rdh >> 1) + rdy,
-                    template=rtemplate, at=r_at,
-                )
-            sh = len(sym)
-            sw = len(sym[0]) if sh else 0
-            for yy in range(sh):
-                py = stript + yy
-                if 0 <= py < h:
-                    prow = bitmap[py]
-                    srow = sym[yy]
-                    for xx in range(sw):
-                        px = curs + xx
-                        if 0 <= px < w:
-                            prow[px] |= srow[xx]
-            curs += sw - 1
-            count += 1
-            if count > ninst:
-                raise Jbig2Error("aggregate instance overflow")
-    return bitmap
 
 
 def decode_table_segment(body: bytes) -> HuffTable:

@@ -129,15 +129,32 @@ def test_jbig2_mutation_robustness():
 
     from delphi_pdf_parser_spark.fixtures import (
         _jbig2_text_fixture_args,
+        jbig2_embed_refagg_dict,
+        jbig2_embed_refagg_dict_huffman,
+        jbig2_embed_text,
         jbig2_embed_text_huffman,
+        jbig2_embed_text_refine,
     )
 
+    syms, placements, pw, ph = _jbig2_text_fixture_args()
+    ref_o = [row + [0] for row in syms[2]]
+    ref_o[1][1] ^= 1
+    refined = [
+        (sid, s, t, ref_o if sid == 2 else None) for sid, s, t in placements
+    ]
+    base_syms = [[[1, 1], [1, 0]], [[0, 1], [1, 1]]]
+    ref_syms = [[[1, 0], [1, 1]], [[1, 1], [1, 1]]]
+    plc = [(0, 1, 1), (1, 5, 1), (0, 9, 4)]
     payloads = (
         jbig2_embed(_ccitt_test_bitmap()),
         jbig2_embed_text_huffman(*_jbig2_text_fixture_args()),
         jbig2_embed_text_huffman(
             *_jbig2_text_fixture_args(), collective="mmr"
         ),
+        jbig2_embed_text(*_jbig2_text_fixture_args()),
+        jbig2_embed_text_refine(syms, refined, pw, ph),
+        jbig2_embed_refagg_dict(base_syms, ref_syms, plc, 14, 8),
+        jbig2_embed_refagg_dict_huffman(base_syms, ref_syms, plc, 14, 8)[0],
     )
     for payload in payloads:
         for mut in _mutations(payload, rng):

@@ -143,3 +143,71 @@ def test_hostile_html_stays_in_budget(case):
     )
     assert proc.returncode == 0, (proc.returncode, proc.stderr[-2000:])
     assert len(json.loads(proc.stdout)) == 9
+
+
+_JBIG2_RUNNER = r"""
+import json, resource, sys
+
+resource.setrlimit(resource.RLIMIT_AS, (1 << 30, 1 << 30))
+resource.setrlimit(resource.RLIMIT_CPU, (5, 5))
+
+from delphi_pdf_parser_spark.fixtures import PdfBuilder
+from delphi_pdf_parser_spark.pdfcore.document import PdfDocument
+from delphi_pdf_parser_spark.pdfcore.images import (
+    extract_image, extract_images, iter_images,
+)
+from delphi_pdf_parser_spark.pdfcore.jbig2 import Jbig2Error, jbig2_decode
+
+# segment 0, page info, long-form referred-segment count 0x1FFFFFFF
+STREAM = bytes.fromhex("00000000" "30" "FFFFFFFF" "0000000000000000")
+assert len(STREAM) == 17
+if sys.argv[1] == "stream":
+    try:
+        jbig2_decode(STREAM)
+        out = ["decoded"]
+    except Jbig2Error as e:
+        out = ["Jbig2Error", str(e)]
+else:
+    b = PdfBuilder()
+    cat = b.add("<< /Type /Catalog /Pages 2 0 R >>")
+    b.add("<< /Type /Pages /Kids [3 0 R] /Count 1 >>")
+    b.add(
+        "<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
+        "/Resources << /XObject << /Jb 5 0 R >> >> /Contents 4 0 R >>"
+    )
+    b.add("<< /Length 6 >>", b"/Jb Do")
+    b.add(
+        "<< /Type /XObject /Subtype /Image /Width 16 /Height 10 "
+        "/BitsPerComponent 1 /ColorSpace /DeviceGray /Filter /JBIG2Decode "
+        f"/Length {len(STREAM)} >>",
+        STREAM,
+    )
+    pdf = b.build_classic(cat)
+    doc = PdfDocument(pdf)
+    for num, obj in iter_images(doc):
+        extract_image(doc, num, obj)
+    out = [[im.format for im in extract_images(pdf)], sorted(doc.failures)]
+print(json.dumps(out))
+"""
+
+
+@pytest.mark.parametrize("case", ["stream", "pdf"])
+def test_hostile_jbig2_segment_header_stays_in_budget(case):
+    """A 17-byte JBIG2 stream whose long-form referred-segment count
+    (2^29) runs past its data is a typed error inside 1 GB and 5 s, and
+    a PDF image coded with it falls back to raw passthrough."""
+    env = dict(os.environ, PYTHONPATH=_REPO, OPENBLAS_NUM_THREADS="1")
+    proc = subprocess.run(
+        [sys.executable, "-c", _JBIG2_RUNNER, case],
+        capture_output=True,
+        text=True,
+        cwd=_REPO,
+        env=env,
+        timeout=120,
+    )
+    assert proc.returncode == 0, (proc.returncode, proc.stderr[-2000:])
+    out = json.loads(proc.stdout)
+    if case == "stream":
+        assert out == ["Jbig2Error", "truncated segment header"]
+    else:
+        assert out == [["raw"], ["image_decode_failed"]]

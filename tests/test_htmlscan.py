@@ -4,8 +4,9 @@ The reference tokenizer below is the ``_segment`` loop and tag regex that
 main-content extraction and markdown used before the scanner; the frozen
 parsers are the regex versions of links, metadata, headings, tables,
 JSON-LD and sitemaps that the scanner replaced. They pin that the scanner
-reads exactly the old tags, and that the field parsers change rows only in
-the divergence classes (a)-(e) pinned one by one at the end.
+reads exactly the old tags but for divergence (f), and that the field
+parsers change rows only in the divergence classes (a)-(e); each class is
+pinned by one input at the end.
 """
 
 from __future__ import annotations
@@ -81,7 +82,10 @@ def _reference_tokens(html: str, rawtext: frozenset):
                 raw_until = None
                 yield tok
             continue
-        if not closing and name in rawtext:
+        # divergence (f): a self-closed <svg .../> opens no raw text
+        if not closing and name in rawtext and not (
+            name == "svg" and attrs.endswith("/")
+        ):
             raw_until = name
         yield tok
 
@@ -515,3 +519,26 @@ def test_class_e_text_angle_brackets_stay_text():
     assert _page_headings("u", page) == [("u", 0, 1, "a < b > c")]
     assert _old_tables("u", page) == [("u", 0, 0, 0, "1 0", False)]
     assert _page_tables("u", page) == [("u", 0, 0, 0, "1 <3 2 > 0", False)]
+
+
+def test_class_f_self_closed_svg_opens_no_raw_text():
+    # HTML5 honours "/>" on foreign elements: the old tokenizer took
+    # <svg/> as an open raw-text element, which dropped the rest of the
+    # page from main-content extraction; <script/> still ignores the
+    # slash, as browsers do
+    para = b"<p>" + b"This paragraph is the main content of the page. " * 3
+    page = b"<html><body><svg/>" + para + b"</p></body></html>"
+    s = page.decode("latin-1")
+    names = [t[3] for t in scan_tags(s, htmlcore._RAWTEXT) if t[3]]
+    assert names == ["html", "body", "svg", "p", "p", "body", "html"]
+    out = htmlcore.extract_main_content(page)
+    assert out["n_content_blocks"] == 1
+    assert out["text"].startswith("This paragraph is the main content")
+    svg = "<svg width=1 /><p>x</p></svg>"
+    assert [t[3] for t in scan_tags(svg, htmlcore._RAWTEXT)] == [
+        "svg", "p", None, "p", "svg"
+    ]
+    script = "<script/><p>x</p></script><p>y</p>"
+    assert [t[3] for t in scan_tags(script, htmlcore._RAWTEXT)] == [
+        "script", "script", "p", None, "p"
+    ]

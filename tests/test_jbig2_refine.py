@@ -431,3 +431,29 @@ def test_halftone_mmr_with_skip_flag():
         invert=False,
     )
     assert skipped == plain
+
+
+def test_text_region_sbcombop_3_is_xnor():
+    """T.88 7.4.3.1.1: text-region SBCOMBOP 3 is XNOR (jbig2dec's
+    Jbig2ComposeOp agrees), not REPLACE."""
+    from delphi_pdf_parser_spark.fixtures import jbig2_embed_text
+    from delphi_pdf_parser_spark.pdfcore.jbig2 import _parse_segment_header
+
+    syms, placements, pw, ph = _jbig2_text_fixture_args()
+    data = bytearray(jbig2_embed_text(syms, placements, pw, ph))
+    pos = 0
+    while True:
+        hdr, body = _parse_segment_header(bytes(data), pos)
+        if hdr["type"] == 6:  # the immediate text region
+            break
+        pos = body + hdr["length"]
+    flags = int.from_bytes(data[body + 17 : body + 19], "big") | (3 << 7)
+    data[body + 17 : body + 19] = flags.to_bytes(2, "big")
+    w, h, p = jbig2_decode(bytes(data), invert=False)
+    exp = [[0] * pw for _ in range(ph)]
+    for sid, s, t in placements:
+        for yy, row in enumerate(syms[sid]):
+            for xx, v in enumerate(row):
+                exp[t + yy][s + xx] = 1 - (exp[t + yy][s + xx] ^ v)
+    assert (w, h) == (pw, ph)
+    assert _unpack(w, h, p) == exp
