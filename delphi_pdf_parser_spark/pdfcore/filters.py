@@ -20,6 +20,8 @@ import zlib
 
 import numpy as np
 
+from .lexer import hex_decode
+
 
 class FilterError(Exception):
     def __init__(self, code: str, msg: str = ""):
@@ -45,30 +47,7 @@ def flate_decode(data: bytes) -> bytes:
 
 
 def ahx_decode(data: bytes) -> bytes:
-    out = bytearray()
-    a = 0
-    have = False
-    for c in data:
-        if c == 0x3E:  # >
-            break
-        v = -1
-        if 0x30 <= c <= 0x39:
-            v = c - 0x30
-        elif 0x41 <= c <= 0x46:
-            v = c - 0x41 + 10
-        elif 0x61 <= c <= 0x66:
-            v = c - 0x61 + 10
-        if v < 0:
-            continue
-        if have:
-            out.append(a * 16 + v)
-            have = False
-        else:
-            a = v
-            have = True
-    if have:
-        out.append(a * 16)
-    return bytes(out)
+    return hex_decode(data.partition(b">")[0])
 
 
 def a85_decode(data: bytes) -> bytes:

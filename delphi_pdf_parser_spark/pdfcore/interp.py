@@ -1436,30 +1436,35 @@ def _consume_inline_data(doc, lex: Lexer, d: dict):
     # unknown codec: leave position; the EI scan below resynchronizes
 
 
-def run_inline_image(csi: CSI, rdb, lex: Lexer):
-    """pdf_run_BI (:1311-1361): parse dict, skip EOL after ID, consume
-    payload, scan to EI. With a raster device attached the captured
-    payload is also decoded and painted."""
+def skip_inline_image(doc, lex: Lexer) -> tuple[dict, int, int, bool]:
+    """pdf_run_BI's walk from just after BI: parse the dict, skip the EOL
+    after ID, consume the payload and scan to EI. Returns (dict, payload
+    start, payload end, whether an EI followed)."""
     from .parser import parse_dict
 
-    doc = csi.doc
     d = parse_dict(lex)
-    ch = lex.read_byte()
-    if ch == 13 and lex.peek_byte() == 10:
+    if lex.read_byte() == 13 and lex.peek_byte() == 10:
         lex.read_byte()
     start = lex.tell()
     _consume_inline_data(doc, lex, d)
+    stop = lex.tell()
+    e = lex.data.find(b"E", stop, lex.end)
+    lex.pos = lex.end if e < 0 else e + 1
+    return d, start, stop, lex.read_byte() == 0x49  # 'I'
+
+
+def run_inline_image(csi: CSI, rdb, lex: Lexer):
+    """pdf_run_BI (:1311-1361). With a raster device attached the
+    captured payload is also decoded and painted."""
+    doc = csi.doc
+    d, start, stop, ei = skip_inline_image(doc, lex)
     if csi.draw is not None:
-        payload = lex.data[start : lex.tell()]
         try:
             csi.draw.fill_inline_image(
-                doc, d, payload, csi.gs.ctm, csi.gs.fill_rgb, gs=csi.gs
+                doc, d, lex.data[start:stop], csi.gs.ctm, csi.gs.fill_rgb,
+                gs=csi.gs,
             )
         except Exception:
             doc.note_failure("raster_inline_image")
-    ch = lex.read_byte()
-    while ch != 0x45 and ch != -1:  # 'E'
-        ch = lex.read_byte()
-    ch = lex.read_byte()
-    if ch != 0x49:  # 'I'
+    if not ei:
         doc.note_failure("inline_image_ei")

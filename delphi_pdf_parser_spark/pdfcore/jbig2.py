@@ -614,12 +614,17 @@ def _jbig2_decode(
             mmr = flags & 1
             template = (flags >> 1) & 3
             tpgdon = bool(flags & 8)
+            # both codings decode top-down: rows past the foot of a known
+            # page never show, so they are not decoded
+            rows = info["h"]
+            if page_h:
+                rows = max(1, min(rows, page_h - info["y"]))
             if mmr:
-                region = _mmr_bitmap(body[18:], info["w"], info["h"])
+                region = _mmr_bitmap(body[18:], info["w"], rows)
             else:
                 at, pos = _read_at(body, 18, 4 if template == 0 else 1)
                 region = decode_generic_region(
-                    body[pos:], info["w"], info["h"], template=template,
+                    body[pos:], info["w"], rows, template=template,
                     at=at, tpgdon=tpgdon, max_pixels=max_pixels,
                 )
             ensure_page(info["x"] + info["w"], info["y"] + info["h"])

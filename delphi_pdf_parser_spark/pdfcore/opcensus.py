@@ -73,8 +73,7 @@ def _census_stream(
     doc: PdfDocument, contents: bytes, resources: dict | None,
     counts: dict, depth: int,
 ) -> None:
-    from .interp import _consume_inline_data
-    from .parser import parse_dict
+    from .interp import skip_inline_image
 
     xobjects = None
     shadings = None
@@ -104,17 +103,8 @@ def _census_stream(
             if op == "BI":
                 counts["image"] += 1
                 counts["n_ops"] += 1
-                lex = toks.handoff(end)
                 try:
-                    d = parse_dict(lex)
-                    ch = lex.read_byte()
-                    if ch == 13 and lex.peek_byte() == 10:
-                        lex.read_byte()
-                    _consume_inline_data(doc, lex, d)
-                    ch = lex.read_byte()
-                    while ch != 0x45 and ch != -1:  # scan to 'EI'
-                        ch = lex.read_byte()
-                    lex.read_byte()
+                    skip_inline_image(doc, toks.handoff(end))
                 except Exception:
                     return  # corrupt inline payload: stop this stream
                 break  # refill after the payload

@@ -1,4 +1,4 @@
-"""COS object parser (recursive descent).
+"""COS object parser: one recursive value reader behind the entry points.
 
 Mirrors the reference's pdf_parse_array / pdf_parse_dict / pdf_parse_ind_obj
 (src/vcl/digcommtype.pas:911-1084, :1087-1266, :1883-2075) including:
@@ -19,140 +19,102 @@ class PdfSyntaxError(Exception):
     pass
 
 
-def parse_array(lex: lx.Lexer) -> list:
-    """Parse after the '[' token."""
-    arr: list = []
-    n = 0  # pending integer count (for `a b R` lookahead)
-    a = b = 0
-    while True:
-        tok, val = lex.lex()
-        if tok in (lx.TOK_CLOSE_ARRAY, lx.TOK_EOF):
-            break
-        if tok == lx.TOK_INT:
-            if n == 2:
-                arr.append(a)
-                a = b
-                n = 1
-            if n == 1:
-                b = val
-                n = 2
+def _value(lex: lx.Lexer, tok: int, val):
+    """The value whose first token is (tok, val), read to its end: the
+    one token->value switch of arrays, dicts, object-stream members and
+    indirect objects. An int comes back bare; arrays and dicts apply
+    their own ``a b R`` rules here, indirect objects in parse_ind_obj.
+    A nested array or dict recurses here directly, one frame per level."""
+    if tok == lx.TOK_NAME:
+        return Name(val)
+    if tok == lx.TOK_INT or tok == lx.TOK_REAL or tok == lx.TOK_STRING:
+        return val
+    if tok == lx.TOK_OPEN_DICT:
+        d: dict = {}
+        while True:
+            tok, key = lex.lex()
+            if tok == lx.TOK_CLOSE_DICT or tok == lx.TOK_EOF:
+                return d
+            if tok == lx.TOK_KEYWORD and key == b"ID":
+                return d
+            if tok != lx.TOK_NAME:
+                raise PdfSyntaxError("expected name as dict key")
+            tok, val = lex.lex()
+            if tok == lx.TOK_INT:
+                save = lex.tell()
+                tok, b = lex.lex()
+                if tok == lx.TOK_INT and lex.lex()[0] == lx.TOK_R:
+                    d[key] = IndirectRef(val, b)
+                    continue
+                # two bare ints: reference keeps only the first as value
+                lex.seek(save)
+                d[key] = val
             else:
-                a = val
-                n = 1
-            continue
-        if tok == lx.TOK_R:
-            if n == 2:
-                arr.append(IndirectRef(a, b))
-                n = 0
+                d[key] = _value(lex, tok, val)
+    if tok == lx.TOK_OPEN_ARRAY:
+        arr: list = []
+        n = 0  # pending integer count (for `a b R` lookahead)
+        a = b = 0
+        while True:
+            tok, val = lex.lex()
+            if tok == lx.TOK_CLOSE_ARRAY or tok == lx.TOK_EOF:
+                break
+            if tok == lx.TOK_INT:
+                if n == 2:
+                    arr.append(a)
+                    a = b
+                    n = 1
+                if n == 1:
+                    b = val
+                    n = 2
+                else:
+                    a = val
+                    n = 1
                 continue
-            raise PdfSyntaxError("cannot parse indirect reference in array")
-        # flush pending ints
+            if tok == lx.TOK_R:
+                if n == 2:
+                    arr.append(IndirectRef(a, b))
+                    n = 0
+                    continue
+                raise PdfSyntaxError("cannot parse indirect reference in array")
+            # flush pending ints
+            if n >= 1:
+                arr.append(a)
+            if n == 2:
+                arr.append(b)
+            n = 0
+            arr.append(_value(lex, tok, val))
         if n >= 1:
             arr.append(a)
         if n == 2:
             arr.append(b)
-        n = 0
-        if tok == lx.TOK_OPEN_ARRAY:
-            arr.append(parse_array(lex))
-        elif tok == lx.TOK_OPEN_DICT:
-            arr.append(parse_dict(lex))
-        elif tok == lx.TOK_NAME:
-            arr.append(Name(val))
-        elif tok == lx.TOK_REAL:
-            arr.append(val)
-        elif tok == lx.TOK_STRING:
-            arr.append(val)
-        elif tok == lx.TOK_TRUE:
-            arr.append(True)
-        elif tok == lx.TOK_FALSE:
-            arr.append(False)
-        elif tok == lx.TOK_NULL:
-            arr.append(None)
-        else:
-            raise PdfSyntaxError(f"cannot parse token {tok} in array")
-    if n >= 1:
-        arr.append(a)
-    if n == 2:
-        arr.append(b)
-    return arr
-
-
-def parse_dict(lex: lx.Lexer) -> dict:
-    """Parse after the '<<' token.  Also terminates (without error) at an
-    ``ID`` keyword so inline-image dictionaries parse (reference:
-    src/vcl/digcommtype.pas:1126-1133)."""
-    d: dict = {}
-    while True:
-        tok, val = lex.lex()
-        if tok == lx.TOK_CLOSE_DICT or tok == lx.TOK_EOF:
-            return d
-        if tok == lx.TOK_KEYWORD and val == b"ID":
-            return d
-        if tok != lx.TOK_NAME:
-            raise PdfSyntaxError("expected name as dict key")
-        key = val
-        tok, val = lex.lex()
-        if tok == lx.TOK_OPEN_ARRAY:
-            d[key] = parse_array(lex)
-        elif tok == lx.TOK_OPEN_DICT:
-            d[key] = parse_dict(lex)
-        elif tok == lx.TOK_NAME:
-            d[key] = Name(val)
-        elif tok == lx.TOK_REAL:
-            d[key] = val
-        elif tok == lx.TOK_STRING:
-            d[key] = val
-        elif tok == lx.TOK_TRUE:
-            d[key] = True
-        elif tok == lx.TOK_FALSE:
-            d[key] = False
-        elif tok == lx.TOK_NULL:
-            d[key] = None
-        elif tok == lx.TOK_INT:
-            a = val
-            save = lex.tell()
-            tok2, val2 = lex.lex()
-            if tok2 == lx.TOK_INT:
-                b = val2
-                save2 = lex.tell()
-                tok3, _ = lex.lex()
-                if tok3 == lx.TOK_R:
-                    d[key] = IndirectRef(a, b)
-                    continue
-                lex.seek(save2)
-                # two bare ints: reference keeps only the first as value
-                d[key] = a
-                lex.seek(save)
-                continue
-            lex.seek(save)
-            d[key] = a
-        else:
-            raise PdfSyntaxError(f"cannot parse token {tok} as dict value")
-
-
-def parse_stm_obj(lex: lx.Lexer):
-    """Parse one object inside an object stream (pdf_parse_stm_obj,
-    src/vcl/digcommtype.pas:1824-1881): a bare value, no obj/endobj."""
-    tok, val = lex.lex()
-    if tok == lx.TOK_OPEN_ARRAY:
-        return parse_array(lex)
-    if tok == lx.TOK_OPEN_DICT:
-        return parse_dict(lex)
-    if tok == lx.TOK_NAME:
-        return Name(val)
-    if tok == lx.TOK_REAL:
-        return val
-    if tok == lx.TOK_STRING:
-        return val
+        return arr
     if tok == lx.TOK_TRUE:
         return True
     if tok == lx.TOK_FALSE:
         return False
     if tok == lx.TOK_NULL:
         return None
-    if tok == lx.TOK_INT:
-        return val
-    raise PdfSyntaxError("syntax error in object stream object")
+    raise PdfSyntaxError(f"cannot parse token {tok} as a value")
+
+
+def parse_array(lex: lx.Lexer) -> list:
+    """Parse after the '[' token."""
+    return _value(lex, lx.TOK_OPEN_ARRAY, None)
+
+
+def parse_dict(lex: lx.Lexer) -> dict:
+    """Parse after the '<<' token.  Also terminates (without error) at an
+    ``ID`` keyword so inline-image dictionaries parse (reference:
+    src/vcl/digcommtype.pas:1126-1133)."""
+    return _value(lex, lx.TOK_OPEN_DICT, None)
+
+
+def parse_stm_obj(lex: lx.Lexer):
+    """Parse one object inside an object stream (pdf_parse_stm_obj,
+    src/vcl/digcommtype.pas:1824-1881): a bare value, no obj/endobj."""
+    tok, val = lex.lex()
+    return _value(lex, tok, val)
 
 
 def parse_ind_obj(lex: lx.Lexer):
@@ -162,75 +124,41 @@ def parse_ind_obj(lex: lx.Lexer):
     payload (object numbers in valid xrefs never sit at offset 0, which is
     inside the %PDF header — same sentinel the reference uses).
     """
-    tok, val = lex.lex()
+    tok, num = lex.lex()
     if tok != lx.TOK_INT:
         raise PdfSyntaxError("expected object number")
-    num = val
-    tok, val = lex.lex()
+    tok, gen = lex.lex()
     if tok != lx.TOK_INT:
         raise PdfSyntaxError("expected generation number")
-    gen = val
-    tok, val = lex.lex()
-    if tok != lx.TOK_OBJ:
+    if lex.lex()[0] != lx.TOK_OBJ:
         raise PdfSyntaxError("expected 'obj' keyword")
 
     tok, val = lex.lex()
-    obj = None
-    skip_tail = False
-    if tok == lx.TOK_OPEN_ARRAY:
-        obj = parse_array(lex)
-    elif tok == lx.TOK_OPEN_DICT:
-        obj = parse_dict(lex)
-    elif tok == lx.TOK_NAME:
-        obj = Name(val)
-    elif tok == lx.TOK_REAL:
-        obj = val
-    elif tok == lx.TOK_STRING:
-        obj = val
-    elif tok == lx.TOK_TRUE:
-        obj = True
-    elif tok == lx.TOK_FALSE:
-        obj = False
-    elif tok == lx.TOK_NULL:
+    if tok == lx.TOK_ENDOBJ:
         obj = None
     elif tok == lx.TOK_INT:
-        a = val
-        tok, val = lex.lex()
-        if tok in (lx.TOK_STREAM, lx.TOK_ENDOBJ):
-            obj = a
-            skip_tail = True
-        elif tok == lx.TOK_INT:
-            b = val
-            tok, _ = lex.lex()
-            if tok == lx.TOK_R:
-                obj = IndirectRef(a, b)
-            else:
-                raise PdfSyntaxError("expected R keyword")
-        else:
+        # `a stream|endobj` is the int a; otherwise `a b R` must follow
+        obj = val
+        tok, b = lex.lex()
+        if tok == lx.TOK_INT and lex.lex()[0] == lx.TOK_R:
+            obj = IndirectRef(val, b)
+            tok = lex.lex()[0]
+        elif tok != lx.TOK_STREAM and tok != lx.TOK_ENDOBJ:
             raise PdfSyntaxError("expected R keyword")
-    elif tok == lx.TOK_ENDOBJ:
-        obj = None
-        skip_tail = True
     else:
-        raise PdfSyntaxError("syntax error in indirect object")
-
-    if not skip_tail:
-        tok, val = lex.lex()
+        obj = _value(lex, tok, val)
+        tok = lex.lex()[0]
 
     stm_ofs = 0
     if tok == lx.TOK_STREAM:
+        # spaces, then CR LF, CR or LF; with no EOL the reference warns
+        # 'line feed missing' and keeps the position after the byte it
+        # consumed looking for one
         c = lex.read_byte()
         while c == 0x20:
             c = lex.read_byte()
-        if c == 13:
-            if lex.peek_byte() == 10:
-                lex.read_byte()
-        elif c == 10:
-            pass
-        else:
-            # reference warns 'line feed missing' and keeps position AFTER
-            # the byte it consumed looking for the EOL
-            pass
+        if c == 13 and lex.peek_byte() == 10:
+            lex.read_byte()
         stm_ofs = lex.tell()
     # TOK_ENDOBJ / anything else: stm_ofs stays 0
     return obj, num, gen, stm_ofs

@@ -41,27 +41,67 @@ elif case == "comment_in_inline_dict":
     b, cat = simple_doc(
         b"/P << /MCID 0 %" + b"c" * (50 * MB) + b"\n>> BDC " + TAIL + b" EMC"
     )
+elif case == "hex_operand":
+    content = b"<" + b"41 " * (16 * MB) + b"> BX EX " + TAIL
+    b, cat = simple_doc(
+        content, filters="/FlateDecode", encoded=zlib.compress(content, 9)
+    )
+elif case == "deep_array_content":
+    b, cat = simple_doc(b"[" * 900 + b"]" * 900 + b" " + TAIL)
+elif case == "deep_array_object":
+    b, cat = simple_doc(TAIL, extra_stream_dict="/Deep " + "[" * 900 + "]" * 900)
+elif case == "open_arrays":
+    b, cat = simple_doc(TAIL + b" " + b"[" * 100000)
+elif case == "open_dicts":
+    b, cat = simple_doc(TAIL + b" " + b"<<" * 100000)
 res = extract_text(b.build_classic(cat))
 print(json.dumps([res.status, res.text, res.failures]))
 """
 
 
-@pytest.mark.parametrize(
-    "case", ["flate_whitespace", "comment_before_dict", "comment_in_inline_dict"]
-)
-def test_hostile_lexing_stays_in_budget(case):
+def _run(runner: str, case: str, timeout: int = 120):
+    """The JSON that ``runner`` prints for ``case`` in a fresh subprocess."""
     env = dict(os.environ, PYTHONPATH=_REPO, OPENBLAS_NUM_THREADS="1")
     proc = subprocess.run(
-        [sys.executable, "-c", _RUNNER, case],
+        [sys.executable, "-c", runner, case],
         capture_output=True,
         text=True,
         cwd=_REPO,
         env=env,
-        timeout=120,
+        timeout=timeout,
     )
     assert proc.returncode == 0, (proc.returncode, proc.stderr[-2000:])
-    status, text, failures = json.loads(proc.stdout)
-    assert (status, text, failures) == ("ok", "after\r\n", {})
+    return json.loads(proc.stdout)
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        "flate_whitespace",
+        "comment_before_dict",
+        "comment_in_inline_dict",
+        "hex_operand",
+        "deep_array_content",
+        "deep_array_object",
+    ],
+)
+def test_hostile_lexing_stays_in_budget(case):
+    """A 48 MB hex-string operand decodes at C speed, and arrays nested
+    900 deep, in a content stream or in an indirect object, parse."""
+    assert _run(_RUNNER, case) == ["ok", "after\r\n", {}]
+
+
+@pytest.mark.parametrize(
+    "case, code",
+    [
+        ("open_arrays", "page_error:RecursionError"),
+        ("open_dicts", "page_error:PdfSyntaxError"),
+    ],
+)
+def test_hostile_nesting_is_one_page_error(case, code):
+    """100,000 unclosed ``[`` (or ``<<``) after the text end the page in
+    one typed error inside the budget, and the document still opens."""
+    assert _run(_RUNNER, case) == ["ok", "", {code: 1}]
 
 
 _HTML_RUNNER = r"""
@@ -132,17 +172,7 @@ print(json.dumps(counts))
 def test_hostile_html_stays_in_budget(case):
     """Every HTML parser, and the sitemap parser, returns on each page
     inside 1 GB and 5 s of CPU: the one tag scanner is linear."""
-    env = dict(os.environ, PYTHONPATH=_REPO, OPENBLAS_NUM_THREADS="1")
-    proc = subprocess.run(
-        [sys.executable, "-c", _HTML_RUNNER, case],
-        capture_output=True,
-        text=True,
-        cwd=_REPO,
-        env=env,
-        timeout=300,
-    )
-    assert proc.returncode == 0, (proc.returncode, proc.stderr[-2000:])
-    assert len(json.loads(proc.stdout)) == 9
+    assert len(_run(_HTML_RUNNER, case, timeout=300)) == 9
 
 
 _JBIG2_RUNNER = r"""
@@ -167,6 +197,16 @@ if sys.argv[1] == "stream":
         out = ["decoded"]
     except Jbig2Error as e:
         out = ["Jbig2Error", str(e)]
+elif sys.argv[1] == "tall_region":
+    from delphi_pdf_parser_spark.fixtures import _ccitt_test_bitmap, jbig2_embed
+
+    flat = jbig2_embed(_ccitt_test_bitmap())
+    # page info, then region info, both start with width 16, height 10
+    size = bytes.fromhex("00000010" "0000000a")
+    h_at = flat.index(size, flat.index(size) + 1) + 4
+    tall = flat[:h_at] + (131082).to_bytes(4, "big") + flat[h_at + 4 :]
+    assert len(tall) == 97
+    out = [jbig2_decode(tall, b"", 16, 10) == jbig2_decode(flat, b"", 16, 10)]
 else:
     b = PdfBuilder()
     cat = b.add("<< /Type /Catalog /Pages 2 0 R >>")
@@ -196,18 +236,15 @@ def test_hostile_jbig2_segment_header_stays_in_budget(case):
     """A 17-byte JBIG2 stream whose long-form referred-segment count
     (2^29) runs past its data is a typed error inside 1 GB and 5 s, and
     a PDF image coded with it falls back to raw passthrough."""
-    env = dict(os.environ, PYTHONPATH=_REPO, OPENBLAS_NUM_THREADS="1")
-    proc = subprocess.run(
-        [sys.executable, "-c", _JBIG2_RUNNER, case],
-        capture_output=True,
-        text=True,
-        cwd=_REPO,
-        env=env,
-        timeout=120,
-    )
-    assert proc.returncode == 0, (proc.returncode, proc.stderr[-2000:])
-    out = json.loads(proc.stdout)
+    out = _run(_JBIG2_RUNNER, case)
     if case == "stream":
         assert out == ["Jbig2Error", "truncated segment header"]
     else:
         assert out == [["raw"], ["image_decode_failed"]]
+
+
+def test_hostile_jbig2_tall_region_stays_in_budget():
+    """A 97-byte stream whose generic region is 131,082 rows tall on a
+    10-row page decodes only the rows the page shows, inside 1 GB and
+    5 s, to the bitmap of the same region 10 rows tall."""
+    assert _run(_JBIG2_RUNNER, "tall_region") == [True]

@@ -124,24 +124,28 @@ def test_random_content_streams_extract(ops):
         assert any(c == ch for c in it), (shown, res.text)
 
 
-def _assert_fill_is_classic(data: bytes):
-    """ContentTokens.fill() with every TOK_NUMS run expanded is the
-    classic token stream, numbers compared as the interpreter stores them
-    (float(val), sign of zero included), and every token's end is the
-    classic scanner's position after it. ContentTokens.lex() hands out
-    the same tokens one at a time, each run member as a TOK_REAL."""
+def _assert_scanners_are_classic(data: bytes):
+    """Lexer.lex() and ContentTokens.fill() (every TOK_NUMS run expanded)
+    both emit the frozen byte-branch scanner's tokens, each token ending
+    where the classic scanner's position is after it; run members are
+    compared as the interpreter stores them (float(val), sign of zero
+    included). ContentTokens.lex() hands out the same tokens one at a
+    time, each run member as a TOK_REAL."""
     import math
 
     from delphi_pdf_parser_spark.pdfcore import lexer as lx
+    from pdf_syntax_oracle import ClassicLexer
 
-    classic = lx.Lexer(data)
+    classic = ClassicLexer(data)
     seen = []
+    while not seen or seen[-1][0] != lx.TOK_EOF:
+        seen.append((*classic.lex(), classic.pos))
 
-    def next_classic():
-        tok, val = classic.lex()
-        seen.append((tok, val))
-        return tok, val, classic.pos
+    lexer = lx.Lexer(data)
+    for tok, val, end in seen:
+        assert (*lexer.lex(), lexer.pos) == (tok, val, end)
 
+    expected = iter(seen)
     cur = lx.ContentTokens(lx.Lexer(data))
     for _ in range(300):
         buf = cur.fill()
@@ -149,18 +153,21 @@ def _assert_fill_is_classic(data: bytes):
             if tok == lx.TOK_NUMS:
                 assert len(val) >= 2
                 for v in val:
-                    ctok, cval, cend = next_classic()
+                    ctok, cval, cend = next(expected)
                     assert ctok in (lx.TOK_INT, lx.TOK_REAL)
                     assert v == float(cval)
                     assert math.copysign(1.0, v) == math.copysign(1.0, float(cval))
                 assert end == cend
             else:
-                assert (tok, val, end) == next_classic()
+                assert (tok, val, end) == next(expected)
+        # a buffer ends at <<, where the interpreter hands off
+        assert lx.TOK_OPEN_DICT not in [tok for tok, _val, _end in buf[:-1]]
         if buf[-1][0] == lx.TOK_EOF:
             break
+    assert next(expected, None) is None
 
     one = lx.ContentTokens(lx.Lexer(data))
-    for ctok, cval in seen:
+    for ctok, cval, _end in seen:
         tok, val = one.lex()
         if tok == lx.TOK_REAL and ctok == lx.TOK_INT:
             assert val == float(cval)
@@ -172,22 +179,22 @@ def _assert_fill_is_classic(data: bytes):
 @given(
     st.lists(
         st.sampled_from(
-            b"0123456789+-.()[]<>/%\\\r\n\t ABCTdfmj*'\"ET#\x00\xff\x80"
+            b"0123456789+-.()[]<>{}/%\\\r\n\t ABCTdfmj*'\"ET#\x00\xff\x80"
             b"truefalsnulobjendstramxi"
         ),
         max_size=64,
     ).map(bytes)
 )
 def test_bulk_tokenizer_equals_classic_lexer(data):
-    """ContentTokens (the bulk regex content lexer) must emit the exact
-    token stream of the classic byte scanner for ANY input — the bulk
-    patterns are strict subsets and everything else falls back."""
-    _assert_fill_is_classic(data)
+    """Lexer.lex() and ContentTokens (the one regex token grammar) emit
+    the exact token stream of the frozen byte-branch scanner for ANY
+    input."""
+    _assert_scanners_are_classic(data)
 
 
 _RUN_PIECES = st.one_of(
     st.sampled_from(
-        [bytes([c]) for c in b"0123456789+-.()[]<>/%\\\r\n\t ABCTdfmj*'\"ET#\x00\xff\x80"]
+        [bytes([c]) for c in b"0123456789+-.()[]<>{}/%\\\r\n\t ABCTdfmj*'\"ET#\x00\xff\x80"]
         + [b"%c\n", b"Tm"]
     ),
     st.sampled_from([b" ", b" -0 ", b"\n", b" 0.5 "]),
@@ -200,7 +207,68 @@ _RUN_PIECES = st.one_of(
 def test_number_run_tokens_equal_classic_lexer(data):
     """Number-heavy streams: every TOK_NUMS run from ContentTokens.fill()
     expands to the classic scanner's number tokens."""
-    _assert_fill_is_classic(data)
+    _assert_scanners_are_classic(data)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    st.lists(
+        st.sampled_from(
+            [b"(", b")", b"\\", b"\r", b"\n", b"\r\n", b"a", b"7", b"<", b">", b"<<", b" ", b"%", b"["]
+        ),
+        max_size=32,
+    ).map(b"".join)
+)
+def test_string_tokens_equal_classic_lexer(data):
+    """String-heavy streams: literal strings with and without escapes,
+    nesting or raw EOLs, hex strings, and their stray closers."""
+    _assert_scanners_are_classic(data)
+
+
+# key/value-shaped token soups: mostly a name, then one to three tokens
+# weighted toward ints and R, so the `a b R` rules, ID, stray closers
+# and keyword keys all come up
+_KEYS = st.sampled_from([b"/A", b"/B", b"/C", b"ID", b"x", b">>", b"]", b"1", b"<<"])
+_VALUE_TOKENS = st.sampled_from(
+    [
+        b"[", b"]", b"<<", b">>", b"/N", b"0", b"1", b"2", b"-3", b"1.5",
+        b"R", b"R", b"obj", b"endobj", b"stream", b"stream\r\n", b"(s)",
+        b"(a\\)b)", b"<41 4>", b"true", b"false", b"null", b"{", b")", b"x",
+        b"%c\n",
+    ]
+)
+_SOUPS = st.lists(
+    st.tuples(_KEYS, st.lists(_VALUE_TOKENS, min_size=1, max_size=3)), max_size=8
+).map(lambda pairs: [t for key, value in pairs for t in (key, *value)])
+
+
+@settings(max_examples=1000, deadline=None)
+@given(
+    st.sampled_from(["parse_array", "parse_dict", "parse_stm_obj", "parse_ind_obj"]),
+    st.booleans(),
+    _SOUPS,
+)
+def test_value_reader_equals_classic_parser(entry, obj_header, pieces):
+    """On random dict/array/``R``/``ID`` token soups each parser entry
+    point returns the frozen recursive-descent parser's value (exact
+    types: True is not 1, a Name is not a str) with the lexer at the
+    same position, or raises PdfSyntaxError at the same position."""
+    import pdf_syntax_oracle as classic
+
+    from delphi_pdf_parser_spark.pdfcore import lexer as lx
+    from delphi_pdf_parser_spark.pdfcore import parser
+
+    data = b" ".join(([b"1", b"0", b"obj"] if obj_header else []) + pieces)
+
+    def outcome(parse, lexer):
+        try:
+            return "value", repr(parse(lexer)), lexer.pos
+        except parser.PdfSyntaxError:
+            return "error", lexer.pos
+
+    assert outcome(getattr(parser, entry), lx.Lexer(data)) == outcome(
+        getattr(classic, entry), classic.ClassicLexer(data)
+    )
 
 
 def _content_doc(content: bytes) -> bytes:
@@ -215,8 +283,11 @@ def test_number_run_negative_zero_pushes_positive_zero():
 
     from delphi_pdf_parser_spark.pdfcore import lexer as lx
 
-    (tok, val, _end), _tm = lx.ContentTokens(lx.Lexer(b"1 -0 2 Tm")).fill()
+    (tok, val, _end), (tm, _, _), (eof, _, _) = lx.ContentTokens(
+        lx.Lexer(b"1 -0 2 Tm")
+    ).fill()
     assert tok == lx.TOK_NUMS and val == [1.0, 0.0, 2.0]
+    assert (tm, eof) == (lx.TOK_KEYWORD, lx.TOK_EOF)
     assert math.copysign(1.0, val[1]) == 1.0
 
 

@@ -18,8 +18,10 @@ N`` is that workload's corpus at seed N). ``--corpus fixtures`` takes the
 ``generate_fixtures()`` PDFs (``--docs`` does not apply): few docs, but
 the only ones that reach the short-string, 2-byte CID and general
 per-char text paths. Before timing, the two sides' statuses, page texts,
-failure codes and metadata are compared and any difference is printed;
-``--rounds 0`` only compares.
+failure codes and metadata, their ``opcensus.op_census`` rows and their
+``images.extract_images`` output (format and a SHA-256 of each payload)
+are compared and any difference is printed; ``--rounds 0`` only
+compares. Only ``extract_text`` is timed.
 """
 
 from __future__ import annotations
@@ -59,11 +61,27 @@ def corpus_docs(corpus: str, n: int, seed: int) -> list[bytes]:
     ]
 
 
-def result_digest(extract_text, docs: list[bytes]) -> list[str]:
+def _outcome(fn, d):
+    """fn(d), or the name of the exception it raised."""
+    try:
+        return fn(d)
+    except Exception as e:
+        return type(e).__name__
+
+
+def result_digest(pdfcore, docs: list[bytes]) -> list[str]:
+    op_census = importlib.import_module(pdfcore.__name__ + ".opcensus").op_census
+    extract_images = importlib.import_module(pdfcore.__name__ + ".images").extract_images
     out = []
     for d in docs:
-        r = extract_text(d)
-        key = [r.status, r.pages, sorted(r.failures.items()), r.metadata]
+        r = pdfcore.extract_text(d)
+        images = _outcome(extract_images, d)
+        if isinstance(images, list):
+            images = [[im.format, hashlib.sha256(im.data).hexdigest()] for im in images]
+        key = [
+            r.status, r.pages, sorted(r.failures.items()), r.metadata,
+            _outcome(op_census, d), images,
+        ]
         blob = json.dumps(key, sort_keys=True)
         out.append(hashlib.sha256(blob.encode("utf-8")).hexdigest())
     return out
@@ -87,11 +105,9 @@ def main(argv=None) -> int:
     args = ap.parse_args(argv)
 
     docs = corpus_docs(args.corpus, args.docs, args.seed)
-    sides = {
-        "a": load_pdfcore(args.a, "pdfcore_a").extract_text,
-        "b": load_pdfcore(args.b, "pdfcore_b").extract_text,
-    }
-    da, db = (result_digest(sides[k], docs) for k in "ab")
+    pdfcores = {"a": load_pdfcore(args.a, "pdfcore_a"), "b": load_pdfcore(args.b, "pdfcore_b")}
+    da, db = (result_digest(pdfcores[k], docs) for k in "ab")
+    sides = {k: m.extract_text for k, m in pdfcores.items()}
     diff = [i for i, (x, y) in enumerate(zip(da, db)) if x != y]
     print(f"docs={len(docs)} output_diffs={len(diff)} {diff[:10]}")
     if args.rounds <= 0:
