@@ -42,10 +42,9 @@ import struct
 
 from .cff import CffError, CffFont
 from .sfnt import SfntError, SfntFont
-from .textdev import advances
 from .type1 import parse_type1_encoding
 
-# advance_table memo: key packing, the codes it spans, states kept per font
+# advance_state memo: key packing, the codes it spans, states kept per font
 _PACK_STATE = struct.Struct("4d").pack
 _CODES = np.arange(256)
 _ADV_TABLES_MAX = 64
@@ -198,8 +197,6 @@ class FontDesc:
     def pen_adv_array(self):
         """NumPy advance table for gid 0..255 (vectorized text device)."""
         if self._adv_array is None:
-            import numpy as np
-
             self._adv_array = np.array(
                 [self.pen_advance(g) for g in range(256)], dtype=np.float64
             )
@@ -324,11 +321,17 @@ class FontDesc:
         return table
 
     def fast_arrays(self):
-        """NumPy companion of fast_table for whole-string vectorization:
-        (w f64[256], cu i64[2,256]). ``w`` is the code's width, NaN at
-        codes without a single-codepoint mapping, so a NaN advance marks a
+        """NumPy companions of fast_table for whole-string vectorization,
+        one entry per code: (w f64[256], cu i64[2,256], pen f64[256],
+        chars str, plain bytes). ``w`` is the code's width, NaN at codes
+        without a single-codepoint mapping, so a NaN advance marks a
         string the per-code loop must take. ``cu`` stacks each code's cid
-        and ucs, so one fancy-index gathers both. None when the font has
+        and ucs, so one fancy-index gathers both; ``pen`` is the text
+        device's pen advance of the code's cid. ``chars`` is the
+        ``codecs.charmap_decode`` table of a segment's text, and
+        ``plain`` lists the codes whose text it holds: everything with a
+        width except ligatures and code points ``chr`` rejects, which
+        the text device's per-glyph paths handle. None when the font has
         no 1-byte fast table."""
         fa = self._fast_arrays
         if fa is not None:
@@ -337,33 +340,70 @@ class FontDesc:
         if not table:
             self._fast_arrays = False
             return None
-        import numpy as np
-
         cu = np.zeros((2, 256), dtype=np.int64)
         w = np.full(256, np.nan, dtype=np.float64)
+        pen = np.zeros(256, dtype=np.float64)
+        chars = ["\ufffe"] * 256  # undefined: charmap_decode raises
+        plain = bytearray()
         for code, ent in enumerate(table):
             if ent is not None and len(ent[1]) == 1:
-                cu[0, code] = ent[0]
-                cu[1, code] = ent[1][0]
-                w[code] = ent[2]
-        self._fast_arrays = (w, cu)
+                cid, (ucs,), w[code] = ent
+                cu[0, code] = cid
+                cu[1, code] = ucs
+                pen[code] = self.pen_advance(cid)
+                if 0 <= ucs < 0x110000 and not 0xFB00 <= ucs <= 0xFB06:
+                    chars[code] = chr(ucs)
+                    plain.append(code)
+        self._fast_arrays = (w, cu, pen, "".join(chars), bytes(plain))
         return self._fast_arrays
 
-    def advance_table(self, ks: float, cs: float, ws: float, ta: float) -> list:
-        """The 1-byte fast path's advance of every code at one text state
-        (``textdev.advances`` over codes 0..255, NaN at codes without a
-        single-codepoint mapping), as a list for per-string folds.
-        Memoized per font on the parameters' exact bits (so +0.0 and
-        -0.0 stay apart), a bounded number of states at a time."""
+    def advance_state(self, ks: float, cs: float, ws: float, ta: float):
+        """The 1-byte fast path's advances at one text state: an
+        AdvanceState whose ``array`` is ``advances`` over codes 0..255
+        (NaN at codes without a single-codepoint mapping). Memoized per
+        font on the parameters' exact bits (so +0.0 and -0.0 stay
+        apart), a bounded number of states at a time; segments of one
+        text run that share the state share the object."""
         key = _PACK_STATE(ks, cs, ws, ta)
-        tbl = self._adv_tables.get(key)
-        if tbl is None:
+        state = self._adv_tables.get(key)
+        if state is None:
             if len(self._adv_tables) >= _ADV_TABLES_MAX:
                 self._adv_tables.clear()
-            w = self.fast_arrays()[0]
-            tbl = advances(w, _CODES, ks, cs, ws, ta).tolist()
-            self._adv_tables[key] = tbl
-        return tbl
+            state = AdvanceState(advances(self.fast_arrays()[0], ks, cs, ws, ta))
+            self._adv_tables[key] = state
+        return state
+
+
+def advances(w, ks: float, cs: float, ws: float, ta: float):
+    """Horizontal advance of each code 0..255 of the 1-byte fast path
+    at one text state: ``(w*ks [+ cs] [+ ws at code 32]) [* ta]``, where
+    ks is size*0.001*Tz, cs is Tc*Tz and ws is Tw*Tz. A bracketed step is
+    skipped where it would be an identity (cs == 0, ta == 1, ws NaN,
+    which stands for Tw == 0), since adding 0.0 still turns -0.0 into
+    +0.0."""
+    tx = w * ks
+    if cs != 0.0:
+        tx = tx + cs
+    if ws == ws:
+        tx = tx + (_CODES == 32) * ws
+    if ta != 1.0:
+        tx = tx * ta
+    return tx
+
+
+class AdvanceState:
+    """One text state's advance of every code: ``array`` (f64[256]),
+    ``table`` (the same as a list, for per-string folds) and ``finite``
+    (the codes whose advance is finite, as ``bytes.translate``
+    deletechars: a string those delete to nothing has a finite end x
+    from any finite start)."""
+
+    __slots__ = ("array", "table", "finite")
+
+    def __init__(self, array):
+        self.array = array
+        self.table = array.tolist()
+        self.finite = bytes(np.flatnonzero(np.isfinite(array)).astype(np.uint8))
 
 
 # Per-process memo of parsed ToUnicode CMap streams, keyed by content

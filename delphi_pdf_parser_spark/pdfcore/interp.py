@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import zlib
 from functools import reduce
+from math import isfinite
 from operator import add
 
 import numpy as np
@@ -174,6 +175,9 @@ class CSI:
         self.text: TextRun | None = None
         self.tm = IDENTITY
         self.tlm = IDENTITY
+        # (tm, codes, advance list) of the last string while its end x
+        # is not folded into tm yet: see _show_codes and text_matrix
+        self.tm_pending = None
         self.text_mode = 0
         self.top_ctm = ctm
         self.font_cache: dict = {}
@@ -221,15 +225,29 @@ class CSI:
         if dostroke:
             dev.text(text, ctm)
 
+    def text_matrix(self):
+        """tm, with a deferred string end x folded in first, as long as
+        tm is still the tuple that string left (any text-positioning
+        operator since has replaced it, so its end x is never read)."""
+        tm = self.tm
+        pending = self.tm_pending
+        if pending is not None:
+            self.tm_pending = None
+            if pending[0] is tm:
+                ta, tb, tc, td, te, tf = tm
+                end_e = reduce(add, map(pending[2].__getitem__, pending[1]), te)
+                tm = self.tm = (ta, tb, tc, td, end_e, tf)
+        return tm
+
     def show_space(self, tadj: float):
         gs = self.gs
         if gs.font is None:
             self.doc.note_failure("text_no_font")
             return
         if gs.font.wmode == 0:
-            self.tm = _concat(_translate(tadj * gs.scale, 0), self.tm)
+            self.tm = _concat(_translate(tadj * gs.scale, 0), self.text_matrix())
         else:
-            self.tm = _concat(_translate(0, tadj), self.tm)
+            self.tm = _concat(_translate(0, tadj), self.text_matrix())
 
     def _run(self, font, a, b, c, d, wmode) -> TextRun:
         """The TextRun the next glyph joins: the current one while font,
@@ -270,7 +288,8 @@ class CSI:
                 tsm[5] - vy * gs.size * 0.001,
             )
 
-        trm = _concat(tsm, self.tm)
+        tm = self.text_matrix()
+        trm = _concat(tsm, tm)
         t = self._run(font, trm[0], trm[1], trm[2], trm[3], font.wmode)
         t.add(gid, ucs[0], trm[4], trm[5])
         for extra in ucs[1:]:
@@ -279,12 +298,12 @@ class CSI:
         if font.wmode == 0:
             w0 = font.get_hmtx_w(cid) * 0.001
             tx = (w0 * gs.size + gs.char_space) * gs.scale
-            self.tm = _concat(_translate(tx, 0), self.tm)
+            self.tm = _concat(_translate(tx, 0), tm)
         else:
             _vx, _vy, vw = font.get_vmtx(cid)
             w1 = vw * 0.001
             ty = w1 * gs.size + gs.char_space
-            self.tm = _concat(_translate(0, ty), self.tm)
+            self.tm = _concat(_translate(0, ty), tm)
 
     def show_string(self, buf: bytes):
         gs = self.gs
@@ -325,7 +344,7 @@ class CSI:
         font = gs.font
         size, scale, rise = gs.size, gs.scale, gs.rise
         char_space, word_space = gs.char_space, gs.word_space
-        ta, tb, tc, td, te, tf = self.tm
+        ta, tb, tc, td, te, tf = self.text_matrix()
         sa = size * scale
         t = self._run(font, sa * ta, sa * tb, size * tc, size * td, 0)
 
@@ -338,20 +357,27 @@ class CSI:
             # moves; the end x is a left fold over the font's advance
             # table (the order np.cumsum adds in, which sum() does not
             # promise), the glyph positions come from one pass per run in
-            # TextRun.columns. Per-char tx = (w*k + char_space)*scale,
-            # word_space added after code 32, identical to the scalar
-            # fold; the table is NaN at unmapped and multi-codepoint
-            # codes, so one NaN test on the end x replaces a pre-pass
+            # textdev._segment_columns. Per-char tx = (w*k +
+            # char_space)*scale, word_space added after code 32,
+            # identical to the scalar fold; the table is NaN at unmapped
+            # and multi-codepoint codes, so a NaN end x sends the string
+            # to the loop below (which records cannot_encode_cpt)
             ks, cs_s = k * scale, char_space * scale
             ws_s = word_space * scale if word_space != 0.0 else _NAN
-            tbl = font.advance_table(ks, cs_s, ws_s, ta)
-            end_e = reduce(add, map(tbl.__getitem__, codes), te)
+            state = font.advance_state(ks, cs_s, ws_s, ta)
+            if isfinite(te) and not codes.translate(None, state.finite):
+                # finite start plus finite advances cannot end in NaN:
+                # the string is a segment, and its end x is folded only
+                # if something reads tm before replacing it
+                t.add_segment(codes, te, base_e, base_f + tf, state)
+                self.tm = tm = (ta, tb, tc, td, te, tf)
+                self.tm_pending = (tm, codes, state.table)
+                return
+            end_e = reduce(add, map(state.table.__getitem__, codes), te)
             if end_e == end_e:
-                t.add_segment(codes, te, base_e, base_f + tf, ks, cs_s, ws_s, ta)
+                t.add_segment(codes, te, base_e, base_f + tf, state)
                 self.tm = (ta, tb, tc, td, end_e, tf)
                 return
-            # NaN: the loop below handles the string (and records
-            # cannot_encode_cpt)
 
         parts = t.parts
         n0 = len(parts)
@@ -433,12 +459,33 @@ def run_stream(csi: CSI, rdb, lexer: Lexer):
     # stack-overflow trim sits in the number branches (the only ones
     # that grow the stack) — observable state per token is unchanged
     T_NUMS, T_INT, T_REAL = lx.TOK_NUMS, lx.TOK_INT, lx.TOK_REAL
+    T_NUMS_KW, T_STRING_KW = lx.TOK_NUMS_KW, lx.TOK_STRING_KW
     T_STRING, T_NAME, T_KW = lx.TOK_STRING, lx.TOK_NAME, lx.TOK_KEYWORD
     T_OPEN_ARR, T_CLOSE_ARR = lx.TOK_OPEN_ARRAY, lx.TOK_CLOSE_ARRAY
     T_OPEN_DICT, T_EOF = lx.TOK_OPEN_DICT, lx.TOK_EOF
     T_ENDSTREAM = lx.TOK_ENDSTREAM
     while True:
         for tok, val, end in fill():
+            if tok == T_NUMS_KW or tok == T_STRING_KW:
+                # an operator token: its operands as their own token
+                # would be, then the keyword
+                operands, val = val
+                if in_array:
+                    if tok == T_STRING_KW:
+                        csi.show_string(operands)
+                    else:
+                        for v in operands:
+                            csi.show_space(-v * csi.gs.size * 0.001)
+                elif tok == T_STRING_KW:
+                    csi.string = operands
+                else:
+                    stack = csi.stack
+                    stack.extend(operands)
+                    if len(stack) > 32:
+                        for _ in range(len(stack) - 32):
+                            doc.note_failure("stack_overflow")
+                        csi.stack = stack[:32]
+                tok = T_KW
             if in_array:
                 if tok == T_CLOSE_ARR:
                     in_array = 0
@@ -542,8 +589,6 @@ def _st(csi: CSI, i: int) -> float:
 
 def run_keyword(csi: CSI, rdb, lex: Lexer | None, kw: bytes):
     """``lex`` is the raw Lexer after the operator (only BI reads it)."""
-    doc = csi.doc
-    gs = csi.gs
     # frequency-ordered fast heads (text-showing + positioning dominate
     # real content streams); the remaining chain is unchanged
     if kw in (b"Tj", b"TJ"):
@@ -553,20 +598,18 @@ def run_keyword(csi: CSI, rdb, lex: Lexer | None, kw: bytes):
             csi.show_text(csi.obj)
         return
     if kw == b"Tm":
-        csi.tm = (
-            _st(csi, 0),
-            _st(csi, 1),
-            _st(csi, 2),
-            _st(csi, 3),
-            _st(csi, 4),
-            _st(csi, 5),
-        )
-        csi.tlm = csi.tm
+        st = csi.stack
+        if len(st) >= 6:
+            csi.tm = csi.tlm = (st[0], st[1], st[2], st[3], st[4], st[5])
+        else:
+            csi.tm = csi.tlm = (*st, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0)[:6]
         return
     if kw == b"Td":
         csi.tlm = _concat(_translate(_st(csi, 0), _st(csi, 1)), csi.tlm)
         csi.tm = csi.tlm
         return
+    doc = csi.doc
+    gs = csi.gs
     if kw == b"BT":
         csi.in_text = 1
         csi.tm = IDENTITY

@@ -21,7 +21,8 @@ name :514-602, hex string :629-672, keyword table :674-764):
 
 One regex grammar (``_TOKEN_RE``) reads every token kind: ``Lexer.lex()``
 is one anchored match, and ``ContentTokens.fill()`` runs the same
-alternatives behind a number-run alternative.
+alternatives behind a number-run and a clean-literal alternative, each
+of which also takes the operator keyword after it.
 """
 
 from __future__ import annotations
@@ -53,7 +54,12 @@ TOK_ENDSTREAM = 20
 TOK_XREF = 21
 TOK_TRAILER = 22
 TOK_STARTXREF = 23
-TOK_NUMS = 24  # ContentTokens.fill() only: a number run, value list[float]
+# ContentTokens.fill() only: a number run, value list[float], and an
+# operator with its operands, value (operands, keyword bytes): numbers
+# (list[float]) or one escape-free literal string (bytes)
+TOK_NUMS = 24
+TOK_NUMS_KW = 25
+TOK_STRING_KW = 26
 
 _KEYWORD_TOKENS = {
     b"R": TOK_R,
@@ -101,12 +107,14 @@ _hexesc_re = re.compile(rb"#([0-9a-fA-F]{2})")
 # alternative, so neither scanner has a fallback.
 _SKIP = rb"(?:[\x00\t\n\x0c\r ]++|%[^\r\n]*+)*+"
 _REGULAR = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%]"
+_KEYWORD = rb"[^\x00\t\n\x0c\r ()<>\[\]{}/%+\-.0-9]" + _REGULAR + rb"*+"
+_CLEAN_LITERAL = rb"\(([^()\\\r\n]*+)\)"  # no escapes, nesting or EOLs
 K_NUM, K_STR, K_NAME, K_KW, K_FIXED, K_LIT, K_HEX = range(1, 8)
 _KINDS = (
     rb"([+-]?(?:\d+(?:\.\d*)?|\.\d*))"  # K_NUM
-    rb"|\(([^()\\\r\n]*+)\)"  # K_STR: a literal without escapes, nesting or EOLs
-    rb"|/(" + _REGULAR + rb"*+)"  # K_NAME
-    rb"|([^\x00\t\n\x0c\r ()<>\[\]{}/%+\-.0-9]" + _REGULAR + rb"*+)"  # K_KW
+    rb"|" + _CLEAN_LITERAL  # K_STR
+    + rb"|/(" + _REGULAR + rb"*+)"  # K_NAME
+    rb"|(" + _KEYWORD + rb")"  # K_KW
     rb"|(<<|>>|[\[\]{})>+\-]|\Z)"  # K_FIXED
     rb"|(\()"  # K_LIT: a literal for the escape/nesting walk
     rb"|<([^>]*+)>?"  # K_HEX
@@ -120,13 +128,16 @@ _TOKEN_RE = re.compile(_SKIP + rb"(?:" + _KINDS + rb")")
 # failure modes. A member that fails
 # the guard only ends the run before it, so a run costs one linear scan.
 _RUN_MEMBER = rb"[+-]?(?:\d{1,15}(?:\.\d*)?|\.\d+)(?![\d.])"
-# two or more plain numbers separated only by whitespace (not NUL or
-# comments) are one TOK_NUMS token
+# plain numbers separated only by whitespace (not NUL or comments), and
+# an escape-free literal, each optionally followed by the keyword that
+# operates on them: groups 1-2 and 3-4 in front of the _KINDS groups
+_OPERATOR = rb"(?:[\t\n\x0c\r ]*+(" + _KEYWORD + rb"))?"
 _FILL_RE = re.compile(
     _SKIP
-    + rb"(?:(" + _RUN_MEMBER + rb"(?:[\t\n\x0c\r ]++" + _RUN_MEMBER + rb")++)|"
-    + _KINDS + rb")"
+    + rb"(?:(" + _RUN_MEMBER + rb"(?:[\t\n\x0c\r ]++" + _RUN_MEMBER + rb")*+)"
+    + _OPERATOR + rb"|" + _CLEAN_LITERAL + _OPERATOR + rb"|" + _KINDS + rb")"
 )
+_FILL_KINDS = 4  # the groups in front of the _KINDS groups in _FILL_RE
 
 _BULK_CAP = 8192  # tokens per fill (bounds buffering on giant streams)
 
@@ -171,15 +182,37 @@ def _token(lexer: "Lexer", kind: int, raw: bytes, end: int):
     return (TOK_STRING, *_literal(lexer.data, end, lexer.end))
 
 
+def _numbers(lexer: "Lexer", raw: bytes, nums: list, end: int):
+    """The token of the number run ``raw`` (values ``nums``) ending at
+    ``end`` when no operator follows it: TOK_NUMS, or a single number's
+    own token."""
+    if len(nums) > 1:
+        return TOK_NUMS, nums, end
+    return _token(lexer, K_NUM, raw, end)
+
+
+_LITERAL_SPECIAL = re.compile(rb"[()\\\r\n]")
+_ESCAPES = {0x6E: 10, 0x72: 13, 0x74: 9, 0x62: 8, 0x66: 12}
+
+
 def _literal(data: bytes, pos: int, end: int) -> tuple[bytes, int]:
     """(body, end) of the literal string whose body starts at ``pos``.
     Mirrors lex_string (src/vcl/digcommtype.pas:198-370) including the
-    port's quirk of dropping raw CR/LF bytes inside the literal."""
+    port's quirk of dropping raw CR/LF bytes inside the literal. The
+    bytes between two special ones (parentheses, backslash, CR, LF) are
+    copied as one slice."""
     out = bytearray()
     bal = 1
-    while pos < end:
-        c = data[pos]
-        pos += 1
+    search = _LITERAL_SPECIAL.search
+    while True:
+        m = search(data, pos, end)
+        if m is None:
+            out += data[pos:end]
+            return bytes(out), end
+        i = m.start()
+        out += data[pos:i]
+        c = data[i]
+        pos = i + 1
         if c == 0x28:
             bal += 1
             out.append(c)
@@ -193,18 +226,9 @@ def _literal(data: bytes, pos: int, end: int) -> tuple[bytes, int]:
                 break
             c = data[pos]
             pos += 1
-            if c == 0x6E:
-                out.append(10)
-            elif c == 0x72:
-                out.append(13)
-            elif c == 0x74:
-                out.append(9)
-            elif c == 0x62:
-                out.append(8)
-            elif c == 0x66:
-                out.append(12)
-            elif c in (0x28, 0x29, 0x5C):
-                out.append(c)
+            esc = _ESCAPES.get(c)
+            if esc is not None:
+                out.append(esc)
             elif 0x30 <= c <= 0x39:
                 oct_v = c - 0x30
                 for _ in range(2):
@@ -214,19 +238,12 @@ def _literal(data: bytes, pos: int, end: int) -> tuple[bytes, int]:
                     else:
                         break
                 out.append(oct_v & 0xFF)
-            elif c == 10:
-                pass  # line continuation
-            elif c == 13:
+            elif c == 13:  # line continuation, CR or CRLF
                 if pos < end and data[pos] == 10:
                     pos += 1
-            else:
-                out.append(c)
-        elif c == 10:
-            pass  # reference drops raw LF in literals
-        elif c == 13:
-            pass  # reference drops raw CR in literals
-        else:
-            out.append(c)
+            elif c != 10:  # LF: line continuation
+                out.append(c)  # \( \) \\ and any other byte: itself
+        # else a raw CR or LF: dropped, as the reference does
     return bytes(out), pos
 
 
@@ -322,46 +339,67 @@ class ContentTokens:
     def fill(self) -> list:
         """The next buffer of (tok, val, end) tuples, the tokens of
         ``Lexer.lex()`` with each run of two or more numbers as one
-        TOK_NUMS token (value: list of floats). A buffer ends after a
-        literal that needed the escape walk, after ``<<`` (where the
-        interpreter hands off to the object parser) and at TOK_EOF. The
-        caller consumes the buffer whole, or stops after some token and
-        calls ``handoff(end)`` with that token's end."""
+        TOK_NUMS token (value: list of floats), and a run of one or more
+        numbers or an escape-free literal string together with the
+        keyword after it as one TOK_NUMS_KW or TOK_STRING_KW token (value:
+        (operands, keyword)); consumers treat such a token as its parts.
+        A buffer ends after a literal that needed the escape walk, after
+        ``<<`` (where the interpreter hands off to the object parser) and
+        at TOK_EOF. The caller consumes the buffer whole, or stops after
+        some token and calls ``handoff(end)`` with that token's end."""
         lexer = self.lexer
         data = lexer.data
         pos = lexer.pos
         buf: list = []
         append = buf.append
-        t_str, t_kw, t_nums = TOK_STRING, TOK_KEYWORD, TOK_NUMS
-        k_str, k_kw, k_fixed = K_STR + 1, K_KW + 1, K_FIXED + 1
+        t_str, t_kw = TOK_STRING, TOK_KEYWORD
+        t_nums_kw, t_str_kw = TOK_NUMS_KW, TOK_STRING_KW
+        k_kw, k_fixed = K_KW + _FILL_KINDS, K_FIXED + _FILL_KINDS
         kwmap_get = _KEYWORD_TOKENS.get
         fixed = _FIXED
         for m in iter(_FILL_RE.scanner(data, pos, lexer.end).match, None):
             pos = m.end()
             g = m.lastindex
-            if g == 1:  # number run
+            if g <= 2:  # numbers, then maybe their operator
                 raw = m[1]
                 if b"-0" in raw:
                     # an integer -0 is +0.0 as float(int(raw))
-                    append((t_nums, [
-                        float(p) if b"." in p else float(int(p)) for p in raw.split()
-                    ], pos))
+                    nums = [float(p) if b"." in p else float(int(p)) for p in raw.split()]
                 else:
-                    append((t_nums, list(map(float, raw.split())), pos))
+                    nums = list(map(float, raw.split()))
+                if g == 2:
+                    kw = m[2]
+                    op = kwmap_get(kw, t_kw)
+                    if op == t_kw:
+                        append((t_nums_kw, (nums, kw), pos))
+                    else:  # R, true, obj, ...: a token of their own
+                        append(_numbers(lexer, raw, nums, m.end(1)))
+                        append((op, kw, pos))
+                else:
+                    append(_numbers(lexer, raw, nums, pos))
+            elif g <= 4:  # an escape-free literal, then maybe its operator
+                if g == 4:
+                    kw = m[4]
+                    op = kwmap_get(kw, t_kw)
+                    if op == t_kw:
+                        append((t_str_kw, (m[3], kw), pos))
+                    else:
+                        append((t_str, m[3], m.end(3) + 1))
+                        append((op, kw, pos))
+                else:
+                    append((t_str, m[3], pos))
             elif g == k_kw:
                 raw = m[g]
                 append((kwmap_get(raw, t_kw), raw, pos))
-            elif g == k_str:
-                append((t_str, m[g], pos))
             elif g == k_fixed:
                 tok, val = fixed[m[g]]
                 append((tok, val, pos))
                 if tok == TOK_OPEN_DICT or tok == TOK_EOF:
                     break
             else:
-                tok, val, pos = _token(lexer, g - 1, m[g], pos)
+                tok, val, pos = _token(lexer, g - _FILL_KINDS, m[g], pos)
                 append((tok, val, pos))
-                if g == K_LIT + 1:
+                if g == K_LIT + _FILL_KINDS:
                     break  # the walk moved past the scanner's position
             if len(buf) >= _BULK_CAP:
                 break
@@ -377,12 +415,20 @@ class ContentTokens:
 
     def lex(self):
         """The next (tok, val) from ``fill()`` with each number of a run
-        as its own TOK_REAL, so a token tally matches ``Lexer.lex()``'s
-        (the benchmark's per-page token count reads it)."""
+        as its own TOK_REAL and an operator token as its operands and its
+        keyword, so a token tally matches ``Lexer.lex()``'s (the
+        benchmark's per-page token count reads it)."""
         pending = self._pending
         if not pending:
             for tok, val, _end in reversed(self.fill()):
-                if tok == TOK_NUMS:
+                if tok == TOK_NUMS_KW or tok == TOK_STRING_KW:
+                    operands, kw = val
+                    pending.append((TOK_KEYWORD, kw))
+                    if tok == TOK_STRING_KW:
+                        pending.append((TOK_STRING, operands))
+                    else:
+                        pending.extend((TOK_REAL, v) for v in reversed(operands))
+                elif tok == TOK_NUMS:
                     pending.extend((TOK_REAL, v) for v in reversed(val))
                 else:
                     pending.append((tok, val))

@@ -97,6 +97,8 @@ def _census_stream(
             if tok == lx.TOK_NAME:
                 last_name = val
                 continue
+            if tok == lx.TOK_NUMS_KW or tok == lx.TOK_STRING_KW:
+                tok, val = lx.TOK_KEYWORD, val[1]  # the operands count for nothing
             if tok != lx.TOK_KEYWORD:
                 continue
             op = val.decode("latin-1") if isinstance(val, bytes) else str(val)

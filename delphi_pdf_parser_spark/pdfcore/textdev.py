@@ -18,6 +18,7 @@ fz_add_text_char) and fz_span_to_wchar
 
 from __future__ import annotations
 
+import codecs
 import math
 import re
 
@@ -50,23 +51,8 @@ class Span:
         self.font = None
         self.size = 0.0
         self.wmode = 0
-        self.chars: list[int] = []
+        self.chars: list[str] = []  # non-empty pieces of the span's text
         self.eol = 0
-
-
-def advances(w, codes, ks, cs, ws, ta):
-    """Horizontal advance of each glyph on the 1-byte fast path:
-    ``(w*ks [+ cs] [+ ws at code 32]) [* ta]`` elementwise, where ks is
-    size*0.001*Tz, cs is Tc*Tz and ws is Tw*Tz. A bracketed step is
-    skipped where it would be an identity (cs == 0, ta == 1, ws NaN, which
-    stands for Tw == 0), since adding 0.0 still turns -0.0 into +0.0. The
-    parameters are scalars (one text state over all 256 codes, the font's
-    advance table) or per-glyph arrays (a whole text run); each glyph
-    gets the same bits either way."""
-    tx = w * ks
-    tx = np.where(cs != 0.0, tx + cs, tx)
-    tx = np.where(ws == ws, tx + (codes == 32) * ws, tx)
-    return np.where(ta != 1.0, tx * ta, tx)
 
 
 class TextRun:
@@ -74,12 +60,12 @@ class TextRun:
 
     Items are stored as ``parts`` in emission order, of two kinds:
     - scalar 4-tuples (gid, ucs, x, y) from the per-code paths;
-    - ('S', codes, te, base_e, y, ks, cs, ws, ta) segments: one horizontal
-      string of at least 16 codes on a 1-byte fast font, its glyph x
-      positions left to ``columns()`` (te is the string's start x, the
-      rest are the ``advances`` parameters)."""
+    - ('S', codes, te, base_e, y, state) segments: one horizontal string
+      of at least 16 codes on a 1-byte fast font, its glyph x positions
+      left to ``_segment_columns`` (te is the string's start x, state the
+      font's ``AdvanceState`` for the string's text state)."""
 
-    __slots__ = ("font", "trm", "wmode", "parts", "n")
+    __slots__ = ("font", "trm", "wmode", "parts", "n", "nseg")
 
     def __init__(self, font, trm, wmode):
         self.font = font
@@ -87,22 +73,26 @@ class TextRun:
         self.wmode = wmode
         self.parts: list = []
         self.n = 0
+        self.nseg = 0
 
     def add(self, gid: int, ucs: int, x: float, y: float):
         self.parts.append((gid, ucs, x, y))
         self.n += 1
 
-    def add_segment(self, codes: bytes, te, base_e, y, ks, cs, ws, ta):
-        self.parts.append(("S", codes, te, base_e, y, ks, cs, ws, ta))
+    def add_segment(self, codes: bytes, te, base_e, y, state):
+        self.parts.append(("S", codes, te, base_e, y, state))
         self.n += len(codes)
+        self.nseg += 1
 
     def columns(self):
         """(gid int64, ucs int64, x f64, y f64) arrays in emission order."""
         parts = self.parts
-        segs = [p for p in parts if p[0] == "S"]
-        if not segs:
+        if not self.nseg:
             return _scalar_columns(parts)
-        seg_cols = _segment_columns(self.font, segs)
+        segs = [p for p in parts if p[0] == "S"]
+        _data, codes, xs, ys = _segment_columns(segs)
+        cu = self.font.fast_arrays()[1][:, codes]
+        seg_cols = (cu[0], cu[1], xs, ys)
         if len(segs) == len(parts):
             return seg_cols
         chunks: list = []
@@ -128,18 +118,24 @@ def _scalar_columns(items):
     return a[:, 0].astype(np.int64), a[:, 1].astype(np.int64), a[:, 2], a[:, 3]
 
 
-def _segment_columns(font, segs):
-    """Columns of a run's segments, all at once. A segment's x positions
-    are its te followed by the running sum of its advances, summed in
-    order along one row of a padded matrix; a row-wise cumsum adds in the
-    same order as the per-string cumsum, so every position is bit-equal
-    to it (and the string's end x is the interpreter's fold)."""
+def _segment_columns(segs):
+    """(codes bytes, codes u8, x f64, y f64) of a run's segments, all at
+    once. A segment's x positions are its te followed by the running sum
+    of its advances, summed in order along one row of a padded matrix; a
+    row-wise cumsum adds in the same order as the per-string cumsum, so
+    every position is bit-equal to it (and the string's end x is the
+    interpreter's fold). A glyph's advance is its code's entry in its
+    segment's AdvanceState array, the value the fold reads."""
     lens = [len(s[1]) for s in segs]
-    codes = np.frombuffer(b"".join([s[1] for s in segs]), dtype=np.uint8)
-    params = np.array([s[2:] for s in segs])  # te, base_e, y, ks, cs, ws, ta
-    per = np.repeat(params, lens, axis=0)
-    w_a, cu_a = font.fast_arrays()
-    tx = advances(w_a[codes], codes, per[:, 3], per[:, 4], per[:, 5], per[:, 6])
+    data = b"".join([s[1] for s in segs])
+    codes = np.frombuffer(data, dtype=np.uint8)
+    state = segs[0][5]
+    if all(s[5] is state for s in segs):
+        tx = state.array[codes]
+    else:
+        arrays = np.array([s[5].array for s in segs])
+        tx = arrays[np.repeat(np.arange(len(segs)), lens), codes]
+    params = np.array([s[2:5] for s in segs])  # te, base_e, y
     width = max(lens)
     if len(segs) * width <= 4 * len(codes):
         mask = np.arange(width) < np.array(lens)[:, None]
@@ -160,10 +156,10 @@ def _segment_columns(font, segs):
             rows.append(np.cumsum(c)[:-1])
             off += n
         xs = np.concatenate(rows)
-    base_e = per[:, 1]
-    xs = np.where(base_e != 0.0, base_e + xs, xs)
-    cu = cu_a[:, codes]
-    return cu[0], cu[1], xs, per[:, 2]
+    if params[:, 1].any():  # a text rise under a skewed matrix
+        base_e = np.repeat(params[:, 1], lens)
+        xs = np.where(base_e != 0.0, base_e + xs, xs)
+    return data, codes, xs, np.repeat(params[:, 2], lens)
 
 
 def _concat(m1, m2):
@@ -185,6 +181,9 @@ class TextDevice:
         self.spans: list[Span] = [root]
         self.pen_x = -1.0
         self.pen_y = -1.0
+        # the first code point chr() rejects: the page's text cannot be
+        # built, and to_text raises as building it would
+        self.bad_cpt = None
 
     # --- device hooks (fill/stroke/clip/ignore all extract) -----------------
     def text(self, run: TextRun, ctm):
@@ -209,9 +208,11 @@ class TextDevice:
             return
         lig = _LIGATURES.get(c)
         if lig is not None:
-            span.chars.extend(ord(ch) for ch in lig)
-        else:
-            span.chars.append(c)
+            span.chars.append(lig)
+        elif 0 <= c < 0x110000:
+            span.chars.append(chr(c))
+        elif self.bad_cpt is None:
+            self.bad_cpt = c
 
     def _add_newline(self, font, size, wmode):
         self.spans[-1].eol = 1
@@ -240,13 +241,9 @@ class TextDevice:
 
         items = run.parts
         if run.n >= 16:  # a run holding a segment always qualifies
-            cols = run.columns()
-            done = self._extract_span_vectorized(
-                run, cols, ctm, ndir, size, dx, dy
-            )
-            if done:
+            if self._extract_span_vectorized(run, ctm, ndir, size, dx, dy):
                 return
-            g, u, xs, ys = cols
+            g, u, xs, ys = run.columns()
             items = zip(g.tolist(), u.tolist(), xs.tolist(), ys.tolist())
         # inlined position transform: e = x*ca + y*cc + ce (hot loop)
         ca, cb, cc, cd, ce, cf = ctm
@@ -277,7 +274,7 @@ class TextDevice:
                     dot = (delta_x * ndir_x + delta_y * ndir_y) / pdist
                     if dot > 0.95 or dot < -0.95:
                         span = self.spans[-1]
-                        if span.chars and span.chars[-1] != 32:
+                        if span.chars and span.chars[-1][-1] != " ":
                             self._add_char(font, size, wmode, 32)
             adv = pen_advance(gid)
             pen_x = ex + dx * adv
@@ -285,20 +282,29 @@ class TextDevice:
             self._add_char(font, size, wmode, ucs)
         self.pen_x, self.pen_y = pen_x, pen_y
 
-    def _extract_span_vectorized(
-        self, run, cols, ctm, ndir, size, dx, dy
-    ) -> bool:
-        """NumPy bulk path for large runs: identical event decisions, with
-        chars appended segment-wise between the (rare) space/newline
-        events. Returns False (caller falls back to the scalar loop) when
-        filler glyphs or ligature codepoints are present."""
-        gidi, ucs_arr, px, py = cols
-        n = len(gidi)
-        if gidi.min() < 0:
-            return False
-        if ((ucs_arr >= 0xFB00) & (ucs_arr <= 0xFB06)).any():
-            return False
+    def _run_glyphs(self, run: TextRun):
+        """A large run's glyphs for the NumPy bulk path, whose text is
+        one char per glyph: (text str, pen advance, x, y), or None when
+        filler glyphs or ligature code points send the run to the scalar
+        loop. A run of segments alone decodes its codes in one
+        ``charmap_decode``; any other run builds its text from the ucs
+        column."""
         font = run.font
+        if run.nseg == len(run.parts):
+            _w, _cu, pen, chars, plain = font.fast_arrays()
+            data, codes, xs, ys = _segment_columns(run.parts)
+            if not data.translate(None, plain):
+                text = codecs.charmap_decode(data, "strict", chars)[0]
+                return text, pen[codes], xs, ys
+        gidi, ucs_arr, xs, ys = run.columns()
+        if gidi.min() < 0 or ((ucs_arr >= 0xFB00) & (ucs_arr <= 0xFB06)).any():
+            return None
+        bad = (ucs_arr < 0) | (ucs_arr >= 0x110000)
+        if bad.any():
+            # the bulk path keeps a -1 too (the scalar loop drops it)
+            if self.bad_cpt is None:
+                self.bad_cpt = int(ucs_arr[bad][0])
+            return None
         if gidi.max() < 256:
             advs = font.pen_adv_array()[gidi]
         else:
@@ -306,8 +312,20 @@ class TextDevice:
             advs = np.fromiter(
                 (adv_lookup(int(g)) for g in gidi),
                 dtype=np.float64,
-                count=n,
+                count=len(gidi),
             )
+        return "".join(map(chr, ucs_arr.tolist())), advs, xs, ys
+
+    def _extract_span_vectorized(self, run, ctm, ndir, size, dx, dy) -> bool:
+        """NumPy bulk path for large runs: identical event decisions, with
+        the text appended in slices between the (rare) space/newline
+        events. Returns False (caller falls back to the scalar loop) when
+        filler glyphs or ligature code points are present."""
+        glyphs = self._run_glyphs(run)
+        if glyphs is None:
+            return False
+        text, advs, px, py = glyphs
+        n = len(text)
         ca, cb, cc, cd, ce, cf = ctm
         ex = px * ca + py * cc + ce
         ey = px * cb + py * cd + cf
@@ -323,7 +341,9 @@ class TextDevice:
             delta_y[0] = self.pen_y - ey[0]
         delta_x[1:] = pen_x[:-1] - ex[1:]
         delta_y[1:] = pen_y[:-1] - ey[1:]
-        dist = np.hypot(delta_x, delta_y)
+        # sqrt of the sum, as the scalar loop computes it (np.hypot can
+        # round the other way at the threshold)
+        dist = np.sqrt(delta_x * delta_x + delta_y * delta_y)
         moving = dist > 0
         newline = moving & (dist > size * LINE_DIST)
         with np.errstate(invalid="ignore", divide="ignore"):
@@ -335,26 +355,26 @@ class TextDevice:
             & (np.abs(dot) > 0.95)
         )
         events = np.nonzero(newline | space)[0]
-        ucs_list = ucs_arr.tolist()
+        font = run.font
         wmode = run.wmode
         start = 0
         for idx in events.tolist():
             if start < idx:
-                self._bulk_chars(font, size, wmode, ucs_list[start:idx])
+                self._bulk_chars(font, size, wmode, text[start:idx])
             if newline[idx]:
                 self._add_newline(font, size, wmode)
             else:
                 span = self.spans[-1]
-                if span.chars and span.chars[-1] != 32:
+                if span.chars and span.chars[-1][-1] != " ":
                     self._add_char(font, size, wmode, 32)
             start = idx
-        self._bulk_chars(font, size, wmode, ucs_list[start:])
+        self._bulk_chars(font, size, wmode, text[start:])
         self.pen_x = float(pen_x[-1])
         self.pen_y = float(pen_y[-1])
         return True
 
-    def _bulk_chars(self, font, size, wmode, ucs_list):
-        if not ucs_list:
+    def _bulk_chars(self, font, size, wmode, text):
+        if not text:
             return
         span = self.spans[-1]
         if span.font is None:
@@ -364,22 +384,20 @@ class TextDevice:
             # per-char rule: a space never triggers the span break, so
             # leading spaces stay on the old span and the break happens at
             # the first non-space char
-            i = 0
-            n = len(ucs_list)
-            while i < n and ucs_list[i] == 32:
-                span.chars.append(32)
-                i += 1
-            if i == n:
+            rest = text.lstrip(" ")
+            if len(rest) < len(text):
+                span.chars.append(text[: len(text) - len(rest)])
+            if not rest:
                 return
-            ucs_list = ucs_list[i:]
+            text = rest
             span = Span()
             span.font = font
             span.size = size
             span.wmode = wmode
             self.spans.append(span)
-        # -1 fillers and ligatures were excluded by the caller; all other
-        # codepoints append verbatim (control chars fold at serialization)
-        span.chars.extend(ucs_list)
+        # fillers and ligatures were excluded by the caller; all other
+        # code points append verbatim (control chars fold at serialization)
+        span.chars.append(text)
 
     # --- serialization -------------------------------------------------------
     def close(self):
@@ -391,11 +409,13 @@ class TextDevice:
         '?' (reference rule); lone UTF-16 surrogates also fold to '?' so
         the result is always valid UTF-8 for Arrow/parquet (the reference
         emits them raw into a widestring — not representable as text)."""
+        if self.bad_cpt is not None:
+            chr(self.bad_cpt)  # raises ValueError (OverflowError past C int)
         out: list[str] = []
         n = len(self.spans)
         for i, span in enumerate(self.spans):
             if span.chars:
-                text = "".join(map(chr, span.chars))
+                text = "".join(span.chars)
                 if _NEEDS_FOLD.search(text):
                     text = text.translate(_FOLD)
                 out.append(text)

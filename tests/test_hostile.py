@@ -46,6 +46,11 @@ elif case == "hex_operand":
     b, cat = simple_doc(
         content, filters="/FlateDecode", encoded=zlib.compress(content, 9)
     )
+elif case == "escaped_literal":
+    content = b"(\\" + b"a" * (32 * MB) + b") BX EX " + TAIL
+    b, cat = simple_doc(
+        content, filters="/FlateDecode", encoded=zlib.compress(content, 9)
+    )
 elif case == "deep_array_content":
     b, cat = simple_doc(b"[" * 900 + b"]" * 900 + b" " + TAIL)
 elif case == "deep_array_object":
@@ -81,13 +86,15 @@ def _run(runner: str, case: str, timeout: int = 120):
         "comment_before_dict",
         "comment_in_inline_dict",
         "hex_operand",
+        "escaped_literal",
         "deep_array_content",
         "deep_array_object",
     ],
 )
 def test_hostile_lexing_stays_in_budget(case):
-    """A 48 MB hex-string operand decodes at C speed, and arrays nested
-    900 deep, in a content stream or in an indirect object, parse."""
+    """A 48 MB hex-string operand and a 32 MB literal with an escape
+    decode at C speed, and arrays nested 900 deep, in a content stream
+    or in an indirect object, parse."""
     assert _run(_RUNNER, case) == ["ok", "after\r\n", {}]
 
 

@@ -654,16 +654,50 @@ def test_password_r6_aes256_user_owner_and_empty():
     assert extract_text(data, password="zz").error == "needs_password"
 
 
+def test_bulk_and_scalar_span_paths_agree_at_a_rounding_flip():
+    """A pen jump whose length rounds to either side of the newline
+    threshold depending on how it is computed: a 16-glyph run (NumPy
+    bulk path) and the same glyphs as two 8-glyph runs (scalar loop)
+    take the same decision."""
+    import math
+
+    import numpy as np
+
+    from delphi_pdf_parser_spark.pdfcore.fonts import FontDesc
+    from delphi_pdf_parser_spark.pdfcore.textdev import TextDevice, TextRun
+
+    size = 52.510543409991676
+    x1, y1 = 47.24408867569316, 1.2063963964897653  # the jump is -(x1, y1)
+    assert np.hypot(x1, y1) <= size * 0.9 < math.sqrt(x1 * x1 + y1 * y1)
+    font = FontDesc()  # no widths: every pen advance is 0
+    glyphs = [(65, 0.0, 0.0)] + [(66, x1, y1)] * 15
+
+    def text(chunks):
+        dev = TextDevice()
+        for chunk in chunks:
+            run = TextRun(font, (size, 0.0, 0.0, size, 0.0, 0.0), 0)
+            for c, x, y in chunk:
+                run.add(c, c, x, y)
+            dev.text(run, (1.0, 0.0, 0.0, 1.0, 0.0, 0.0))
+        dev.close()
+        return dev.to_text()
+
+    assert text([glyphs]) == text([glyphs[:8], glyphs[8:]]) == "A\r\n" + "B" * 15 + "\r\n"
+
+
 def test_to_text_folds_control_chars_and_lone_surrogates():
     """Code points below 32 and lone UTF-16 surrogates serialize as '?';
     spans without them pass through unchanged."""
     from delphi_pdf_parser_spark.pdfcore.textdev import TextDevice
 
     dev = TextDevice()
-    dev.spans[-1].chars.extend([0x41, 0x01, 0xD800, 0x42])
+    for c in [0x41, 0x01, 0xD800, 0x42]:
+        dev._add_char(None, 0.0, 0, c)
     dev._add_newline(None, 0.0, 0)
-    dev.spans[-1].chars.extend([0x43, 0xDFFF, 0x1F, 0x20, 0x1F600])
+    for c in [0x43, 0xDFFF, 0x1F, 0x20, 0x1F600]:
+        dev._add_char(None, 0.0, 0, c)
     dev._add_newline(None, 0.0, 0)
-    dev.spans[-1].chars.extend([0xE9, 0x7E])
+    for c in [0xE9, 0x7E]:
+        dev._add_char(None, 0.0, 0, c)
     dev.close()
     assert dev.to_text() == "A??B\r\nC?? \U0001F600\r\né~\r\n"

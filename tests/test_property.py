@@ -125,12 +125,13 @@ def test_random_content_streams_extract(ops):
 
 
 def _assert_scanners_are_classic(data: bytes):
-    """Lexer.lex() and ContentTokens.fill() (every TOK_NUMS run expanded)
-    both emit the frozen byte-branch scanner's tokens, each token ending
-    where the classic scanner's position is after it; run members are
-    compared as the interpreter stores them (float(val), sign of zero
-    included). ContentTokens.lex() hands out the same tokens one at a
-    time, each run member as a TOK_REAL."""
+    """Lexer.lex() and ContentTokens.fill() (every TOK_NUMS run and every
+    operator token expanded) both emit the frozen byte-branch scanner's
+    tokens, each token ending where the classic scanner's position is
+    after it (an operator token ends where its keyword does); run
+    members are compared as the interpreter stores them (float(val),
+    sign of zero included). ContentTokens.lex() hands out the same
+    tokens one at a time, each run member as a TOK_REAL."""
     import math
 
     from delphi_pdf_parser_spark.pdfcore import lexer as lx
@@ -146,18 +147,32 @@ def _assert_scanners_are_classic(data: bytes):
         assert (*lexer.lex(), lexer.pos) == (tok, val, end)
 
     expected = iter(seen)
+
+    def numbers(vals):
+        """The classic scanner's end after the numbers ``vals``."""
+        for v in vals:
+            ctok, cval, cend = next(expected)
+            assert ctok in (lx.TOK_INT, lx.TOK_REAL)
+            assert v == float(cval)
+            assert math.copysign(1.0, v) == math.copysign(1.0, float(cval))
+        return cend
+
     cur = lx.ContentTokens(lx.Lexer(data))
     for _ in range(300):
         buf = cur.fill()
         for tok, val, end in buf:
             if tok == lx.TOK_NUMS:
                 assert len(val) >= 2
-                for v in val:
-                    ctok, cval, cend = next(expected)
-                    assert ctok in (lx.TOK_INT, lx.TOK_REAL)
-                    assert v == float(cval)
-                    assert math.copysign(1.0, v) == math.copysign(1.0, float(cval))
-                assert end == cend
+                assert end == numbers(val)
+            elif tok == lx.TOK_NUMS_KW:
+                operands, kw = val
+                assert len(operands) >= 1
+                numbers(operands)
+                assert (lx.TOK_KEYWORD, kw, end) == next(expected)
+            elif tok == lx.TOK_STRING_KW:
+                operands, kw = val
+                assert (lx.TOK_STRING, operands) == next(expected)[:2]
+                assert (lx.TOK_KEYWORD, kw, end) == next(expected)
             else:
                 assert (tok, val, end) == next(expected)
         # a buffer ends at <<, where the interpreter hands off
@@ -283,11 +298,11 @@ def test_number_run_negative_zero_pushes_positive_zero():
 
     from delphi_pdf_parser_spark.pdfcore import lexer as lx
 
-    (tok, val, _end), (tm, _, _), (eof, _, _) = lx.ContentTokens(
+    (tok, (val, kw), _end), (eof, _, _) = lx.ContentTokens(
         lx.Lexer(b"1 -0 2 Tm")
     ).fill()
-    assert tok == lx.TOK_NUMS and val == [1.0, 0.0, 2.0]
-    assert (tm, eof) == (lx.TOK_KEYWORD, lx.TOK_EOF)
+    assert tok == lx.TOK_NUMS_KW and val == [1.0, 0.0, 2.0]
+    assert (kw, eof) == (b"Tm", lx.TOK_EOF)
     assert math.copysign(1.0, val[1]) == 1.0
 
 
