@@ -77,7 +77,6 @@ class FontDesc:
         "_fast_table",
         "_fast_arrays",
         "_adv_tables",
-        "_adv_array",
         "_cid_mode",
         "_cid_cache",
         "embedded",
@@ -118,7 +117,6 @@ class FontDesc:
         self._fast_table = None
         self._fast_arrays = None
         self._adv_tables: dict = {}
-        self._adv_array = None
         self._cid_mode = None
         self._cid_cache: dict = {}
         # raster sink: ("ttf", SfntFont, etable|None) or
@@ -193,14 +191,6 @@ class FontDesc:
             ent = (cid, self.ucs_of(cid), self.get_hmtx_w(cid))
         self._cid_cache[code] = ent
         return ent
-
-    def pen_adv_array(self):
-        """NumPy advance table for gid 0..255 (vectorized text device)."""
-        if self._adv_array is None:
-            self._adv_array = np.array(
-                [self.pen_advance(g) for g in range(256)], dtype=np.float64
-            )
-        return self._adv_array
 
     # --- fast path for 1-byte identity-encoded fonts --------------------------
     def outline_1000(self, code_or_cid: int):
@@ -321,18 +311,18 @@ class FontDesc:
         return table
 
     def fast_arrays(self):
-        """NumPy companions of fast_table for whole-string vectorization,
-        one entry per code: (w f64[256], cu i64[2,256], pen f64[256],
-        chars str, plain bytes). ``w`` is the code's width, NaN at codes
-        without a single-codepoint mapping, so a NaN advance marks a
-        string the per-code loop must take. ``cu`` stacks each code's cid
-        and ucs, so one fancy-index gathers both; ``pen`` is the text
-        device's pen advance of the code's cid. ``chars`` is the
-        ``codecs.charmap_decode`` table of a segment's text, and
-        ``plain`` lists the codes whose text it holds: everything with a
-        width except ligatures and code points ``chr`` rejects, which
-        the text device's per-glyph paths handle. None when the font has
-        no 1-byte fast table."""
+        """Per-code companions of fast_table for 1-byte strings: (w
+        f64[256], cu i64[2,256], pen f64[256], chars str, plain bytes).
+        ``w`` is the code's width, NaN at codes without a single-codepoint
+        mapping, so a NaN advance (``advances``) marks a string the
+        per-code loop must take. ``cu`` stacks each code's cid and ucs
+        for the raster sink's ``TextRun.columns``. ``pen`` is the text
+        device's pen advance of the code's cid, which its segment bound
+        reads. ``chars`` is the ``codecs.charmap_decode`` table of a
+        segment's text, and ``plain`` lists the codes whose text it
+        holds: everything with a width except ligatures and code points
+        ``chr`` rejects (-1 included), which take the text device's
+        per-glyph loop. None when the font has no 1-byte fast table."""
         fa = self._fast_arrays
         if fa is not None:
             return fa if fa is not False else None
@@ -396,14 +386,16 @@ class AdvanceState:
     ``table`` (the same as a list, for per-string folds) and ``finite``
     (the codes whose advance is finite, as ``bytes.translate``
     deletechars: a string those delete to nothing has a finite end x
-    from any finite start)."""
+    from any finite start). ``gaps`` is the text device's memo of its
+    segment bound per transform (``textdev._gap_terms``)."""
 
-    __slots__ = ("array", "table", "finite")
+    __slots__ = ("array", "table", "finite", "gaps")
 
     def __init__(self, array):
         self.array = array
         self.table = array.tolist()
         self.finite = bytes(np.flatnonzero(np.isfinite(array)).astype(np.uint8))
+        self.gaps: dict = {}
 
 
 # Per-process memo of parsed ToUnicode CMap streams, keyed by content

@@ -356,8 +356,9 @@ class CSI:
             # horizontal text (the overwhelmingly common case): tf never
             # moves; the end x is a left fold over the font's advance
             # table (the order np.cumsum adds in, which sum() does not
-            # promise), the glyph positions come from one pass per run in
-            # textdev._segment_columns. Per-char tx = (w*k +
+            # promise), and the text device reads glyph positions from
+            # the same fold (at the segment's boundaries when its bound
+            # holds, textdev._chunks). Per-char tx = (w*k +
             # char_space)*scale, word_space added after code 32,
             # identical to the scalar fold; the table is NaN at unmapped
             # and multi-codepoint codes, so a NaN end x sends the string

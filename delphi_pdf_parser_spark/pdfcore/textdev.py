@@ -12,6 +12,8 @@ fz_add_text_char) and fz_span_to_wchar
 - ligature expansion at add-char time: FB00->'ff', FB01->'ff' (the
   reference's copy-paste quirk — NOT 'fi'), FB02->'fl', FB03->'ffi',
   FB04->'ffl', FB05->'st', FB06->'st'; ucs==-1 fillers are dropped
+- one per-glyph loop; a shown string whose inner gaps provably cannot
+  reach the space threshold is laid out at its first and last glyph only
 - serialization: chars < 32 fold to '?'; CRLF when span.eol or at the very
   last span; the final span always gets eol=1 (fz_text_free_user)
 """
@@ -21,11 +23,17 @@ from __future__ import annotations
 import codecs
 import math
 import re
+from itertools import accumulate
 
 import numpy as np
 
 LINE_DIST = 0.9
 SPACE_DIST = 0.2
+# rounding slack of the segment bound per unit of magnitude: a computed
+# gap is a handful of roundings, each at most 2**-53 of the largest
+# magnitude in its arithmetic, away from its exact value
+_SLACK = 2.0**-40
+_GAPS_MAX = 16  # transforms memoized per text state
 
 # '?'-folding table: control chars (<32) per the reference, plus lone
 # surrogates (invalid in UTF-8)
@@ -61,9 +69,13 @@ class TextRun:
     Items are stored as ``parts`` in emission order, of two kinds:
     - scalar 4-tuples (gid, ucs, x, y) from the per-code paths;
     - ('S', codes, te, base_e, y, state) segments: one horizontal string
-      of at least 16 codes on a 1-byte fast font, its glyph x positions
-      left to ``_segment_columns`` (te is the string's start x, state the
-      font's ``AdvanceState`` for the string's text state)."""
+      of at least 16 codes on a 1-byte fast font (te is the string's
+      start x, state the font's ``AdvanceState`` for the string's text
+      state). A glyph's x is te plus the sequential sum of the advances
+      before it (plus base_e when nonzero); the text device reads it at
+      the segment's boundaries, or for every glyph when the segment's
+      bound fails (``_chunks``), and ``columns()`` for the raster sink
+      computes all of them (``_segment_columns``)."""
 
     __slots__ = ("font", "trm", "wmode", "parts", "n", "nseg")
 
@@ -90,7 +102,7 @@ class TextRun:
         if not self.nseg:
             return _scalar_columns(parts)
         segs = [p for p in parts if p[0] == "S"]
-        _data, codes, xs, ys = _segment_columns(segs)
+        codes, xs, ys = _segment_columns(segs)
         cu = self.font.fast_arrays()[1][:, codes]
         seg_cols = (cu[0], cu[1], xs, ys)
         if len(segs) == len(parts):
@@ -119,47 +131,97 @@ def _scalar_columns(items):
 
 
 def _segment_columns(segs):
-    """(codes bytes, codes u8, x f64, y f64) of a run's segments, all at
-    once. A segment's x positions are its te followed by the running sum
-    of its advances, summed in order along one row of a padded matrix; a
-    row-wise cumsum adds in the same order as the per-string cumsum, so
-    every position is bit-equal to it (and the string's end x is the
-    interpreter's fold). A glyph's advance is its code's entry in its
-    segment's AdvanceState array, the value the fold reads."""
-    lens = [len(s[1]) for s in segs]
-    data = b"".join([s[1] for s in segs])
-    codes = np.frombuffer(data, dtype=np.uint8)
-    state = segs[0][5]
-    if all(s[5] is state for s in segs):
-        tx = state.array[codes]
-    else:
-        arrays = np.array([s[5].array for s in segs])
-        tx = arrays[np.repeat(np.arange(len(segs)), lens), codes]
-    params = np.array([s[2:5] for s in segs])  # te, base_e, y
-    width = max(lens)
-    if len(segs) * width <= 4 * len(codes):
-        mask = np.arange(width) < np.array(lens)[:, None]
-        c = np.zeros((len(segs), width + 1))
-        c[:, 0] = params[:, 0]
-        c[:, 1:][mask] = tx
-        np.cumsum(c, axis=1, out=c)
-        xs = c[:, :-1][mask]
-    else:
-        # one long string among short ones: padding would cost more
-        # than it saves, sum each segment on its own
-        rows = []
-        off = 0
-        for s, n in zip(segs, lens):
-            c = np.empty(n + 1)
-            c[0] = s[2]
-            c[1:] = tx[off : off + n]
-            rows.append(np.cumsum(c)[:-1])
-            off += n
-        xs = np.concatenate(rows)
-    if params[:, 1].any():  # a text rise under a skewed matrix
-        base_e = np.repeat(params[:, 1], lens)
-        xs = np.where(base_e != 0.0, base_e + xs, xs)
-    return data, codes, xs, np.repeat(params[:, 2], lens)
+    """(codes u8, x f64, y f64) of a run's segments. A segment's x
+    positions are its te followed by the running sum of its state's
+    advances (np.cumsum adds in the order of the interpreter's fold),
+    plus base_e when nonzero; its y is constant."""
+    xs = []
+    for _s, seg, te, base_e, _y, state in segs:
+        tx = state.array[np.frombuffer(seg, dtype=np.uint8)]
+        x = np.cumsum(np.concatenate(([te], tx)))[:-1]
+        xs.append(base_e + x if base_e else x)
+    codes = np.frombuffer(b"".join([s[1] for s in segs]), dtype=np.uint8)
+    ys = np.repeat([s[4] for s in segs], [len(s[1]) for s in segs])
+    return codes, np.concatenate(xs), ys
+
+
+def _chunks(run, ctm, dx, dy, space_thresh):
+    """A run's parts as (glyphs, tail) pairs in emission order. Scalar
+    tuples come in batches, tail None. A segment whose codes all have a
+    plain char and a finite advance, and whose bound is below the space
+    threshold, comes as its first glyph with tail (rest of its text, last
+    glyph's gid, x, y): the bound, the state's largest inner gap
+    (``_gap_terms``) plus a rounding slack that grows with every
+    magnitude in the position arithmetic, keeps every inner glyph from
+    starting a space or a line. A non-finite term makes the bound NaN or
+    infinite, a zero size the threshold 0; either fails it. Any other
+    segment comes as all its glyphs."""
+    font = run.font
+    table = font.fast_table()
+    _w, _cu, pen, chars, plain = font.fast_arrays()
+    scale = (sum(map(abs, ctm)) + abs(dx) + abs(dy)) * _SLACK
+    state = None
+    scalars: list = []
+    for part in run.parts:
+        if part[0] != "S":
+            scalars.append(part)
+            continue
+        if scalars:
+            yield scalars, None
+            scalars = []
+        _s, codes, te, base_e, y, seg_state = part
+        if seg_state is not state:
+            state = seg_state
+            ok, gap, adv_max, pen_max = _gap_terms(state, pen, plain, dx, dy, ctm)
+        mag = abs(te) + abs(base_e) + abs(y) + len(codes) * adv_max + pen_max + 1.0
+        if gap + mag * scale < space_thresh and not codes.translate(None, ok):
+            # the last glyph's x: the string's fold short of its last
+            # advance (a loop adds in the same order as reduce, faster)
+            last = te
+            advance = state.table
+            for code in codes[:-1]:
+                last += advance[code]
+            x = te
+            if base_e:
+                x, last = base_e + x, base_e + last
+            first = table[codes[0]]
+            text = codecs.charmap_decode(codes, "strict", chars)[0]
+            tail = (text[1:], table[codes[-1]][0], last, y)
+            yield ((first[0], first[1][0], x, y),), tail
+            continue
+        xs = accumulate(map(state.table.__getitem__, codes), initial=te)
+        if base_e:
+            xs = map(base_e.__add__, xs)
+        ents = map(table.__getitem__, codes)
+        yield [(e[0], e[1][0], x, y) for e, x in zip(ents, xs)], None
+    if scalars:
+        yield scalars, None
+
+
+def _gap_terms(state, pen, plain, dx, dy, ctm):
+    """(codes, gap, max |adv|, max |pen|) over the font's plain codes
+    with a finite advance at ``state`` (``codes`` as ``bytes.translate``
+    deletechars). ``gap`` is the largest inner gap in exact arithmetic:
+    a glyph's pen ends ``dx*pen`` past its origin, the next glyph starts
+    ``adv*ca`` past it, and likewise in y. Memoized on the state per
+    transform; the state's font outlives one document."""
+    key = (dx, dy, ctm)
+    terms = state.gaps.get(key)
+    if terms is None:
+        if len(state.gaps) >= _GAPS_MAX:
+            state.gaps.clear()
+        codes = np.frombuffer(plain, dtype=np.uint8)
+        codes = codes[np.isfinite(state.array[codes])]
+        adv, pen = state.array[codes], pen[codes]
+        with np.errstate(all="ignore"):
+            gap = np.hypot(
+                np.abs(dx * pen - ctm[0] * adv).max(initial=0.0),
+                np.abs(dy * pen - ctm[1] * adv).max(initial=0.0),
+            )
+        adv_max = float(np.abs(adv).max(initial=0.0))
+        pen_max = float(np.abs(pen).max(initial=0.0))
+        terms = state.gaps[key] = (codes.tobytes(), float(gap), adv_max, pen_max)
+    return terms
 
 
 def _concat(m1, m2):
@@ -223,6 +285,10 @@ class TextDevice:
         self.spans.append(span)
 
     def _extract_span(self, run: TextRun, ctm):
+        """fz_text_extract_span: each glyph against the pen the one before
+        left. A segment that passes its bound (``_chunks``) takes the
+        per-glyph step at its first glyph only; the rest of its text is
+        appended at once and the pen set from its last glyph."""
         if not run.n:
             return
         font = run.font
@@ -239,12 +305,6 @@ class TextDevice:
         ndir = (dx / dist, dy / dist) if dist else (1.0, 0.0)
         size = math.sqrt(abs(trm[0] * trm[3] - trm[1] * trm[2]))
 
-        items = run.parts
-        if run.n >= 16:  # a run holding a segment always qualifies
-            if self._extract_span_vectorized(run, ctm, ndir, size, dx, dy):
-                return
-            g, u, xs, ys = run.columns()
-            items = zip(g.tolist(), u.tolist(), xs.tolist(), ys.tolist())
         # inlined position transform: e = x*ca + y*cc + ce (hot loop)
         ca, cb, cc, cd, ce, cf = ctm
         line_thresh = size * LINE_DIST
@@ -254,124 +314,44 @@ class TextDevice:
         wmode = run.wmode
         pen_advance = font.pen_advance
         sqrt = math.sqrt
-        for gid, ucs, x, y in items:
-            if gid < 0:
-                # filler glyph of a one-to-many mapping: same position
+        if run.nseg:
+            chunks = _chunks(run, ctm, dx, dy, space_thresh)
+        else:
+            chunks = ((run.parts, None),)
+        for glyphs, tail in chunks:
+            for gid, ucs, x, y in glyphs:
+                if gid < 0:
+                    # filler glyph of a one-to-many mapping: same position
+                    self._add_char(font, size, wmode, ucs)
+                    continue
+                ex = x * ca + y * cc + ce
+                ey = x * cb + y * cd + cf
+                if pen_x == -1.0 and pen_y == -1.0:
+                    delta_x = delta_y = 0.0
+                else:
+                    delta_x = pen_x - ex
+                    delta_y = pen_y - ey
+                pdist = sqrt(delta_x * delta_x + delta_y * delta_y)
+                if pdist > 0:
+                    if pdist > line_thresh:
+                        self._add_newline(font, size, wmode)
+                    elif pdist > space_thresh:
+                        dot = (delta_x * ndir_x + delta_y * ndir_y) / pdist
+                        if dot > 0.95 or dot < -0.95:
+                            span = self.spans[-1]
+                            if span.chars and span.chars[-1][-1] != " ":
+                                self._add_char(font, size, wmode, 32)
+                adv = pen_advance(gid)
+                pen_x = ex + dx * adv
+                pen_y = ey + dy * adv
                 self._add_char(font, size, wmode, ucs)
-                continue
-            ex = x * ca + y * cc + ce
-            ey = x * cb + y * cd + cf
-            if pen_x == -1.0 and pen_y == -1.0:
-                delta_x = delta_y = 0.0
-            else:
-                delta_x = pen_x - ex
-                delta_y = pen_y - ey
-            pdist = sqrt(delta_x * delta_x + delta_y * delta_y)
-            if pdist > 0:
-                if pdist > line_thresh:
-                    self._add_newline(font, size, wmode)
-                elif pdist > space_thresh:
-                    dot = (delta_x * ndir_x + delta_y * ndir_y) / pdist
-                    if dot > 0.95 or dot < -0.95:
-                        span = self.spans[-1]
-                        if span.chars and span.chars[-1][-1] != " ":
-                            self._add_char(font, size, wmode, 32)
-            adv = pen_advance(gid)
-            pen_x = ex + dx * adv
-            pen_y = ey + dy * adv
-            self._add_char(font, size, wmode, ucs)
+            if tail is not None:
+                text, gid, x, y = tail
+                self._bulk_chars(font, size, wmode, text)
+                adv = pen_advance(gid)
+                pen_x = x * ca + y * cc + ce + dx * adv
+                pen_y = x * cb + y * cd + cf + dy * adv
         self.pen_x, self.pen_y = pen_x, pen_y
-
-    def _run_glyphs(self, run: TextRun):
-        """A large run's glyphs for the NumPy bulk path, whose text is
-        one char per glyph: (text str, pen advance, x, y), or None when
-        filler glyphs or ligature code points send the run to the scalar
-        loop. A run of segments alone decodes its codes in one
-        ``charmap_decode``; any other run builds its text from the ucs
-        column."""
-        font = run.font
-        if run.nseg == len(run.parts):
-            _w, _cu, pen, chars, plain = font.fast_arrays()
-            data, codes, xs, ys = _segment_columns(run.parts)
-            if not data.translate(None, plain):
-                text = codecs.charmap_decode(data, "strict", chars)[0]
-                return text, pen[codes], xs, ys
-        gidi, ucs_arr, xs, ys = run.columns()
-        if gidi.min() < 0 or ((ucs_arr >= 0xFB00) & (ucs_arr <= 0xFB06)).any():
-            return None
-        bad = (ucs_arr < 0) | (ucs_arr >= 0x110000)
-        if bad.any():
-            # the bulk path keeps a -1 too (the scalar loop drops it)
-            if self.bad_cpt is None:
-                self.bad_cpt = int(ucs_arr[bad][0])
-            return None
-        if gidi.max() < 256:
-            advs = font.pen_adv_array()[gidi]
-        else:
-            adv_lookup = font.pen_advance
-            advs = np.fromiter(
-                (adv_lookup(int(g)) for g in gidi),
-                dtype=np.float64,
-                count=len(gidi),
-            )
-        return "".join(map(chr, ucs_arr.tolist())), advs, xs, ys
-
-    def _extract_span_vectorized(self, run, ctm, ndir, size, dx, dy) -> bool:
-        """NumPy bulk path for large runs: identical event decisions, with
-        the text appended in slices between the (rare) space/newline
-        events. Returns False (caller falls back to the scalar loop) when
-        filler glyphs or ligature code points are present."""
-        glyphs = self._run_glyphs(run)
-        if glyphs is None:
-            return False
-        text, advs, px, py = glyphs
-        n = len(text)
-        ca, cb, cc, cd, ce, cf = ctm
-        ex = px * ca + py * cc + ce
-        ey = px * cb + py * cd + cf
-        pen_x = ex + dx * advs
-        pen_y = ey + dy * advs
-        # delta[i] = pen[i-1] - e[i]; delta[0] from the incoming pen
-        delta_x = np.empty(n)
-        delta_y = np.empty(n)
-        if self.pen_x == -1.0 and self.pen_y == -1.0:
-            delta_x[0] = delta_y[0] = 0.0
-        else:
-            delta_x[0] = self.pen_x - ex[0]
-            delta_y[0] = self.pen_y - ey[0]
-        delta_x[1:] = pen_x[:-1] - ex[1:]
-        delta_y[1:] = pen_y[:-1] - ey[1:]
-        # sqrt of the sum, as the scalar loop computes it (np.hypot can
-        # round the other way at the threshold)
-        dist = np.sqrt(delta_x * delta_x + delta_y * delta_y)
-        moving = dist > 0
-        newline = moving & (dist > size * LINE_DIST)
-        with np.errstate(invalid="ignore", divide="ignore"):
-            dot = (delta_x * ndir[0] + delta_y * ndir[1]) / dist
-        space = (
-            moving
-            & ~newline
-            & (dist > size * SPACE_DIST)
-            & (np.abs(dot) > 0.95)
-        )
-        events = np.nonzero(newline | space)[0]
-        font = run.font
-        wmode = run.wmode
-        start = 0
-        for idx in events.tolist():
-            if start < idx:
-                self._bulk_chars(font, size, wmode, text[start:idx])
-            if newline[idx]:
-                self._add_newline(font, size, wmode)
-            else:
-                span = self.spans[-1]
-                if span.chars and span.chars[-1][-1] != " ":
-                    self._add_char(font, size, wmode, 32)
-            start = idx
-        self._bulk_chars(font, size, wmode, text[start:])
-        self.pen_x = float(pen_x[-1])
-        self.pen_y = float(pen_y[-1])
-        return True
 
     def _bulk_chars(self, font, size, wmode, text):
         if not text:
@@ -395,8 +375,8 @@ class TextDevice:
             span.size = size
             span.wmode = wmode
             self.spans.append(span)
-        # fillers and ligatures were excluded by the caller; all other
-        # code points append verbatim (control chars fold at serialization)
+        # plain text only (no fillers, ligatures or code points chr
+        # rejects); control chars fold at serialization
         span.chars.append(text)
 
     # --- serialization -------------------------------------------------------

@@ -1,5 +1,6 @@
-"""The optimized 1-byte show_string fast path and the NumPy text-device
-bulk path must be byte-identical to the general (per-char) paths."""
+"""The optimized 1-byte show_string fast path, and the text device's
+layout of its segments at their boundaries, must be byte-identical to
+the general per-char path and the per-glyph loop."""
 
 from __future__ import annotations
 
@@ -9,7 +10,6 @@ import random
 from delphi_pdf_parser_spark.fixtures import PdfBuilder
 from delphi_pdf_parser_spark.pdfcore import extract_text
 from delphi_pdf_parser_spark.pdfcore import fonts as F
-from delphi_pdf_parser_spark.pdfcore import textdev as T
 
 
 def _random_doc(seed: int) -> bytes:
@@ -63,7 +63,55 @@ def _rotated_doc(seed: int) -> bytes:
     return _page_doc(ops)
 
 
-def _page_doc(ops: list[str]) -> bytes:
+_HELVETICA = "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
+# a Type3 font whose /Widths are not whole units: its hmtx (the string
+# advance) truncates them and its pen advance keeps them, so a glyph's
+# pen ends 0.0009 em past the next glyph's origin
+_TYPE3 = (
+    "<< /Type /Font /Subtype /Type3 /FontBBox [0 0 1000 1000] "
+    "/FontMatrix [0.001 0 0 0.001 0 0] /CharProcs << >> "
+    "/Encoding /WinAnsiEncoding /FirstChar 32 /LastChar 127 "
+    "/Widths [" + " ".join(["600.9"] * 95) + "] >>"
+)
+
+
+def _edge_docs() -> list[bytes]:
+    """Strings on either side of the segment bound: huge start x (under
+    a 0.3 CTM scale the per-glyph loop breaks strings at 1e15 and 1e17
+    on rounding noise alone), a zero and a tiny size, Tc on the 0.2*size
+    space edge, word spacing, mirrored horizontal scaling, a rotated CTM
+    with Tc, and a Type3 font whose pen advance differs from its string
+    advance."""
+    line = "(Lorem ipsum dolor sit amet, consectetur) Tj"
+    docs = [
+        _page_doc([f"{cm} BT /F1 {size} Tf 1 0 0 1 {x} 720 Tm {line} ET"])
+        for x in ("1000000000000000", "10000000000000000", "100000000000000000")
+        for cm, size in [("", 10)] + [("0.3 0 0 0.3 0 0 cm", s) for s in (0.1, 1, 12)]
+    ]
+    docs += [
+        _page_doc([f"BT /F1 {size} Tf 72 720 Td {line} {line} ET"])
+        for size in ("0", "0.0000001")
+    ]
+    docs += [
+        _page_doc([f"BT /F1 10 Tf 72 720 Td {tc} Tc {line} 0 -20 Td {line} ET"])
+        for tc in ("1.99", "2", "2.01", "-1.99", "-2", "-2.01")
+    ]
+    docs += [
+        _page_doc([f"BT /F1 10 Tf 72 720 Td 30 Tw {line} ET"]),
+        _page_doc([f"BT /F1 10 Tf 300 720 Td -100 Tz {line} 0 -20 Td {line} ET"]),
+    ]
+    docs += [
+        _page_doc([f"0.8 0.6 -0.6 0.8 100 100 cm BT /F1 10 Tf 72 720 Td {tc} Tc {line} ET"])
+        for tc in ("1.5", "2.5")
+    ]
+    docs += [
+        _page_doc([f"BT /F1 10 Tf 72 720 Td {tc} Tc {line} ET"], _TYPE3)
+        for tc in ("0", "-1.985", "-1.995", "1.995")
+    ]
+    return docs
+
+
+def _page_doc(ops: list[str], font: str = _HELVETICA) -> bytes:
     content = " ".join(ops).encode()
     b = PdfBuilder()
     cat = b.add("<< /Type /Catalog /Pages 2 0 R >>")
@@ -73,21 +121,21 @@ def _page_doc(ops: list[str]) -> bytes:
         "/Resources << /Font << /F1 5 0 R >> >> /Contents 4 0 R >>"
     )
     b.add(f"<< /Length {len(content)} >>", content)
-    b.add("<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
+    b.add(font)
     return b.build_classic(cat)
+
+
+def _texts(docs: list[bytes]) -> list:
+    return [(r.status, r.pages, r.failures) for r in map(extract_text, docs)]
 
 
 def test_fast_paths_match_reference_paths(monkeypatch):
     docs = [_random_doc(s) for s in range(40)] + [_rotated_doc(s) for s in range(40)]
-    fast = [extract_text(d).text for d in docs]
+    docs += _edge_docs()
+    fast = _texts(docs)
 
-    # disable the string fast path AND the vectorized span path
+    # every string through show_char, every glyph through the per-glyph loop
     monkeypatch.setattr(F.FontDesc, "fast_table", lambda self: False)
-    monkeypatch.setattr(
-        T.TextDevice,
-        "_extract_span_vectorized",
-        lambda self, *a, **k: False,
-    )
-    slow = [extract_text(d).text for d in docs]
+    slow = _texts(docs)
     for i, (a, b) in enumerate(zip(fast, slow)):
-        assert a == b, (i, a[:120], b[:120])
+        assert a == b, (i, a, b)

@@ -654,35 +654,44 @@ def test_password_r6_aes256_user_owner_and_empty():
     assert extract_text(data, password="zz").error == "needs_password"
 
 
-def test_bulk_and_scalar_span_paths_agree_at_a_rounding_flip():
+def test_segment_and_scalar_span_paths_agree_at_a_rounding_flip():
     """A pen jump whose length rounds to either side of the newline
-    threshold depending on how it is computed: a 16-glyph run (NumPy
-    bulk path) and the same glyphs as two 8-glyph runs (scalar loop)
-    take the same decision."""
+    threshold depending on how it is computed (np.hypot or the sqrt of
+    the sum): a segment whose first glyph sits at the jump (laid out at
+    its boundaries) and the same glyphs as scalar tuples (the per-glyph
+    loop) take the same decision."""
     import math
 
     import numpy as np
 
+    from delphi_pdf_parser_spark.pdfcore.cmap import identity_cmap
     from delphi_pdf_parser_spark.pdfcore.fonts import FontDesc
     from delphi_pdf_parser_spark.pdfcore.textdev import TextDevice, TextRun
 
     size = 52.510543409991676
     x1, y1 = 47.24408867569316, 1.2063963964897653  # the jump is -(x1, y1)
     assert np.hypot(x1, y1) <= size * 0.9 < math.sqrt(x1 * x1 + y1 * y1)
-    font = FontDesc()  # no widths: every pen advance is 0
-    glyphs = [(65, 0.0, 0.0)] + [(66, x1, y1)] * 15
+    font = FontDesc()  # no widths: every advance is 0
+    font.encoding = identity_cmap(0, 1)
+    font.cid_to_ucs = list(range(256))
+    state = font.advance_state(size * 0.001, 0.0, math.nan, 1.0)
 
-    def text(chunks):
+    def layout(segment: bool):
         dev = TextDevice()
-        for chunk in chunks:
-            run = TextRun(font, (size, 0.0, 0.0, size, 0.0, 0.0), 0)
-            for c, x, y in chunk:
-                run.add(c, c, x, y)
-            dev.text(run, (1.0, 0.0, 0.0, 1.0, 0.0, 0.0))
+        run = TextRun(font, (size, 0.0, 0.0, size, 0.0, 0.0), 0)
+        run.add(65, 65, 0.0, 0.0)
+        if segment:
+            run.add_segment(b"B" * 15, x1, 0.0, y1, state)
+        else:
+            for _ in range(15):
+                run.add(66, 66, x1, y1)
+        dev.text(run, (1.0, 0.0, 0.0, 1.0, 0.0, 0.0))
         dev.close()
-        return dev.to_text()
+        return dev
 
-    assert text([glyphs]) == text([glyphs[:8], glyphs[8:]]) == "A\r\n" + "B" * 15 + "\r\n"
+    seg, scalar = layout(True), layout(False)
+    assert seg.spans[-1].chars == ["B", "B" * 14]  # the segment's rest in one piece
+    assert seg.to_text() == scalar.to_text() == "A\r\n" + "B" * 15 + "\r\n"
 
 
 def test_to_text_folds_control_chars_and_lone_surrogates():
