@@ -312,13 +312,13 @@ class FontDesc:
 
     def fast_arrays(self):
         """Per-code companions of fast_table for 1-byte strings: (w
-        f64[256], cu i64[2,256], pen f64[256], chars str, plain bytes).
-        ``w`` is the code's width, NaN at codes without a single-codepoint
-        mapping, so a NaN advance (``advances``) marks a string the
-        per-code loop must take. ``cu`` stacks each code's cid and ucs
-        for the raster sink's ``TextRun.columns``. ``pen`` is the text
-        device's pen advance of the code's cid, which its segment bound
-        reads. ``chars`` is the ``codecs.charmap_decode`` table of a
+        f64[256], cu (cid list, ucs list), pen f64[256], chars str, plain
+        bytes). ``w`` is the code's width, NaN at codes without a
+        single-codepoint mapping, so a NaN advance (``advances``) marks a
+        string the per-code loop must take. ``cu`` gives a segment its
+        glyphs one at a time (``textdev._segment_glyphs``). ``pen`` is the
+        text device's pen advance of the code's cid, which its segment
+        events read. ``chars`` is the ``codecs.charmap_decode`` table of a
         segment's text, and ``plain`` lists the codes whose text it
         holds: everything with a width except ligatures and code points
         ``chr`` rejects (-1 included), which take the text device's
@@ -330,7 +330,7 @@ class FontDesc:
         if not table:
             self._fast_arrays = False
             return None
-        cu = np.zeros((2, 256), dtype=np.int64)
+        cu = ([0] * 256, [0] * 256)
         w = np.full(256, np.nan, dtype=np.float64)
         pen = np.zeros(256, dtype=np.float64)
         chars = ["\ufffe"] * 256  # undefined: charmap_decode raises
@@ -338,8 +338,8 @@ class FontDesc:
         for code, ent in enumerate(table):
             if ent is not None and len(ent[1]) == 1:
                 cid, (ucs,), w[code] = ent
-                cu[0, code] = cid
-                cu[1, code] = ucs
+                cu[0][code] = cid
+                cu[1][code] = ucs
                 pen[code] = self.pen_advance(cid)
                 if 0 <= ucs < 0x110000 and not 0xFB00 <= ucs <= 0xFB06:
                     chars[code] = chr(ucs)
@@ -386,16 +386,14 @@ class AdvanceState:
     ``table`` (the same as a list, for per-string folds) and ``finite``
     (the codes whose advance is finite, as ``bytes.translate``
     deletechars: a string those delete to nothing has a finite end x
-    from any finite start). ``gaps`` is the text device's memo of its
-    segment bound per transform (``textdev._gap_terms``)."""
+    from any finite start)."""
 
-    __slots__ = ("array", "table", "finite", "gaps")
+    __slots__ = ("array", "table", "finite")
 
     def __init__(self, array):
         self.array = array
         self.table = array.tolist()
         self.finite = bytes(np.flatnonzero(np.isfinite(array)).astype(np.uint8))
-        self.gaps: dict = {}
 
 
 # Per-process memo of parsed ToUnicode CMap streams, keyed by content

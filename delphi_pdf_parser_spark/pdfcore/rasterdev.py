@@ -635,8 +635,7 @@ class RasterDevice:
         ta, tb, tc, td = run.trm[:4]
         missing = False
         polys = []
-        gids, _ucs, xs, ys = run.columns()
-        glyphs = list(zip(gids.tolist(), xs.tolist(), ys.tolist()))
+        glyphs = [(gid, x, y) for gid, _ucs, x, y in run.glyphs()]
         if getattr(font, "is_type3", False):
             if doclip:
                 # Type3 clip would need charproc coverage capture; record

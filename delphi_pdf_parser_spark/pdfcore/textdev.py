@@ -12,8 +12,9 @@ fz_add_text_char) and fz_span_to_wchar
 - ligature expansion at add-char time: FB00->'ff', FB01->'ff' (the
   reference's copy-paste quirk — NOT 'fi'), FB02->'fl', FB03->'ffi',
   FB04->'ffl', FB05->'st', FB06->'st'; ucs==-1 fillers are dropped
-- one per-glyph loop; a shown string whose inner gaps provably cannot
-  reach the space threshold is laid out at its first and last glyph only
+- one per-glyph loop; a shown string whose inner spaces and lines follow
+  provably from its text state is laid out at its first and last glyph,
+  its text appended a line at a time
 - serialization: chars < 32 fold to '?'; CRLF when span.eol or at the very
   last span; the final span always gets eol=1 (fz_text_free_user)
 """
@@ -21,19 +22,23 @@ fz_add_text_char) and fz_span_to_wchar
 from __future__ import annotations
 
 import codecs
+import functools
 import math
 import re
-from itertools import accumulate
+from itertools import accumulate, repeat
 
 import numpy as np
 
 LINE_DIST = 0.9
 SPACE_DIST = 0.2
-# rounding slack of the segment bound per unit of magnitude: a computed
+# rounding slack of a segment's gaps per unit of magnitude: a computed
 # gap is a handful of roundings, each at most 2**-53 of the largest
 # magnitude in its arithmetic, away from its exact value
 _SLACK = 2.0**-40
-_GAPS_MAX = 16  # transforms memoized per text state
+# segment events per (text state, transform), a bounded number at a
+# time (``_events``)
+_MEMO_MAX = 64
+_memo: dict = {}
 
 # '?'-folding table: control chars (<32) per the reference, plus lone
 # surrogates (invalid in UTF-8)
@@ -55,10 +60,10 @@ _LIGATURES = {
 class Span:
     __slots__ = ("font", "size", "wmode", "chars", "eol")
 
-    def __init__(self):
-        self.font = None
-        self.size = 0.0
-        self.wmode = 0
+    def __init__(self, font=None, size=0.0, wmode=0):
+        self.font = font
+        self.size = size
+        self.wmode = wmode
         self.chars: list[str] = []  # non-empty pieces of the span's text
         self.eol = 0
 
@@ -72,10 +77,9 @@ class TextRun:
       of at least 16 codes on a 1-byte fast font (te is the string's
       start x, state the font's ``AdvanceState`` for the string's text
       state). A glyph's x is te plus the sequential sum of the advances
-      before it (plus base_e when nonzero); the text device reads it at
-      the segment's boundaries, or for every glyph when the segment's
-      bound fails (``_chunks``), and ``columns()`` for the raster sink
-      computes all of them (``_segment_columns``)."""
+      before it (plus base_e when nonzero, ``_segment_glyphs``); the
+      text device reads it at the segment's boundaries when it can
+      (``_chunks``), ``glyphs()`` for the raster sink at every glyph."""
 
     __slots__ = ("font", "trm", "wmode", "parts", "n", "nseg")
 
@@ -96,69 +100,41 @@ class TextRun:
         self.n += len(codes)
         self.nseg += 1
 
-    def columns(self):
-        """(gid int64, ucs int64, x f64, y f64) arrays in emission order."""
-        parts = self.parts
-        if not self.nseg:
-            return _scalar_columns(parts)
-        segs = [p for p in parts if p[0] == "S"]
-        codes, xs, ys = _segment_columns(segs)
-        cu = self.font.fast_arrays()[1][:, codes]
-        seg_cols = (cu[0], cu[1], xs, ys)
-        if len(segs) == len(parts):
-            return seg_cols
-        chunks: list = []
-        pend: list = []
-        off = 0
-        for p in parts:
-            if p[0] == "S":
-                if pend:
-                    chunks.append(_scalar_columns(pend))
-                    pend = []
-                n = len(p[1])
-                chunks.append([c[off : off + n] for c in seg_cols])
-                off += n
+    def glyphs(self):
+        """(gid, ucs, x, y) of every glyph in emission order."""
+        out: list = []
+        for part in self.parts:
+            if part[0] == "S":
+                out.extend(_segment_glyphs(part, self.font.fast_arrays()[1]))
             else:
-                pend.append(p)
-        if pend:
-            chunks.append(_scalar_columns(pend))
-        return tuple(np.concatenate(c) for c in zip(*chunks))
+                out.append(part)
+        return out
 
 
-def _scalar_columns(items):
-    a = np.array(items, dtype=np.float64).reshape(len(items), 4)
-    return a[:, 0].astype(np.int64), a[:, 1].astype(np.int64), a[:, 2], a[:, 3]
+def _segment_glyphs(seg, cu):
+    """A segment's (gid, ucs, x, y) tuples; ``cu`` is the font's cid and
+    ucs lists by code. Its x positions are the interpreter's fold: te,
+    then te plus each advance in turn (plus base_e when nonzero)."""
+    _s, codes, te, base_e, y, state = seg
+    xs = accumulate(map(state.table.__getitem__, codes), initial=te)
+    if base_e:
+        xs = map(base_e.__add__, xs)
+    return zip(map(cu[0].__getitem__, codes), map(cu[1].__getitem__, codes), xs, repeat(y))
 
 
-def _segment_columns(segs):
-    """(codes u8, x f64, y f64) of a run's segments. A segment's x
-    positions are its te followed by the running sum of its state's
-    advances (np.cumsum adds in the order of the interpreter's fold),
-    plus base_e when nonzero; its y is constant."""
-    xs = []
-    for _s, seg, te, base_e, _y, state in segs:
-        tx = state.array[np.frombuffer(seg, dtype=np.uint8)]
-        x = np.cumsum(np.concatenate(([te], tx)))[:-1]
-        xs.append(base_e + x if base_e else x)
-    codes = np.frombuffer(b"".join([s[1] for s in segs]), dtype=np.uint8)
-    ys = np.repeat([s[4] for s in segs], [len(s[1]) for s in segs])
-    return codes, np.concatenate(xs), ys
-
-
-def _chunks(run, ctm, dx, dy, space_thresh):
+def _chunks(run, ctm, dx, dy, size):
     """A run's parts as (glyphs, tail) pairs in emission order. Scalar
     tuples come in batches, tail None. A segment whose codes all have a
-    plain char and a finite advance, and whose bound is below the space
-    threshold, comes as its first glyph with tail (rest of its text, last
-    glyph's gid, x, y): the bound, the state's largest inner gap
-    (``_gap_terms``) plus a rounding slack that grows with every
-    magnitude in the position arithmetic, keeps every inner glyph from
-    starting a space or a line. A non-finite term makes the bound NaN or
-    infinite, a zero size the threshold 0; either fails it. Any other
-    segment comes as all its glyphs."""
-    font = run.font
-    table = font.fast_table()
-    _w, _cu, pen, chars, plain = font.fast_arrays()
+    provable event (``_events``) by a margin above its rounding slack,
+    which grows with every magnitude in the position arithmetic, comes
+    as its first glyph with tail (its text after that glyph, split into
+    lines, and its last glyph's gid, x, y). A non-finite term makes the
+    slack NaN or infinite and fails it. Any other segment comes as all
+    its glyphs."""
+    fast = run.font.fast_arrays()
+    cids, ucs = fast[1]
+    chars = fast[3]
+    ca, cb, _cc, cd, _ce, cf = ctm
     scale = (sum(map(abs, ctm)) + abs(dx) + abs(dy)) * _SLACK
     state = None
     scalars: list = []
@@ -172,55 +148,95 @@ def _chunks(run, ctm, dx, dy, space_thresh):
         _s, codes, te, base_e, y, seg_state = part
         if seg_state is not state:
             state = seg_state
-            ok, gap, adv_max, pen_max = _gap_terms(state, pen, plain, dx, dy, ctm)
-        mag = abs(te) + abs(base_e) + abs(y) + len(codes) * adv_max + pen_max + 1.0
-        if gap + mag * scale < space_thresh and not codes.translate(None, ok):
+            ok, events, margin, adv_max, pen_max, spmap, split = _events(
+                state, fast, dx, dy, ca, cb, size
+            )
+        slack = (abs(te) + abs(base_e) + abs(y) + len(codes) * adv_max + pen_max + 1.0) * scale
+        # an event the loop would skip because an inner pen lands on
+        # (-1,-1), its "no pen yet", cannot happen on a constant y
+        if (
+            slack < margin
+            and not codes.translate(None, ok)
+            and (not events or (cb == 0.0 and dy == 0.0 and y * cd + cf != -1.0))
+        ):
             # the last glyph's x: the string's fold short of its last
             # advance (a loop adds in the same order as reduce, faster)
+            inner = codes[:-1]
             last = te
             advance = state.table
-            for code in codes[:-1]:
+            for code in inner:
                 last += advance[code]
             x = te
             if base_e:
                 x, last = base_e + x, base_e + last
-            first = table[codes[0]]
-            text = codecs.charmap_decode(codes, "strict", chars)[0]
-            tail = (text[1:], table[codes[-1]][0], last, y)
-            yield ((first[0], first[1][0], x, y),), tail
+            if not events:
+                lines = [codecs.charmap_decode(codes, "strict", chars)[0][1:]]
+            else:
+                lines = [
+                    codecs.charmap_decode(p, "strict", spmap)[0]
+                    for p in (split.split(inner) if split else (inner,))
+                ]
+                lines[0] = lines[0][1:]
+                lines[-1] += chars[codes[-1]]
+            c0, c1 = codes[0], codes[-1]
+            yield ((cids[c0], ucs[c0], x, y),), (lines, cids[c1], last, y)
             continue
-        xs = accumulate(map(state.table.__getitem__, codes), initial=te)
-        if base_e:
-            xs = map(base_e.__add__, xs)
-        ents = map(table.__getitem__, codes)
-        yield [(e[0], e[1][0], x, y) for e, x in zip(ents, xs)], None
+        yield _segment_glyphs(part, fast[1]), None
     if scalars:
         yield scalars, None
 
 
-def _gap_terms(state, pen, plain, dx, dy, ctm):
-    """(codes, gap, max |adv|, max |pen|) over the font's plain codes
-    with a finite advance at ``state`` (``codes`` as ``bytes.translate``
-    deletechars). ``gap`` is the largest inner gap in exact arithmetic:
-    a glyph's pen ends ``dx*pen`` past its origin, the next glyph starts
-    ``adv*ca`` past it, and likewise in y. Memoized on the state per
-    transform; the state's font outlives one document."""
-    key = (dx, dy, ctm)
-    terms = state.gaps.get(key)
+def _events(state, fast, dx, dy, ca, cb, size):
+    """The event (space, line or nothing) the glyph after each code of
+    the font meets at ``state``, in exact arithmetic: its pen ends
+    ``dx*pen`` past its origin, the next glyph starts ``adv*ca`` past it,
+    likewise in y. After a ' ' a space adds nothing. Returns (ok, events,
+    margin, max |adv|, max |pen|, spmap, split) over ``ok`` (bytes.translate
+    deletechars), the plain codes whose finite gap clears every edge by
+    more than a tiny fraction of the line threshold; ``margin`` is the
+    least clearance, the dot test's scaled by gap/4 (an error e in the
+    gap moves the dot by at most 2e/gap). ``spmap`` decodes a code to its
+    char, plus ' ' when the next glyph meets a space; ``split`` (None
+    without lines) splits a string where the next glyph meets a line.
+    Memoized per state and transform; a state's font outlives one
+    document."""
+    key = (state, dx, dy, ca, cb, size)
+    terms = _memo.get(key)
     if terms is None:
-        if len(state.gaps) >= _GAPS_MAX:
-            state.gaps.clear()
+        if len(_memo) >= _MEMO_MAX:
+            _memo.clear()
+        _w, _cu, pen, chars, plain = fast
         codes = np.frombuffer(plain, dtype=np.uint8)
-        codes = codes[np.isfinite(state.array[codes])]
         adv, pen = state.array[codes], pen[codes]
+        ucs = np.frombuffer(chars.encode("utf-32-le", "surrogatepass"), np.uint32)
+        space = ucs[codes] == 32
+        s, l = size * SPACE_DIST, size * LINE_DIST
+        dist = math.sqrt(dx * dx + dy * dy)
+        nx, ny = (dx / dist, dy / dist) if dist else (1.0, 0.0)
         with np.errstate(all="ignore"):
-            gap = np.hypot(
-                np.abs(dx * pen - ctm[0] * adv).max(initial=0.0),
-                np.abs(dy * pen - ctm[1] * adv).max(initial=0.0),
+            gx, gy = dx * pen - ca * adv, dy * pen - cb * adv
+            gap = np.hypot(gx, gy)
+            dot = np.abs((gx * nx + gy * ny) / gap)
+            line = gap > l
+            mid = (gap > s) & ~line & ~space
+            margin = np.minimum(
+                np.minimum(np.where(space, np.inf, np.abs(gap - s)), np.abs(gap - l)),
+                np.where(mid, np.abs(dot - 0.95) * gap / 4, np.inf),
             )
-        adv_max = float(np.abs(adv).max(initial=0.0))
-        pen_max = float(np.abs(pen).max(initial=0.0))
-        terms = state.gaps[key] = (codes.tobytes(), float(gap), adv_max, pen_max)
+            # the loop squares its gaps: near thresholds outside this
+            # range they overflow or underflow, so the loop decides
+            ok = (2.0**-400 < size < 2.0**400) & np.isfinite(gap) & (margin > l * 2.0**-24)
+            sp = ok & mid & (dot > 0.95)
+        okc, spc, nlc = codes[ok], codes[sp], codes[ok & line]
+        spmap = chars
+        if len(spc):
+            spmap = {c: chars[c] for c in okc.tolist()}
+            spmap.update({c: chars[c] + " " for c in spc.tolist()})
+        split = re.compile(b"(?<=[" + re.escape(nlc.tobytes()) + b"])") if len(nlc) else None
+        adv_max, pen_max = (float(np.abs(a[ok]).max(initial=0.0)) for a in (adv, pen))
+        events = bool(len(spc) or len(nlc))
+        least = float(margin[ok].min(initial=np.inf))
+        terms = _memo[key] = (okc.tobytes(), events, least, adv_max, pen_max, spmap, split)
     return terms
 
 
@@ -237,6 +253,14 @@ def _concat(m1, m2):
     )
 
 
+def _joinable(span, font, size, wmode):
+    """``span.chars`` when a glyph of this font, size and wmode joins
+    ``span`` (``_add_char``'s test), else None."""
+    if span.font is font and span.size == size and span.wmode == wmode:
+        return span.chars
+    return None
+
+
 class TextDevice:
     def __init__(self):
         root = Span()
@@ -251,7 +275,7 @@ class TextDevice:
     def text(self, run: TextRun, ctm):
         self._extract_span(run, ctm)
 
-    def _add_char(self, font, size, wmode, c: int, ligature_ok=True):
+    def _add_char(self, font, size, wmode, c: int):
         """fz_add_text_char."""
         span = self.spans[-1]
         if span.font is None:
@@ -261,10 +285,7 @@ class TextDevice:
             (span.font is not font or span.size != size or span.wmode != wmode)
             and c != 32
         ):
-            span = Span()
-            span.font = font
-            span.size = size
-            span.wmode = wmode
+            span = Span(font, size, wmode)
             self.spans.append(span)
         if c == -1:
             return
@@ -278,25 +299,18 @@ class TextDevice:
 
     def _add_newline(self, font, size, wmode):
         self.spans[-1].eol = 1
-        span = Span()
-        span.font = font
-        span.size = size
-        span.wmode = wmode
-        self.spans.append(span)
+        self.spans.append(Span(font, size, wmode))
 
     def _extract_span(self, run: TextRun, ctm):
         """fz_text_extract_span: each glyph against the pen the one before
-        left. A segment that passes its bound (``_chunks``) takes the
+        left. A segment whose events are provable (``_chunks``) takes the
         per-glyph step at its first glyph only; the rest of its text is
-        appended at once and the pen set from its last glyph."""
+        appended a line at a time and the pen set from its last glyph."""
         if not run.n:
             return
         font = run.font
         tm = run.trm
-        if run.wmode == 0:
-            dirv = (1.0, 0.0)
-        else:
-            dirv = (0.0, 1.0)
+        dirv = (1.0, 0.0) if run.wmode == 0 else (0.0, 1.0)
         tm0 = (tm[0], tm[1], tm[2], tm[3], 0.0, 0.0)
         trm = _concat(tm0, ctm)
         dx = dirv[0] * trm[0] + dirv[1] * trm[2]
@@ -312,42 +326,53 @@ class TextDevice:
         ndir_x, ndir_y = ndir
         pen_x, pen_y = self.pen_x, self.pen_y
         wmode = run.wmode
-        pen_advance = font.pen_advance
+        pen_advance = functools.cache(font.pen_advance)
         sqrt = math.sqrt
         if run.nseg:
-            chunks = _chunks(run, ctm, dx, dy, space_thresh)
+            chunks = _chunks(run, ctm, dx, dy, size)
         else:
             chunks = ((run.parts, None),)
+        spans = self.spans
+        # the last span's pieces while glyphs join it without a break
+        cur = _joinable(spans[-1], font, size, wmode)
         for glyphs, tail in chunks:
             for gid, ucs, x, y in glyphs:
-                if gid < 0:
-                    # filler glyph of a one-to-many mapping: same position
-                    self._add_char(font, size, wmode, ucs)
-                    continue
-                ex = x * ca + y * cc + ce
-                ey = x * cb + y * cd + cf
-                if pen_x == -1.0 and pen_y == -1.0:
-                    delta_x = delta_y = 0.0
+                # gid < 0: filler glyph of a one-to-many mapping, added
+                # at the same position
+                if gid >= 0:
+                    ex = x * ca + y * cc + ce
+                    ey = x * cb + y * cd + cf
+                    if pen_x == -1.0 and pen_y == -1.0:
+                        delta_x = delta_y = 0.0
+                    else:
+                        delta_x = pen_x - ex
+                        delta_y = pen_y - ey
+                    pdist = sqrt(delta_x * delta_x + delta_y * delta_y)
+                    if pdist > 0:
+                        if pdist > line_thresh:
+                            self._add_newline(font, size, wmode)
+                            cur = spans[-1].chars
+                        elif pdist > space_thresh:
+                            dot = (delta_x * ndir_x + delta_y * ndir_y) / pdist
+                            if dot > 0.95 or dot < -0.95:
+                                last = spans[-1].chars
+                                if last and last[-1][-1] != " ":
+                                    last.append(" ")
+                    adv = pen_advance(gid)
+                    pen_x = ex + dx * adv
+                    pen_y = ey + dy * adv
+                if cur is not None and 0 <= ucs < 0xFB00:
+                    cur.append(chr(ucs))  # _add_char's common case
                 else:
-                    delta_x = pen_x - ex
-                    delta_y = pen_y - ey
-                pdist = sqrt(delta_x * delta_x + delta_y * delta_y)
-                if pdist > 0:
-                    if pdist > line_thresh:
-                        self._add_newline(font, size, wmode)
-                    elif pdist > space_thresh:
-                        dot = (delta_x * ndir_x + delta_y * ndir_y) / pdist
-                        if dot > 0.95 or dot < -0.95:
-                            span = self.spans[-1]
-                            if span.chars and span.chars[-1][-1] != " ":
-                                self._add_char(font, size, wmode, 32)
-                adv = pen_advance(gid)
-                pen_x = ex + dx * adv
-                pen_y = ey + dy * adv
-                self._add_char(font, size, wmode, ucs)
+                    self._add_char(font, size, wmode, ucs)
+                    cur = _joinable(spans[-1], font, size, wmode)
             if tail is not None:
-                text, gid, x, y = tail
-                self._bulk_chars(font, size, wmode, text)
+                lines, gid, x, y = tail
+                self._bulk_chars(font, size, wmode, lines[0])
+                for text in lines[1:]:
+                    self._add_newline(font, size, wmode)
+                    self._bulk_chars(font, size, wmode, text)
+                cur = _joinable(spans[-1], font, size, wmode)
                 adv = pen_advance(gid)
                 pen_x = x * ca + y * cc + ce + dx * adv
                 pen_y = x * cb + y * cd + cf + dy * adv
@@ -370,10 +395,7 @@ class TextDevice:
             if not rest:
                 return
             text = rest
-            span = Span()
-            span.font = font
-            span.size = size
-            span.wmode = wmode
+            span = Span(font, size, wmode)
             self.spans.append(span)
         # plain text only (no fillers, ligatures or code points chr
         # rejects); control chars fold at serialization

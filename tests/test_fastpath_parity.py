@@ -10,6 +10,7 @@ import random
 from delphi_pdf_parser_spark.fixtures import PdfBuilder
 from delphi_pdf_parser_spark.pdfcore import extract_text
 from delphi_pdf_parser_spark.pdfcore import fonts as F
+from delphi_pdf_parser_spark.pdfcore import textdev as T
 
 
 def _random_doc(seed: int) -> bytes:
@@ -75,6 +76,13 @@ _TYPE3 = (
 )
 
 
+# code 32 draws 'a' (and still takes the word spacing), 'A' draws a ' '
+_SWAPPED = (
+    "<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica /Encoding "
+    "<< /Type /Encoding /Differences [32 /a 65 /space 66 /fi] >> >>"
+)
+
+
 def _edge_docs() -> list[bytes]:
     """Strings on either side of the segment bound: huge start x (under
     a 0.3 CTM scale the per-glyph loop breaks strings at 1e15 and 1e17
@@ -108,7 +116,74 @@ def _edge_docs() -> list[bytes]:
         _page_doc([f"BT /F1 10 Tf 72 720 Td {tc} Tc {line} ET"], _TYPE3)
         for tc in ("0", "-1.985", "-1.995", "1.995")
     ]
+    # events inside a string: a space before every glyph (Tc past the
+    # space edge), a line before every glyph or after each space (Tc or
+    # Tw around the 0.9*size line edge), on a font whose code 32 is not
+    # a ' ' and whose 'A' is, and under a rotated CTM
+    line_a = "(Lorem ipsum A dolor sit AAmet, consectetur) Tj"
+    docs += [
+        _page_doc([f"BT /F1 10 Tf 72 720 Td {tc} Tc {tw} Tw {line_a} ET"], font)
+        for font in (_HELVETICA, _SWAPPED)
+        for tc, tw in [
+            ("2.5", "0"), ("-7", "0"), ("8.99", "0"), ("9.01", "0"),
+            ("0", "8.99"), ("0", "9.01"), ("0", "12"), ("2.5", "12"),
+        ]
+    ]
+    docs.append(
+        _page_doc([f"0.8 0.6 -0.6 0.8 100 100 cm BT /F1 10 Tf 72 720 Td 12 Tw {line} ET"])
+    )
+    # the first glyph's pen ends on (-1,-1), the device's "no pen yet",
+    # so the loop adds no space before the second
+    docs.append(_page_doc(["BT /F1 10 Tf 2.5 Tc 1 0 0 1 -6 -1 Tm (cccccccccccccccccccc) Tj ET"]))
+    # a 1e-170 CTM scale: the size underflows to 0 and the loop's squared
+    # gaps to 0, so the loop sees no event where exact arithmetic does
+    tiny = "0." + "0" * 169 + "1"
+    docs += [
+        _page_doc([f"{tiny} 0 0 {tiny} 0 0 cm BT /F1 1 Tf {tc} Tc {line_a} ET"])
+        for tc in ("0.5", "2")
+    ]
     return docs
+
+
+def _near_edge_doc(seed: int) -> bytes:
+    """Strings whose char and word spacing put their inner gaps on the
+    space and line edges, a rounding error or a little away from them,
+    or anywhere, under scaled, mirrored, rotated and skewed CTMs."""
+    rng = random.Random(seed)
+    size = rng.choice([10, 12, 7.5, 0.5, 100])
+    tz = rng.choice([100, 100, 50, 120, -100])
+    ops = []
+    r = rng.random()
+    if r < 0.4:
+        sc = rng.choice([1, 0.3, 2, 1e-3])
+        flip = sc * rng.choice([1, -1, 0.5])
+        ops.append(f"{sc} 0 0 {flip} {rng.uniform(0, 100):.3f} {rng.uniform(0, 100):.3f} cm")
+    elif r < 0.6:
+        a = rng.uniform(0, 2 * math.pi)
+        c, s = math.cos(a), math.sin(a)
+        ops.append(f"{c!r} {s!r} {-s!r} {c!r} 100 100 cm")
+    elif r < 0.7:
+        ops.append(f"1 0 {rng.uniform(-1, 1):.3f} 1 0 0 cm")
+
+    def near(f):  # spacing putting the gap at f*size, give or take
+        v = f * size * 100 / abs(tz)
+        return v + rng.choice([0, 0, 1e-12, -1e-12, 1e-6, -1e-6, 1e-3, -1e-3]) * v
+
+    ops.append(f"BT /F1 {size} Tf {tz} Tz")
+    y = 700
+    for _ in range(rng.randint(2, 8)):
+        if rng.random() < 0.3:
+            tc = rng.uniform(-12, 12) * size / 10
+        else:
+            tc = near(rng.choice([0.2, 0.9, -0.2, -0.9, 0.5, 1.1, 0.05]))
+        tw = rng.choice([0, near(rng.choice([0.2, 0.9, 0.5, 1.5, -0.9])), rng.uniform(-20, 20)])
+        txt = "".join(rng.choice("ABCDEFGH ijklm nopq 0123  ") for _ in range(rng.randint(16, 60)))
+        ops.append(f"{tc!r} Tc {tw!r} Tw 1 0 0 1 {rng.uniform(-50, 300):.4f} {y} Tm ({txt}) Tj")
+        if rng.random() < 0.3:
+            ops.append(f"({txt[::-1]}) Tj")
+        y -= rng.choice([0, 0.5, 20])
+    ops.append("ET")
+    return _page_doc(ops, rng.choice([_HELVETICA, _HELVETICA, _TYPE3, _SWAPPED]))
 
 
 def _page_doc(ops: list[str], font: str = _HELVETICA) -> bytes:
@@ -138,4 +213,16 @@ def test_fast_paths_match_reference_paths(monkeypatch):
     monkeypatch.setattr(F.FontDesc, "fast_table", lambda self: False)
     slow = _texts(docs)
     for i, (a, b) in enumerate(zip(fast, slow)):
+        assert a == b, (i, a, b)
+
+
+def test_segment_layout_matches_per_glyph_loop(monkeypatch):
+    """Same positions both ways: only the text device's layout of a
+    segment at its boundaries differs from the per-glyph loop."""
+    docs = [_near_edge_doc(s) for s in range(400)] + _edge_docs()
+    laid_out = _texts(docs)
+
+    # every segment through the per-glyph loop
+    monkeypatch.setattr(T, "_events", lambda *a: (b"", False, 0.0, 0.0, 0.0, None, None))
+    for i, (a, b) in enumerate(zip(laid_out, _texts(docs))):
         assert a == b, (i, a, b)
